@@ -371,7 +371,9 @@ object ExtractJob {
         LineageRow(cfg.jobId, b, s.docCount, s.spanCount, s.bytesIn, s.failedDocs,
           "committed", cfg.attempt, now, s.unmappedCodes)
       }
-      TableIO.commitLineage(tableDir, f"${cfg.jobId}-a${cfg.attempt}-c$chunkIdx%04d", rows)
+      // named by the chunk's first bucket, not chunkIdx (which restarts
+      // per run): pending buckets are never committed ones, so unique
+      TableIO.commitLineage(tableDir, f"${cfg.jobId}-a${cfg.attempt}-c${chunk.head}%04d", rows)
       // versioned snapshot per chunk: pins the data-file set visible
       // after this commit, so concurrent/later readers can time-travel
       // (TableIO.readAt) with snapshot isolation from later appends.

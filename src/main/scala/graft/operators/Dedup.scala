@@ -27,25 +27,6 @@ import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
   */
 object Dedup {
 
-  /** Default per-round lineage-truncation strategy for the iterative
-    * operators ([[components]] with `checkpointRounds = true`,
-    * [[componentsStar]]): reliable `checkpoint()` when the session has
-    * a checkpoint directory configured
-    * (`sparkContext.setCheckpointDir` — the cluster deployment path,
-    * where materialized blocks must survive executor loss), else
-    * `localCheckpoint()` (single-machine / test path: executor-local
-    * blocks, no DFS round-trip). Both are EAGER, so round k
-    * materializes before round k+1's plan is built and the plan cannot
-    * grow geometrically. Callers with bespoke needs
-    * (write-out-and-re-read, a different checkpoint flavor) pass
-    * their own `truncate` function instead — but it MUST truncate the
-    * LOGICAL plan (as both checkpoints do): a bare `persist()` caches
-    * execution yet leaves the geometric plan in place, and the
-    * optimizer stalls on it long before any task runs. */
-  def defaultTruncate(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
-
   /** Exact dedup by content fingerprint. One row per duplicate group
     * with the kept (minimum) doc_id and group size. */
   def exactGroups(docs: DataFrame): DataFrame =
@@ -478,75 +459,32 @@ object Dedup {
     * collapses the duplicate subtrees within the one query, so the
     * default declarative form is right at moderate iteration counts
     * and keeps the plan introspectable; set `checkpointRounds = true`
-    * to truncate lineage between rounds (edges materialize once,
-    * labels per round — IDENTICAL values, measured 1.6× faster at
-    * sf0.1) so a deep iteration count cannot re-derive the pair
-    * generation per round. Truncation is EAGER (construction runs the
-    * rounds); HOW each round persists is the injectable `truncate`
-    * strategy, defaulting to [[defaultTruncate]] — reliable
-    * `checkpoint()` when the session has a checkpoint dir (the
-    * multi-executor path, where executor loss must not discard a
-    * round), `localCheckpoint()` otherwise.
+    * to truncate the edges and every round's labels with `truncate`
+    * ([[Rounds]] — IDENTICAL values, measured 1.6× faster at sf0.1)
+    * so a deep iteration count cannot re-derive the pair generation
+    * per round.
     *
     * Input: (a_id, b_id) pairs. Output: (doc_id, component) for every
     * doc appearing in any pair, component = min doc_id reachable
     * within `iterations` hops. */
   def components(pairs: DataFrame, iterations: Int = 3,
       checkpointRounds: Boolean = false,
-      truncate: DataFrame => DataFrame = defaultTruncate): DataFrame = {
-    def ck(df: DataFrame): DataFrame =
-      if (checkpointRounds) truncate(df) else df
+      truncate: DataFrame => DataFrame = Rounds.defaultTruncate): DataFrame = {
+    val ck: DataFrame => DataFrame = if (checkpointRounds) truncate else identity
     val edges = ck(pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
       .unionAll(pairs.select(col("b_id").as("src"), col("a_id").as("dst"))))
-    var labels = edges.select(col("src").as("id")).distinct()
+    val init = edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("component"))
-    for (_ <- 0 until iterations) {
+    val (labels, _) = Rounds.iterate(init, { labels =>
       val propagated = edges
         .join(labels, edges("src") === labels("id"))
         .select(col("dst").as("id"), col("component"))
-      labels = ck(labels.unionAll(propagated)
-        .groupBy("id").agg(min("component").as("component")))
-    }
+      labels.unionAll(propagated)
+        .groupBy("id").agg(min("component").as("component"))
+    }, iterations, ck, None)
     labels.select(col("id").as("doc_id"), col("component"))
   }
 
-  /** Connected components by ALTERNATING LARGE-STAR/SMALL-STAR rounds
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC 2014) — the O(log n)-round upgrade path named in
-    * [[components]]'s scaladoc, now implemented. Per round:
-    *
-    *  - large-star: every node u hangs its strictly-LARGER neighbors
-    *    onto m(u) = min(Γ(u) ∪ {u});
-    *  - small-star: u hangs its not-larger neighbors and itself onto
-    *    m(u).
-    *
-    * Each operation is one symmetrize → groupBy-min (map-side partial
-    * min) → join — the same splittable relational shape as a
-    * [[components]] round — but the edge set CONTRACTS toward
-    * min-rooted stars, so the required round count is O(log n) in the
-    * component size instead of O(diameter): the difference between 40
-    * rounds and 4 on a 10^12-edge web graph with long chains. Output
-    * is deterministic for a fixed `rounds` (the DuckDB twin replays
-    * the identical schedule); once converged, the edge set IS the
-    * star forest and labels read directly off it.
-    *
-    * Unlike [[components]] (where per-round persistence is an optional
-    * production upgrade), lineage truncation between rounds is PART OF
-    * this operator: one round references its input edge set ~16 times
-    * (two symmetrizes, each consumed by an aggregation AND a join), so
-    * an unpersisted plan grows geometrically with `rounds` and stalls
-    * the optimizer long before execution. Each round therefore ends in
-    * an EAGER truncation — values are unchanged (the DuckDB twin
-    * replays the same schedule), construction executes the rounds
-    * eagerly. The strategy is the injectable `truncate` parameter,
-    * defaulting to [[defaultTruncate]]: reliable `checkpoint()` when
-    * the session has a checkpoint dir set (the multi-executor
-    * deployment, where executor loss must not drop a round's
-    * materialized edges — localCheckpoint blocks are executor-local
-    * and unrecoverable), `localCheckpoint()` otherwise.
-    *
-    * Input: (a_id, b_id) pairs. Output: (doc_id, component) for every
-    * doc appearing in any pair. */
   /** One large-star + small-star round over an (a, b) edge set.
     *
     * Each star operation consumes its symmetrized edge view twice —
@@ -587,25 +525,46 @@ object Dedup {
       .unionAll(edges.select(col("a").as("doc_id"), col("a").as("component")))
       .groupBy("doc_id").agg(min("component").as("component"))
 
+  /** Connected components by ALTERNATING LARGE-STAR/SMALL-STAR rounds
+    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    * SoCC 2014) — the O(log n)-round upgrade path named in
+    * [[components]]'s scaladoc. Per round:
+    *
+    *  - large-star: every node u hangs its strictly-LARGER neighbors
+    *    onto m(u) = min(Γ(u) ∪ {u});
+    *  - small-star: u hangs its not-larger neighbors and itself onto
+    *    m(u).
+    *
+    * Each operation is one symmetrize → groupBy-min (map-side partial
+    * min) → join — the same splittable relational shape as a
+    * [[components]] round — but the edge set CONTRACTS toward
+    * min-rooted stars, so the required round count is O(log n) in the
+    * component size instead of O(diameter): the difference between 40
+    * rounds and 4 on a 10^12-edge web graph with long chains. Output
+    * is deterministic for a fixed `rounds` (the DuckDB twin replays
+    * the identical schedule); once converged, the edge set IS the
+    * star forest and labels read directly off it.
+    *
+    * Unlike [[components]], truncation is PART OF this operator: the
+    * input edge set and every round's output pass through `truncate`
+    * (see [[Rounds]] for why). Truncating the input matters too: with
+    * an unmaterialized input each of round 1's references re-derives
+    * the whole pair-generation plan — for the LSH star pairs that is
+    * the corpus scan + signature expression per reference (measured:
+    * 4.6 → 2.1 s executor CPU on sf0.1 dedup_components_star).
+    *
+    * Input: (a_id, b_id) pairs. Output: (doc_id, component) for every
+    * doc appearing in any pair. */
   def componentsStar(pairs: DataFrame, rounds: Int = 3,
-      truncate: DataFrame => DataFrame = defaultTruncate): DataFrame = {
-    // truncate the INPUT too (the adaptive twin always did): round 1
-    // references its edge set ~16 times, and with an unmaterialized
-    // input each reference re-derives the whole pair-generation plan —
-    // for the LSH star pairs that is the corpus scan + signature
-    // expression per reference (measured: 4.6 → 2.1 s executor CPU on
-    // sf0.1 dedup_components_star). Values are unchanged.
-    var edges = truncate(pairs.select(col("a_id").as("a"), col("b_id").as("b")))
-    for (_ <- 0 until rounds) edges = truncate(starRound(edges))
-    starLabels(edges)
-  }
+      truncate: DataFrame => DataFrame = Rounds.defaultTruncate): DataFrame =
+    starComponents(pairs, rounds, truncate, None)._1
 
   /** CONVERGENCE-ADAPTIVE [[componentsStar]]: rounds run until the
     * edge set reaches a FIXPOINT — a converged min-rooted star forest
     * reproduces itself exactly under a large-star/small-star round, so
     * "this round changed nothing" is the exact termination test (one
-    * count + one exceptAll probe per round, both over the round's
-    * already-checkpointed edge sets — cheap next to the round itself).
+    * count + one left-anti probe per round, both over the round's
+    * already-truncated edge sets — cheap next to the round itself).
     * Use when the graph's diameter is unknown (the production case);
     * keep the fixed-`rounds` [[componentsStar]] where a deterministic
     * replayable schedule is needed (the DuckDB oracle twin).
@@ -617,32 +576,36 @@ object Dedup {
     * the largest component size is the expected need; 40 covers any
     * conceivable 10^12-node graph). */
   def componentsStarAdaptive(pairs: DataFrame, maxRounds: Int = 40,
-      truncate: DataFrame => DataFrame = defaultTruncate): (DataFrame, Int) = {
+      truncate: DataFrame => DataFrame = Rounds.defaultTruncate): (DataFrame, Int) = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    var edges = truncate(
-      pairs.select(col("a_id").as("a"), col("b_id").as("b")).distinct())
-    // edge rows are DISTINCT by construction (input distinct, starRound
-    // rounds end in distinct), so multiset equality ≡ equal count +
-    // one-directional containment, and containment is a plain left-anti
-    // join on the two key columns — one probe job over the two already-
-    // materialized frames instead of exceptAll's union-rewrite. Counts
-    // are carried across rounds (edges.count() of round k IS
-    // next.count() of round k-1 — recounting it was one redundant job
-    // per round). `converged` takes the same value as the original
-    // count+exceptAll formulation, so rounds_used is unchanged.
-    var edgeCount = edges.count()
-    var used = 0
-    var converged = false
-    while (!converged && used < maxRounds) {
-      val next = truncate(starRound(edges))
-      used += 1
+    starComponents(pairs, maxRounds, truncate, Some(starFixpoint()))
+  }
+
+  /** The one star-components body. With a fixpoint `stop` the input
+    * is made distinct (rounds already end in distinct), since the test
+    * counts edges; fixed-schedule labels ignore multiplicity. */
+  private def starComponents(pairs: DataFrame, maxRounds: Int,
+      truncate: DataFrame => DataFrame,
+      stop: Option[(DataFrame, DataFrame) => Boolean]): (DataFrame, Int) = {
+    val edges = pairs.select(col("a_id").as("a"), col("b_id").as("b"))
+    val (last, used) = Rounds.iterate(
+      truncate(if (stop.isDefined) edges.distinct() else edges),
+      starRound, maxRounds, truncate, stop)
+    (starLabels(last), used)
+  }
+
+  /** Star fixpoint test. Edge rows are DISTINCT, so multiset equality
+    * ≡ equal count + one left-anti containment probe on (a, b) — one
+    * job over the two materialized frames. Round k's `next` count is
+    * carried as round k+1's `prev` count, so each frame is counted once. */
+  private def starFixpoint(): (DataFrame, DataFrame) => Boolean = {
+    var carried: Option[Long] = None
+    (prev, next) => {
+      val prevCount = carried.getOrElse(prev.count())
       val nextCount = next.count()
-      converged = nextCount == edgeCount &&
-        next.join(edges, Seq("a", "b"), "left_anti").isEmpty
-      edges = next
-      edgeCount = nextCount
+      carried = Some(nextCount)
+      nextCount == prevCount && next.join(prev, Seq("a", "b"), "left_anti").isEmpty
     }
-    (starLabels(edges), used)
   }
 
   /** CONTENT-DEFINED-CHUNKING dedup: duplicate chunks across the
@@ -752,7 +715,7 @@ object Dedup {
     // filter and the final left join — unmaterialized, the corpus
     // bloom-bit aggregation subtree would execute twice (the PQ-LUT
     // double-instantiation class); the frame is batch-sized
-    val flags = defaultTruncate(bloomIncrementalFlags(corpus, batch, mBits, k))
+    val flags = Rounds.defaultTruncate(bloomIncrementalFlags(corpus, batch, mBits, k))
     val flaggedFp = flags.where(col("bloom_hit") === 1)
       .join(batch.select(col("doc_id"), TF.fingerprint(col("text")).as("fp")),
         Seq("doc_id"))

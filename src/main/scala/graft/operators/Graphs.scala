@@ -25,9 +25,11 @@ import org.apache.spark.sql.types.DecimalType
   * hash aggregation on dst (map-side partials collapse hot in-degree
   * nodes before the shuffle — the skew path), one left join back to
   * the node set. O(iterations) rounds, each shuffle-once; rank frames
-  * are truncated per round ([[Dedup.defaultTruncate]]) so the logical
-  * plan stays O(1) — the componentsStar lesson. Dangling nodes
-  * (outdeg 0) absorb rank and contribute none, declared. */
+  * are truncated per round ([[Rounds]]) so the logical plan stays
+  * O(1) — the componentsStar lesson. Dangling nodes (outdeg 0) absorb
+  * rank and contribute none, declared. Edges with a null endpoint are
+  * dropped: a null is no node id (it would never match the fixpoint
+  * probe, so the adaptive ladder could never converge). */
 object Graphs {
 
   private val wide = DecimalType(38, 0)
@@ -38,7 +40,8 @@ object Graphs {
     * node set and the out-degrees. */
   private def prepGraph(edges: DataFrame,
       truncate: DataFrame => DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val e = truncate(edges.select(col("src").cast("long"), col("dst").cast("long")))
+    val e = truncate(edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .where(col("src").isNotNull && col("dst").isNotNull))
     val nodes = truncate(
       e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct())
     val outdeg = truncate(e.groupBy("src").agg(count(lit(1)).as("outdeg")))
@@ -72,21 +75,13 @@ object Graphs {
 
   /** `iterations` rounds of damped integer PageRank over
     * `edges(src, dst)`. Output: (id, pr) for every node appearing as
-    * src or dst. */
+    * src or dst of an edge with no null endpoint. */
   def pageRank(edges: DataFrame, iterations: Int = 3,
       dampingPermille: Int = 850,
-      truncate: DataFrame => DataFrame = Dedup.defaultTruncate): DataFrame = {
+      truncate: DataFrame => DataFrame = Rounds.defaultTruncate): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    require(dampingPermille >= 0 && dampingPermille <= 1000,
-      s"dampingPermille must be in [0,1000], got $dampingPermille")
-    val (e, nodes, outdeg) = prepGraph(edges, truncate)
-    val base = (1000L - dampingPermille) * 1000L
-    var ranks = nodes.select(col("id"), lit(1000000L).as("pr"))
-    for (_ <- 0 until iterations) {
-      ranks = truncate(
-        rankRound(e, nodes, outdeg, ranks, base, dampingPermille, None))
-    }
-    ranks
+    rank(edges, iterations, dampingPermille, redistributeDangling = false,
+      truncate, None)._1
   }
 
   /** CONVERGENCE-ADAPTIVE [[pageRank]] with optional DANGLING-MASS
@@ -95,9 +90,8 @@ object Graphs {
     *
     *  - rounds run until the rank vector reaches an exact FIXPOINT
     *    (integer ranks make "this round changed nothing" an equality
-    *    test, not an epsilon — one count + one exceptAll probe per
-    *    round over the already-truncated frames, the
-    *    [[Dedup.componentsStarAdaptive]] recipe); `maxIterations`
+    *    test, not an epsilon — one left-anti probe per round over the
+    *    already-truncated frames); `maxIterations`
     *    bounds a slow spectrum (contraction is ×d/1000 per round, so
     *    micro-unit ranks converge in ≲ log(10⁶)/log(1000/d) rounds);
     *  - with `redistributeDangling`, each round sums the rank held by
@@ -112,8 +106,21 @@ object Graphs {
     * permutation graph at the uniform fixpoint) reports 1. */
   def pageRankAdaptive(edges: DataFrame, maxIterations: Int = 40,
       dampingPermille: Int = 850, redistributeDangling: Boolean = false,
-      truncate: DataFrame => DataFrame = Dedup.defaultTruncate): (DataFrame, Int) = {
+      truncate: DataFrame => DataFrame = Rounds.defaultTruncate): (DataFrame, Int) = {
     require(maxIterations >= 1, s"maxIterations must be >= 1, got $maxIterations")
+    // every rank frame holds EXACTLY one row per node (initial ranks
+    // project the node set; rankRound is nodes left-join inflow with
+    // inflow unique per id), so multiset equality reduces to one
+    // left-anti containment probe on (id, pr)
+    rank(edges, maxIterations, dampingPermille, redistributeDangling, truncate,
+      Some((prev, next) => next.join(prev, Seq("id", "pr"), "left_anti").isEmpty))
+  }
+
+  /** The one PageRank body: `maxRounds` rounds, or fewer when `stop`
+    * detects the fixpoint. */
+  private def rank(edges: DataFrame, maxRounds: Int, dampingPermille: Int,
+      redistributeDangling: Boolean, truncate: DataFrame => DataFrame,
+      stop: Option[(DataFrame, DataFrame) => Boolean]): (DataFrame, Int) = {
     require(dampingPermille >= 0 && dampingPermille <= 1000,
       s"dampingPermille must be in [0,1000], got $dampingPermille")
     val (e, nodes, outdeg) = prepGraph(edges, truncate)
@@ -121,31 +128,18 @@ object Graphs {
     // only the dangling path reads the node count — don't pay its
     // eager materialization otherwise
     lazy val nCount = truncate(nodes.agg(count(lit(1)).as("n_nodes")))
-    var ranks = truncate(nodes.select(col("id"), lit(1000000L).as("pr")))
-    var used = 0
-    var converged = false
-    while (!converged && used < maxIterations) {
-      val share =
-        if (!redistributeDangling) None
-        else Some(ranks
-          .join(outdeg.select(col("src").as("id")), Seq("id"), "left_anti")
-          .agg(coalesce(sum(col("pr").cast(wide)), lit(0L).cast(wide)).as("dang"))
-          .crossJoin(broadcast(nCount))
-          .select(expr("dang div n_nodes").cast("long").as("share")))
-      val next = truncate(
-        rankRound(e, nodes, outdeg, ranks, base, dampingPermille, share))
-      used += 1
-      // every rank frame holds EXACTLY one row per node (initial ranks
-      // project the node set; rankRound is nodes left-join inflow with
-      // inflow unique per id), so the count-equality arm of the
-      // fixpoint test is an invariant truth and multiset equality
-      // reduces to one left-anti containment probe on (id, pr) — one
-      // job per round over the two materialized frames instead of two
-      // counts + an exceptAll. `converged` takes the same value, so
-      // rounds_used is unchanged.
-      converged = next.join(ranks, Seq("id", "pr"), "left_anti").isEmpty
-      ranks = next
-    }
-    (ranks, used)
+    def share(ranks: DataFrame): Option[DataFrame] =
+      if (!redistributeDangling) None
+      else Some(ranks
+        .join(outdeg.select(col("src").as("id")), Seq("id"), "left_anti")
+        .agg(coalesce(sum(col("pr").cast(wide)), lit(0L).cast(wide)).as("dang"))
+        .crossJoin(broadcast(nCount))
+        .select(expr("dang div n_nodes").cast("long").as("share")))
+    val uniform = nodes.select(col("id"), lit(1000000L).as("pr"))
+    // the fixpoint probe reads round 1's input, so only then is it
+    // materialized
+    Rounds.iterate(if (stop.isDefined) truncate(uniform) else uniform,
+      ranks => rankRound(e, nodes, outdeg, ranks, base, dampingPermille, share(ranks)),
+      maxRounds, truncate, stop)
   }
 }

@@ -56,7 +56,7 @@ object Sampling {
     // the lazy aggregation frame would re-instantiate its corpus scan
     // (the exact-substring round-6 lesson) — with the checkpoint the
     // corpus is read once for counts and once for the filtered scan
-    val counts = Dedup.defaultTruncate(
+    val counts = Rounds.defaultTruncate(
       docs.groupBy(byCol).agg(count(lit(1)).as("n_group")))
     val nMin = counts.agg(min(col("n_group")).as("n_min"))
     val wide = DecimalType(38, 0)

@@ -99,9 +99,19 @@ object Similarity {
     * real deployment instead of re-deriving the lineage. */
   def ivfTopKKmeans(queries: DataFrame, items: DataFrame, k: Int,
       numCentroids: Int = 8, nProbe: Int = 2, iterations: Int = 2): DataFrame = {
-    var cent = seedCentroids(items, numCentroids)
     val it = items.select(col("vec_id").as("item_id"), VF.quantize(col("embedding")).as("qv"))
-    for (_ <- 0 until iterations) {
+    val cent = lloydCentroids(it, seedCentroids(items, numCentroids), iterations)
+    val lists = assignNearestQ(it, cent, "item_id", "qv")
+    val probes = assignProbes(queries, cent, "query_id", "q_qv", nProbe)
+    probeAndRank(probes, lists, k)
+  }
+
+  /** `iterations` lazy coarse Lloyd rounds from `seed` over
+    * `it(item_id, qv)`. A null vector is no member: the array sum skips
+    * it, so the divisor counts only non-null vectors. */
+  private[operators] def lloydCentroids(it: DataFrame, seed: DataFrame,
+      iterations: Int): DataFrame =
+    Rounds.iterate(seed, { cent =>
       val asg = assignNearestQ(it, cent, "item_id", "qv")
       // element-wise floored mean per centroid: the per-dim sums ride
       // ONE array-sum hash aggregate (native [[graft.functions
@@ -111,22 +121,18 @@ object Similarity {
       // stays double division then floor, bit-identical across engines
       // for BIGINT sums (both use IEEE double division), and the sums
       // array preserves dim order by construction.
-      cent = asg
+      asg
         .groupBy("cid")
-        .agg(VF.arraySumAgg(col("qv")).as("s"), count(lit(1)).as("cnt"))
+        .agg(VF.arraySumAgg(col("qv")).as("s"), count(col("qv")).as("cnt"))
         .select(col("cid"),
           transform(col("s"), x => floor(x / col("cnt")).cast("long")).as("cv"))
         .withColumn("cn", VF.normSqQ(col("cv")))
-    }
-    val lists = assignNearestQ(it, cent, "item_id", "qv")
-    val probes = assignProbes(queries, cent, "query_id", "q_qv", nProbe)
-    probeAndRank(probes, lists, k)
-  }
+    }, iterations, identity, None)._1
 
   /** Deterministic seed centroids: the first `numCentroids` item
     * vectors (a production deployment would persist k-means output —
     * see [[ivfTopKKmeans]]). */
-  private def seedCentroids(items: DataFrame, numCentroids: Int): DataFrame =
+  private[operators] def seedCentroids(items: DataFrame, numCentroids: Int): DataFrame =
     items.where(col("vec_id") < numCentroids)
       .select(col("vec_id").as("cid"), VF.quantize(col("embedding")).as("cv"))
       .withColumn("cn", VF.normSqQ(col("cv")))
@@ -272,10 +278,9 @@ object Similarity {
     require(codebookSize >= 1, s"codebookSize must be >= 1, got $codebookSize")
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     val it = items.select(col("vec_id").as("item_id"), VF.quantize(col("embedding")).as("qv"))
-    var cb = seedCodebooks(it, numSub, codebookSize)
     val sub = it.select(col("item_id"), subVecs("qv", numSub))
       .withColumn("svn", VF.normSqQ(col("sv")))
-    for (_ <- 0 until iterations) {
+    val (cb, _) = Rounds.iterate(seedCodebooks(it, numSub, codebookSize), { cb =>
       // MAP-SIDE nearest-codeword assignment (round 9 — the
       // [[assignNearestQ]] recipe): no per-(item, sub) aggregation
       // exchange per training round
@@ -283,16 +288,16 @@ object Similarity {
         .select(col("sub"), codeArgmin("sv", "svn").as("code"), col("sv"))
       // per-(subspace, code) floored mean via ONE array-sum hash
       // aggregate — same recipe (and rationale) as the coarse
-      // [[ivfTopKKmeans]] round above
-      cb = asg
+      // [[lloydCentroids]] round
+      asg
         .groupBy("sub", "code")
-        .agg(VF.arraySumAgg(col("sv")).as("s"), count(lit(1)).as("cnt"))
+        .agg(VF.arraySumAgg(col("sv")).as("s"), count(col("sv")).as("cnt"))
         .select(col("sub"), col("code"),
           transform(col("s"), x => floor(x / col("cnt")).cast("long")).as("scv"))
         .withColumn("scn", VF.normSqQ(col("scv")))
-    }
+    }, iterations, identity, None)
     pqScoreAndRank(queries, it, items, k, numCentroids, nProbe, numSub,
-      Dedup.defaultTruncate(cb))
+      Rounds.defaultTruncate(cb))
   }
 
   /** Subspace splitter: subspace m covers dims [m·subDim, (m+1)·subDim);

@@ -1239,13 +1239,17 @@ object Queries {
     * existence check — no window, no global sort, scales as a plain
     * equi-join; the DuckDB twin replays the identical 5-round
     * schedule. */
-  def dedupComponentsStarChain(s: SparkSession, dir: String): DataFrame = {
+  def dedupComponentsStarChain(s: SparkSession, dir: String): DataFrame =
+    Dedup.componentsStar(docChains(s, dir), rounds = 5).orderBy("doc_id")
+
+  /** The diameter-31 chain graph both chain queries label: an edge
+    * (i, i+1) for every present doc_id pair inside each 32-id block. */
+  private def docChains(s: SparkSession, dir: String): DataFrame = {
     val ids = rd(s, dir, "documents").select(col("doc_id"))
     val cand = ids.where(col("doc_id") % 32 =!= 31)
       .select(col("doc_id").as("a_id"), (col("doc_id") + 1).as("b_id"))
-    val chain = cand.join(ids.select(col("doc_id").as("b_id")), Seq("b_id"), "left_semi")
+    cand.join(ids.select(col("doc_id").as("b_id")), Seq("b_id"), "left_semi")
       .select("a_id", "b_id")
-    Dedup.componentsStar(chain, rounds = 5).orderBy("doc_id")
   }
 
   /** CONVERGENCE-ADAPTIVE components over the same diameter-31 chain
@@ -1262,12 +1266,7 @@ object Queries {
     * round-over-round fixpoint with the same count + set-difference
     * probes, so `rounds_used` itself is oracle-checked, not asserted. */
   def dedupComponentsStarAdaptive(s: SparkSession, dir: String): DataFrame = {
-    val ids = rd(s, dir, "documents").select(col("doc_id"))
-    val cand = ids.where(col("doc_id") % 32 =!= 31)
-      .select(col("doc_id").as("a_id"), (col("doc_id") + 1).as("b_id"))
-    val chain = cand.join(ids.select(col("doc_id").as("b_id")), Seq("b_id"), "left_semi")
-      .select("a_id", "b_id")
-    val (labels, rounds) = Dedup.componentsStarAdaptive(chain, maxRounds = 8)
+    val (labels, rounds) = Dedup.componentsStarAdaptive(docChains(s, dir), maxRounds = 8)
     labels.withColumn("rounds_used", lit(rounds)).orderBy("doc_id")
   }
 

@@ -132,6 +132,25 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(readSpans(killed) == readSpans(single))
   }
 
+  test("repeated runs under one attempt keep every chunk's commit (no manifest overwrite)") {
+    import spark.implicits._
+    val input = corpusDf(60)
+    val cfg = ExtractJob.Config(jobId = "same-attempt", numBuckets = 16,
+      saltsPerBucket = 2, chunkBuckets = 4)
+    val t = tmpDir("graft-same-attempt")
+    val s1 = ExtractJob.run(spark, input, t, cfg.copy(maxChunks = 1))
+    val s2 = ExtractJob.run(spark, input, t, cfg.copy(maxChunks = 1))
+    assert(s1.bucketsProcessed == 4 && s2.committedBucketsBefore == 4)
+    assert(TableIO.committedBuckets(t, "same-attempt").size == 8,
+      "the second run's commit replaced the first run's buckets")
+    ExtractJob.run(spark, input, t, cfg)
+    val ids = spark.read.parquet(TableIO.dataDir(t)).select("doc_id").as[String].collect()
+    assert(ids.length == 60 && ids.distinct.length == 60, s"${ids.length} rows for 60 docs")
+    val lineageDocs = TableIO.readLineage(spark, t)
+      .agg(org.apache.spark.sql.functions.sum("doc_count")).head().getLong(0)
+    assert(lineageDocs == 60L)
+  }
+
   test("kill + resume with giant fan-out ON ≡ single run (skew path × resume interplay)") {
     import spark.implicits._
     // two giants hash into different buckets; a kill between chunks

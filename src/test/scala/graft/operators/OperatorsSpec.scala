@@ -854,7 +854,7 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("componentsStar/components: reliable checkpoint() when a checkpoint dir is set (cluster seam)") {
-    // defaultTruncate must switch from executor-local localCheckpoint
+    // Rounds.defaultTruncate must switch from executor-local localCheckpoint
     // to reliable checkpoint() the moment the session has a checkpoint
     // dir — the multi-executor deployment path, where executor loss
     // must not discard a round's materialized edges. Labels must be
@@ -1064,6 +1064,31 @@ class OperatorsSpec extends AnyFunSuite {
     val (pr, _) = graft.operators.Graphs.pageRankAdaptive(dg, maxIterations = 1)
     val plain = pr.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(plain == Map(0L -> 1000000L, 1L -> 575000L, 2L -> 575000L), s"got $plain")
+  }
+
+  test("pageRank: a null edge endpoint is dropped — the adaptive ladder still converges") {
+    val cyc = Seq[(Long, Option[Long])]((0L, Some(1L)), (1L, Some(2L)), (2L, Some(0L)))
+    val withNull = (cyc :+ ((1L, None: Option[Long]))).toDF("src", "dst")
+    val (cr, cu) = graft.operators.Graphs.pageRankAdaptive(cyc.toDF("src", "dst"), maxIterations = 6)
+    val (nr, nu) = graft.operators.Graphs.pageRankAdaptive(withNull, maxIterations = 6)
+    assert(nu == cu, s"null endpoint changed rounds_used: $nu vs $cu")
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0))) -> r.getLong(1)).toMap
+    assert(ranks(nr) == ranks(cr))
+    val fixed = graft.operators.Graphs.pageRank(withNull, iterations = 2)
+    assert(ranks(fixed).keySet == Set(Some(0L), Some(1L), Some(2L)), s"got ${ranks(fixed)}")
+  }
+
+  test("Lloyd centroids: a null vector is no member — centroids are floored means of the non-null members") {
+    // seeds are ids 0 and 1; id 4 has no embedding
+    val items = Seq[(Long, Option[Seq[Double]])](
+      (0L, Some(Seq(1.0, 0.0))), (1L, Some(Seq(0.0, 1.0))),
+      (2L, Some(Seq(0.9, 0.1))), (3L, Some(Seq(0.1, 0.9))), (4L, None))
+      .toDF("vec_id", "embedding")
+    val it = items.select($"vec_id".as("item_id"), VF.quantize($"embedding").as("qv"))
+    val got = Similarity.lloydCentroids(it, Similarity.seedCentroids(items, 2), 1)
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    assert(got == Map(0L -> Seq(950L, 50L), 1L -> Seq(50L, 950L)), s"got $got")
   }
 
   test("temperatureSample: smallest group kept whole; dominant group follows the exact sqrt rule") {

@@ -1,17 +1,22 @@
 package graft.props
 
 import java.util.zip.Deflater
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
+import org.scalacheck.rng.Seed
 import graft.core.model._
 import graft.engine.Extractor
 import graft.fixtures.InterleavedGen
 import graft.html.Boilerplate
+import graft.operators.{Dedup, Graphs}
 import graft.pdf.{ContentText, Filters, PdfBuilder, PdfDocument, PdfMeta, PdfParseException}
 
 /** Property-based invariants (SURVEY.md §5.3): round-trip identities,
   * order/determinism laws, fail-soft totality. Pure JVM — no Spark
-  * session — so these run in milliseconds and shrink well.
+  * session — so these run in milliseconds and shrink well; the one
+  * exception, the round-loop law at the end, runs Spark jobs and so
+  * checks a fixed handful of seeded graphs once each.
   */
 object EngineProperties extends Properties("graft.engine") {
 
@@ -164,4 +169,34 @@ object EngineProperties extends Properties("graft.engine") {
         total(PdfMeta.formFields) && total(PdfMeta.pageLabels)
     }
   }
+
+  // each operator family runs ONE body (Rounds.iterate); the fixed
+  // schedule is the adaptive twin with the stop test off, so on any
+  // graph r fixed rounds equal the adaptive run capped at r rounds (an
+  // early-converged adaptive run has reached a fixpoint that further
+  // rounds reproduce). Spark jobs are slow, so instead of the default
+  // 100 draws the law is checked on 6 seeded draws: each is a Proof,
+  // so the runner evaluates it once.
+  private lazy val spark = SparkSession.builder().master("local[2]")
+    .config("spark.sql.shuffle.partitions", "2").config("spark.ui.enabled", "false")
+    .getOrCreate()
+  private val graph: Gen[(Seq[(Long, Long)], Int)] = for {
+    n <- Gen.chooseNum(2, 12)
+    m <- Gen.chooseNum(0, 16)
+    edges <- Gen.listOfN(m, Gen.zip(Gen.chooseNum(0L, n - 1L), Gen.chooseNum(0L, n - 1L)))
+    rounds <- Gen.chooseNum(1, 4)
+  } yield (edges, rounds)
+
+  property("round loop: fixed componentsStar/pageRank == adaptive twin capped at the same rounds") =
+    Prop.all((1L to 6L).map { s =>
+      val (edges, r) = graph.pureApply(Gen.Parameters.default, Seed(s))
+      import spark.implicits._
+      def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+      val pairs = edges.toDF("a_id", "b_id")
+      val links = edges.toDF("src", "dst")
+      Prop(rows(Dedup.componentsStar(pairs, rounds = r)) ==
+        rows(Dedup.componentsStarAdaptive(pairs, maxRounds = r)._1) &&
+        rows(Graphs.pageRank(links, iterations = r)) ==
+          rows(Graphs.pageRankAdaptive(links, maxIterations = r)._1)) :| s"seed $s: $edges, r=$r"
+    }: _*)
 }
