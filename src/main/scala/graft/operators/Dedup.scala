@@ -557,14 +557,16 @@ object Dedup {
     * doc appearing in any pair. */
   def componentsStar(pairs: DataFrame, rounds: Int = 3,
       truncate: DataFrame => DataFrame = Rounds.defaultTruncate): DataFrame =
-    starComponents(pairs, rounds, truncate, None)._1
+    starComponents(pairs, rounds, truncate, adaptive = false)._1
 
   /** CONVERGENCE-ADAPTIVE [[componentsStar]]: rounds run until the
     * edge set reaches a FIXPOINT — a converged min-rooted star forest
     * reproduces itself exactly under a large-star/small-star round, so
-    * "this round changed nothing" is the exact termination test (one
-    * count + one left-anti probe per round, both over the round's
-    * already-truncated edge sets — cheap next to the round itself).
+    * "this round changed nothing" is the exact termination test (the
+    * edge count, taken by the round's own truncation, plus one
+    * left-anti probe per round over the already-truncated edge sets —
+    * cheap next to the round itself; `truncate` must run an action, see
+    * [[Rounds]]).
     * Use when the graph's diameter is unknown (the production case);
     * keep the fixed-`rounds` [[componentsStar]] where a deterministic
     * replayable schedule is needed (the DuckDB oracle twin).
@@ -578,33 +580,38 @@ object Dedup {
   def componentsStarAdaptive(pairs: DataFrame, maxRounds: Int = 40,
       truncate: DataFrame => DataFrame = Rounds.defaultTruncate): (DataFrame, Int) = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    starComponents(pairs, maxRounds, truncate, Some(starFixpoint()))
+    starComponents(pairs, maxRounds, truncate, adaptive = true)
   }
 
-  /** The one star-components body. With a fixpoint `stop` the input
-    * is made distinct (rounds already end in distinct), since the test
-    * counts edges; fixed-schedule labels ignore multiplicity. */
+  /** The one star-components body; `adaptive` stops at the fixpoint.
+    * Only the adaptive input is made distinct (rounds already end in
+    * distinct), since its test counts edges; fixed-schedule labels
+    * ignore multiplicity. */
   private def starComponents(pairs: DataFrame, maxRounds: Int,
-      truncate: DataFrame => DataFrame,
-      stop: Option[(DataFrame, DataFrame) => Boolean]): (DataFrame, Int) = {
+      truncate: DataFrame => DataFrame, adaptive: Boolean): (DataFrame, Int) = {
     val edges = pairs.select(col("a_id").as("a"), col("b_id").as("b"))
-    val (last, used) = Rounds.iterate(
-      truncate(if (stop.isDefined) edges.distinct() else edges),
-      starRound, maxRounds, truncate, stop)
+    val (last, used) =
+      if (!adaptive) Rounds.iterate(truncate(edges), starRound, maxRounds, truncate, None)
+      else {
+        val t = new Rounds.Observed(truncate, count(lit(1)).as("n"))
+        val init = t(edges.distinct())
+        Rounds.iterate(init, starRound, maxRounds, t, Some(starFixpoint(t)))
+      }
     (starLabels(last), used)
   }
 
   /** Star fixpoint test. Edge rows are DISTINCT, so multiset equality
     * ≡ equal count + one left-anti containment probe on (a, b) — one
-    * job over the two materialized frames. Round k's `next` count is
-    * carried as round k+1's `prev` count, so each frame is counted once. */
-  private def starFixpoint(): (DataFrame, DataFrame) => Boolean = {
-    var carried: Option[Long] = None
+    * job over the two materialized frames. Each frame's count comes
+    * from its own truncation (`t`, which has truncated the initial
+    * frame already) and is carried to the next round as `prev`'s. */
+  private def starFixpoint(t: Rounds.Observed): (DataFrame, DataFrame) => Boolean = {
+    var prevCount = t.last.getAs[Long]("n")
     (prev, next) => {
-      val prevCount = carried.getOrElse(prev.count())
-      val nextCount = next.count()
-      carried = Some(nextCount)
-      nextCount == prevCount && next.join(prev, Seq("a", "b"), "left_anti").isEmpty
+      val nextCount = t.last.getAs[Long]("n")
+      val same = nextCount == prevCount
+      prevCount = nextCount
+      same && next.join(prev, Seq("a", "b"), "left_anti").isEmpty
     }
   }
 

@@ -19,58 +19,62 @@ import org.apache.spark.sql.types.DecimalType
   * micro-units per step — fine: the DETERMINISTIC fixed-point ladder
   * is the contract, not stochastic-matrix conservation.)
   *
-  * Shape at 100 TB: one iteration = one join of the edge table with
-  * the rank table on src (both partitioned by the join key — at scale
-  * co-partition/bucket both by id and the join is shuffle-free), one
-  * hash aggregation on dst (map-side partials collapse hot in-degree
-  * nodes before the shuffle — the skew path), one left join back to
-  * the node set. O(iterations) rounds, each shuffle-once; rank frames
-  * are truncated per round ([[Rounds]]) so the logical plan stays
-  * O(1) — the componentsStar lesson. Dangling nodes (outdeg 0) absorb
-  * rank and contribute none, declared. Edges with a null endpoint are
-  * dropped: a null is no node id (it would never match the fixpoint
-  * probe, so the adaptive ladder could never converge). */
+  * Shape at 100 TB (Pregel's vertex state, Malewicz et al. SIGMOD
+  * 2010): the rank frame is (id, pr, dsts, prev) — each node carries
+  * its own out-edge list, so a round needs NO edge join. One round =
+  * the frame's one self row per node ∪ its exploded contribution rows
+  * (dst, pr div size(dsts)), then ONE aggregation on id (sum of
+  * contributions, the old rank, the edge list). One shuffle per round;
+  * a hot in-degree node is one group key whose rows the partial
+  * aggregation merges map-side. The edge lists are built once, by one
+  * aggregation. Rank frames are truncated per round ([[Rounds]]) so
+  * the logical plan stays O(1) — the componentsStar lesson. Dangling
+  * nodes (no out-edge, `dsts` null) absorb rank and contribute none,
+  * declared. Edges with a null endpoint are dropped: a null is no node
+  * id. */
 object Graphs {
 
   private val wide = DecimalType(38, 0)
 
-  /** The loop-invariant frames every PageRank variant shares, each
-    * truncated ONCE: the cast edge table (referenced by every round's
-    * join — an untruncated upstream would re-execute per round), the
-    * node set and the out-degrees. */
-  private def prepGraph(edges: DataFrame,
-      truncate: DataFrame => DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val e = truncate(edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .where(col("src").isNotNull && col("dst").isNotNull))
-    val nodes = truncate(
-      e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct())
-    val outdeg = truncate(e.groupBy("src").agg(count(lit(1)).as("outdeg")))
-    (e, nodes, outdeg)
-  }
+  /** The initial rank frame (id, pr, dsts, prev), one row per node
+    * of an edge with no null endpoint: rank 10^6, `dsts` the node's
+    * out-edge list (duplicate edges kept, so size(dsts) is the
+    * out-degree; null for a dangling node), `prev` null. Each edge
+    * emits its src with its dst and its dst with no dst, so ONE
+    * aggregation on id builds the node set and the lists together. */
+  private def initFrame(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+      .where(col("src").isNotNull && col("dst").isNotNull)
+      .select(explode(array(
+        struct(col("src").as("id"), col("dst").as("d")),
+        struct(col("dst").as("id"), lit(null).cast("long").as("d")))).as("v"))
+      .groupBy(col("v.id").as("id"))
+      .agg(collect_list(col("v.d")).as("dsts"))
+      .select(col("id"), lit(1000000L).as("pr"),
+        when(size(col("dsts")) > 0, col("dsts")).as("dsts"), lit(null).cast("long").as("prev"))
 
   /** One damped update: pr' = (1000−d)·10³ + (d·(inflow + share)) div
     * 10³, all DECIMAL(38,0)-widened (the hub-node inflow sum AND the
     * d·inflow product would wrap a long near 2^63 total contribution —
     * within 10× of the 10^12-node design point; the DuckDB twin's
-    * BIGINT-into-HUGEINT sum is exact the same way). `share` is the
-    * optional per-node dangling redistribution (a broadcast one-row
-    * frame), 0 when disabled. */
-  private def rankRound(e: DataFrame, nodes: DataFrame, outdeg: DataFrame,
-      ranks: DataFrame, base: Long, dampingPermille: Int,
-      share: Option[DataFrame]): DataFrame = {
-    val contrib = e
-      .join(ranks.withColumnRenamed("id", "src"), Seq("src"))
-      .join(outdeg, Seq("src"))
-      .select(col("dst").as("id"), expr("pr div outdeg").as("c"))
-    val inflow = contrib.groupBy("id")
-      .agg(sum(col("c").cast(wide)).as("inflow"))
-    val withShare = share match {
-      case Some(sh) => nodes.join(inflow, Seq("id"), "left").crossJoin(broadcast(sh))
-      case None => nodes.join(inflow, Seq("id"), "left").withColumn("share", lit(0L))
-    }
-    withShare.select(col("id"),
-      (lit(base) + floor((coalesce(col("inflow"), lit(0L).cast(wide)) +
-        col("share").cast(wide)) * dampingPermille / 1000).cast("long")).as("pr"))
+    * BIGINT-into-HUGEINT sum is exact the same way). Inflow comes from
+    * the contribution rows `pr div size(dsts)`; the node's self row
+    * carries its edge list and its rank into `prev`. `share` is the
+    * per-node dangling redistribution, 0 when disabled. */
+  private def rankRound(ranks: DataFrame, base: Long, dampingPermille: Int,
+      share: Long): DataFrame = {
+    val self = ranks.select(col("id"), lit(null).cast("long").as("c"),
+      col("dsts"), col("pr").as("prev"))
+    val contrib = ranks.select(explode(col("dsts")).as("id"),
+      expr("pr div size(dsts)").as("c"),
+      lit(null).cast("array<bigint>").as("dsts"), lit(null).cast("long").as("prev"))
+    self.unionAll(contrib).groupBy("id")
+      .agg(sum(col("c").cast(wide)).as("inflow"), max(col("dsts")).as("dsts"),
+        max(col("prev")).as("prev"))
+      .select(col("id"),
+        (lit(base) + floor((coalesce(col("inflow"), lit(0L).cast(wide)) +
+          lit(share).cast(wide)) * dampingPermille / 1000).cast("long")).as("pr"),
+        col("dsts"), col("prev"))
   }
 
   /** `iterations` rounds of damped integer PageRank over
@@ -81,7 +85,7 @@ object Graphs {
       truncate: DataFrame => DataFrame = Rounds.defaultTruncate): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     rank(edges, iterations, dampingPermille, redistributeDangling = false,
-      truncate, None)._1
+      truncate, adaptive = false)._1
   }
 
   /** CONVERGENCE-ADAPTIVE [[pageRank]] with optional DANGLING-MASS
@@ -90,8 +94,8 @@ object Graphs {
     *
     *  - rounds run until the rank vector reaches an exact FIXPOINT
     *    (integer ranks make "this round changed nothing" an equality
-    *    test, not an epsilon — one left-anti probe per round over the
-    *    already-truncated frames); `maxIterations`
+    *    test, not an epsilon — counted by the round's own truncation as
+    *    the rows with pr <> prev); `maxIterations`
     *    bounds a slow spectrum (contraction is ×d/1000 per round, so
     *    micro-unit ranks converge in ≲ log(10⁶)/log(1000/d) rounds);
     *  - with `redistributeDangling`, each round sums the rank held by
@@ -101,45 +105,52 @@ object Graphs {
     *    (Page et al. 1999 §2.6), floor-exact so the DuckDB twin
     *    replays it.
     *
-    * Returns (ranks(id, pr), roundsExecuted); roundsExecuted INCLUDES
-    * the final confirming no-op round — a pre-converged input (a
-    * permutation graph at the uniform fixpoint) reports 1. */
+    * `truncate` must run an action (the round metrics ride it, see
+    * [[Rounds]]). Returns (ranks(id, pr), roundsExecuted);
+    * roundsExecuted INCLUDES the final confirming no-op round — a
+    * pre-converged input (a permutation graph at the uniform fixpoint)
+    * or an empty graph reports 1. */
   def pageRankAdaptive(edges: DataFrame, maxIterations: Int = 40,
       dampingPermille: Int = 850, redistributeDangling: Boolean = false,
       truncate: DataFrame => DataFrame = Rounds.defaultTruncate): (DataFrame, Int) = {
     require(maxIterations >= 1, s"maxIterations must be >= 1, got $maxIterations")
-    // every rank frame holds EXACTLY one row per node (initial ranks
-    // project the node set; rankRound is nodes left-join inflow with
-    // inflow unique per id), so multiset equality reduces to one
-    // left-anti containment probe on (id, pr)
     rank(edges, maxIterations, dampingPermille, redistributeDangling, truncate,
-      Some((prev, next) => next.join(prev, Seq("id", "pr"), "left_anti").isEmpty))
+      adaptive = true)
   }
 
-  /** The one PageRank body: `maxRounds` rounds, or fewer when `stop`
-    * detects the fixpoint. */
+  /** The one PageRank body: `maxRounds` rounds, or fewer when
+    * `adaptive` and a round changed no rank. Only the adaptive ladder
+    * reads round metrics (and redistributes dangling mass), so the
+    * fixed one stays lazy under a lazy `truncate`. */
   private def rank(edges: DataFrame, maxRounds: Int, dampingPermille: Int,
       redistributeDangling: Boolean, truncate: DataFrame => DataFrame,
-      stop: Option[(DataFrame, DataFrame) => Boolean]): (DataFrame, Int) = {
+      adaptive: Boolean): (DataFrame, Int) = {
     require(dampingPermille >= 0 && dampingPermille <= 1000,
       s"dampingPermille must be in [0,1000], got $dampingPermille")
-    val (e, nodes, outdeg) = prepGraph(edges, truncate)
     val base = (1000L - dampingPermille) * 1000L
-    // only the dangling path reads the node count — don't pay its
-    // eager materialization otherwise
-    lazy val nCount = truncate(nodes.agg(count(lit(1)).as("n_nodes")))
-    def share(ranks: DataFrame): Option[DataFrame] =
-      if (!redistributeDangling) None
-      else Some(ranks
-        .join(outdeg.select(col("src").as("id")), Seq("id"), "left_anti")
-        .agg(coalesce(sum(col("pr").cast(wide)), lit(0L).cast(wide)).as("dang"))
-        .crossJoin(broadcast(nCount))
-        .select(expr("dang div n_nodes").cast("long").as("share")))
-    val uniform = nodes.select(col("id"), lit(1000000L).as("pr"))
-    // the fixpoint probe reads round 1's input, so only then is it
-    // materialized
-    Rounds.iterate(if (stop.isDefined) truncate(uniform) else uniform,
-      ranks => rankRound(e, nodes, outdeg, ranks, base, dampingPermille, share(ranks)),
-      maxRounds, truncate, stop)
+    val (last, used) =
+      if (!adaptive)
+        Rounds.iterate(initFrame(edges), ranks => rankRound(ranks, base, dampingPermille, 0L),
+          maxRounds, truncate, None)
+      else {
+        // every frame holds EXACTLY one row per node, so "the rank
+        // vector is unchanged" is `changed == 0`
+        val t = new Rounds.Observed(truncate,
+          count(when(col("pr") =!= col("prev"), 1)).as("changed"),
+          coalesce(sum(when(col("dsts").isNull, col("pr").cast(wide))), lit(0).cast(wide))
+            .as("dang"),
+          count(lit(1)).as("n"))
+        // floor(danglingSum / n) over the frame truncated last
+        def share(): Long = {
+          val n = t.last.getAs[Long]("n")
+          if (!redistributeDangling || n == 0) 0L
+          else t.last.getAs[java.math.BigDecimal]("dang").toBigInteger
+            .divide(java.math.BigInteger.valueOf(n)).longValueExact
+        }
+        Rounds.iterate(t(initFrame(edges)),
+          ranks => rankRound(ranks, base, dampingPermille, share()),
+          maxRounds, t, Some((_, _) => t.last.getAs[Long]("changed") == 0))
+      }
+    (last.select("id", "pr"), used)
   }
 }

@@ -1,7 +1,11 @@
 package graft.operators
 
 import scala.annotation.tailrec
-import org.apache.spark.sql.DataFrame
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import scala.util.{Failure, Success, Try}
+import org.apache.spark.GraftListenerBridge
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 
 /** The one round loop behind every iterative operator (the
   * components, PageRank and Lloyd k-means families), so the
@@ -13,7 +17,14 @@ import org.apache.spark.sql.DataFrame
   * Truncating each round's output cuts the logical plan back to a
   * leaf. Values are unchanged — the DuckDB twins replay the same
   * schedules — but construction runs the rounds EAGERLY. Loops whose
-  * plans stay small pass `identity` and stay lazy and introspectable. */
+  * plans stay small pass `identity` and stay lazy and introspectable.
+  *
+  * Round metrics (a convergence count, a rank sum) come from the
+  * truncation ACTION itself, through [[Observed]]: the truncation is
+  * the job that materializes the round anyway, so a metric read this
+  * way costs no Spark job. A loop that reads metrics therefore needs a
+  * `truncate` that runs an action — both checkpoints do, `identity`
+  * does not and fails loudly. */
 object Rounds {
 
   /** Default truncation: reliable `checkpoint()` when the session has
@@ -50,5 +61,45 @@ object Rounds {
         if (stop.exists(_(cur, next))) (next, used + 1) else go(next, used + 1)
       }
     go(init, 0)
+  }
+
+  /** A `truncate` that also evaluates `metrics` (aggregate columns)
+    * over every frame it truncates, inside the truncating action
+    * (Spark's `Observation`, `CollectMetricsExec`). `last` is the
+    * metric row of the frame truncated most recently: passed to
+    * [[iterate]], that is `cur`'s row while `step(cur)` runs and
+    * `next`'s row while `stop(prev, next)` runs. */
+  final class Observed(truncate: DataFrame => DataFrame, metrics: Column*)
+      extends (DataFrame => DataFrame) {
+    require(metrics.nonEmpty, "Observed needs at least one metric")
+    private var row: Option[Row] = None
+
+    def last: Row = row.getOrElse(
+      throw new IllegalStateException("no frame has been truncated yet"))
+
+    def apply(df: DataFrame): DataFrame = {
+      val obs = Observation()
+      val out = truncate(df.observe(obs, metrics.head, metrics.tail: _*))
+      row = Some(read(obs, df))
+      out
+    }
+  }
+
+  /** Spark completes an `Observation` on the listener bus, AFTER the
+    * action that computed it has returned; the action posts its end
+    * event before returning, so once the bus is drained the row is
+    * there — or no action ran. Bounded both ways: never blocks forever,
+    * never substitutes a row of zeros. */
+  private def read(obs: Observation, df: DataFrame): Row = {
+    if (!obs.future.isCompleted &&
+        !GraftListenerBridge.waitUntilEmpty(df.sparkSession.sparkContext))
+      Try(Await.ready(obs.future, 60.seconds))
+    obs.future.value match {
+      case Some(Success(r)) => r
+      case Some(Failure(e)) => throw e
+      case None => throw new IllegalStateException(
+        "round metrics were never delivered: `truncate` must run an action over " +
+          "the frame it is given (checkpoint / localCheckpoint), not return it lazily")
+    }
   }
 }

@@ -165,8 +165,10 @@ object Similarity {
     * function of (vector, centroid table). Assignment output now
     * stays in the scan's partitions. (History: the row_number-window
     * form before THAT sorted all n×C rows through unsplittable
-    * per-vector partitions.) */
-  private def assignNearestQ(v: DataFrame, cent: DataFrame,
+    * per-vector partitions.) An EMPTY centroid table folds to an
+    * empty array whose array_min is null: no vector has a nearest
+    * centroid, so the assignment is empty (a map-side filter, no job). */
+  private[operators] def assignNearestQ(v: DataFrame, cent: DataFrame,
       idName: String, qvName: String): DataFrame =
     v.withColumn("vn", VF.normSqQ(col(qvName)))
       .crossJoin(broadcast(centArr(cent)))
@@ -176,6 +178,7 @@ object Similarity {
             c.getField("cn")).as("d2"),
             c.getField("cid").as("cid")))).getField("cid").as("cid"),
         col(qvName))
+      .where(col("cid").isNotNull)
 
   private def assignNearest(df: DataFrame, cent: DataFrame,
       idName: String, qvName: String): DataFrame =

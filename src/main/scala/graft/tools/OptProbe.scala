@@ -12,7 +12,8 @@ import graft.spark.{Queries, Sessions}
   * `explain(formatted)` to `plans/r09/<name>_<tag>.txt`.
   *
   * Usage: `runMain graft.tools.OptProbe [--plans <tag>] q1 q2 ...`
-  * (env SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as Bench). */
+  * (env SPARK_GRAFT_SF_DIR as Bench; SPARK_GRAFT_CPUS defaults to the
+  * host's core count, so the probe never oversubscribes the host). */
 object OptProbe {
   private final class CountListener extends SparkListener {
     val jobs = new AtomicLong(0); val stages = new AtomicLong(0)
@@ -29,7 +30,8 @@ object OptProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val (planTag, names) =
       if (args.length >= 2 && args(0) == "--plans") (Some(args(1)), args.drop(2))
       else (None, args)

@@ -1091,6 +1091,78 @@ class OperatorsSpec extends AnyFunSuite {
     assert(got == Map(0L -> Seq(950L, 50L), 1L -> Seq(50L, 950L)), s"got $got")
   }
 
+  test("nearest-centroid assignment: an empty centroid table assigns no item (no null cid)") {
+    val items = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0)), (2L, Seq(0.9, 0.1)))
+      .toDF("vec_id", "embedding")
+    val it = items.select($"vec_id".as("item_id"), VF.quantize($"embedding").as("qv"))
+    val none = Similarity.seedCentroids(items, 0)
+    // Lloyd over no centroids has no cluster to update
+    val lloyd = Similarity.lloydCentroids(it, none, 1).collect()
+    assert(lloyd.isEmpty, s"got ${lloyd.toSeq}")
+    assert(Similarity.assignNearestQ(it, none, "item_id", "qv").count() == 0)
+    assert(Similarity.assignNearestQ(it, Similarity.seedCentroids(items, 1), "item_id", "qv")
+      .collect().map(_.getLong(1)).toSeq == Seq(0L, 0L, 0L))
+  }
+
+  test("pageRankAdaptive: an empty graph (no edges, or only null endpoints) has no ranks and stops after one round") {
+    val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val allNull = Seq[(Option[Long], Option[Long])]((Some(1L), None), (None, Some(2L)), (None, None))
+      .toDF("src", "dst")
+    for ((name, edges) <- Seq("empty" -> empty, "all-null" -> allNull);
+         dangling <- Seq(true, false)) {
+      val (ranks, used) = Graphs.pageRankAdaptive(edges, maxIterations = 6,
+        redistributeDangling = dangling)
+      assert(ranks.count() == 0 && used == 1,
+        s"$name graph, redistributeDangling=$dangling: ${ranks.count()} ranks, $used rounds")
+    }
+    assert(Graphs.pageRank(empty, iterations = 2).count() == 0)
+  }
+
+  test("pageRankAdaptive: one aggregation per round — at most 3 Spark jobs per extra round") {
+    // a sink (3) and a source (4) keep the ladder moving past round 4
+    val edges = Seq((0L, 1L), (0L, 2L), (1L, 2L), (2L, 0L), (2L, 3L), (4L, 0L))
+      .toDF("src", "dst")
+    assert(Graphs.pageRankAdaptive(edges, maxIterations = 40,
+      redistributeDangling = true)._2 > 4, "the budget graph must not converge by round 4")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsAt(rounds: Int): Int = {
+      org.apache.spark.GraftListenerBridge.waitUntilEmpty(sc)
+      val j0 = jobs.get()
+      val (ranks, used) = Graphs.pageRankAdaptive(edges, maxIterations = rounds,
+        redistributeDangling = true)
+      assert(used == rounds)
+      ranks.collect()
+      org.apache.spark.GraftListenerBridge.waitUntilEmpty(sc)
+      jobs.get() - j0
+    }
+    sc.addSparkListener(listener)
+    try {
+      val (j2, j4) = (jobsAt(2), jobsAt(4))
+      assert((j4 - j2) / 2.0 <= 3.0, s"jobs per round: maxIterations 2 -> $j2, 4 -> $j4")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("Rounds.Observed: metrics ride the truncating action; a truncate that runs no action fails loudly") {
+    // the observed row arrives on the listener bus after the action
+    // returns — read it many times in a row, never a stale or zero row
+    val t = new Rounds.Observed(Rounds.defaultTruncate, count(lit(1)).as("n"), sum($"x").as("s"))
+    for (n <- 1 to 20) {
+      val out = t(spark.range(n).toDF("x"))
+      assert(t.last.getAs[Long]("n") == n && t.last.getAs[Long]("s") == n * (n - 1L) / 2)
+      assert(out.count() == n)
+    }
+    val lazyT = new Rounds.Observed(identity, count(lit(1)).as("n"))
+    val err = intercept[IllegalStateException](lazyT(spark.range(3).toDF("x")))
+    assert(err.getMessage.contains("must run an action"), err.getMessage)
+    intercept[IllegalStateException](Graphs.pageRankAdaptive(
+      Seq((0L, 1L)).toDF("src", "dst"), truncate = identity))
+  }
+
   test("temperatureSample: smallest group kept whole; dominant group follows the exact sqrt rule") {
     // group g0: 64 docs, g1: 4 docs -> n_min = 4; keep d in g0 iff
     // h(d)^2 * 64 < 4e6 i.e. h < 250 (exactly the alpha=1/2 rate)

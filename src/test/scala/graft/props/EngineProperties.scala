@@ -14,9 +14,9 @@ import graft.pdf.{ContentText, Filters, PdfBuilder, PdfDocument, PdfMeta, PdfPar
 
 /** Property-based invariants (SURVEY.md §5.3): round-trip identities,
   * order/determinism laws, fail-soft totality. Pure JVM — no Spark
-  * session — so these run in milliseconds and shrink well; the one
-  * exception, the round-loop law at the end, runs Spark jobs and so
-  * checks a fixed handful of seeded graphs once each.
+  * session — so these run in milliseconds and shrink well; the
+  * exceptions, the round-loop laws at the end, run Spark jobs and so
+  * check a fixed handful of seeded graphs once each.
   */
 object EngineProperties extends Properties("graft.engine") {
 
@@ -198,5 +198,58 @@ object EngineProperties extends Properties("graft.engine") {
         rows(Dedup.componentsStarAdaptive(pairs, maxRounds = r)._1) &&
         rows(Graphs.pageRank(links, iterations = r)) ==
           rows(Graphs.pageRankAdaptive(links, maxIterations = r)._1)) :| s"seed $s: $edges, r=$r"
+    }: _*)
+
+  // the floor-arithmetic ladder replayed in plain Scala, straight from
+  // the Graphs scaladoc: returns (ranks, rounds used) — rounds stop at
+  // the first round that changes no rank when `adaptive`
+  private def replayLadder(edges: Seq[(Option[Long], Option[Long])], rounds: Int,
+      d: Int, dangling: Boolean, adaptive: Boolean): (Map[Long, Long], Int) = {
+    val e = edges.collect { case (Some(s), Some(t)) => (s, t) }
+    val nodes = e.flatMap { case (s, t) => Seq(s, t) }.distinct
+    val outdeg = e.groupBy(_._1).map { case (s, es) => s -> es.size.toLong }
+    def round(r: Map[Long, Long]): Map[Long, Long] = {
+      val share = if (!dangling || nodes.isEmpty) BigInt(0)
+        else nodes.filterNot(outdeg.contains).map(v => BigInt(r(v))).sum / nodes.size
+      val inflow = e.groupBy(_._2).map { case (t, in) =>
+        t -> in.map { case (s, _) => BigInt(r(s) / outdeg(s)) }.sum }
+      nodes.map(v => v -> ((1000L - d) * 1000L +
+        (BigInt(d) * (inflow.getOrElse(v, BigInt(0)) + share) / 1000).toLong)).toMap
+    }
+    @annotation.tailrec def go(r: Map[Long, Long], used: Int): (Map[Long, Long], Int) =
+      if (used == rounds) (r, used)
+      else {
+        val next = round(r)
+        if (adaptive && next == r) (next, used + 1) else go(next, used + 1)
+      }
+    go(nodes.map(_ -> 1000000L).toMap, 0)
+  }
+
+  // seeded graphs with a guaranteed sink (node n), a duplicate edge
+  // and null endpoints
+  private def endpoint(hi: Long): Gen[Option[Long]] =
+    Gen.frequency(9 -> Gen.chooseNum(0L, hi).map(Option(_)), 1 -> Gen.const(None))
+  private val ladderGraph: Gen[(Seq[(Option[Long], Option[Long])], Int, Int)] = for {
+    n <- Gen.chooseNum(2, 10)
+    m <- Gen.chooseNum(0, 14)
+    edges <- Gen.listOfN(m, Gen.zip(endpoint(n - 1L), endpoint(n.toLong)))
+    rounds <- Gen.chooseNum(1, 10)
+    d <- Gen.oneOf(850, 500, 1000)
+  } yield ((Some(0L), Some(n.toLong)) +: (Some(1L), Some(0L)) +: (Some(1L), Some(0L)) +: edges, rounds, d)
+
+  property("pageRank/pageRankAdaptive == the plain-Scala floor-arithmetic ladder (ranks and rounds_used)") =
+    Prop.all((1L to 6L).map { s =>
+      val (edges, r, d) = ladderGraph.pureApply(Gen.Parameters.default, Seed(s))
+      import spark.implicits._
+      val links = edges.toDF("src", "dst")
+      def ranks(df: DataFrame) = df.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+      val fixed = ranks(Graphs.pageRank(links, iterations = r, dampingPermille = d)) ==
+        replayLadder(edges, r, d, dangling = false, adaptive = false)._1
+      val adaptive = Seq(false, true).forall { dl =>
+        val (got, used) = Graphs.pageRankAdaptive(links, maxIterations = r,
+          dampingPermille = d, redistributeDangling = dl)
+        (ranks(got), used) == replayLadder(edges, r, d, dl, adaptive = true)
+      }
+      Prop(fixed && adaptive) :| s"seed $s: $edges, r=$r, d=$d"
     }: _*)
 }

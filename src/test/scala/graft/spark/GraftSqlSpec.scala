@@ -150,4 +150,12 @@ class GraftSqlSpec extends AnyFunSuite {
     assert(ad.find(_._1 == 2L).get._2 > 150000L,
       s"dangling share must reach the no-outdeg sink: ${ad.toSeq}")
   }
+
+  test("graph view: an empty edges view registers empty rank views") {
+    import spark.implicits._
+    Seq.empty[(Long, Long)].toDF("src", "dst").createOrReplaceTempView("edges_empty_sql")
+    GraftSql.registerGraphViews(spark, "edges_empty_sql")
+    assert(spark.sql("SELECT * FROM graft_pagerank").count() == 0)
+    assert(spark.sql("SELECT * FROM graft_pagerank_adaptive").count() == 0)
+  }
 }
