@@ -112,12 +112,15 @@ object Extractor {
                     unmappedCodes += pageUnmapped
                     // image enumeration + OCR, text dropped (parity pin 1);
                     // media name formula mirrors engine/mod.rs:108
-                    ContentText.pageImageNames(doc, page).zipWithIndex.foreach { case (_, i) =>
+                    val nImages = ContentText.pageImageNames(doc, page).length
+                    var i = 0
+                    while (i < nImages) {
                       val ref = s"${docId}_${pageNum}_$i.png"
                       engine.extractTextFromImage(ref) match {
                         case Right(t) => ocrChars += t.length
                         case Left(_)  =>
                       }
+                      i += 1
                     }
                     // original source page number rides the span — the
                     // reference's output carries page_num (mod.rs:90)

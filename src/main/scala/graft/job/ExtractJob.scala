@@ -130,6 +130,22 @@ object ExtractJob {
     * never silently emitted with missing page ranges). */
   final case class ChunkOut(doc_id: String, bucket: Int, ok: Boolean, spans: Seq[Span])
 
+  /** Base64-decode a UTF8 column value in place: a ByteBuffer over the
+    * row's backing array when it is on the heap, else a copy of its
+    * bytes. Throws IllegalArgumentException on bad base64, as
+    * `Decoder.decode` does. */
+  private def decodeBase64(dec: java.util.Base64.Decoder,
+      s: org.apache.spark.unsafe.types.UTF8String): Array[Byte] =
+    s.getBaseObject match {
+      case a: Array[Byte] =>
+        val at = (s.getBaseOffset - org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET).toInt
+        val out = dec.decode(java.nio.ByteBuffer.wrap(a, at, s.numBytes))
+        if (out.arrayOffset == 0 && out.remaining == out.array.length) out.array
+        else java.util.Arrays.copyOfRange(out.array, out.arrayOffset + out.position,
+          out.arrayOffset + out.limit)
+      case _ => dec.decode(s.getBytes)
+    }
+
   /** Input must have columns (doc_id string, spans array<struct<kind,
     * text, media_ref, offset>>). Returns run statistics. */
   def run(spark: SparkSession, input: DataFrame, tableDir: String, cfg: Config): JobStats = {
@@ -199,9 +215,10 @@ object ExtractJob {
       // InternalRow fast path: read the scan's catalyst rows directly
       // and emit catalyst rows directly. The typed-encoder path copied
       // every span String twice per direction; the dominant payload
-      // (base64 PDF bytes) is now base64-decoded STRAIGHT from the
-      // scan's UTF8 bytes and never materialized as a java.lang.String.
-      // Column positions are pinned by the select below.
+      // (base64 PDF bytes) is base64-decoded STRAIGHT from the scan's
+      // UTF8 bytes (a ByteBuffer over the row's backing array; a copy
+      // only when the bytes are off-heap) and never materialized as a
+      // java.lang.String. Column positions are pinned by the select below.
       val arranged = repartitioned
         .select("doc_id", "spans", "start_page", "page_count", "engine", "model",
           "password", "bucket")
@@ -212,6 +229,16 @@ object ExtractJob {
         import org.apache.spark.unsafe.types.UTF8String
         val base = bOpts.value
         val b64 = java.util.Base64.getDecoder
+        // span kinds and the empty media_ref repeat on every span: one
+        // shared (immutable) UTF8String each
+        val kindText = UTF8String.fromString("text")
+        val kindMedia = UTF8String.fromString("media")
+        def utf8(s: String): UTF8String =
+          if (s == null) null
+          else if (s.isEmpty) UTF8String.EMPTY_UTF8
+          else if (s == "text") kindText
+          else if (s == "media") kindMedia
+          else UTF8String.fromString(s)
         it.flatMap { row =>
           val docId = row.getUTF8String(0).toString
           val spansArr = row.getArray(1)
@@ -240,7 +267,7 @@ object ExtractJob {
           val spanIns = order.iterator.map { j =>
             val kind = kinds(j).toString
             if (kind == "pdf_bytes")
-              Extractor.SpanIn(kind, null, b64.decode(texts(j).getBytes), mrefs(j).toString)
+              Extractor.SpanIn(kind, null, decodeBase64(b64, texts(j)), mrefs(j).toString)
             else
               Extractor.SpanIn(kind, texts(j).toString, null, mrefs(j).toString)
           }
@@ -264,10 +291,10 @@ object ExtractJob {
           res.doc.map[org.apache.spark.sql.catalyst.InternalRow] { d =>
             val spanRows = new Array[Any](d.spans.length)
             var k = 0
-            d.spans.foreach { sp =>
+            while (k < spanRows.length) {
+              val sp = d.spans(k)
               spanRows(k) = new GenericInternalRow(Array[Any](
-                UTF8String.fromString(sp.kind), UTF8String.fromString(sp.text),
-                UTF8String.fromString(sp.media_ref), sp.order, sp.page))
+                utf8(sp.kind), utf8(sp.text), utf8(sp.media_ref), sp.order, sp.page))
               k += 1
             }
             new GenericInternalRow(Array[Any](

@@ -54,9 +54,11 @@ object ContentText {
   final case class TableDecoder(table: Array[String]) extends FontDecoder {
     def decode(bytes: Array[Byte], ctr: UnmappedCounter): String = {
       val sb = new java.lang.StringBuilder(bytes.length)
-      bytes.foreach { b =>
-        val s = table(b & 0xff)
+      var i = 0
+      while (i < bytes.length) {
+        val s = table(bytes(i) & 0xff)
         if (s.isEmpty) { sb.append('�'); ctr.n += 1 } else sb.append(s)
+        i += 1
       }
       sb.toString
     }
@@ -260,28 +262,28 @@ object ContentText {
     * [[MaxFormDepth]] drop the recursive `Do` — never a hang. */
   def extractPageTextCounted(doc: PdfDocument, page: PDict,
       recurseForms: Boolean = false): (String, Long) = {
-    val streams: Vector[Array[Byte]] = doc.dictGet(page, "Contents") match {
-      case s: PStream => Vector(doc.streamData(s).getOrElse(Array.emptyByteArray))
+    val content: Array[Byte] = doc.dictGet(page, "Contents") match {
+      case s: PStream => doc.streamData(s).getOrElse(Array.emptyByteArray)
       case PArr(xs) =>
-        xs.map(doc.resolve).collect {
+        val streams = xs.map(doc.resolve).collect {
           case s: PStream => doc.streamData(s).getOrElse(Array.emptyByteArray)
         }
-      case _ => Vector.empty
-    }
-    if (streams.isEmpty) return ("", 0L)
-    val content =
-      if (streams.length == 1) streams.head
-      else {
-        // §7.8.2: the division between streams is a token boundary
-        val total = streams.map(_.length).sum + streams.length - 1
-        val out = new Array[Byte](total)
-        var p = 0
-        streams.zipWithIndex.foreach { case (s, i) =>
-          if (i > 0) { out(p) = '\n'; p += 1 }
-          System.arraycopy(s, 0, out, p, s.length); p += s.length
+        if (streams.isEmpty) null
+        else if (streams.length == 1) streams.head
+        else {
+          // §7.8.2: the division between streams is a token boundary
+          val total = streams.map(_.length).sum + streams.length - 1
+          val out = new Array[Byte](total)
+          var p = 0
+          streams.zipWithIndex.foreach { case (s, i) =>
+            if (i > 0) { out(p) = '\n'; p += 1 }
+            System.arraycopy(s, 0, out, p, s.length); p += s.length
+          }
+          out
         }
-        out
-      }
+      case _ => null
+    }
+    if (content == null) return ("", 0L)
 
     val sb = new java.lang.StringBuilder
     val unmapped = new UnmappedCounter
@@ -299,8 +301,9 @@ object ContentText {
       }
     }
     // forms on the recursion STACK by object number — a self- or
-    // mutually-referencing form terminates (the guard drops the Do)
-    val visiting = mutable.HashSet.empty[Int]
+    // mutually-referencing form terminates (the guard drops the Do);
+    // only a walk that recurses into forms needs one
+    val visiting = if (recurseForms) mutable.HashSet.empty[Int] else null
 
     def mapOf(res: Option[PDict], key: String): Map[String, PdfObj] =
       res match {
@@ -319,21 +322,28 @@ object ContentText {
       val xobjDict =
         if (recurseForms) mapOf(res, "XObject") else Map.empty[String, PdfObj]
       val decoders = mutable.HashMap.empty[String, FontDecoder]
-      def decoderFor(name: String): FontDecoder =
-        decoders.getOrElseUpdate(name, fontDict.get(name).map(doc.resolve) match {
-          case Some(f: PDict) =>
-            // doc-level memo: the same font object serves every page,
-            // so the build (ToUnicode inflate + CMap parse) runs once
-            // per document, not once per page
-            val hit = doc.fontDecoderCache.get(f)
-            if (hit != null) hit
-            else {
-              val d = fontDecoder(doc, f)
-              doc.fontDecoderCache.put(f, d)
-              d
-            }
-          case _ => stdDecoder
-        })
+      def decoderFor(name: String): FontDecoder = {
+        val known = decoders.getOrElse(name, null)
+        if (known != null) known
+        else {
+          val d = doc.resolve(fontDict.getOrElse(name, PNull)) match {
+            case f: PDict =>
+              // doc-level memo: the same font object serves every page,
+              // so the build (ToUnicode inflate + CMap parse) runs once
+              // per document, not once per page
+              val hit = doc.fontDecoderCache.get(f)
+              if (hit != null) hit
+              else {
+                val built = fontDecoder(doc, f)
+                doc.fontDecoderCache.put(f, built)
+                built
+              }
+            case _ => stdDecoder
+          }
+          decoders(name) = d
+          d
+        }
+      }
 
       val toks = new Lexer(content, 0).tokenizeContent()
       var curFont = startFont
@@ -361,33 +371,37 @@ object ContentText {
         }
       }
 
+      // the first / last operand, PNull when there is none
+      def first: PdfObj = if (operands.nonEmpty) operands(0) else PNull
+      def last: PdfObj = if (operands.nonEmpty) operands(operands.length - 1) else PNull
+
       toks.foreach {
         case op: POp =>
           op.op match {
             case "BT" => lineY = 0.0
             case "ET" =>
-            case "Tf" => operands.headOption.foreach { case PName(n) => curFont = n; case _ => () }
+            case "Tf" => first match { case PName(n) => curFont = n; case _ => () }
             case "TL" => if (operands.nonEmpty) leading = num(operands(0))
             case "Td" => if (operands.length >= 2) lineY += num(operands(1))
             case "TD" => if (operands.length >= 2) { leading = -num(operands(1)); lineY += num(operands(1)) }
             case "Tm" => if (operands.length >= 6) lineY = num(operands(5))
             case "T*" => lineY -= leading
-            case "Tj" => operands.headOption.foreach { case s: PStr => show(dec(s), lineY); case _ => () }
+            case "Tj" => first match { case s: PStr => show(dec(s), lineY); case _ => () }
             case "'" =>
               lineY -= leading
-              operands.headOption.foreach { case s: PStr => show(dec(s), lineY); case _ => () }
+              first match { case s: PStr => show(dec(s), lineY); case _ => () }
             case "\"" =>
               lineY -= leading
-              operands.lastOption.foreach { case s: PStr => show(dec(s), lineY); case _ => () }
+              last match { case s: PStr => show(dec(s), lineY); case _ => () }
             case "TJ" =>
-              operands.headOption.foreach {
+              first match {
                 case PArr(items) =>
                   val text = items.collect { case s: PStr => dec(s) }.mkString // numbers: no space (pin)
                   show(text, lineY)
                 case _ => ()
               }
             case "Do" if recurseForms =>
-              operands.headOption.foreach { case PName(n) => doForm(n); case _ => () }
+              first match { case PName(n) => doForm(n); case _ => () }
             case _ => // graphics / color / marked-content operators: ignored
           }
           operands.clear()

@@ -230,15 +230,17 @@ object Filters {
     * dereferences indirect params. Returns Left(filterName) when the
     * terminal filter is image-opaque (payload stays raw). */
   def decode(dict: PDict, raw: Array[Byte], resolve: PdfObj => PdfObj): Either[String, Array[Byte]] = {
-    val filters: Vector[String] = resolve(dict.get("Filter").getOrElse(PNull)) match {
+    val filters: Vector[String] = resolve(dict.m.getOrElse("Filter", PNull)) match {
       case PName(n)   => Vector(n)
       case PArr(xs)   => xs.map(x => resolve(x) match { case PName(n) => n; case _ => "" })
       case _          => Vector.empty
     }
-    val parmsList: Vector[PdfObj] = resolve(dict.get("DecodeParms").orElse(dict.get("DP")).getOrElse(PNull)) match {
+    val dp = dict.m.getOrElse("DecodeParms", null)
+    // a filter past the end of the list has no parameters (PNull)
+    val parmsList: Vector[PdfObj] = resolve(if (dp != null) dp else dict.m.getOrElse("DP", PNull)) match {
       case d: PDict => Vector(d)
       case PArr(xs) => xs.map(resolve)
-      case _        => Vector.fill(filters.length)(PNull)
+      case _        => Vector.empty
     }
     var cur = raw
     var i = 0

@@ -31,13 +31,6 @@ final class Lexer(val buf: Array[Byte], var pos: Int = 0) {
     }
   }
 
-  /** Read a bare keyword (regular chars) without consuming if empty. */
-  def readKeyword(): String = {
-    val sb = new java.lang.StringBuilder
-    while (isRegular(cur)) { sb.append(cur.toChar); pos += 1 }
-    sb.toString
-  }
-
   /** Skip ws, consume one keyword token, return its first byte only —
     * for single-letter keywords (xref 'n'/'f') without a String. */
   def readKeywordChar(): Int = {
@@ -92,7 +85,7 @@ final class Lexer(val buf: Array[Byte], var pos: Int = 0) {
       PReal(s.toDouble)
     } else {
       if (digits == 0) throw new PdfParseException(s"bad number at $start")
-      PInt(if (neg) -intPart else intPart)
+      Lexer.intObj(if (neg) -intPart else intPart)
     }
   }
 
@@ -105,9 +98,11 @@ final class Lexer(val buf: Array[Byte], var pos: Int = 0) {
       else pos += 1
     }
     if (!hasEscape) {
-      val s = new String(buf, start, pos - start, java.nio.charset.StandardCharsets.US_ASCII)
-      val cached = Lexer.internedNames.get(s)
-      if (cached != null) cached else PName(s)
+      // §7.3.5: a name is a byte sequence; each byte maps to one char
+      // (ISO-8859-1), the same decode the `#xx` path below applies
+      val cached = Lexer.nameTable.get(buf, start, pos - start)
+      if (cached != null) cached
+      else PName(new String(buf, start, pos - start, java.nio.charset.StandardCharsets.ISO_8859_1))
     } else {
       pos = start
       val sb = new java.lang.StringBuilder
@@ -129,6 +124,19 @@ final class Lexer(val buf: Array[Byte], var pos: Int = 0) {
 
   private def parseLiteralString(): PStr = {
     pos += 1 // '('
+    // fast path: no escape before the balancing ')' — the bytes are the
+    // string's own, copied once
+    val start = pos
+    var p = pos
+    var depth0 = 1
+    while (p < buf.length && buf(p) != '\\' && depth0 > 0) {
+      if (buf(p) == '(') depth0 += 1 else if (buf(p) == ')') depth0 -= 1
+      p += 1
+    }
+    if (depth0 == 0) {
+      pos = p
+      return PStr(java.util.Arrays.copyOfRange(buf, start, p - 1))
+    }
     val out = new java.io.ByteArrayOutputStream(32)
     var depth = 1
     while (depth > 0) {
@@ -184,18 +192,26 @@ final class Lexer(val buf: Array[Byte], var pos: Int = 0) {
 
   private def parseDict(): PdfObj = {
     pos += 2 // '<<'
-    val m = Map.newBuilder[String, PdfObj] // builder, not += churn
+    // up to four entries, grow the immutable Map1..Map4 directly (what
+    // the builder does inside, minus the builder and a tuple per entry);
+    // a builder only from the fifth
+    var small: Map[String, PdfObj] = Map.empty
+    var big: scala.collection.mutable.Builder[(String, PdfObj), Map[String, PdfObj]] = null
     skipWs()
     while (!(cur == '>' && peek(1) == '>')) {
       if (atEnd) throw new PdfParseException("unterminated dict")
       if (cur != '/') throw new PdfParseException(s"dict key must be a name at $pos")
       val k = parseName()
       val v = parseObject()
-      if (v != PNull) m += (k.v -> v) // /K null ≡ absent (§7.3.7)
+      if (v != PNull) { // /K null ≡ absent (§7.3.7)
+        if (big != null) big += (k.v -> v)
+        else if (small.size < 4 || small.contains(k.v)) small = small.updated(k.v, v)
+        else { big = Map.newBuilder[String, PdfObj]; big ++= small; big += (k.v -> v) }
+      }
       skipWs()
     }
     pos += 2
-    PDict(m.result())
+    PDict(if (big != null) big.result() else small)
   }
 
   private def parseArray(): PArr = {
@@ -225,20 +241,20 @@ final class Lexer(val buf: Array[Byte], var pos: Int = 0) {
         val n = parseNumber()
         n match {
           case PInt(num) if num >= 0 =>
+            // `gen R` lookahead on primitives: the generation is scanned,
+            // not parsed into a PInt that is dropped on the (common)
+            // backtrack. A real or a wrapped-negative generation is no
+            // reference, as parseNumber would have decided.
             val save = pos
             skipWs()
-            val c2 = cur
-            if (c2 >= '0' && c2 <= '9') {
-              try {
-                val g = parseNumber()
-                g match {
-                  case PInt(gen) if gen >= 0 =>
-                    skipWs()
-                    if (cur == 'R' && !isRegular(peek(1))) { pos += 1; PRef(num.toInt, gen.toInt) }
-                    else { pos = save; n }
-                  case _ => pos = save; n
-                }
-              } catch { case _: PdfParseException => pos = save; n }
+            if (cur >= '0' && cur <= '9') {
+              var gen = 0L
+              while (cur >= '0' && cur <= '9') { gen = gen * 10 + (cur - '0'); pos += 1 }
+              if (cur != '.' && gen >= 0) {
+                skipWs()
+                if (cur == 'R' && !isRegular(peek(1))) { pos += 1; PRef(num.toInt, gen.toInt) }
+                else { pos = save; n }
+              } else { pos = save; n }
             } else { pos = save; n }
           case _ => n
         }
@@ -269,26 +285,23 @@ final class Lexer(val buf: Array[Byte], var pos: Int = 0) {
             // two ints cannot occur, so parseObject's lookahead is safe
             out += parseObject()
           } else if (isRegular(c)) {
-            val kw = readKeyword()
-            kw match {
-              case "true"  => out += PBool(true)
-              case "false" => out += PBool(false)
-              case "null"  => out += PNull
-              case op if Lexer.internedOps.containsKey(op) => out += Lexer.internedOps.get(op)
-              case "BI" =>
-                // skip inline image up to EI at a token boundary
-                var done = false
-                while (!done && pos < buf.length - 1) {
-                  if ((buf(pos) & 0xff) == 'E' && (buf(pos + 1) & 0xff) == 'I' &&
-                      (pos + 2 >= buf.length || !isRegular(buf(pos + 2) & 0xff)) &&
-                      (pos == 0 || isWs(buf(pos - 1) & 0xff))) {
-                    pos += 2; done = true
-                  } else pos += 1
-                }
-                if (!done) ok = false
-              case "" => ok = false
-              case op => out += POp(op)
-            }
+            val start = pos
+            while (isRegular(cur)) pos += 1
+            val len = pos - start
+            val kw = Lexer.keywordTable.get(buf, start, len)
+            if (kw != null) out += kw
+            else if (len == 2 && buf(start) == 'B' && buf(start + 1) == 'I') {
+              // skip inline image up to EI at a token boundary
+              var done = false
+              while (!done && pos < buf.length - 1) {
+                if ((buf(pos) & 0xff) == 'E' && (buf(pos + 1) & 0xff) == 'I' &&
+                    (pos + 2 >= buf.length || !isRegular(buf(pos + 2) & 0xff)) &&
+                    (pos == 0 || isWs(buf(pos - 1) & 0xff))) {
+                  pos += 2; done = true
+                } else pos += 1
+              }
+              if (!done) ok = false
+            } else out += POp(new String(buf, start, len, java.nio.charset.StandardCharsets.ISO_8859_1))
           } else ok = false
         } catch { case _: PdfParseException => ok = false }
       }
@@ -300,7 +313,9 @@ final class Lexer(val buf: Array[Byte], var pos: Int = 0) {
 object Lexer {
   /** Shared PName instances for the names that appear in essentially
     * every document — avoids a PName + String per dict key/value on
-    * the million-object scan path. */
+    * the million-object scan path. Lookups go by the name's bytes
+    * (through a table built from this map once), so a name found here
+    * allocates nothing; only a miss builds its String and PName. */
   val internedNames: java.util.HashMap[String, PName] = {
     val m = new java.util.HashMap[String, PName]()
     Seq(
@@ -316,7 +331,9 @@ object Lexer {
     m
   }
 
-  /** Shared POp instances for the frequent content-stream operators. */
+  /** Shared POp instances for the frequent content-stream operators.
+    * Like [[internedNames]], looked up by the operator's bytes: a hit
+    * allocates nothing, a miss builds one String and POp. */
   val internedOps: java.util.HashMap[String, POp] = {
     val m = new java.util.HashMap[String, POp]()
     Seq(
@@ -326,5 +343,63 @@ object Lexer {
       "w", "J", "j", "M", "d", "ri", "i", "BDC", "EMC", "BMC", "MP", "DP",
       "cs", "CS", "sc", "SC", "scn", "SCN").foreach(o => m.put(o, POp(o)))
     m
+  }
+
+  /** Shared PInt instances for the small integers content streams and
+    * dicts are full of (coordinates, sizes, generation 0). */
+  private val smallInts: Array[PInt] = Array.tabulate(1280)(i => PInt(i - 256L))
+  private[pdf] def intObj(v: Long): PInt =
+    if (v >= -256 && v < 1024) smallInts((v + 256).toInt) else PInt(v)
+
+  private[pdf] val nameTable: ByteKeyTable[PName] = ByteKeyTable(internedNames)
+
+  /** Content-stream keywords: the interned operators plus the three
+    * keyword objects (§7.3.2, §7.3.9). */
+  private[pdf] val keywordTable: ByteKeyTable[PdfObj] = {
+    val m = new java.util.HashMap[String, PdfObj](internedOps)
+    m.put("true", PBool(true)); m.put("false", PBool(false)); m.put("null", PNull)
+    ByteKeyTable(m)
+  }
+}
+
+/** Read-only open-addressing table from ISO-8859-1 byte strings to
+  * values, probed with a byte range of a buffer so a lookup builds no
+  * key. Fixed at construction; safe to share across threads. */
+private[pdf] final class ByteKeyTable[V <: AnyRef] private (
+    keys: Array[Array[Byte]], values: Array[AnyRef]) {
+
+  /** The value for `buf(start until start + len)`, or null. */
+  def get(buf: Array[Byte], start: Int, len: Int): V = {
+    val mask = keys.length - 1
+    var i = ByteKeyTable.hash(buf, start, len) & mask
+    while (keys(i) != null) {
+      if (java.util.Arrays.equals(keys(i), 0, keys(i).length, buf, start, start + len))
+        return values(i).asInstanceOf[V]
+      i = (i + 1) & mask
+    }
+    null.asInstanceOf[V]
+  }
+}
+
+private[pdf] object ByteKeyTable {
+  private def hash(b: Array[Byte], start: Int, len: Int): Int = {
+    var h = len
+    var i = start
+    while (i < start + len) { h = h * 31 + b(i); i += 1 }
+    h ^ (h >>> 16)
+  }
+
+  def apply[V <: AnyRef](m: java.util.Map[String, V]): ByteKeyTable[V] = {
+    var cap = 16
+    while (cap < m.size * 4) cap <<= 1 // load factor ≤ 1/4: short probes
+    val keys = new Array[Array[Byte]](cap)
+    val values = new Array[AnyRef](cap)
+    m.forEach { (k, v) =>
+      val kb = k.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+      var i = hash(kb, 0, kb.length) & (cap - 1)
+      while (keys(i) != null) i = (i + 1) & (cap - 1)
+      keys(i) = kb; values(i) = v
+    }
+    new ByteKeyTable[V](keys, values)
   }
 }

@@ -10,15 +10,18 @@ import scala.collection.mutable
   */
 final class PdfDocument private (
     val buf: Array[Byte],
-    entries: Map[Int, PdfDocument.XrefEntry],
+    xref: PdfDocument.XrefIndex,
     val trailer: PDict,
     password: Array[Byte]) {
 
   import PdfDocument._
 
-  private val cache = mutable.HashMap.empty[Int, PdfObj]
-  private val objStmCache = mutable.HashMap.empty[Int, Map[Int, PdfObj]]
-  private val loading = mutable.HashSet.empty[Int] // cycle guard
+  // parsed objects and the cycle guard, by xref slot (an object's
+  // position in the index, so both are sized by the entries the file
+  // lists, never by an object number)
+  private val cache = new Array[PdfObj](xref.size)
+  private val loading = new Array[Boolean](xref.size)
+  private val objStmCache = mutable.HashMap.empty[Int, Array[PdfObj]]
 
   /** Font decoders memoized per font OBJECT for the document's
     * lifetime: fonts are shared across pages, but the decoder build
@@ -76,7 +79,7 @@ final class PdfDocument private (
     // — evict everything construction touched so post-init reads
     // re-parse with decryption (normally a fail-soft parse error, but
     // garbage must not stay cached)
-    if (h.isDefined) { cache.clear(); objStmCache.clear() }
+    if (h.isDefined) { java.util.Arrays.fill(cache.asInstanceOf[Array[AnyRef]], null); objStmCache.clear() }
     h
   }
 
@@ -97,15 +100,27 @@ final class PdfDocument private (
     case other     => other
   }
 
-  def getObject(num: Int): PdfObj = cache.getOrElseUpdate(num, {
-    if (!loading.add(num)) throw new PdfParseException(s"reference cycle at obj $num")
-    try entries.get(num) match {
-      case Some(Direct(offset)) => parseIndirectAt(offset, num)
-      case Some(InStream(stm, idx)) =>
-        objStmObjects(stm).getOrElse(idx, PNull)
-      case _ => PNull
-    } finally loading.remove(num)
-  })
+  def getObject(num: Int): PdfObj = {
+    val slot = xref.slot(num)
+    if (slot < 0) PNull
+    else if (cache(slot) != null) cache(slot)
+    else {
+      if (loading(slot)) throw new PdfParseException(s"reference cycle at obj $num")
+      loading(slot) = true
+      val o =
+        try {
+          val e = xref.entries(slot)
+          if (isDirect(e)) parseIndirectAt(high(e), num)
+          else {
+            val objs = objStmObjects(high(e))
+            val idx = streamIndex(e)
+            if (idx < objs.length) objs(idx) else PNull
+          }
+        } finally loading(slot) = false
+      cache(slot) = o
+      o
+    }
+  }
 
   /** Deref indirect references (transitively). */
   def resolve(o: PdfObj): PdfObj = o match {
@@ -113,18 +128,16 @@ final class PdfDocument private (
     case x          => x
   }
 
-  def dictGet(d: PDict, key: String): PdfObj = resolve(d.get(key).getOrElse(PNull))
+  def dictGet(d: PDict, key: String): PdfObj = resolve(d.m.getOrElse(key, PNull))
 
   /** Decode a stream's payload through its filter chain. */
   def streamData(s: PStream): Either[String, Array[Byte]] =
     Filters.decode(s.dict, trimToLength(s), resolve)
 
   private def trimToLength(s: PStream): Array[Byte] = {
-    val len = resolve(s.dict.get("Length").getOrElse(PNull)).asInt.map(_.toInt)
-    len match {
-      case Some(l) if l >= 0 && l < s.raw.length => s.raw.take(l)
-      case _ => s.raw // exact length (the common case): no copy
-    }
+    val l = dictGet(s.dict, "Length").intOr(-1L).toInt
+    if (l >= 0 && l < s.raw.length) s.raw.take(l)
+    else s.raw // exact length (the common case), or none: no copy
   }
 
   private def parseIndirectAt(offset: Int, expectNum: Int): PdfObj = {
@@ -132,8 +145,12 @@ final class PdfDocument private (
       throw new PdfParseException(s"xref offset $offset out of range for obj $expectNum")
     val lx = new Lexer(buf, offset)
     lx.skipWs()
-    val n = lx.parseObject().asInt.getOrElse(throw new PdfParseException(s"bad obj header at $offset"))
-    val gen = lx.parseObject().asInt.getOrElse(0L).toInt
+    val n = lx.parseObject() match {
+      case PInt(v)  => v
+      case PReal(v) => v.toLong
+      case _        => throw new PdfParseException(s"bad obj header at $offset")
+    }
+    val gen = lx.parseObject().intOr(0L).toInt
     lx.expectKeyword("obj")
     if (n != expectNum)
       throw new PdfParseException(s"xref points obj $expectNum at obj $n")
@@ -148,15 +165,15 @@ final class PdfDocument private (
         if (lx.pos < buf.length && buf(lx.pos) == '\r') lx.pos += 1
         if (lx.pos < buf.length && buf(lx.pos) == '\n') lx.pos += 1
         val start = lx.pos
-        val end = resolve(d.get("Length").getOrElse(PNull)).asInt match {
-          case Some(l) if start + l <= buf.length &&
-              endstreamFollows(start + l.toInt) => start + l.toInt
-          case _ => findEndstream(start)
-        }
+        // a negative /Length is as unusable as a wrong one: scan
+        val l = dictGet(d, "Length").intOr(-1L)
+        val end =
+          if (l >= 0 && start + l <= buf.length && endstreamFollows(start + l.toInt)) start + l.toInt
+          else findEndstream(start)
         val raw0 = buf.slice(start, end)
         // decrypt stream payloads (the one place obj/gen are in hand);
         // xref streams are never encrypted (§7.5.8.2)
-        val isXrefStream = d.get("Type").contains(PName("XRef"))
+        val isXrefStream = d.m.getOrElse("Type", PNull) == XRefType
         if (isXrefStream) PStream(d, raw0)
         else {
           val dd =
@@ -176,12 +193,12 @@ final class PdfDocument private (
   private def endstreamFollows(at: Int): Boolean = {
     var p = at
     while (p < buf.length && (buf(p) == '\r' || buf(p) == '\n' || buf(p) == ' ')) p += 1
-    p + 9 <= buf.length &&
-      new String(buf, p, 9, java.nio.charset.StandardCharsets.US_ASCII) == "endstream"
+    p + Endstream.length <= buf.length &&
+      java.util.Arrays.equals(buf, p, p + Endstream.length, Endstream, 0, Endstream.length)
   }
 
   private def findEndstream(start: Int): Int = {
-    val pat = "endstream".getBytes
+    val pat = Endstream
     var p = start
     while (p <= buf.length - pat.length) {
       var i = 0
@@ -198,8 +215,9 @@ final class PdfDocument private (
     throw new PdfParseException("endstream not found")
   }
 
-  /** Parse all objects packed in an object stream (§7.5.7). */
-  private def objStmObjects(stmNum: Int): Map[Int, PdfObj] =
+  /** Parse all objects packed in an object stream (§7.5.7), by index
+    * within the stream (xref type-2 field 3). */
+  private def objStmObjects(stmNum: Int): Array[PdfObj] =
     objStmCache.getOrElseUpdate(stmNum, {
       getObject(stmNum) match {
         case s: PStream =>
@@ -207,20 +225,30 @@ final class PdfDocument private (
             case Right(d) => d
             case Left(f)  => throw new PdfParseException(s"ObjStm with opaque filter $f")
           }
-          val n = resolve(s.dict.get("N").getOrElse(PNull)).asInt
+          val n = dictGet(s.dict, "N").asInt
             .getOrElse(throw new PdfParseException("ObjStm missing /N")).toInt
-          val first = resolve(s.dict.get("First").getOrElse(PNull)).asInt
+          val first = dictGet(s.dict, "First").asInt
             .getOrElse(throw new PdfParseException("ObjStm missing /First")).toInt
-          val hdr = new Lexer(data, 0)
-          val pairs = (0 until n).map { _ =>
-            val num = hdr.parseObject().asInt.getOrElse(0L).toInt
-            val off = hdr.parseObject().asInt.getOrElse(0L).toInt
-            (num, off)
+          // the header's offsets, grown as they parse: /N is the file's
+          // claim, and a hostile one must not size an array
+          val lx = new Lexer(data, 0)
+          var offs = new Array[Int](math.max(0, math.min(n, 64)))
+          var k = 0
+          while (k < n) {
+            lx.parseObject() // object number: the xref entry already names it
+            if (k == offs.length) offs = java.util.Arrays.copyOf(offs, 2 * k)
+            offs(k) = lx.parseObject().intOr(0L).toInt
+            k += 1
           }
-          pairs.zipWithIndex.map { case ((num, off), idx) =>
-            val lx = new Lexer(data, first + off)
-            idx -> lx.parseObject()
-          }.toMap // keyed by index within the stream (xref type-2 field 3)
+          val objs = new Array[PdfObj](k)
+          var idx = 0
+          while (idx < k) {
+            lx.pos = first + offs(idx)
+            if (lx.pos < 0) throw new PdfParseException(s"ObjStm $stmNum: object $idx before the stream")
+            objs(idx) = lx.parseObject()
+            idx += 1
+          }
+          objs
         case _ => throw new PdfParseException(s"obj $stmNum is not an ObjStm")
       }
     })
@@ -249,15 +277,15 @@ final class PdfDocument private (
       case _        => throw new PdfParseException("missing /Pages")
     }
     val out = Vector.newBuilder[(Int, PDict)]
-    val inheritable = Seq("Resources", "MediaBox", "Rotate", "CropBox")
     val seen = mutable.HashSet.empty[Int]
-    def walk(node: PDict, num: Int, inherited: Map[String, PdfObj], depth: Int): Unit = {
+    // inherited values by position in `Inheritable`; null = none
+    def walk(node: PDict, num: Int, inherited: Array[PdfObj], depth: Int): Unit = {
       if (depth > 64) throw new PdfParseException("page tree too deep")
-      val inh = inherited ++ inheritable.flatMap(k => node.get(k).map(k -> _))
       dictGet(node, "Type") match {
         case PName("Page") =>
-          out += ((num, PDict((inh ++ node.m).toMap)))
+          out += ((num, withInherited(node, inherited)))
         case _ =>
+          val inh = inheritFrom(node, inherited)
           dictGet(node, "Kids") match {
             case PArr(kids) =>
               kids.foreach { k =>
@@ -276,8 +304,36 @@ final class PdfDocument private (
           }
       }
     }
-    walk(top, -1, Map.empty, 0)
+    walk(top, -1, new Array[PdfObj](Inheritable.length), 0)
     out.result()
+  }
+
+  /** `inherited` overridden by the node's own inheritable entries; the
+    * same array when the node has none. */
+  private def inheritFrom(node: PDict, inherited: Array[PdfObj]): Array[PdfObj] = {
+    var out = inherited
+    var i = 0
+    while (i < Inheritable.length) {
+      val v = node.m.getOrElse(Inheritable(i), null)
+      if (v != null) {
+        if (out eq inherited) out = inherited.clone()
+        out(i) = v
+      }
+      i += 1
+    }
+    out
+  }
+
+  /** The leaf `node` plus each inherited entry it lacks (its own
+    * entries win); the node itself when it lacks none. */
+  private def withInherited(node: PDict, inherited: Array[PdfObj]): PDict = {
+    var m = node.m
+    var i = 0
+    while (i < Inheritable.length) {
+      if (inherited(i) != null && !m.contains(Inheritable(i))) m = m.updated(Inheritable(i), inherited(i))
+      i += 1
+    }
+    if (m eq node.m) node else PDict(m)
   }
 
   def pageCount: Int = pages.length
@@ -285,9 +341,99 @@ final class PdfDocument private (
 
 object PdfDocument {
 
-  sealed trait XrefEntry
-  final case class Direct(offset: Int) extends XrefEntry
-  final case class InStream(objStm: Int, idx: Int) extends XrefEntry
+  /** The page attributes a leaf inherits from its ancestors (§7.7.3.4). */
+  private val Inheritable = Array("Resources", "MediaBox", "Rotate", "CropBox")
+  private val XRefType = PName("XRef")
+  private val Startxref = "startxref".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+  private val Endstream = "endstream".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+
+  // An xref entry packed in one Long. In use (type 1): the byte offset
+  // in the high 32 bits and bit 31 set. Compressed (type 2): the object
+  // stream's number in the high 32 bits and the index within it in bits
+  // 0-30 (a negative index, which names no object, is stored as
+  // Int.MaxValue, which names none either).
+  private final val DirectBit = 0x80000000L
+  private def direct(offset: Int): Long = (offset.toLong << 32) | DirectBit
+  private def inStream(stm: Int, idx: Int): Long =
+    (stm.toLong << 32) | (if (idx < 0) Int.MaxValue else idx).toLong
+  private def isDirect(e: Long): Boolean = (e & DirectBit) != 0
+  private def high(e: Long): Int = (e >> 32).toInt
+  private def streamIndex(e: Long): Int = (e & 0x7fffffffL).toInt
+
+  /** The document's cross-reference index: object numbers ascending,
+    * each with its packed entry, found by binary search. Built once
+    * from every section; its size is the number of entries the file
+    * lists, whatever the object numbers are. */
+  private[pdf] final class XrefIndex(nums: Array[Int], val entries: Array[Long], val size: Int) {
+    /** The position of `num`, negative when the index lacks it. */
+    def slot(num: Int): Int = java.util.Arrays.binarySearch(nums, 0, size, num)
+  }
+
+  /** Collects the entries of every xref section, newest section first.
+    * Within a section a later entry for the same object replaces an
+    * earlier one; across sections the first (newest) section wins. */
+  private final class XrefBuilder {
+    private var nums = new Array[Int](16)
+    private var entries = new Array[Long](16)
+    private var n = 0
+    private var sectionStarts = new Array[Int](4)
+    private var sections = 0
+
+    def startSection(): Unit = {
+      if (sections == sectionStarts.length) sectionStarts = java.util.Arrays.copyOf(sectionStarts, 2 * sections)
+      sectionStarts(sections) = n
+      sections += 1
+    }
+
+    // grown as entries parse, never sized by a count the file claims
+    def add(num: Int, e: Long): Unit = {
+      if (n == nums.length) {
+        nums = java.util.Arrays.copyOf(nums, 2 * n)
+        entries = java.util.Arrays.copyOf(entries, 2 * n)
+      }
+      nums(n) = num; entries(n) = e; n += 1
+    }
+
+    /** End of the section that holds entry `i`. */
+    private def sectionEnd(i: Int): Int = {
+      var s = sections - 1
+      while (sectionStarts(s) > i) s -= 1
+      if (s + 1 < sections) sectionStarts(s + 1) else n
+    }
+
+    def result(): XrefIndex = {
+      var ascending = true
+      var i = 1
+      while (ascending && i < n) { ascending = nums(i) > nums(i - 1); i += 1 }
+      // ascending means no duplicates (the usual single section): as parsed
+      if (ascending) new XrefIndex(nums, entries, n)
+      else {
+        // sort (number, arrival) pairs; per number keep the last entry
+        // of the first section that lists it
+        val keys = new Array[Long](n)
+        i = 0
+        while (i < n) { keys(i) = (nums(i).toLong << 32) | i; i += 1 }
+        java.util.Arrays.sort(keys)
+        val outNums = new Array[Int](n)
+        val outEntries = new Array[Long](n)
+        var m = 0
+        i = 0
+        while (i < n) {
+          val num = (keys(i) >> 32).toInt
+          var pick = (keys(i) & 0xffffffffL).toInt
+          val end = sectionEnd(pick)
+          i += 1
+          while (i < n && (keys(i) >> 32).toInt == num) {
+            val at = (keys(i) & 0xffffffffL).toInt
+            if (at < end) pick = at
+            i += 1
+          }
+          outNums(m) = num; outEntries(m) = entries(pick); m += 1
+        }
+        new XrefIndex(outNums, outEntries, m)
+      }
+    }
+  }
 
   /** Load a document: locate `startxref`, walk the xref chain
     * (classic tables and/or xref streams, /Prev links), merge
@@ -298,46 +444,44 @@ object PdfDocument {
   /** Load with a user-or-owner password for encrypted documents
     * ([[PdfCrypt.forDocument]]; empty = the no-password class). */
   def load(bytes: Array[Byte], password: Array[Byte]): PdfDocument = {
-    val sxOff = lastIndexOf(bytes, "startxref".getBytes,
-      math.max(0, bytes.length - 2048))
+    val sxOff = lastIndexOf(bytes, Startxref, math.max(0, bytes.length - 2048))
     if (sxOff < 0) throw new PdfParseException("startxref not found")
-    val lx = new Lexer(bytes, sxOff + "startxref".length)
+    val lx = new Lexer(bytes, sxOff + Startxref.length)
     lx.skipWs()
     val firstXref = lx.parseObject().asInt
       .getOrElse(throw new PdfParseException("bad startxref offset")).toInt
 
-    val entries = mutable.HashMap.empty[Int, XrefEntry]
-    var trailer = Map.empty[String, PdfObj]
+    val xref = new XrefBuilder
+    var trailer: Map[String, PdfObj] = null
     val visited = mutable.HashSet.empty[Int]
-    var next: Option[Int] = Some(firstXref)
-
-    while (next.isDefined) {
-      val off = next.get
-      if (!visited.add(off)) next = None
-      else {
-        val (sectionEntries, sectionTrailer) = parseXrefSection(bytes, off)
-        // earlier sections (parsed first) win — they are the newest
-        sectionEntries.foreach { case (k, v) =>
-          if (!entries.contains(k)) entries(k) = v
-        }
-        sectionTrailer.m.foreach { case (k, v) =>
-          if (!trailer.contains(k)) trailer += (k -> v)
-        }
-        next = sectionTrailer.get("Prev").flatMap(_.asInt).map(_.toInt)
+    var next = firstXref
+    var more = true
+    while (more && visited.add(next)) {
+      xref.startSection()
+      val sectionTrailer = parseXrefSection(bytes, next, xref)
+      // earlier sections (parsed first) win — they are the newest
+      if (trailer == null) trailer = sectionTrailer.m
+      else sectionTrailer.m.foreach { case (k, v) =>
+        if (!trailer.contains(k)) trailer += (k -> v)
+      }
+      sectionTrailer.m.getOrElse("Prev", PNull) match {
+        case PInt(v)  => next = v.toInt
+        case PReal(v) => next = v.toLong.toInt
+        case _        => more = false
       }
     }
-    new PdfDocument(bytes, entries.toMap, PDict(trailer), password)
+    new PdfDocument(bytes, xref.result(), PDict(trailer), password)
   }
 
-  /** One xref section at `off`: classic `xref` table or xref stream. */
-  private def parseXrefSection(bytes: Array[Byte], off: Int): (Map[Int, XrefEntry], PDict) = {
+  /** One xref section at `off`, classic `xref` table or xref stream:
+    * its entries go to `xref`, its trailer dict is returned. */
+  private def parseXrefSection(bytes: Array[Byte], off: Int, xref: XrefBuilder): PDict = {
     if (off < 0 || off >= bytes.length)
       throw new PdfParseException(s"xref offset $off out of range")
     val lx = new Lexer(bytes, off)
     lx.skipWs()
     if (lx.peekKeyword("xref")) {
       lx.pos += 4
-      val entries = mutable.HashMap.empty[Int, XrefEntry]
       lx.skipWs()
       while (!lx.peekKeyword("trailer")) {
         val start = lx.parsePrimInt().toInt
@@ -347,17 +491,16 @@ object PdfDocument {
           val o = lx.parsePrimInt().toInt
           lx.parsePrimInt() // gen
           val kind = lx.readKeywordChar()
-          if (kind == 'n') entries(start + i) = Direct(o)
+          if (kind == 'n') xref.add(start + i, direct(o))
           i += 1
         }
         lx.skipWs()
       }
       lx.pos += "trailer".length
-      val tr = lx.parseObject() match {
+      lx.parseObject() match {
         case d: PDict => d
         case _        => throw new PdfParseException("bad trailer dict")
       }
-      (entries.toMap, tr)
     } else {
       // xref stream: "N G obj << /Type /XRef ... >> stream"
       lx.parseObject(); lx.parseObject() // num gen
@@ -382,6 +525,8 @@ object PdfDocument {
         case _              => throw new PdfParseException("xref stream missing /W")
       }
       if (w.length < 3) throw new PdfParseException("xref /W needs 3 fields")
+      if (w.exists(_ < 0) || w.map(_.toLong).sum > Int.MaxValue)
+        throw new PdfParseException(s"xref /W ${w.mkString(" ")} is no field layout")
       val size = d.get("Size").flatMap(_.asInt).getOrElse(0L).toInt
       val index: Vector[(Int, Int)] = d.get("Index") match {
         case Some(PArr(xs)) =>
@@ -389,30 +534,29 @@ object PdfDocument {
         case _ => Vector((0, size))
       }
       val rowLen = w.sum
-      val entries = mutable.HashMap.empty[Int, XrefEntry]
+      val (w0, w1, w2) = (w(0), w(1), w(2))
+      def field(at: Int, width: Int): Long = {
+        var v = 0L
+        var j = 0
+        while (j < width) { v = (v << 8) | (data(at + j) & 0xff); j += 1 }
+        v
+      }
       var p = 0
       index.foreach { case (start, count) =>
         var i = 0
         while (i < count && p + rowLen <= data.length) {
-          def field(k: Int): Long = {
-            var v = 0L
-            val base = p + w.take(k).sum
-            var j = 0
-            while (j < w(k)) { v = (v << 8) | (data(base + j) & 0xff); j += 1 }
-            v
-          }
-          val t = if (w(0) == 0) 1L else field(0) // default type 1 (§7.5.8.3)
-          val f2 = field(1); val f3 = field(2)
+          val t = if (w0 == 0) 1L else field(p, w0) // default type 1 (§7.5.8.3)
+          val f2 = field(p + w0, w1); val f3 = field(p + w0 + w1, w2)
           t match {
-            case 1 => entries(start + i) = Direct(f2.toInt)
-            case 2 => entries(start + i) = InStream(f2.toInt, f3.toInt)
+            case 1 => xref.add(start + i, direct(f2.toInt))
+            case 2 => xref.add(start + i, inStream(f2.toInt, f3.toInt))
             case _ => // type 0 (free) or unknown: skip
           }
           p += rowLen
           i += 1
         }
       }
-      (entries.toMap, d)
+      d
     }
   }
 

@@ -13,6 +13,12 @@ sealed trait PdfObj {
     case PReal(v) => Some(v.toLong)
     case _        => None
   }
+  /** [[asInt]] without the Option: `default` when not a number. */
+  private[pdf] def intOr(default: Long): Long = this match {
+    case PInt(v)  => v
+    case PReal(v) => v.toLong
+    case _        => default
+  }
   def asNum: Option[Double] = this match {
     case PInt(v)  => Some(v.toDouble)
     case PReal(v) => Some(v)

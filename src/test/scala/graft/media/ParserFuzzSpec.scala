@@ -2,7 +2,7 @@ package graft.media
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Hostile-input smoke for the round-6 binary parsers: random and
+/** Hostile-input smoke for the binary parsers: random and
   * mutated-valid bytes must produce a None or the DECLARED exception
   * type — never an uncontrolled error (OOM-scale allocation, infinite
   * loop, ArrayIndexOutOfBounds escaping the fail-soft contract). */
@@ -43,6 +43,62 @@ class ParserFuzzSpec extends AnyFunSuite {
       inBounds(mut)
       inBounds(valid.take(rnd.nextInt(valid.length)))
     }
+  }
+
+  test("PDF parser: seeded mutations of generated PDFs → a result or a fail-soft DocResult, never a throw") {
+    import java.util.Base64
+    import graft.core.model.{ExtractOptions, InterleavedDoc, RawSpan}
+    import graft.engine.Extractor
+    import graft.fixtures.InterleavedGen
+    // an uncaught throwable here would fail a whole Spark task; the
+    // contract is a DocResult, failed (doc = None, error set) or not
+    val prng = new scala.util.Random(20261017)
+    // every PDF style the generator makes (i mod 10 in 4..9; 9 is the
+    // multi-page heavy document)
+    val seeds = Vector(4L, 5L, 6L, 7L, 8L, 14L, 15L, 16L, 17L, 18L, 9L)
+    val pdfs = seeds.map(i => Base64.getDecoder.decode(InterleavedGen.docWithGolden(i)._1.spans.head.text))
+    val tokens = Vector("<<", ">>", "[", "]", "(", ")", "<", ">", "/", "R", "obj", "endobj",
+      "stream", "endstream", "xref", "trailer", "startxref", "-1", "0", "2147483647",
+      "99999999999999999999", "/Length", "/Prev", "/Kids", "/Type /Page", "/Filter /FlateDecode",
+      "/W [1 2 1]", "/Index [2000000000 2]", "%", "\\", "#", "BT", "Tj", "1 0 R")
+      .map(_.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
+    def mutate(src: Array[Byte]): Array[Byte] = prng.nextInt(3) match {
+      case 0 => // byte flips
+        val b = src.clone()
+        (0 until 1 + prng.nextInt(8)).foreach { _ =>
+          val at = prng.nextInt(b.length)
+          b(at) = (if (prng.nextBoolean()) prng.nextInt(256) else b(at) ^ (1 << prng.nextInt(8))).toByte
+        }
+        b
+      case 1 => // truncation: a prefix, or the file with a middle cut out
+        val cut = prng.nextInt(src.length)
+        if (prng.nextBoolean()) src.take(cut)
+        else src.take(cut) ++ src.drop(cut + 1 + prng.nextInt(64))
+      case _ => // token splice: insert or overwrite at a random position
+        val t = tokens(prng.nextInt(tokens.length))
+        val at = prng.nextInt(src.length)
+        val keepFrom = if (prng.nextBoolean()) at else math.min(src.length, at + t.length)
+        src.take(at) ++ " ".getBytes ++ t ++ " ".getBytes ++ src.drop(keepFrom)
+    }
+    val escaped = Vector.newBuilder[String]
+    var failed = 0
+    (0 until 10000).foreach { k =>
+      val pdf = mutate(pdfs(k % pdfs.length))
+      val doc = InterleavedDoc(f"fuzz$k%05d",
+        Seq(RawSpan("pdf_bytes", Base64.getEncoder.encodeToString(pdf), "", 0)))
+      try {
+        val res = Extractor.extractDoc(doc, ExtractOptions())
+        if (res.doc.isEmpty) {
+          failed += 1
+          assert(res.error.isDefined, s"mutation $k: a failed doc carries its error")
+        }
+      } catch {
+        case t: Throwable => escaped += s"mutation $k: ${t.getClass.getName}: ${t.getMessage}"
+      }
+    }
+    val esc = escaped.result()
+    assert(esc.isEmpty, esc.take(10).mkString("\n"))
+    assert(failed > 0, "the mutations must reach the fail-soft path")
   }
 
   test("JBIG2 Huffman parsers: random/mutated input → result or Jbig2Exception only") {

@@ -12,6 +12,125 @@ class PdfSpec extends AnyFunSuite {
     doc.pages.map(p => ContentText.extractPageText(doc, p))
   }
 
+  private def latin1(s: String): Array[Byte] = s.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+
+  /** A classic-xref PDF from object bodies (ISO-8859-1 source). Each
+    * update is appended as an incremental update (§7.5.6): its objects,
+    * an xref section listing only them, and a trailer whose /Prev links
+    * the previous section. `extraXref` is appended to the first xref
+    * section's subsections. */
+  private def rawPdf(base: Seq[(Int, String)], updates: Seq[Seq[(Int, String)]] = Nil,
+      extraXref: Int => String = _ => ""): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream
+    def w(s: String): Unit = out.write(latin1(s))
+    w("%PDF-1.7\n")
+    val size = (base ++ updates.flatten).map(_._1).max + 1
+    var prev = -1
+    (base +: updates).zipWithIndex.foreach { case (objs, sec) =>
+      val offs = objs.map { case (n, body) => val o = out.size; w(s"$n 0 obj\n$body\nendobj\n"); n -> o }
+      val xrefAt = out.size
+      w("xref\n")
+      offs.foreach { case (n, o) => w(f"$n 1\n$o%010d 00000 n \n") }
+      if (sec == 0) w(extraXref(offs.head._2))
+      w(s"trailer\n<< /Size $size /Root 1 0 R${if (prev >= 0) s" /Prev $prev" else ""} >>\n")
+      w(s"startxref\n$xrefAt\n%%EOF\n")
+      prev = xrefAt
+    }
+    out.toByteArray
+  }
+
+  private def streamObj(content: String): String =
+    s"<< /Length ${latin1(content).length} >>\nstream\n$content\nendstream"
+
+  /** A simple font whose code 0x41 ('A') shows `glyph`. */
+  private def fontShowingAAs(glyph: String): String =
+    s"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /Encoding << /Differences [65 /$glyph] >> >>"
+
+  /** Objects 1-4 of a one-page document whose /Font resources are
+    * `fonts` (PDF source). */
+  private def onePage(fonts: String, content: String): Seq[(Int, String)] = Seq(
+    1 -> "<< /Type /Catalog /Pages 2 0 R >>",
+    2 -> "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+    3 -> s"<< /Type /Page /Parent 2 0 R /Contents 4 0 R /Resources << /Font << $fonts >> >> >>",
+    4 -> streamObj(content))
+
+  test("incremental update: two xref sections linked by /Prev, the newer section's object wins") {
+    val base = onePage("/F1 5 0 R", PdfBuilder.tjLine("old text")) :+ (5 -> fontShowingAAs("B"))
+    val update = Seq(4 -> streamObj(PdfBuilder.tjLine("new text A")))
+    // the update lists only object 4: the rest resolve through /Prev
+    assert(pageTexts(rawPdf(base)) == Vector("old text"))
+    assert(pageTexts(rawPdf(base, Seq(update))) == Vector("new text B"))
+    // a second update overrides the first, and both override the base
+    val update2 = Seq(4 -> streamObj(PdfBuilder.tjLine("newest")))
+    assert(pageTexts(rawPdf(base, Seq(update, update2))) == Vector("newest"))
+    // within one section, the later entry for an object wins
+    val twice = base :+ (4 -> streamObj(PdfBuilder.tjLine("listed last")))
+    assert(pageTexts(rawPdf(twice)) == Vector("listed last"))
+    assert(pageTexts(rawPdf(twice, Seq(update))) == Vector("new text B"))
+  }
+
+  test("page inheritance: /Resources and /MediaBox reach a page through an intermediate /Pages node; the page's own entry wins") {
+    val pdf = rawPdf(Seq(
+      1 -> "<< /Type /Catalog /Pages 2 0 R >>",
+      2 -> "<< /Type /Pages /Kids [3 0 R] /Count 2 /Resources << /Font << /F1 6 0 R >> >> /MediaBox [0 0 100 100] >>",
+      3 -> "<< /Type /Pages /Parent 2 0 R /Kids [4 0 R 5 0 R] /Count 2 /MediaBox [0 0 200 200] >>",
+      4 -> "<< /Type /Page /Parent 3 0 R /Contents 7 0 R >>",
+      5 -> ("<< /Type /Page /Parent 3 0 R /Contents 7 0 R /MediaBox [0 0 300 300] " +
+        "/Resources << /Font << /F1 8 0 R >> >> >>"),
+      6 -> fontShowingAAs("B"),
+      7 -> streamObj(PdfBuilder.tjLine("A")),
+      8 -> fontShowingAAs("C")))
+    val doc = PdfDocument.load(pdf)
+    def box(p: PDict): Vector[Long] = p.m("MediaBox") match {
+      case PArr(xs) => xs.flatMap(_.asInt)
+      case other    => fail(s"MediaBox $other")
+    }
+    assert(doc.pages.map(p => ContentText.extractPageText(doc, p)) == Vector("B", "C"))
+    assert(box(doc.pages(0)) == Vector(0L, 0L, 200L, 200L)) // the nearer ancestor wins
+    assert(box(doc.pages(1)) == Vector(0L, 0L, 300L, 300L)) // the page's own entry wins
+    assert(doc.pagesWithNums.map(_._1) == Vector(4, 5))
+    // a page that lacks no inherited entry is the parsed object itself
+    assert(doc.pages(1) eq doc.getObject(5))
+    assert(!(doc.pages(0) eq doc.getObject(4)))
+  }
+
+  test("hostile xref: a subsection starting at object 2,000,000,000 loads without allocating by object number") {
+    val hostile = rawPdf(onePage("/F1 5 0 R", PdfBuilder.tjLine("still readable")) :+ (5 -> fontShowingAAs("B")),
+      extraXref = first => f"2000000000 2\n$first%010d 00000 n \n$first%010d 00000 n \n" +
+        f"2147483647 2\n$first%010d 00000 n \n$first%010d 00000 n \n")
+    val tmx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread.getId
+    val a0 = tmx.getThreadAllocatedBytes(tid)
+    val doc = PdfDocument.load(hostile)
+    assert(doc.pages.map(p => ContentText.extractPageText(doc, p)) == Vector("still readable"))
+    assert(tmx.getThreadAllocatedBytes(tid) - a0 < (4L << 20), "allocation must not scale with object numbers")
+    // the entries point at object 1's header: a declared parse error
+    intercept[PdfParseException](doc.getObject(2000000000))
+    intercept[PdfParseException](doc.getObject(2000000001))
+    intercept[PdfParseException](doc.getObject(Int.MaxValue))
+    assert(doc.getObject(1999999999) == PNull)
+  }
+
+  test("name escapes: /F#31 selects the same font as /F1, /F10 does not") {
+    val pdf = rawPdf(onePage("/F1 5 0 R /F10 6 0 R",
+      "BT /F#31 12 Tf 72 720 Td (A) Tj /F10 12 Tf 0 -20 Td (A) Tj /F1 12 Tf 0 -20 Td (A) Tj ET") ++
+      Seq(5 -> fontShowingAAs("B"), 6 -> fontShowingAAs("C")))
+    assert(pageTexts(pdf) == Vector("B\nC\nB"))
+    assert(new Lexer(latin1("/F#31")).parseObject() == PName("F1"))
+  }
+
+  test("names are bytes (§7.3.5): raw high bytes decode as ISO-8859-1, equal to their #xx escapes, and never collide") {
+    assert(new Lexer(latin1("/Caf\u00e9")).parseObject() == PName("Caf\u00e9"))
+    assert(new Lexer(latin1("/Caf#E9")).parseObject() == PName("Caf\u00e9"))
+    assert(new Lexer(latin1("/Caf\u00e8")).parseObject() != new Lexer(latin1("/Caf\u00e9")).parseObject())
+    // two fonts whose names differ only in a high byte stay two fonts
+    val pdf = rawPdf(onePage("/Caf\u00e9 5 0 R /Caf\u00e8 6 0 R",
+      "BT /Caf\u00e9 12 Tf 72 720 Td (A) Tj /Caf\u00e8 12 Tf 0 -20 Td (A) Tj /Caf#E9 12 Tf 0 -20 Td (A) Tj ET") ++
+      Seq(5 -> fontShowingAAs("B"), 6 -> fontShowingAAs("C")))
+    assert(pageTexts(pdf) == Vector("B\nC\nB"))
+  }
+
   test("pdf_single_tj: classic xref, uncompressed Tj") {
     val b = PdfBuilder.simple(Seq(PdfBuilder.tjLine("Hello pdfz")))
     assert(pageTexts(b) == Vector("Hello pdfz"))
