@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
 
@@ -21,8 +21,11 @@ import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
   *  - MinHash/LSH never materializes all pairs: docs are shuffled once
   *    on (band, signature) and only same-bucket candidates pair up —
   *    the standard way all-pairs similarity survives 10^12 rows;
-  *  - n-gram Jaccard joins on shingle hash — the join explodes only
-  *    docs sharing a shingle; salting/AQE handles hot shingles;
+  *  - n-gram Jaccard/containment aggregate member lists per shingle,
+  *    then count each document's partners in one sorted pass grouped
+  *    by document — no (a, b) pair row is shuffled or hashed; a hot
+  *    shingle still costs df²/2 partner longs, so run the df cap (or
+  *    watch the max_df observation) at scale;
   *  - embedding near-dup buckets by sign-LSH before pairing.
   */
 object Dedup {
@@ -151,23 +154,30 @@ object Dedup {
     * exceeds `maxDf` are dropped from the computation entirely (both
     * intersection AND set sizes, so the Jaccard is exact over the
     * surviving shingle sets). Without a cap, one shingle shared by d
-    * docs emits d²/2 join rows — a single common 3-gram in 10^6 docs
-    * is 10^12 rows, the all-pairs scale-killer; capped, the per-shingle
-    * fan-out is bounded by maxDf²/2. Additionally (both variants,
-    * results unchanged) df=1 shingles are pruned from the self-join —
-    * a lone shingle can produce no pair.
+    * docs carries d²/2 partner longs into the pair stage — a single
+    * common 3-gram in 10^6 docs is 5·10^11 longs, the all-pairs
+    * scale-killer; capped, the per-shingle fan-out is bounded by
+    * maxDf²/2. Intersections are counted per document (see
+    * [[pairIntersections]]); a pair is emitted there only if its
+    * intersection can reach `minPermille` — floor(1000·I/U) ≥ m ⇔
+    * 1000·I ≥ m·U and U ≥ |A|, so I ≥ ceil(m·|A|/1000) is necessary
+    * and the pre-filter drops no passing pair.
+    *
+    * Degenerate ids (see [[shingleRows]]): rows with a null doc_id are
+    * dropped before shingling; a doc_id repeated in rows that SHARE a
+    * shingle fails the query with an IllegalArgumentException naming
+    * the id (its pairs would be self-pairs and permilles above 1000);
+    * a doc_id repeated in rows that share no shingle is one document
+    * whose shingle set is the union of the rows' sets.
     *
     * Pass `maxDfObs` (an [[org.apache.spark.sql.Observation]]) to get
     * a `max_df` metric from the run — the UNCAPPED variant's
-    * hot-shingle exposure is otherwise invisible until the d²/2 pair
-    * unfold hits, so at any real scale run capped, or run uncapped
-    * WITH the observation and alert on max_df. */
+    * hot-shingle exposure is otherwise invisible until the d²/2
+    * partner lists hit, so at any real scale run capped, or run
+    * uncapped WITH the observation and alert on max_df. */
   def ngramJaccardPairs(docs: DataFrame, shingleN: Int = 3,
       minPermille: Int = 200, maxDf: Int = Int.MaxValue,
       maxDfObs: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
-    val sh = docs
-      .select(col("doc_id"),
-        explode(array_distinct(TF.shingles(col("text"), shingleN))).as("sh"))
     // ONE hash aggregation per shingle carries both the document
     // frequency AND the sorted member list: map-side partial counts
     // collapse a hot shingle's rows BEFORE the shuffle, the df cap is
@@ -189,8 +199,8 @@ object Dedup {
     // list by contract (exact all-pairs output) — one row per shingle,
     // linear in df vs the d²/2 join rows the self-join form emits —
     // and surfaces its exposure through the max_df observation.
-    val kept = shingleMemberBuckets(sh, maxDf, maxDfObs)
-    val (inter, sizes) = pairIntersections(kept)
+    val kept = shingleMemberBuckets(shingleRows(docs, shingleN), maxDf, maxDfObs)
+    val (inter, sizes) = pairIntersections(kept, minPermille)
     inter
       .join(sizes.withColumnRenamed("doc_id", "a_id").withColumnRenamed("n", "na"), "a_id")
       .join(sizes.withColumnRenamed("doc_id", "b_id").withColumnRenamed("n", "nb"), "b_id")
@@ -208,14 +218,14 @@ object Dedup {
     * (src contained in dst) at ≥ `minPermille`; same single
     * shingle-aggregation plan and df-cap semantics as
     * [[ngramJaccardPairs]] (the cap drops a shingle from BOTH sides,
-    * so containment stays exact over the surviving shingle sets). */
+    * so containment stays exact over the surviving shingle sets) and
+    * the same degenerate-id contract. The pair stage keeps every pair
+    * sharing a shingle: the b→a direction needs |B|, which the pass
+    * over a's partners does not see. */
   def ngramContainmentPairs(docs: DataFrame, shingleN: Int = 3,
       minPermille: Int = 800, maxDf: Int = Int.MaxValue): DataFrame = {
-    val sh = docs
-      .select(col("doc_id"),
-        explode(array_distinct(TF.shingles(col("text"), shingleN))).as("sh"))
-    val kept = shingleMemberBuckets(sh, maxDf, None)
-    val (inter, sizes) = pairIntersections(kept)
+    val kept = shingleMemberBuckets(shingleRows(docs, shingleN), maxDf, None)
+    val (inter, sizes) = pairIntersections(kept, 0)
     // each unordered intersection row unfolds into its two ordered
     // containment directions (normalized by the SOURCE size)
     inter
@@ -231,6 +241,16 @@ object Dedup {
         col("r.containment_pm").as("containment_pm"))
       .where(col("containment_pm") >= minPermille)
   }
+
+  /** (doc_id, sh) rows of the Jaccard/containment family: each doc's
+    * distinct `shingleN`-gram hashes. Rows with a null doc_id are
+    * dropped here, before df is counted: a null id belongs to no pair,
+    * and counted into df it could push a shingle over the cap that the
+    * non-null members share. The dropped rows are not yet counted. */
+  private def shingleRows(docs: DataFrame, shingleN: Int): DataFrame =
+    docs.where(col("doc_id").isNotNull)
+      .select(col("doc_id"),
+        explode(array_distinct(TF.shingles(col("text"), shingleN))).as("sh"))
 
   /** ONE hash aggregation per shingle carrying df + (bounded) member
     * list — the shared subtree of the Jaccard/containment family; see
@@ -254,38 +274,135 @@ object Dedup {
   }
 
   /** Pairwise shingle-intersection counts + per-doc surviving set
-    * sizes from the bucket aggregate. Pairs via two chained explodes
-    * of the member array (a < b keeps each unordered pair once) —
-    * GenerateExec is codegen'd, unlike the nested-transform HOF unfold
-    * (interpreted; measured ~2x slower at 5M pairs). */
-  private def pairIntersections(kept: DataFrame): (DataFrame, DataFrame) = {
-    // the `df >= 1` predicate is a tautology (df = count(1) of a
-    // non-empty group): it exists so the sizes consumer REFERENCES df,
-    // making its pruned partial aggregate [partial_count,
-    // partial_collect_list] — byte-identical to the intersection
-    // consumer's — so ReuseExchange serves BOTH consumers from ONE
-    // shingle scan+explode+hash+partial-agg subtree. Without it,
-    // column pruning drops partial_count from this side only, the
-    // exchange subtrees stop being equal, and the dominant
-    // scan+md5-shingle pass executes twice (measured: ~19 s → ~10 s
-    // executor CPU on the sf0.1 jaccard/containment pair).
-    val sizes = kept.where(col("df") >= 1)
+    * sizes from the bucket aggregate.
+    *
+    * Intersections are counted PER DOCUMENT, never per pair: every
+    * (shingle, member a) emits one row (a, t), t = the members after a
+    * in the sorted list (empty for the last member and for a df = 1
+    * shingle). The rows are clustered and sorted by a, and one pass
+    * over each run of equal a ([[PartnerCounts]]) concatenates the
+    * tails, sorts them and run-length counts them: the count of b is
+    * |A∩B|, and the run length is |A|, so no join is needed for the
+    * pre-filter. A pair is emitted when its count reaches
+    * max(1, ceil(minPermille·|A|/1000)) — pass 0 to keep every pair
+    * sharing a shingle. At sf0.1 this shuffles 0.49M tail rows (5.2M
+    * longs) where the (a, b) unfold shuffled and hash-aggregated 4.8M
+    * pair rows to keep 6,024 — the pair hash map was larger than cache
+    * and dominated the query. Two alternatives lose: a groupBy(a)
+    * aggregate allocates more (ObjectHashAggregate falls back to sort
+    * above 128 keys per task and serializes partial buffers), and
+    * joining `sizes` onto the tails lets AQE broadcast them and drop
+    * the repartition, so the pass runs in one task — |A| is the run
+    * length instead.
+    *
+    * Scale: a viral shingle of df D still carries D²/2 partner longs,
+    * as the unfold did, but grouped by a they spread across the a
+    * partitions and the sort spills; one document's partner buffer
+    * holds the sum of its shingles' tails. The df cap bounds D.
+    *
+    * Both consumers reference df through the `df >= 1` tautology (df =
+    * count(1) of a non-empty group): column pruning then keeps
+    * [partial_count, partial_collect_list] on both sides, the exchange
+    * subtrees stay byte-identical, and ReuseExchange serves BOTH from
+    * ONE shingle scan+explode+hash+partial-agg subtree. Without it the
+    * dominant scan+md5-shingle pass executes twice (measured: ~19 s →
+    * ~10 s executor CPU on the sf0.1 jaccard/containment pair). */
+  private def pairIntersections(kept: DataFrame,
+      minPermille: Int): (DataFrame, DataFrame) = {
+    val members = kept.where(col("df") >= 1)
+    val sizes = members
       .select(explode(col("ms")).as("doc_id"))
       .groupBy("doc_id").agg(count(lit(1)).as("n"))
-    // ordered pairs directly: `ms` is sorted, so the partners of the
-    // element at (0-based) position i are exactly the slice after it —
-    // df·(df−1)/2 generated rows instead of the full df² cross with a
-    // post-filter (the a<b predicate discarded half the unfold and the
-    // diagonal; slice clamps past the end, so the last element emits
-    // nothing). Same pair set, half the Generate volume feeding the
-    // pair aggregation.
-    val inter = kept.where(col("df") >= 2)
+    // the pass counts integral ids as bigint; the output keeps the id type
+    val idType = members.schema("ms").dataType
+      .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
+    // posexplode + slice is codegen'd, unlike a nested-transform HOF;
+    // slice clamps past the end, so the last member gets an empty tail
+    val inter = members
       .select(col("ms"), posexplode(col("ms")).as(Seq("i", "a")))
-      .select(col("a"),
-        explode(slice(col("ms"), col("i") + lit(2), size(col("ms")))).as("b"))
-      .groupBy(col("a").as("a_id"), col("b").as("b_id"))
-      .agg(count(lit(1)).as("inter"))
+      .select(col("a"), slice(col("ms"), col("i") + lit(2), size(col("ms"))).as("t"))
+      .repartition(col("a"))
+      .sortWithinPartitions("a")
+      .as(Encoders.product[Tail])
+      .mapPartitions(rows => new PartnerCounts(rows, minPermille))(Encoders.product[PairCount])
+      .select(col("a_id").cast(idType).as("a_id"), col("b_id").cast(idType).as("b_id"),
+        col("inter"))
     (inter, sizes)
+  }
+
+  /** One (shingle, member) row of the pair stage: member `a` and the
+    * sorted members after it. */
+  private[operators] final case class Tail(a: Long, t: Array[Long])
+  private[operators] final case class PairCount(a_id: Long, b_id: Long, inter: Long)
+
+  /** The per-partition partner pass of [[pairIntersections]] over
+    * [[Tail]] rows clustered and sorted by `a`; the tails of one run
+    * share one reused buffer. A tail that starts with `a` itself means
+    * `a` appeared twice in one shingle's member list — a duplicate
+    * doc_id — and fails the task. */
+  private final class PartnerCounts(rows: Iterator[Tail], minPermille: Int)
+      extends Iterator[PairCount] {
+    private var pending: Tail = if (rows.hasNext) rows.next() else null
+    private var partners = new Array[Long](1024)
+    private var outB = new Array[Long](256)
+    private var outC = new Array[Long](256)
+    private var outA = 0L
+    private var outN = 0
+    private var outI = 0
+
+    def hasNext: Boolean = {
+      while (outI == outN && pending != null) countRun()
+      outI < outN
+    }
+
+    def next(): PairCount = {
+      if (!hasNext) throw new NoSuchElementException("no more pair counts")
+      val r = PairCount(outA, outB(outI), outC(outI))
+      outI += 1
+      r
+    }
+
+    private def countRun(): Unit = {
+      val a = pending.a
+      var n = 0L
+      var len = 0
+      while (pending != null && pending.a == a) {
+        val t = pending.t
+        if (t.length > 0 && t(0) == a)
+          throw new IllegalArgumentException(
+            s"doc_id $a occurs more than once in one shingle's member list: " +
+              "duplicate doc_id rows sharing a shingle have no pairwise answer")
+        if (len + t.length > partners.length)
+          partners = java.util.Arrays.copyOf(partners,
+            math.min(math.max(len.toLong + t.length, 2L * partners.length),
+              Int.MaxValue - 8L).toInt)
+        System.arraycopy(t, 0, partners, len, t.length)
+        len += t.length
+        n += 1
+        pending = if (rows.hasNext) rows.next() else null
+      }
+      java.util.Arrays.sort(partners, 0, len)
+      val need = if (minPermille <= 0) 1L else math.max(1L, (minPermille * n + 999) / 1000)
+      outA = a
+      outN = 0
+      outI = 0
+      var i = 0
+      while (i < len) {
+        val b = partners(i)
+        var j = i + 1
+        while (j < len && partners(j) == b) j += 1
+        if (j - i >= need) {
+          if (outN == outB.length) {
+            outB = java.util.Arrays.copyOf(outB, 2 * outN)
+            outC = java.util.Arrays.copyOf(outC, 2 * outN)
+          }
+          outB(outN) = b
+          outC(outN) = j - i
+          outN += 1
+        }
+        i = j
+      }
+    }
   }
 
   /** Per-doc 32-bit SimHash sketch plus near-dup pairs at Hamming

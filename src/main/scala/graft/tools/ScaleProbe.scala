@@ -14,14 +14,16 @@ import graft.spark.Sessions
   * the sandbox evidence for "would the plan survive a data-side
   * scale-up" — complementary to Bench's core-side N vs 4N pair.
   *
-  * `runMain graft.tools.ScaleProbe` (env SPARK_GRAFT_SF_DIR /
-  * SPARK_GRAFT_CPUS); prints one JSON line.
+  * `runMain graft.tools.ScaleProbe` (env SPARK_GRAFT_SF_DIR;
+  * SPARK_GRAFT_CPUS defaults to the host's core count, so the probe
+  * never oversubscribes the host); prints one JSON line.
   */
 object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = Sessions.local(cpus, "graft-scaleprobe")
 
     val base = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
@@ -48,6 +50,7 @@ object ScaleProbe {
     val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
       "dedup_exact" -> (d => Dedup.exactGroups(d)),
       "dedup_minhash_star" -> (d => Dedup.minhashLshStarPairs(d)),
+      "dedup_jaccard" -> (d => Dedup.ngramJaccardPairs(d, minPermille = 500)),
       "dedup_jaccard_capped" -> (d => Dedup.ngramJaccardPairs(d, minPermille = 500, maxDf = 10)),
       "dedup_simhash_star" -> (d => Dedup.simhashStarPairs(d)),
       "dedup_components" -> (d => Dedup.components(Dedup.minhashLshStarPairs(d))),

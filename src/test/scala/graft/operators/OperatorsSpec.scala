@@ -228,6 +228,45 @@ class OperatorsSpec extends AnyFunSuite {
     assert(pairs((2L, 1L)) == 666L)
   }
 
+  test("jaccard/containment: a doc_id repeated in rows sharing a shingle fails, naming the id") {
+    // parent answer: jaccard (1,1,333) and (1,2,2000) — above 1000
+    // permille — and containment (1,1,500) twice
+    val d = docs((1L, "a b c d"), (1L, "a b c d"), (2L, "a b c d"))
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.toString).mkString(" | ")
+    Seq[() => Any](
+      () => Dedup.ngramJaccardPairs(d, 3, minPermille = 0).collect(),
+      () => Dedup.ngramJaccardPairs(d, 3, minPermille = 0, maxDf = 10).collect(),
+      () => Dedup.ngramContainmentPairs(d, 3, minPermille = 0).collect()).foreach { run =>
+      val e = intercept[Exception](run())
+      assert(messages(e).contains("IllegalArgumentException: doc_id 1 occurs more than once"),
+        messages(e))
+    }
+    // a doc_id repeated in rows that share NO shingle is one document
+    // whose set is the union: {abc, bcd} ∪ {wxy, xyz} against 6 shingles
+    val u = docs((1L, "a b c d"), (1L, "w x y z"), (2L, "a b c d w x y z"))
+    assert(Dedup.ngramJaccardPairs(u, 3, minPermille = 0).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet == Set((1L, 2L, 666L)))
+    assert(Dedup.ngramContainmentPairs(u, 3, minPermille = 0).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet ==
+      Set((1L, 2L, 1000L), (2L, 1L, 666L)))
+  }
+
+  test("jaccard/containment: a null doc_id row is dropped before df is counted (capped answer unchanged)") {
+    // parent: the null row counted toward df, so "a b c" (df 3 > 2) was
+    // capped out and the capped query returned nothing
+    val withNull = Seq((Some(1L), "a b c d"), (Some(2L), "a b c e"), (None, "a b c f"))
+      .toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    Seq(2, Int.MaxValue).foreach { cap =>
+      assert(rows(Dedup.ngramJaccardPairs(withNull, 3, minPermille = 0, maxDf = cap)) ==
+        Set((1L, 2L, 333L)), s"maxDf $cap")
+      assert(rows(Dedup.ngramContainmentPairs(withNull, 3, minPermille = 0, maxDf = cap)) ==
+        Set((1L, 2L, 500L), (2L, 1L, 500L)), s"maxDf $cap")
+    }
+  }
+
   test("bottomKDistinct: k smallest DISTINCT values ascending, across shuffled partials") {
     val rnd = new scala.util.Random(5)
     val values = Vector.fill(500)(rnd.nextInt(80).toLong) // heavy duplication

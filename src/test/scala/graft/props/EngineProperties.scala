@@ -200,6 +200,63 @@ object EngineProperties extends Properties("graft.engine") {
           rows(Graphs.pageRankAdaptive(links, maxIterations = r)._1)) :| s"seed $s: $edges, r=$r"
     }: _*)
 
+  // exact permille Jaccard and containment over sets of 3-grams
+  // (tokens split on single spaces, empties kept, as ShingleMd5s),
+  // shingles with df > cap dropped from every set: (jaccard rows,
+  // containment rows) at ≥ m
+  private def shingleJaccardRef(docs: Seq[(Long, String)], m: Int, cap: Int)
+      : (Set[(Long, Long, Long)], Set[(Long, Long, Long)]) = {
+    val raw = docs.map { case (id, t) =>
+      id -> t.split(" ", -1).sliding(3).filter(_.length == 3).map(_.mkString(" ")).toSet }
+    val df = raw.flatMap(_._2).groupBy(identity).map { case (s, xs) => s -> xs.size }
+    val sets = raw.map { case (id, s) => id -> s.filter(df(_) <= cap) }.toMap
+    val ids = sets.keys.toSeq.sorted
+    val inter = for {
+      a <- ids; b <- ids if a < b
+      i = (sets(a) & sets(b)).size.toLong if i > 0
+    } yield (a, b, i)
+    val jac = inter.map { case (a, b, i) => (a, b, 1000L * i / (sets(a).size + sets(b).size - i)) }
+    val con = inter.flatMap { case (a, b, i) =>
+      Seq((a, b, 1000L * i / sets(a).size), (b, a, 1000L * i / sets(b).size)) }
+    (jac.filter(_._3 >= m).toSet, con.filter(_._3 >= m).toSet)
+  }
+
+  // seeded corpora over a 3-word vocabulary, so shingles collide and
+  // repeat within a doc; docs of 0-2 tokens have no shingle. Two fixed
+  // docs put a pair exactly on the 1000·I = m·U boundary at m = 500
+  // with U = |A| (B ⊂ A, the smaller id is A): I = 2 = ceil(500·4/1000)
+  private val smallCorpus: Gen[Seq[(Long, String)]] = for {
+    n <- Gen.chooseNum(3, 9)
+    texts <- Gen.listOfN(n,
+      Gen.chooseNum(0, 7).flatMap(k => Gen.listOfN(k, Gen.oneOf("a", "b", "c"))).map(_.mkString(" ")))
+  } yield (Seq("p q r s t u", "p q r s") ++ texts).zipWithIndex.map { case (t, i) => (i + 1L, t) }
+
+  property("jaccard/containment == plain-Scala exact permille over 3-gram sets (minPermille × maxDf grid)") =
+    Prop.all((1L to 3L).map { s =>
+      val docs = smallCorpus.pureApply(Gen.Parameters.default, Seed(s))
+      import spark.implicits._
+      import org.apache.spark.sql.functions.{col, lit}
+      val frame = docs.toDF("doc_id", "text")
+      val grid = for {
+        cap <- Seq(1, 2, 3, Int.MaxValue); m <- Seq(-1, 0, 1, 333, 500, 667, 999, 1000)
+      } yield (m, cap)
+      // one action per draw: the grid's 64 queries as one union
+      val got = grid.flatMap { case (m, cap) =>
+        def tag(op: String, df: DataFrame) =
+          df.select(lit(op).as("op"), lit(m).as("m"), lit(cap).as("cap"),
+            col(df.columns(0)).as("x"), col(df.columns(1)).as("y"), col(df.columns(2)).as("pm"))
+        Seq(tag("j", Dedup.ngramJaccardPairs(frame, 3, minPermille = m, maxDf = cap)),
+          tag("c", Dedup.ngramContainmentPairs(frame, 3, minPermille = m, maxDf = cap)))
+      }.reduce(_ unionAll _).collect()
+        .groupBy(r => (r.getString(0), r.getInt(1), r.getInt(2)))
+        .map { case (k, rs) => k -> rs.map(r => (r.getLong(3), r.getLong(4), r.getLong(5))).toSet }
+      Prop.all(grid.map { case (m, cap) =>
+        val (jac, con) = shingleJaccardRef(docs, m, cap)
+        Prop(got.getOrElse(("j", m, cap), Set.empty) == jac &&
+          got.getOrElse(("c", m, cap), Set.empty) == con) :| s"seed $s, m=$m, maxDf=$cap: $docs"
+      }: _*)
+    }: _*)
+
   // the floor-arithmetic ladder replayed in plain Scala, straight from
   // the Graphs scaladoc: returns (ranks, rounds used) — rounds stop at
   // the first round that changes no rank when `adaptive`
