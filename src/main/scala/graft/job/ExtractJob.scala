@@ -1,6 +1,6 @@
 package graft.job
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.AccumulatorV2
 import graft.core.model._
@@ -12,7 +12,7 @@ import graft.io.TableIO
   * SURVEY.md §3.1) as ONE Spark query per chunk:
   *
   *   read input → resume anti-join(lineage) → [salted repartition]
-  *     → mapPartitions(extract) → append output parquet
+  *     → Generate(ExtractRows) → append output parquet
   *     → commit lineage manifest
   *
   * Two physical modes (Config.mode): the default "scan" plan is
@@ -104,8 +104,8 @@ object ExtractJob {
 
   /** Extracted row carrying its bucket for partitioned append. */
   final case class OutRow(doc_id: String, spans: Seq[Span], bucket: Int)
-  final case class InRow(doc_id: String, spans: Seq[RawSpan], bucket: Int, salt: Int,
-      start_page: Int, page_count: Int, engine: String, model: Option[String])
+  /** A giant document's input row (the typed fan-out path). */
+  final case class InRow(doc_id: String, spans: Seq[RawSpan], bucket: Int)
 
   /** Per-document option columns (the reference's NewFileProcessQueue
     * carries options PER FILE, worker.rs:4-11). If the input table has
@@ -113,11 +113,11 @@ object ExtractJob {
     * row; missing columns fall back to cfg.opts, as do null cells —
     * EXCEPT `model`, where a null cell in a present column means
     * "no model" (None is a meaningful option value of its own, so a
-    * present model column governs absolutely). The streaming face
-    * (`ExtractStream.extract`) implements the identical contract.
-    * `password` (a PER-DOCUMENT decryption password — corpora mix
+    * present model column governs absolutely). `password` (a
+    * PER-DOCUMENT decryption password — corpora mix
     * differently-protected files) follows the fallback family: null
-    * cell → job-level default. */
+    * cell → job-level default. One implementation, [[ExtractRows.of]],
+    * serves this job and the streaming face (`ExtractStream.extract`). */
   val OptionColumns: Seq[String] =
     Seq("start_page", "page_count", "engine", "model", "password")
   /** One page-range chunk of a giant document (startPage < 0 marks an
@@ -129,22 +129,6 @@ object ExtractJob {
     * fails the whole doc at reassembly (fail-soft contract — a doc is
     * never silently emitted with missing page ranges). */
   final case class ChunkOut(doc_id: String, bucket: Int, ok: Boolean, spans: Seq[Span])
-
-  /** Base64-decode a UTF8 column value in place: a ByteBuffer over the
-    * row's backing array when it is on the heap, else a copy of its
-    * bytes. Throws IllegalArgumentException on bad base64, as
-    * `Decoder.decode` does. */
-  private def decodeBase64(dec: java.util.Base64.Decoder,
-      s: org.apache.spark.unsafe.types.UTF8String): Array[Byte] =
-    s.getBaseObject match {
-      case a: Array[Byte] =>
-        val at = (s.getBaseOffset - org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET).toInt
-        val out = dec.decode(java.nio.ByteBuffer.wrap(a, at, s.numBytes))
-        if (out.arrayOffset == 0 && out.remaining == out.array.length) out.array
-        else java.util.Arrays.copyOfRange(out.array, out.arrayOffset + out.position,
-          out.arrayOffset + out.limit)
-      case _ => dec.decode(s.getBytes)
-    }
 
   /** Input must have columns (doc_id string, spans array<struct<kind,
     * text, media_ref, offset>>). Returns run statistics. */
@@ -158,20 +142,11 @@ object ExtractJob {
 
     // per-doc option columns (if present) override job defaults row-wise
     val hasPerDocOpts = input.columns.exists(OptionColumns.contains)
-    def optCol(name: String, default: Column): Column =
-      if (input.columns.contains(name)) coalesce(col(name), default) else default
 
     // deterministic bucket/salt assignment (SURVEY.md §7.4.3: derived
     // purely from doc_id, never from partition index)
     val withKeys = input
-      .select(col("doc_id"), col("spans"),
-        optCol("start_page", lit(cfg.opts.startPage)).cast("int").as("start_page"),
-        optCol("page_count", lit(cfg.opts.pageCount)).cast("int").as("page_count"),
-        optCol("engine", lit(cfg.opts.engine)).cast("string").as("engine"),
-        (if (input.columns.contains("model")) col("model").cast("string")
-         else lit(cfg.opts.ocrModel.orNull).cast("string")).as("model"),
-        optCol("password", lit(cfg.opts.password.orNull).cast("string"))
-          .as("password"))
+      .select((Seq("doc_id", "spans") ++ OptionColumns.filter(input.columns.contains)).map(col): _*)
       .withColumn("bucket", pmod(xxhash64($"doc_id"), lit(cfg.numBuckets)).cast("int"))
       .withColumn("salt", pmod(xxhash64($"doc_id", lit(7)), lit(cfg.saltsPerBucket)).cast("int"))
 
@@ -183,7 +158,6 @@ object ExtractJob {
 
     val chunkSize = if (cfg.chunkBuckets <= 0) pendingBuckets.size else cfg.chunkBuckets
     val chunks = pendingBuckets.grouped(chunkSize).toVector.take(cfg.maxChunks)
-    val bOpts = spark.sparkContext.broadcast(cfg.opts)
 
     var totals = BucketStats()
     var bucketsDone = 0
@@ -212,98 +186,11 @@ object ExtractJob {
         sub.repartition(parallelism, $"bucket", $"salt")
       } else sub
 
-      // InternalRow fast path: read the scan's catalyst rows directly
-      // and emit catalyst rows directly. The typed-encoder path copied
-      // every span String twice per direction; the dominant payload
-      // (base64 PDF bytes) is base64-decoded STRAIGHT from the scan's
-      // UTF8 bytes (a ByteBuffer over the row's backing array; a copy
-      // only when the bytes are off-heap) and never materialized as a
-      // java.lang.String. Column positions are pinned by the select below.
-      val arranged = repartitioned
-        .select("doc_id", "spans", "start_page", "page_count", "engine", "model",
-          "password", "bucket")
-      val outSchema = org.apache.spark.sql.Encoders.product[OutRow].schema
-      val rddOut = arranged.queryExecution.toRdd.mapPartitions { it =>
-        import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-        import org.apache.spark.sql.catalyst.util.GenericArrayData
-        import org.apache.spark.unsafe.types.UTF8String
-        val base = bOpts.value
-        val b64 = java.util.Base64.getDecoder
-        // span kinds and the empty media_ref repeat on every span: one
-        // shared (immutable) UTF8String each
-        val kindText = UTF8String.fromString("text")
-        val kindMedia = UTF8String.fromString("media")
-        def utf8(s: String): UTF8String =
-          if (s == null) null
-          else if (s.isEmpty) UTF8String.EMPTY_UTF8
-          else if (s == "text") kindText
-          else if (s == "media") kindMedia
-          else UTF8String.fromString(s)
-        it.flatMap { row =>
-          val docId = row.getUTF8String(0).toString
-          val spansArr = row.getArray(1)
-          val n = spansArr.numElements()
-          // materialize the span views (offset, kind, text, media_ref)
-          // and sort by offset; views into the scan buffer are only
-          // valid until the next input row, and this row is fully
-          // consumed before the iterator advances
-          val offs = new Array[Int](n)
-          val kinds = new Array[UTF8String](n)
-          val texts = new Array[UTF8String](n)
-          val mrefs = new Array[UTF8String](n)
-          var bytesIn = 0L
-          var i = 0
-          while (i < n) {
-            val st = spansArr.getStruct(i, 4)
-            offs(i) = st.getInt(3)
-            kinds(i) = st.getUTF8String(0)
-            texts(i) = st.getUTF8String(1)
-            mrefs(i) = st.getUTF8String(2)
-            bytesIn += (if (texts(i) == null) 0 else texts(i).numBytes.toLong) +
-              (if (mrefs(i) == null) 0 else mrefs(i).numBytes.toLong)
-            i += 1
-          }
-          val order = Array.range(0, n).sortBy(offs)
-          val spanIns = order.iterator.map { j =>
-            val kind = kinds(j).toString
-            if (kind == "pdf_bytes")
-              Extractor.SpanIn(kind, null, decodeBase64(b64, texts(j)), mrefs(j).toString)
-            else
-              Extractor.SpanIn(kind, texts(j).toString, null, mrefs(j).toString)
-          }
-          val opts = ExtractOptions(
-            row.getInt(2), row.getInt(3), row.getUTF8String(4).toString,
-            (if (row.isNullAt(5)) None else Some(row.getUTF8String(5).toString))
-              .filter(_.nonEmpty),
-            base.parityStartOffByOne,
-            // null survived the coalesce against the job default, so
-            // there is no password anywhere for this doc
-            password =
-              if (row.isNullAt(6)) None else Some(row.getUTF8String(6).toString))
-          val bucket = row.getInt(7)
-          val res = Extractor.extractCore(docId, spanIns, bytesIn, opts)
-          acc.add(bucket -> BucketStats(
-            docCount = 1,
-            spanCount = res.spanCount,
-            bytesIn = res.bytesIn,
-            failedDocs = if (res.doc.isEmpty) 1 else 0,
-            unmappedCodes = res.unmappedCodes))
-          res.doc.map[org.apache.spark.sql.catalyst.InternalRow] { d =>
-            val spanRows = new Array[Any](d.spans.length)
-            var k = 0
-            while (k < spanRows.length) {
-              val sp = d.spans(k)
-              spanRows(k) = new GenericInternalRow(Array[Any](
-                utf8(sp.kind), utf8(sp.text), utf8(sp.media_ref), sp.order, sp.page))
-              k += 1
-            }
-            new GenericInternalRow(Array[Any](
-              UTF8String.fromString(d.doc_id), new GenericArrayData(spanRows), bucket))
-          }
-        }
-      }
-      val normalOut: DataFrame =
-        org.apache.spark.sql.GraftColumnBridge.internalRowsToDf(spark, rddOut, outSchema)
+      // one map-only Generate (ExtractRows): catalyst rows in and out,
+      // the options carried in the plan, stats into this chunk's
+      // accumulator inside the write's own action
+      val normalOut = repartitioned.select(
+        ExtractRows.of(repartitioned, cfg.opts, $"bucket", Some(acc)), $"bucket")
 
       val extracted: DataFrame = if (!fanOut) normalOut else {
         val chunkPages = cfg.giantChunkPages

@@ -35,56 +35,102 @@ object ContentText {
   /** Shared default decoder (table is never mutated). */
   private val stdDecoder = TableDecoder(Encodings.standard)
 
-  /** Per-extraction tally of codes the active encoding leaves
-    * undefined. Each such code decodes as U+FFFD — visible in the
-    * output — and increments this counter, which rides the span
-    * metrics as `unmapped_codes` (never a silent drop; cf. the
-    * declared-failure posture of JBIG2/crypt). */
-  final class UnmappedCounter { var n: Long = 0L }
+  /** A page's text as UTF-8, appended char by char into one buffer
+    * that is reused from page to page. The bytes equal Java's UTF-8
+    * encoding of the String the chars form: a surrogate pair, even one
+    * split across two appends, is one 4-byte sequence, and a lone
+    * surrogate is '?'. Also tallies the codes the active encoding
+    * leaves undefined: each decodes as U+FFFD — visible in the output —
+    * and counts in `unmapped`, which rides the span metrics as
+    * `unmapped_codes` (never a silent drop; cf. the declared-failure
+    * posture of JBIG2/crypt). */
+  final class TextOut {
+    private var buf = new Array[Byte](256)
+    private var len = 0
+    private var high: Char = 0 // a high surrogate waiting for its low half
+    var unmapped = 0L
+
+    def clear(): Unit = {
+      if (buf.length > (1 << 20)) buf = new Array[Byte](256) // give a huge page's buffer back
+      len = 0; high = 0; unmapped = 0L
+    }
+
+    def append(c: Char): Unit = {
+      if (len + 4 > buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
+      val h = high
+      high = 0
+      if (h != 0 && Character.isLowSurrogate(c)) {
+        val cp = Character.toCodePoint(h, c)
+        put(0xf0 | cp >> 18); put(0x80 | (cp >> 12 & 0x3f)); put(0x80 | (cp >> 6 & 0x3f)); put(0x80 | (cp & 0x3f))
+      } else {
+        if (h != 0) put('?')
+        if (c < 0x80) put(c)
+        else if (c < 0x800) { put(0xc0 | c >> 6); put(0x80 | (c & 0x3f)) }
+        else if (Character.isHighSurrogate(c)) high = c
+        else if (Character.isLowSurrogate(c)) put('?')
+        else { put(0xe0 | c >> 12); put(0x80 | (c >> 6 & 0x3f)); put(0x80 | (c & 0x3f)) }
+      }
+    }
+    private def put(b: Int): Unit = { buf(len) = b.toByte; len += 1 }
+
+    def append(s: String): Unit = {
+      var i = 0
+      while (i < s.length) { append(s.charAt(i)); i += 1 }
+    }
+
+    /** A code the active encoding leaves undefined. */
+    def undefined(): Unit = { append('\uFFFD'); unmapped += 1 }
+
+    /** The output state; it changes with every append. */
+    private[pdf] def mark: Long = (len.toLong << 16) | high
+    private[pdf] def reset(m: Long): Unit = { len = (m >>> 16).toInt; high = (m & 0xffff).toChar }
+
+    /** Ends the text: a high surrogate still waiting becomes '?'. */
+    private def settle(): Unit = if (high != 0) { high = 0; append('?') }
+    /** The text's UTF-8 bytes: the first [[length]] bytes of this array. */
+    def bytes: Array[Byte] = { settle(); buf }
+    def length: Int = { settle(); len }
+    override def toString: String = new String(bytes, 0, length, java.nio.charset.StandardCharsets.UTF_8)
+  }
 
   sealed trait FontDecoder {
-    def decode(bytes: Array[Byte], ctr: UnmappedCounter): String
-    /** Count-free convenience (tests/CLI display); a fresh throwaway
-      * counter per call — a shared sink would be cross-thread-mutable
-      * state for no benefit. */
-    final def decode(bytes: Array[Byte]): String = decode(bytes, new UnmappedCounter)
+    /** Append the text of one show-string to `out`. */
+    def decode(bytes: Array[Byte], out: TextOut): Unit
+    /** The text of one show-string (tests/CLI display). */
+    final def decode(bytes: Array[Byte]): String = { val o = new TextOut; decode(bytes, o); o.toString }
   }
 
   /** Simple (1-byte) font via a 256-entry table. */
   final case class TableDecoder(table: Array[String]) extends FontDecoder {
-    def decode(bytes: Array[Byte], ctr: UnmappedCounter): String = {
-      val sb = new java.lang.StringBuilder(bytes.length)
+    def decode(bytes: Array[Byte], out: TextOut): Unit = {
       var i = 0
       while (i < bytes.length) {
         val s = table(bytes(i) & 0xff)
-        if (s.isEmpty) { sb.append('�'); ctr.n += 1 } else sb.append(s)
+        if (s.isEmpty) out.undefined() else out.append(s)
         i += 1
       }
-      sb.toString
     }
   }
 
-  /** CMap-driven decoder (ToUnicode); codes are 1 or 2 bytes wide. */
-  final case class CMapDecoder(bytesPerCode: Int, map: Map[Int, String], fallback: Array[String])
-      extends FontDecoder {
-    def decode(bytes: Array[Byte], ctr: UnmappedCounter): String = {
-      val sb = new java.lang.StringBuilder(bytes.length)
+  /** CMap-driven decoder (ToUnicode); codes are 1 or 2 bytes wide. The
+    * mapped codes ascend in `codes`, with their text in `texts`. */
+  final case class CMapDecoder(bytesPerCode: Int, codes: Array[Int], texts: Array[String],
+      fallback: Array[String]) extends FontDecoder {
+    def decode(bytes: Array[Byte], out: TextOut): Unit = {
       var i = 0
       while (i + bytesPerCode <= bytes.length) {
         var code = 0
         var j = 0
         while (j < bytesPerCode) { code = (code << 8) | (bytes(i + j) & 0xff); j += 1 }
-        map.get(code) match {
-          case Some(s) => sb.append(s)
-          case None =>
-            val viaTable = if (bytesPerCode == 1) fallback(code) else ""
-            if (viaTable.isEmpty) { sb.append('�'); ctr.n += 1 }
-            else sb.append(viaTable)
+        val at = java.util.Arrays.binarySearch(codes, code)
+        if (at >= 0) out.append(texts(at))
+        else {
+          val viaTable = if (bytesPerCode == 1) fallback(code) else ""
+          if (viaTable.isEmpty) out.undefined() else out.append(viaTable)
         }
         i += bytesPerCode
       }
-      if (i < bytes.length) { sb.append('�'); ctr.n += 1 } // trailing partial code
-      sb.toString
+      if (i < bytes.length) out.undefined() // trailing partial code
     }
   }
 
@@ -146,7 +192,8 @@ object ContentText {
       }
       i += 1
     }
-    CMapDecoder(width, map.toMap, baseTable("StandardEncoding"))
+    val codes = map.keys.toArray.sorted
+    CMapDecoder(width, codes, codes.map(map), baseTable("StandardEncoding"))
   }
 
   /** UCS2-family predefined CMap (UniJIS-UCS2-H and friends, §9.7.5):
@@ -156,17 +203,15 @@ object ContentText {
     * Surrogate-range and NUL codes are not UCS-2 characters → U+FFFD,
     * counted. */
   case object Ucs2Decoder extends FontDecoder {
-    def decode(bytes: Array[Byte], ctr: UnmappedCounter): String = {
-      val sb = new java.lang.StringBuilder(bytes.length / 2)
+    def decode(bytes: Array[Byte], out: TextOut): Unit = {
       var i = 0
       while (i + 2 <= bytes.length) {
         val code = ((bytes(i) & 0xff) << 8) | (bytes(i + 1) & 0xff)
-        if (code == 0 || (code >= 0xD800 && code <= 0xDFFF)) { sb.append('�'); ctr.n += 1 }
-        else sb.append(code.toChar)
+        if (code == 0 || (code >= 0xD800 && code <= 0xDFFF)) out.undefined()
+        else out.append(code.toChar)
         i += 2
       }
-      if (i < bytes.length) { sb.append('�'); ctr.n += 1 } // trailing partial code
-      sb.toString
+      if (i < bytes.length) out.undefined() // trailing partial code
     }
   }
 
@@ -176,11 +221,8 @@ object ContentText {
     * unmapped (the byte stream is still consumed two bytes at a time,
     * preserving character COUNT — never garbled as 1-byte chars). */
   case object IdentityCidDecoder extends FontDecoder {
-    def decode(bytes: Array[Byte], ctr: UnmappedCounter): String = {
-      val n = (bytes.length + 1) / 2 // a trailing partial code counts too
-      ctr.n += n
-      "�" * n
-    }
+    def decode(bytes: Array[Byte], out: TextOut): Unit =
+      (0 until (bytes.length + 1) / 2).foreach(_ => out.undefined()) // a trailing partial code counts too
   }
 
   private val Ucs2Name = "Uni(?:JIS|GB|CNS|KS)-UCS2-[HV]".r
@@ -245,10 +287,22 @@ object ContentText {
       recurseForms: Boolean = false): String =
     extractPageTextCounted(doc, page, recurseForms)._1
 
-  /** [[extractPageText]] plus the page's `unmapped_codes` count —
-    * bytes/CIDs the font's encoding left undefined (decoded as U+FFFD,
-    * tallied so a Standard/MacRoman high-range document degrades
-    * VISIBLY in metrics instead of silently losing glyphs).
+  /** [[extractPageText]] plus the page's `unmapped_codes` count: a
+    * String view of [[pageText]]. */
+  def extractPageTextCounted(doc: PdfDocument, page: PDict,
+      recurseForms: Boolean = false): (String, Long) = {
+    val out = views.get
+    val unmapped = pageText(doc, page, out, recurseForms)
+    (out.toString, unmapped)
+  }
+  private val views = ThreadLocal.withInitial(() => new TextOut)
+
+  /** The text of one page per the pinned reassembly rule, written as
+    * UTF-8 into `out` (cleared first). Returns the page's
+    * `unmapped_codes` count — bytes/CIDs the font's encoding left
+    * undefined (decoded as U+FFFD, tallied so a Standard/MacRoman
+    * high-range document degrades VISIBLY in metrics instead of
+    * silently losing glyphs).
     *
     * `recurseForms = true` is a DECLARED EXTENSION: a `Do` of a
     * `/Subtype /Form` XObject executes the form's content stream at
@@ -260,8 +314,9 @@ object ContentText {
     * (/root/reference/extractor/src/engine/mod.rs:100-103). Cycles
     * (self- or mutually-referencing forms) and chains deeper than
     * [[MaxFormDepth]] drop the recursive `Do` — never a hang. */
-  def extractPageTextCounted(doc: PdfDocument, page: PDict,
-      recurseForms: Boolean = false): (String, Long) = {
+  def pageText(doc: PdfDocument, page: PDict, out: TextOut,
+      recurseForms: Boolean = false): Long = {
+    out.clear()
     val content: Array[Byte] = doc.dictGet(page, "Contents") match {
       case s: PStream => doc.streamData(s).getOrElse(Array.emptyByteArray)
       case PArr(xs) =>
@@ -283,138 +338,170 @@ object ContentText {
         }
       case _ => null
     }
-    if (content == null) return ("", 0L)
-
-    val sb = new java.lang.StringBuilder
-    val unmapped = new UnmappedCounter
-    // show-state is SHARED across the page and its forms (the form's
-    // text lands inline at the Do point); text-position state is
-    // per-stream
-    var lastShowY = 0.0
-    var hasShown = false
-    def show(text: String, lineY: Double): Unit = {
-      if (text.nonEmpty) {
-        if (hasShown && lineY != lastShowY) sb.append('\n')
-        sb.append(text)
-        hasShown = true
-        lastShowY = lineY
-      }
+    if (content != null) {
+      val it = interps.get
+      it.start(doc, out, recurseForms)
+      try it.walk(content, doc.dictGet(page, "Resources") match {
+        case r: PDict => r
+        case _        => null
+      }, "", 0)
+      finally it.start(null, null, recurse = false)
     }
+    out.unmapped
+  }
+  private val interps = ThreadLocal.withInitial(() => new Interp)
+
+  /** The content-stream interpreter of one thread, reused page after
+    * page: the show state and the operand slots are its fields, tokens
+    * stream from the lexer, and the per-stream state (font, decoder,
+    * text position) lives in [[walk]]'s locals, so a page allocates no
+    * interpreter scratch. */
+  private final class Interp {
+    private var doc: PdfDocument = _
+    private var out: TextOut = _
+    private var recurseForms = false
     // forms on the recursion STACK by object number — a self- or
-    // mutually-referencing form terminates (the guard drops the Do);
-    // only a walk that recurses into forms needs one
-    val visiting = if (recurseForms) mutable.HashSet.empty[Int] else null
+    // mutually-referencing form terminates (the guard drops the Do)
+    private val visiting = mutable.HashSet.empty[Int]
+    // show-state is SHARED across the page and its forms (the form's
+    // text lands inline at the Do point)
+    private var hasShown = false
+    private var lastShowY = 0.0
+    // the operands of the pending operator: the first six and the last
+    // (no operator reads more)
+    private val ops = new Array[PdfObj](6)
+    private var nOps = 0
+    private var lastOp: PdfObj = PNull
 
-    def mapOf(res: Option[PDict], key: String): Map[String, PdfObj] =
-      res match {
-        case Some(r) => doc.dictGet(r, key) match {
-          case f: PDict => f.m
-          case _        => Map.empty
-        }
-        case None => Map.empty
+    def start(d: PdfDocument, o: TextOut, recurse: Boolean): Unit = {
+      doc = d; out = o; recurseForms = recurse
+      visiting.clear(); hasShown = false; lastShowY = 0.0
+      java.util.Arrays.fill(ops.asInstanceOf[Array[AnyRef]], null); nOps = 0; lastOp = PNull
+    }
+
+    private def op(i: Int): PdfObj = if (i < nOps) ops(i) else PNull
+    private def num(i: Int): Double = op(i) match {
+      case PInt(v)  => v.toDouble
+      case PReal(v) => v
+      case _        => 0.0
+    }
+
+    private def dictOf(res: PDict, key: String): Map[String, PdfObj] =
+      if (res == null) Map.empty
+      else doc.dictGet(res, key) match {
+        case d: PDict => d.m
+        case _        => Map.empty
       }
 
-    def walk(content: Array[Byte], res: Option[PDict], startFont: String,
-        depth: Int): Unit = {
-      // font name → decoder, resolved lazily from THIS stream's
-      // /Resources /Font (forms scope their own resources)
-      val fontDict = mapOf(res, "Font")
-      val xobjDict =
-        if (recurseForms) mapOf(res, "XObject") else Map.empty[String, PdfObj]
-      val decoders = mutable.HashMap.empty[String, FontDecoder]
-      def decoderFor(name: String): FontDecoder = {
-        val known = decoders.getOrElse(name, null)
-        if (known != null) known
-        else {
-          val d = doc.resolve(fontDict.getOrElse(name, PNull)) match {
-            case f: PDict =>
-              // doc-level memo: the same font object serves every page,
-              // so the build (ToUnicode inflate + CMap parse) runs once
-              // per document, not once per page
-              val hit = doc.fontDecoderCache.get(f)
-              if (hit != null) hit
-              else {
-                val built = fontDecoder(doc, f)
-                doc.fontDecoderCache.put(f, built)
-                built
-              }
-            case _ => stdDecoder
+    /** The decoder of font resource `name`; the build (ToUnicode
+      * inflate + CMap parse) is memoized per font object for the whole
+      * document, since the same font serves every page. */
+    private def decoderFor(fonts: Map[String, PdfObj], name: String): FontDecoder =
+      doc.resolve(fonts.getOrElse(name, PNull)) match {
+        case f: PDict =>
+          val hit = doc.fontDecoderCache.get(f)
+          if (hit != null) hit
+          else {
+            val built = fontDecoder(doc, f)
+            doc.fontDecoderCache.put(f, built)
+            built
           }
-          decoders(name) = d
-          d
-        }
+        case _ => stdDecoder
       }
 
-      val toks = new Lexer(content, 0).tokenizeContent()
-      var curFont = startFont
+    /** One show operator's string or TJ array, under the newline rule:
+      * a newline goes before a non-empty show iff something was shown
+      * already and the line moved since. */
+    private def show(strs: PdfObj, dec: FontDecoder, lineY: Double): Unit = {
+      val before = out.mark
+      if (hasShown && lineY != lastShowY) out.append('\n')
+      val atText = out.mark
+      strs match {
+        case s: PStr => dec.decode(s.bytes, out)
+        case PArr(items) =>
+          var i = 0
+          while (i < items.length) {
+            items(i) match { case s: PStr => dec.decode(s.bytes, out); case _ => }
+            i += 1
+          }
+        case _ =>
+      }
+      if (out.mark == atText) out.reset(before) // nothing shown: no newline either
+      else { hasShown = true; lastShowY = lineY }
+    }
+
+    def walk(content: Array[Byte], res: PDict, startFont: String, depth: Int): Unit = {
+      // font name → decoder from THIS stream's /Resources /Font (forms
+      // scope their own resources)
+      val fonts = dictOf(res, "Font")
+      val xobjs = if (recurseForms) dictOf(res, "XObject") else Map.empty[String, PdfObj]
+      val lx = new Lexer(content, 0)
+      var font = startFont
+      var dec: FontDecoder = null
       var leading = 0.0
       var lineY = 0.0
-      val operands = mutable.ArrayBuffer.empty[PdfObj]
-      def dec(s: PStr): String = decoderFor(curFont).decode(s.bytes, unmapped)
-      def num(o: PdfObj): Double = o.asNum.getOrElse(0.0)
-
-      def doForm(name: String): Unit = {
-        val ref = xobjDict.get(name)
-        val objNum = ref match { case Some(PRef(n, _)) => Some(n); case _ => None }
-        ref.map(doc.resolve).foreach {
-          case s: PStream if doc.dictGet(s.dict, "Subtype") == PName("Form") =>
-            if (depth < MaxFormDepth && objNum.forall(visiting.add)) {
-              try {
-                val formRes = doc.dictGet(s.dict, "Resources") match {
-                  case r: PDict => Some(r)
-                  case _        => res // §8.10.1: absent → caller's scope
+      nOps = 0
+      var t = lx.nextContentToken()
+      while (t != null) {
+        t match {
+          case POp(name) =>
+            name match {
+              case "BT" => lineY = 0.0
+              case "Tf" => op(0) match { case PName(n) => font = n; dec = null; case _ => () }
+              case "TL" => if (nOps > 0) leading = num(0)
+              case "Td" => if (nOps >= 2) lineY += num(1)
+              case "TD" => if (nOps >= 2) { leading = -num(1); lineY += num(1) }
+              case "Tm" => if (nOps >= 6) lineY = num(5)
+              case "T*" => lineY -= leading
+              case "Tj" | "'" | "\"" | "TJ" =>
+                if (name == "'" || name == "\"") lineY -= leading
+                // Tj, ' and " show a string, TJ an array (its kerning
+                // numbers insert nothing); an operand of the other type
+                // shows nothing. A font's decoder is built when it first
+                // has a string to show
+                val strs = if (name == "\"") lastOp else op(0)
+                val hasStr = strs match {
+                  case _: PStr     => name != "TJ"
+                  case PArr(items) => name == "TJ" && items.exists(_.isInstanceOf[PStr])
+                  case _           => false
                 }
-                doc.streamData(s).foreach(d => walk(d, formRes, curFont, depth + 1))
-              } finally objNum.foreach(visiting.remove)
+                if (hasStr) {
+                  if (dec == null) dec = decoderFor(fonts, font)
+                  show(strs, dec, lineY)
+                }
+              case "Do" if recurseForms =>
+                op(0) match { case PName(n) => doForm(xobjs, n, res, font, depth); case _ => () }
+              case _ => // graphics / color / marked-content operators: ignored
             }
-          case _ => () // image XObjects: handled by the media path
+            nOps = 0
+            lastOp = PNull
+          case operand =>
+            if (nOps < ops.length) ops(nOps) = operand
+            nOps += 1
+            lastOp = operand
         }
+        t = lx.nextContentToken()
       }
+    }
 
-      // the first / last operand, PNull when there is none
-      def first: PdfObj = if (operands.nonEmpty) operands(0) else PNull
-      def last: PdfObj = if (operands.nonEmpty) operands(operands.length - 1) else PNull
-
-      toks.foreach {
-        case op: POp =>
-          op.op match {
-            case "BT" => lineY = 0.0
-            case "ET" =>
-            case "Tf" => first match { case PName(n) => curFont = n; case _ => () }
-            case "TL" => if (operands.nonEmpty) leading = num(operands(0))
-            case "Td" => if (operands.length >= 2) lineY += num(operands(1))
-            case "TD" => if (operands.length >= 2) { leading = -num(operands(1)); lineY += num(operands(1)) }
-            case "Tm" => if (operands.length >= 6) lineY = num(operands(5))
-            case "T*" => lineY -= leading
-            case "Tj" => first match { case s: PStr => show(dec(s), lineY); case _ => () }
-            case "'" =>
-              lineY -= leading
-              first match { case s: PStr => show(dec(s), lineY); case _ => () }
-            case "\"" =>
-              lineY -= leading
-              last match { case s: PStr => show(dec(s), lineY); case _ => () }
-            case "TJ" =>
-              first match {
-                case PArr(items) =>
-                  val text = items.collect { case s: PStr => dec(s) }.mkString // numbers: no space (pin)
-                  show(text, lineY)
-                case _ => ()
+    private def doForm(xobjs: Map[String, PdfObj], name: String, res: PDict, font: String,
+        depth: Int): Unit = {
+      val ref = xobjs.getOrElse(name, PNull)
+      val objNum = ref match { case PRef(n, _) => n; case _ => -1 }
+      doc.resolve(ref) match {
+        case s: PStream if doc.dictGet(s.dict, "Subtype") == PName("Form") =>
+          if (depth < MaxFormDepth && (objNum < 0 || visiting.add(objNum))) {
+            try {
+              val formRes = doc.dictGet(s.dict, "Resources") match {
+                case r: PDict => r
+                case _        => res // §8.10.1: absent → caller's scope
               }
-            case "Do" if recurseForms =>
-              first match { case PName(n) => doForm(n); case _ => () }
-            case _ => // graphics / color / marked-content operators: ignored
+              doc.streamData(s).foreach(d => walk(d, formRes, font, depth + 1))
+            } finally if (objNum >= 0) visiting.remove(objNum)
           }
-          operands.clear()
-        case operand => operands += operand
+        case _ => () // image XObjects: handled by the media path
       }
     }
-
-    val pageRes = doc.dictGet(page, "Resources") match {
-      case r: PDict => Some(r)
-      case _        => None
-    }
-    walk(content, pageRes, "", 0)
-    (sb.toString, unmapped.n)
   }
 
   /** Enumerate image XObjects of a page in /Resources declaration

@@ -192,26 +192,34 @@ final class Lexer(val buf: Array[Byte], var pos: Int = 0) {
 
   private def parseDict(): PdfObj = {
     pos += 2 // '<<'
-    // up to four entries, grow the immutable Map1..Map4 directly (what
-    // the builder does inside, minus the builder and a tuple per entry);
-    // a builder only from the fifth
-    var small: Map[String, PdfObj] = Map.empty
+    // the entries collect in the thread's scratch arrays, above those
+    // of any dict being parsed around this one, and are copied out once;
+    // past ArrayMap.MaxLinear entries a hash map builder takes them over
+    val s = Lexer.dictScratch.get
+    val base = s.top
     var big: scala.collection.mutable.Builder[(String, PdfObj), Map[String, PdfObj]] = null
-    skipWs()
-    while (!(cur == '>' && peek(1) == '>')) {
-      if (atEnd) throw new PdfParseException("unterminated dict")
-      if (cur != '/') throw new PdfParseException(s"dict key must be a name at $pos")
-      val k = parseName()
-      val v = parseObject()
-      if (v != PNull) { // /K null ≡ absent (§7.3.7)
-        if (big != null) big += (k.v -> v)
-        else if (small.size < 4 || small.contains(k.v)) small = small.updated(k.v, v)
-        else { big = Map.newBuilder[String, PdfObj]; big ++= small; big += (k.v -> v) }
-      }
+    try {
       skipWs()
-    }
-    pos += 2
-    PDict(if (big != null) big.result() else small)
+      while (!(cur == '>' && peek(1) == '>')) {
+        if (atEnd) throw new PdfParseException("unterminated dict")
+        if (cur != '/') throw new PdfParseException(s"dict key must be a name at $pos")
+        val k = parseName().v
+        val v = parseObject()
+        if (v != PNull) { // /K null ≡ absent (§7.3.7)
+          if (big != null) big += (k -> v)
+          else if (!s.put(base, k, v)) {
+            big = scala.collection.immutable.HashMap.newBuilder[String, PdfObj]
+            var i = base
+            while (i < s.top) { big += (s.kv(i).asInstanceOf[String] -> s.kv(i + 1).asInstanceOf[PdfObj]); i += 2 }
+            s.top = base
+            big += (k -> v)
+          }
+        }
+        skipWs()
+      }
+      pos += 2
+      PDict(if (big != null) big.result() else ArrayMap.of(s.kv, base, s.top))
+    } finally s.top = base
   }
 
   private def parseArray(): PArr = {
@@ -266,14 +274,23 @@ final class Lexer(val buf: Array[Byte], var pos: Int = 0) {
   }
 
   /** Tokenize a content stream into operands + [[POp]] operators
-    * (§7.8.2). Inline images (BI..EI) are skipped wholesale — they
+    * (§7.8.2); see [[nextContentToken]]. */
+  def tokenizeContent(): Vector[PdfObj] = {
+    val out = Vector.newBuilder[PdfObj]
+    var t = nextContentToken()
+    while (t != null) { out += t; t = nextContentToken() }
+    out.result()
+  }
+
+  /** The next operand or [[POp]] operator of a content stream, or null
+    * at its end. Inline images (BI..EI) are skipped wholesale — they
     * carry no text. Malformed trailing bytes end the token stream
     * (fail-soft, mirroring the reference's skip-on-error posture,
     * /root/reference/extractor/src/engine/mod.rs:100-103). */
-  def tokenizeContent(): Vector[PdfObj] = {
-    val out = Vector.newBuilder[PdfObj]
+  def nextContentToken(): PdfObj = {
+    var out: PdfObj = null
     var ok = true
-    while (ok) {
+    while (ok && out == null) {
       skipWs()
       if (atEnd) ok = false
       else {
@@ -283,13 +300,13 @@ final class Lexer(val buf: Array[Byte], var pos: Int = 0) {
               c == '+' || c == '-' || c == '.' || (c >= '0' && c <= '9')) {
             // content streams contain no indirect refs; a bare "R" after
             // two ints cannot occur, so parseObject's lookahead is safe
-            out += parseObject()
+            out = parseObject()
           } else if (isRegular(c)) {
             val start = pos
             while (isRegular(cur)) pos += 1
             val len = pos - start
             val kw = Lexer.keywordTable.get(buf, start, len)
-            if (kw != null) out += kw
+            if (kw != null) out = kw
             else if (len == 2 && buf(start) == 'B' && buf(start + 1) == 'I') {
               // skip inline image up to EI at a token boundary
               var done = false
@@ -301,12 +318,13 @@ final class Lexer(val buf: Array[Byte], var pos: Int = 0) {
                 } else pos += 1
               }
               if (!done) ok = false
-            } else out += POp(new String(buf, start, len, java.nio.charset.StandardCharsets.ISO_8859_1))
+            } else out = POp(new String(buf, start, len, java.nio.charset.StandardCharsets.ISO_8859_1))
           } else ok = false
         } catch { case _: PdfParseException => ok = false }
       }
     }
-    out.result()
+    if (!ok) pos = buf.length // the stream ends here, also for later calls
+    out
   }
 }
 
@@ -352,6 +370,31 @@ object Lexer {
     if (v >= -256 && v < 1024) smallInts((v + 256).toInt) else PInt(v)
 
   private[pdf] val nameTable: ByteKeyTable[PName] = ByteKeyTable(internedNames)
+
+  /** The entries of the dicts being parsed on one thread, innermost on
+    * top, interleaved as in [[ArrayMap]]; `top` is the first free slot. */
+  private[pdf] final class DictScratch {
+    var kv = new Array[AnyRef](64)
+    var top = 0
+
+    /** Add an entry to the dict whose entries start at `base`; a later
+      * duplicate key replaces the earlier value (§7.3.7 leaves it
+      * undefined; the last one wins, as a map builder would). False,
+      * adding nothing, for a new key once the dict holds
+      * [[ArrayMap.MaxLinear]] entries: a larger dict is hashed. */
+    def put(base: Int, k: String, v: PdfObj): Boolean = {
+      var i = base
+      while (i < top && !k.equals(kv(i))) i += 2
+      if (i < top) { kv(i + 1) = v; true }
+      else if (top - base == 2 * ArrayMap.MaxLinear) false
+      else {
+        if (top == kv.length) kv = java.util.Arrays.copyOf(kv, top * 2)
+        kv(top) = k; kv(top + 1) = v; top += 2
+        true
+      }
+    }
+  }
+  private[pdf] val dictScratch: ThreadLocal[DictScratch] = ThreadLocal.withInitial(() => new DictScratch)
 
   /** Content-stream keywords: the interned operators plus the three
     * keyword objects (§7.3.2, §7.3.9). */

@@ -327,13 +327,17 @@ final class PdfDocument private (
   /** The leaf `node` plus each inherited entry it lacks (its own
     * entries win); the node itself when it lacks none. */
   private def withInherited(node: PDict, inherited: Array[PdfObj]): PDict = {
-    var m = node.m
+    var kv: Array[AnyRef] = null
+    var n = 0
     var i = 0
     while (i < Inheritable.length) {
-      if (inherited(i) != null && !m.contains(Inheritable(i))) m = m.updated(Inheritable(i), inherited(i))
+      if (inherited(i) != null && !node.m.contains(Inheritable(i))) {
+        if (kv == null) kv = new Array[AnyRef](2 * (Inheritable.length - i))
+        kv(n) = Inheritable(i); kv(n + 1) = inherited(i); n += 2
+      }
       i += 1
     }
-    if (m eq node.m) node else PDict(m)
+    if (kv == null) node else PDict(ArrayMap.plus(node.m, kv, n))
   }
 
   def pageCount: Int = pages.length

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.model._
-import graft.engine.Extractor
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
 import graft.operators.{Dedup, Multimodal, Similarity}
 
@@ -1650,12 +1649,8 @@ object Queries {
     import s.implicits._
     val n = InterleavedTable.VerifyDocs
     InterleavedTable.ensureGoldenCorpus(s) // stage the oracle's side
-    InterleavedTable.generate(s, n)
-      .repartition(s.sparkContext.defaultParallelism)
-      .mapPartitions { it =>
-        val opts = ExtractOptions()
-        it.flatMap(doc => Extractor.extractDoc(doc, opts).doc)
-      }
+    graft.streaming.ExtractStream.extract(s,
+        InterleavedTable.generate(s, n).repartition(s.sparkContext.defaultParallelism).toDF())
       .flatMap(d => d.spans.map(sp => (d.doc_id, sp.order, sp.kind, sp.media_ref, sp.text)))
       .toDF("doc_id", "ord", "kind", "media_ref", "text")
       .select(col("doc_id"), col("ord"), col("kind"), col("media_ref"),
@@ -1670,10 +1665,7 @@ object Queries {
     import s.implicits._
     val n = InterleavedTable.VerifyDocs
     InterleavedTable.ensureGoldenCorpus(s) // stage the oracle's side
-    val got = InterleavedTable.generate(s, n).mapPartitions { it =>
-      val opts = ExtractOptions()
-      it.flatMap(doc => Extractor.extractDoc(doc, opts).doc)
-    }
+    val got = graft.streaming.ExtractStream.extract(s, InterleavedTable.generate(s, n).toDF())
     val exp = InterleavedTable.goldens(s, n)
     got.toDF("doc_id", "spans").as("g")
       .join(exp.toDF("doc_id", "spans").as("e"), Seq("doc_id"), "full_outer")

@@ -1,11 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import graft.core.model._
-import graft.engine.Extractor
 
 /** Structured-Streaming face of the engine.
   *
@@ -29,54 +28,19 @@ object ExtractStream {
       StructField("media_ref", StringType),
       StructField("offset", IntegerType)))))))
 
-  /** Typed row of the option-carrying input (streaming twin of
-    * [[graft.job.ExtractJob.InRow]] minus the batch bucketing keys). */
-  /** public: Spark's generated encoder projections cannot access a
-    * private class */
-  final case class OptRow(doc_id: String, spans: Seq[RawSpan],
-      start_page: Int, page_count: Int, engine: String, model: Option[String],
-      password: Option[String])
-
-  /** The extraction transform, shared by batch and streaming plans —
-    * one typed map-only stage (no shuffle in the streaming plan).
-    * Per-document OPTION COLUMNS (`start_page`/`page_count`/`engine`/
-    * `model`/`password`) override the job-level `opts` row-wise when
-    * present; null `start_page`/`page_count`/`engine`/`password`
-    * cells fall back to the job default. `model` is the deliberate EXCEPTION: when a model
-    * column exists, a null cell means "no model" (None is itself a
-    * meaningful option value, distinct from the default) — the same
-    * contract as the batch job ([[graft.job.ExtractJob.OptionColumns]];
+  /** The extraction transform of the streaming face: the batch job's
+    * generator ([[graft.job.ExtractRows]]), so one map-only `Generate`
+    * with no shuffle and no object (de)serialization in the streaming
+    * plan. Per-document OPTION COLUMNS override `opts` row-wise under
+    * the batch job's contract ([[graft.job.ExtractJob.OptionColumns]];
     * the reference's queue carries options per message,
     * worker.rs:4-11), so a mixed-options corpus extracts identically
-    * through either face. */
+    * through either face. A row with a null `doc_id`, span, `kind` or
+    * the text its kind reads emits nothing. */
   def extract(spark: SparkSession, input: DataFrame,
       opts: ExtractOptions = ExtractOptions()): Dataset[ExtractedDoc] = {
     import spark.implicits._
-    val hasPerDocOpts = input.columns.exists(graft.job.ExtractJob.OptionColumns.contains)
-    if (!hasPerDocOpts)
-      input.select("doc_id", "spans").as[InterleavedDoc].mapPartitions { it =>
-        it.flatMap(d => Extractor.extractDoc(d, opts).doc)
-      }
-    else {
-      def optCol(name: String, default: Column): Column =
-        if (input.columns.contains(name)) coalesce(col(name), default) else default
-      input.select(col("doc_id"), col("spans"),
-          optCol("start_page", lit(opts.startPage)).cast("int").as("start_page"),
-          optCol("page_count", lit(opts.pageCount)).cast("int").as("page_count"),
-          optCol("engine", lit(opts.engine)).cast("string").as("engine"),
-          (if (input.columns.contains("model")) col("model").cast("string")
-           else lit(opts.ocrModel.orNull).cast("string")).as("model"),
-          optCol("password", lit(opts.password.orNull).cast("string"))
-            .as("password"))
-        .as[OptRow].mapPartitions { it =>
-          it.flatMap { r =>
-            val rowOpts = ExtractOptions(r.start_page, r.page_count, r.engine,
-              r.model.filter(_.nonEmpty), opts.parityStartOffByOne,
-              password = r.password)
-            Extractor.extractDoc(InterleavedDoc(r.doc_id, r.spans), rowOpts).doc
-          }
-        }
-    }
+    input.select(graft.job.ExtractRows.of(input, opts, lit(0), None)).as[ExtractedDoc]
   }
 
   /** Start the streaming extraction: corpusDir (parquet files arriving

@@ -30,20 +30,15 @@ object PlanDump {
     println("\nGenerated by `graft.tools.PlanDump` (sf0.001 inputs; plan SHAPE")
     println("is scale-invariant). Pinned as assertions in `PlanSpec`.")
 
-    // 1. map-only extraction (scan mode) — same shape as the job's
-    // InternalRow fast path (resume anti-join + projection, no Exchange)
+    // 1. map-only extraction (scan mode) — the job's plan: resume
+    // anti-join + the ExtractRows generator, no Exchange
     val input = InterleavedTable.generate(spark, 50).toDF()
-      .withColumn("start_page", lit(1)).withColumn("page_count", lit(0))
-      .withColumn("engine", lit("tesseract"))
-      .withColumn("model", lit(null).cast("string"))
       .withColumn("bucket", pmod(xxhash64(col("doc_id")), lit(64)).cast("int"))
-      .withColumn("salt", pmod(xxhash64(col("doc_id"), lit(7)), lit(8)).cast("int"))
     val committed = broadcast((0 to 5).toDF("bucket"))
     val pending = input.join(committed, Seq("bucket"), "left_anti")
-      .select("doc_id", "spans", "start_page", "page_count", "engine", "model", "bucket")
-    dump("Extraction, scan mode: resume anti-join (broadcast) + map-only projection -- NO Exchange " +
-      "(the extract itself runs InternalRow-direct over exactly this plan's toRdd)",
-      pending)
+    dump("Extraction, scan mode: resume anti-join (broadcast) + map-only Generate(ExtractRows) -- NO Exchange",
+      pending.select(graft.job.ExtractRows.of(pending, ExtractOptions(), col("bucket"), None),
+        col("bucket")))
 
     dump("q3 (dim-filter -> broadcast join -> agg -> top-k): fact side never broadcast-shuffled",
       Queries.q3TopOrders(spark, sf))

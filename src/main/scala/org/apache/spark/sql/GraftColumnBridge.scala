@@ -14,17 +14,6 @@ object GraftColumnBridge {
   def toExpression(c: Column): Expression = classic.ExpressionUtils.expression(c)
   def toColumn(e: Expression): Column = classic.ExpressionUtils.column(e)
 
-  /** RDD[InternalRow] → DataFrame without a round-trip through an
-    * encoder (`internalCreateDataFrame` is `private[sql]`) — used by
-    * the extraction job's InternalRow fast path, which produces
-    * catalyst rows directly instead of paying the typed-encoder
-    * serialization of every span String. */
-  def internalRowsToDf(
-      spark: SparkSession,
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
-
   /** Re-root a DataFrame's logical plan onto another session over the
     * SAME SparkContext (`Dataset.ofRows` is `private[sql]`). Used to
     * scope a SQL-conf override — e.g. disabling AQE partition

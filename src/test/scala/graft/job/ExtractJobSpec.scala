@@ -266,6 +266,33 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(lin.agg(org.apache.spark.sql.functions.sum("failed_docs")).collect()(0).getLong(0) == 2)
   }
 
+  test("null doc_id, spans, span, kind or read text: the row fails soft, counted in its bucket") {
+    import spark.implicits._
+    val (good, golden) = InterleavedGen.docWithGolden(4)
+    val rows: Seq[(String, Seq[RawSpan])] = Seq(
+      good.doc_id -> good.spans,
+      (null: String) -> good.spans,
+      "nullspans" -> null,
+      "nullspan" -> Seq(RawSpan("text", "a", "", 0), null),
+      "nullkind" -> Seq(RawSpan(null, "a", "", 0)),
+      "nulltext" -> Seq(RawSpan("text", null, "", 0)),
+      "nullhtml" -> Seq(RawSpan("html", null, "", 0)),
+      "nullpdf" -> Seq(RawSpan("pdf_bytes", null, "", 0)),
+      "nullref" -> Seq(RawSpan("media", "", null, 0)),
+      // a text span never reads its media_ref: a null one is no failure
+      "textnullref" -> Seq(RawSpan("text", "kept", null, 0)))
+    val table = tmpDir("graft-nulls")
+    val stats = ExtractJob.run(spark, rows.toDF("doc_id", "spans").repartition(2), table,
+      ExtractJob.Config(numBuckets = 4))
+    assert(stats.docs == 10 && stats.failedDocs == 8 && stats.bucketsProcessed == 4)
+    val got = readSpans(table)
+    assert(got.keySet == Set(good.doc_id, "textnullref"))
+    assert(got(good.doc_id) == golden.spans)
+    assert(got("textnullref") == Seq(Span("text", "kept", "", 0)))
+    val lin = TableIO.readLineage(spark, table)
+    assert(lin.agg(org.apache.spark.sql.functions.sum("failed_docs")).collect()(0).getLong(0) == 8)
+  }
+
   test("progress view reflects partial completion") {
     val table = tmpDir("graft-prog")
     val input = corpusDf(40)

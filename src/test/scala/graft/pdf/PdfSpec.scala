@@ -187,6 +187,24 @@ class PdfSpec extends AnyFunSuite {
     assert(pageTexts(PdfBuilder.simple(Seq(content))) == Vector("first\nsecond"))
   }
 
+  test("show operators read their own operand type: an array under Tj/'/\", a string under TJ, show nothing") {
+    val content = "BT /F1 12 Tf 14 TL 72 720 Td (a) Tj 0 -20 Td [(x)] Tj (y) TJ [(z)] ' 0 0 [(w)] \" [(b)] TJ ET"
+    assert(pageTexts(PdfBuilder.simple(Seq(content))) == Vector("a\nb"))
+  }
+
+  test("a dict of 100k entries parses in linear time; a later duplicate key wins") {
+    val n = 100000
+    val src = (0 until n).map(i => s"/K$i $i").mkString("<< ", " ", " /K7 (last) /K99999 (end) >>")
+    val t0 = System.nanoTime
+    val d = new Lexer(latin1(src)).parseObject().asInstanceOf[PDict]
+    assert((System.nanoTime - t0) / 1e9 < 5.0, "a large dict must not cost a scan per entry")
+    assert(d.m.size == n)
+    assert(d.m("K0") == PInt(0) && d.m("K12345") == PInt(12345))
+    assert(d.m("K7").asInstanceOf[PStr].asLatin1 == "last" && d.m("K99999").asInstanceOf[PStr].asLatin1 == "end")
+    // the last duplicate wins below the hashing threshold too
+    assert(new Lexer(latin1("<< /A 1 /B 2 /A 3 >>")).parseObject() == PDict(Map("A" -> PInt(3), "B" -> PInt(2))))
+  }
+
   test("hex strings decode") {
     val content = "BT /F1 12 Tf 72 720 Td <48656C6C6F> Tj ET"
     assert(pageTexts(PdfBuilder.simple(Seq(content))) == Vector("Hello"))

@@ -44,6 +44,115 @@ object EngineProperties extends Properties("graft.engine") {
       doc.pages.map(p => ContentText.extractPageText(doc, p)) == texts.toVector
     }
 
+  // --- page text written once as UTF-8 (ContentText.TextOut) ---------
+  // glyph texts: ASCII, multi-char, U+FFFD, a non-BMP surrogate pair,
+  // and lone surrogates (Java's encoder writes '?' for each)
+  private val glyph: Gen[String] = Gen.frequency(
+    6 -> Gen.alphaNumChar.map(_.toString),
+    2 -> Gen.oneOf("é", "ß", "日本", "\uFFFD", "ﬁ", "ffi", "\uD83D\uDE00", "a\uD83C\uDF89"),
+    1 -> Gen.choose(0xD800, 0xDFFF).map(_.toChar.toString))
+  private val byteStr: Gen[List[Int]] = Gen.listOf(Gen.choose(0, 255)).map(_.take(6))
+  private def utf8Of(out: ContentText.TextOut): Seq[Byte] = out.bytes.take(out.length).toSeq
+  private def javaUtf8(s: String): Seq[Byte] =
+    org.apache.spark.unsafe.types.UTF8String.fromString(s).getBytes.toSeq
+  private def utf16(bs: Array[Byte]): String =
+    new String(bs, java.nio.charset.StandardCharsets.UTF_16BE)
+
+  property("TableDecoder: UTF-8 text == UTF8String.fromString(the String decode)") =
+    forAll(Gen.listOfN(256, Gen.frequency(1 -> Gen.const(""), 6 -> glyph)), Gen.listOf(byteStr)) {
+      (table, shows) =>
+        val out = new ContentText.TextOut
+        val dec = ContentText.TableDecoder(table.toArray)
+        shows.foreach(bs => dec.decode(bs.map(_.toByte).toArray, out))
+        val t = table.toVector
+        val ref = shows.flatten.map(b => if (t(b).isEmpty) "\uFFFD" else t(b)).mkString
+        utf8Of(out) == javaUtf8(ref) && out.unmapped == shows.flatten.count(t(_).isEmpty)
+    }
+
+  /** A one-page PDF whose font /F1 carries `font` (and object 6, when
+    * given, as a stream); `content` is the page's content stream. */
+  private def onePagePdf(font: String, content: String, obj6: Option[Array[Byte]]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream
+    val offs = scala.collection.mutable.ArrayBuffer.empty[Int]
+    def w(s: String): Unit = out.write(s.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
+    def obj(body: => Unit): Unit = { offs += out.size; w(s"${offs.size} 0 obj\n"); body; w("\nendobj\n") }
+    def stream(data: Array[Byte]): Unit =
+      obj { w(s"<< /Length ${data.length} >>\nstream\n"); out.write(data); w("\nendstream") }
+    w("%PDF-1.7\n")
+    obj(w("<< /Type /Catalog /Pages 2 0 R >>"))
+    obj(w("<< /Type /Pages /Kids [3 0 R] /Count 1 >>"))
+    obj(w("<< /Type /Page /Parent 2 0 R /Resources << /Font << /F1 4 0 R >> >> /Contents 5 0 R >>"))
+    obj(w(s"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica $font >>"))
+    stream(content.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
+    obj6.foreach(stream)
+    val xref = out.size
+    w(s"xref\n0 ${offs.size + 1}\n0000000000 65535 f \n")
+    offs.foreach(o => w(f"$o%010d 00000 n \n"))
+    w(s"trailer\n<< /Size ${offs.size + 1} /Root 1 0 R >>\nstartxref\n$xref\n%%EOF\n")
+    out.toByteArray
+  }
+
+  // one show operator: move to a new line first?, Tj (one string) or TJ
+  private val showOp: Gen[(Boolean, Boolean, List[List[Int]])] =
+    Gen.zip(Gen.oneOf(true, false), Gen.oneOf(true, false), Gen.nonEmptyListOf(byteStr).map(_.take(3)))
+  // a bfrange destination whose last char sits just below a surrogate
+  // boundary, so the range arithmetic walks into lone surrogates
+  private val rangeBase: Gen[String] = Gen.oneOf(
+    glyph,
+    Gen.choose(0xD7E8, 0xD7FF).map(_.toChar.toString),
+    Gen.choose(0xDFE8, 0xDFFF).map(c => "\uD83D" + c.toChar))
+
+  property("page text: pageText's UTF-8 == UTF8String.fromString(the String page, same rules)") =
+    forAll(Gen.oneOf(true, false),
+      Gen.listOf(Gen.zip(Gen.choose(0, 255), glyph)),
+      Gen.listOf(Gen.zip(Gen.choose(0, 255), Gen.choose(0, 40), rangeBase)),
+      Gen.listOf(showOp).map(_.take(12))) { (useCMap, chars, ranges, shows) =>
+      def hex(bs: Seq[Int]) = bs.map(b => f"$b%02X").mkString("<", "", ">")
+      def hex16(s: String) = hex(s.getBytes(java.nio.charset.StandardCharsets.UTF_16BE).map(_ & 0xff))
+      // the font, and a plain-Scala decode under today's rules
+      val (font, obj6, decodeRef) =
+        if (useCMap) {
+          val map = scala.collection.mutable.HashMap.empty[Int, String]
+          chars.foreach { case (c, t) => map(c) = utf16(t.getBytes(java.nio.charset.StandardCharsets.UTF_16BE)) }
+          ranges.foreach { case (lo, len, b) =>
+            val base = utf16(b.getBytes(java.nio.charset.StandardCharsets.UTF_16BE))
+            (lo to math.min(255, lo + len)).foreach(c =>
+              map(c) = base.dropRight(1) + (base.last + (c - lo)).toChar)
+          }
+          val cmap = "begincmap\n1 begincodespacerange <00> <FF> endcodespacerange\n" +
+            s"${chars.size} beginbfchar " + chars.map { case (c, t) => hex(Seq(c)) + " " + hex16(t) }.mkString(" ") +
+            " endbfchar\n" + s"${ranges.size} beginbfrange " + ranges.map { case (lo, len, b) =>
+              hex(Seq(lo)) + " " + hex(Seq(math.min(255, lo + len))) + " " + hex16(b) }.mkString(" ") +
+            " endbfrange\nendcmap"
+          val std = graft.pdf.Encodings.standard
+          ("/ToUnicode 6 0 R", Some(cmap.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)),
+            (b: Int) => map.getOrElse(b, if (std(b).isEmpty) "\uFFFD" else std(b)))
+        } else {
+          val t = graft.pdf.Encodings.standard.clone()
+          chars.foreach { case (c, g) => t(c) = g.head.toString }
+          val diffs = chars.map { case (c, g) => f"$c /uni${g.head.toInt}%04X" }.mkString(" ")
+          (s"/Encoding << /Differences [ $diffs ] >>", None,
+            (b: Int) => if (t(b).isEmpty) "\uFFFD" else t(b))
+        }
+      val content = new StringBuilder("BT /F1 12 Tf 72 720 Td\n")
+      val ref = new StringBuilder
+      var lineY = 720.0; var lastY = 0.0; var shown = false
+      shows.foreach { case (move, tj, strs) =>
+        if (move) { content ++= "0 -14 Td\n"; lineY -= 14 }
+        content ++= (if (tj) strs.map(hex).mkString("[", " -20 ", "] TJ\n") else hex(strs.head) + " Tj\n")
+        val text = (if (tj) strs else strs.take(1)).flatten.map(decodeRef).mkString
+        if (text.nonEmpty) {
+          if (shown && lineY != lastY) ref += '\n'
+          ref ++= text; shown = true; lastY = lineY
+        }
+      }
+      content ++= "ET"
+      val doc = PdfDocument.load(onePagePdf(font, content.toString, obj6))
+      val out = new ContentText.TextOut
+      ContentText.pageText(doc, doc.pages.head, out)
+      utf8Of(out) == javaUtf8(ref.toString)
+    }
+
   property("inflate is a left inverse of JDK deflate") =
     forAll(Gen.listOf(Gen.chooseNum(-128, 127).map(_.toByte))) { bytes =>
       val data = bytes.toArray

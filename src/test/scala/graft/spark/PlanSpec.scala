@@ -26,19 +26,29 @@ class PlanSpec extends AnyFunSuite {
 
   test("scan-mode extraction plan has NO shuffle (map-only at any scale)") {
     import spark.implicits._
-    val input = InterleavedTable.generate(spark, 50).toDF()
-    val withKeys = input
+    // the real transform (ExtractRows, which ExtractJob and
+    // ExtractStream both select) over a parquet scan, batch and streaming
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-extract").toString
+    InterleavedTable.generate(spark, 50).write.mode("overwrite").parquet(dir)
+    def assertMapOnly(plan: String): Unit = {
+      assert(!plan.contains("Exchange"), s"unexpected shuffle in map-only plan:\n$plan")
+      assert(!plan.contains("DeserializeToObject") && !plan.contains("SerializeFromObject"),
+        s"typed-object round trip in the extraction plan:\n$plan")
+      assert(plan.contains("Generate"), s"extraction generator missing:\n$plan")
+    }
+    val batch = spark.read.parquet(dir)
       .withColumn("bucket", pmod(xxhash64(col("doc_id")), lit(64)).cast("int"))
-      .withColumn("salt", pmod(xxhash64(col("doc_id"), lit(7)), lit(8)).cast("int"))
-      .withColumn("start_page", lit(1)).withColumn("page_count", lit(0))
-      .withColumn("engine", lit("tesseract"))
-      .withColumn("model", lit(null).cast("string"))
-      .as[ExtractJob.InRow]
-    val extracted = withKeys.mapPartitions(it =>
-      it.flatMap(r => graft.engine.Extractor
-        .extractDoc(InterleavedDoc(r.doc_id, r.spans), ExtractOptions()).doc))
-    val plan = physical(extracted.toDF())
-    assert(!plan.contains("Exchange"), s"unexpected shuffle in map-only plan:\n$plan")
+    assertMapOnly(physical(batch.select(graft.job.ExtractRows.of(batch, ExtractOptions(),
+      $"bucket", Some(new ExtractJob.BucketStatsAcc)), $"bucket")))
+    // a streaming plan exists per micro-batch: run one, read its plan
+    val stream = spark.readStream.schema(graft.streaming.ExtractStream.inputSchema).parquet(dir)
+    val q = graft.streaming.ExtractStream.extract(spark, stream).writeStream.format("noop")
+      .option("checkpointLocation", java.nio.file.Files.createTempDirectory("graft-plan-ck").toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val explained = new java.io.ByteArrayOutputStream
+    Console.withOut(explained)(q.explain())
+    assertMapOnly(explained.toString)
   }
 
   test("q3: filtered customer dim is broadcast, fact side not shuffled for the dim join") {

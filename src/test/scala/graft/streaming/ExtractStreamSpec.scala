@@ -216,6 +216,26 @@ class ExtractStreamSpec extends AnyFunSuite {
     assert(!got.contains("sbad"))
   }
 
+  test("streaming rows with a null doc_id, span, kind or read text emit nothing (batch contract)") {
+    import spark.implicits._
+    val good = graft.fixtures.InterleavedGen.docWithGolden(4)._1
+    val rows: Seq[(String, Seq[RawSpan])] = Seq(
+      good.doc_id -> good.spans,
+      (null: String) -> good.spans,
+      "nullspans" -> null,
+      "nullspan" -> Seq(RawSpan("text", "a", "", 0), null),
+      "nullkind" -> Seq(RawSpan(null, "a", "", 0)),
+      "nulltext" -> Seq(RawSpan("text", null, "", 0)),
+      "nullref" -> Seq(RawSpan("media", "", null, 0)),
+      "textnullref" -> Seq(RawSpan("text", "kept", null, 0)))
+    val corpus = tmp("nulls-src"); val out = tmp("nulls-out"); val ck = tmp("nulls-ck")
+    rows.toDF("doc_id", "spans").coalesce(1).write.mode("overwrite").parquet(corpus)
+    ExtractStream.run(spark, corpus, out, ck).awaitTermination()
+    val got = spark.read.parquet(out).as[ExtractedDoc].collect()
+    assert(got.map(_.doc_id).sorted.toSeq == Seq(good.doc_id, "textnullref").sorted)
+    assert(got.find(_.doc_id == "textnullref").get.spans == Seq(Span("text", "kept", "", 0)))
+  }
+
   test("restart with same checkpoint is exactly-once: new files only, no duplicates") {
     import spark.implicits._
     val corpus = tmp("corpus2"); val out = tmp("out2"); val ck = tmp("ck2")
