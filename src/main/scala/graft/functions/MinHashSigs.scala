@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * NO aggregation shuffle at all.
   *
   * Semantics are EXACTLY the relational formulation the DuckDB twins
-  * use (explode(TF.shingles) → groupBy(doc).agg(min(md5(k:sh)))):
+  * use (explode(md5-hex shingles) → groupBy(doc).agg(min(md5(k:sh)))):
   * tokenization ≡ `split(text, " ")` with empties kept, gram text
   * joined by one space, inner md5 rendered as lowercase hex BEFORE the
   * outer keyed hash, min = lexicographic over hex ≡ unsigned byte-wise
@@ -39,39 +39,42 @@ final case class MinHashSigs(child: Expression, shingleN: Int, numHashes: Int)
       s"minhash_sigs needs a string child, got ${child.dataType}")
   }
 
+  // "$k:" as UTF-8, the prefix of hash k's key
+  @transient private lazy val prefixes: Array[Array[Byte]] =
+    Array.tabulate(numHashes)(k => s"$k:".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  /** One gram walk: per gram one inner md5 rendered as hex, then one
+    * keyed md5 per hash; the minima live in a per-thread buffer, so only
+    * the output hex strings are allocated. */
   override protected def nullSafeEval(input: Any): Any = {
-    val text = input.asInstanceOf[UTF8String].toString
-    val toks = text.split(" ", -1) // ≡ Spark split(text, " ")
-    val nGrams = toks.length - (shingleN - 1)
+    val w = GramWalker.get()
+    val nGrams = w.load(input.asInstanceOf[UTF8String]) - (shingleN - 1)
     if (nGrams <= 0) return null
-    val md = MinHashSigs.digest.get()
-    val mins = new Array[Array[Byte]](numHashes)
-    val sb = new java.lang.StringBuilder
+    val md = w.md
+    val mins = MinHashSigs.mins(numHashes)
     var i = 0
     while (i < nGrams) {
-      sb.setLength(0)
-      var j = 0
-      while (j < shingleN) {
-        if (j > 0) sb.append(' ')
-        sb.append(toks(i + j))
-        j += 1
-      }
-      md.reset()
-      val inner = MinHashSigs.hex(
-        md.digest(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+      w.hexGram(i, shingleN)
       var k = 0
       while (k < numHashes) {
-        md.reset()
-        md.update(MinHashSigs.keyPrefix(k))
-        val d = md.digest(inner)
-        if (mins(k) == null || MinHashSigs.unsignedLt(d, mins(k))) mins(k) = d
+        md.update(prefixes(k))
+        md.update(w.hex)
+        md.digest(w.digest, 0, 16)
+        if (i == 0 || MinHashSigs.unsignedLt(w.digest, mins, 16 * k))
+          System.arraycopy(w.digest, 0, mins, 16 * k, 16)
         k += 1
       }
       i += 1
     }
-    new GenericArrayData(
-      mins.map(d => UTF8String.fromString(new String(MinHashSigs.hex(d),
-        java.nio.charset.StandardCharsets.US_ASCII))).toArray[Any])
+    val out = new Array[Any](numHashes)
+    var k = 0
+    while (k < numHashes) {
+      val h = new Array[Byte](32)
+      GramWalker.hexInto(mins, 16 * k, 16, h)
+      out(k) = UTF8String.fromBytes(h)
+      k += 1
+    }
+    new GenericArrayData(out)
   }
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSigs =
@@ -80,40 +83,29 @@ final case class MinHashSigs(child: Expression, shingleN: Int, numHashes: Int)
 }
 
 object MinHashSigs {
-  private val digest = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
+  /** The signature's running minima, 16 bytes per hash, one per thread. */
+  private val minsBuf = ThreadLocal.withInitial(() => new Array[Byte](16 * 8))
+  private def mins(numHashes: Int): Array[Byte] = {
+    if (minsBuf.get().length < 16 * numHashes) minsBuf.set(new Array[Byte](16 * numHashes))
+    minsBuf.get()
   }
-
-  private val HexChars = "0123456789abcdef".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
 
   /** Lowercase hex of a digest, as ASCII bytes (md5's hex rendering). */
   private[functions] def hex(d: Array[Byte]): Array[Byte] = {
     val out = new Array[Byte](d.length * 2)
-    var i = 0
-    while (i < d.length) {
-      out(i * 2) = HexChars((d(i) >> 4) & 0xf)
-      out(i * 2 + 1) = HexChars(d(i) & 0xf)
-      i += 1
-    }
+    GramWalker.hexInto(d, 0, d.length, out)
     out
   }
 
-  /** `"$k:"` as UTF-8 bytes, cached for the hash-key prefix. */
-  private val prefixes =
-    scala.collection.concurrent.TrieMap.empty[Int, Array[Byte]]
-  private[functions] def keyPrefix(k: Int): Array[Byte] =
-    prefixes.getOrElseUpdate(k, s"$k:".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  /** Unsigned byte-wise less-than ≡ lexicographic order of the hex
-    * rendering (hex is monotonic in the unsigned byte value). */
-  private[functions] def unsignedLt(a: Array[Byte], b: Array[Byte]): Boolean = {
+  /** Unsigned byte-wise `d < m(at until at + 16)` ≡ lexicographic order
+    * of the hex rendering (hex is monotonic in the unsigned byte value). */
+  private def unsignedLt(d: Array[Byte], m: Array[Byte], at: Int): Boolean = {
     var i = 0
-    while (i < a.length && i < b.length) {
-      val ai = a(i) & 0xff; val bi = b(i) & 0xff
-      if (ai != bi) return ai < bi
+    while (i < 16) {
+      val di = d(i) & 0xff; val mi = m(at + i) & 0xff
+      if (di != mi) return di < mi
       i += 1
     }
-    a.length < b.length
+    false
   }
 }

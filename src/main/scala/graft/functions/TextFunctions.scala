@@ -81,13 +81,16 @@ object TextFunctions {
   def fingerprint(text: Column): Column =
     md5(array_join(array_sort(array_distinct(tokens(text))), " "))
 
-  /** Word n-gram shingles as md5 strings (dedup/jaccard input) —
-    * backed by the native [[ShingleMd5s]] expression (the transform-
-    * over-index-range HOF form runs interpreted; same motivation as
-    * [[TokenSimHash64]]). Empty array below n tokens. */
+  /** Word n-gram shingles in text order as `binary(16)` md5 digests
+    * (the group and join keys of the dedup operators) — backed by the
+    * native [[ShingleKeys]] expression (the transform-over-index-range
+    * HOF form runs interpreted; same motivation as [[TokenSimHash64]]).
+    * Each digest is the unhex of the md5 the DuckDB twins compute, so
+    * every group, join and count over them matches. Empty array below
+    * n tokens. */
   def shingles(text: Column, n: Int): Column = {
     import org.apache.spark.sql.GraftColumnBridge._
-    toColumn(ShingleMd5s(toExpression(text), n))
+    toColumn(ShingleKeys(toExpression(text), n, distinct = false))
   }
 
   /** Per-doc content-defined chunks as

@@ -21,9 +21,11 @@ import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
   *  - MinHash/LSH never materializes all pairs: docs are shuffled once
   *    on (band, signature) and only same-bucket candidates pair up —
   *    the standard way all-pairs similarity survives 10^12 rows;
-  *  - n-gram Jaccard/containment aggregate member lists per shingle,
-  *    then count each document's partners in one sorted pass grouped
-  *    by document — no (a, b) pair row is shuffled or hashed; a hot
+  *  - n-gram Jaccard/containment key shingles by their 16-byte md5
+  *    digests, aggregate member lists per shingle, then count each
+  *    document's partners in one sorted pass grouped by document — no
+  *    (a, b) pair row is shuffled or hashed, the pass yields |A| itself
+  *    and only |B| rides a join onto the per-document sizes; a hot
   *    shingle still costs df²/2 partner longs, so run the df cap (or
   *    watch the max_df observation) at scale;
   *  - embedding near-dup buckets by sign-LSH before pairing.
@@ -89,7 +91,8 @@ object Dedup {
     // docs shorter than one shingle produce a null signature (no rows
     // in the exploded formulation either); filter on the EQUIVALENT
     // cheap token-count predicate (null ⟺ fewer than shingleN tokens
-    // by construction) — a filter on mh.isNotNull gets pushed below
+    // by construction; GramTokenCount is the signature's own tokenizer,
+    // without split's per-token strings) — a filter on mh.isNotNull gets pushed below
     // the projection and evaluates the interpreted minhash expression
     // TWICE per row (CodegenFallback has no subexpression elimination)
     // the explicit isNotNull matches the constraint the star variant's
@@ -98,8 +101,11 @@ object Dedup {
     // canonicalize equal and ReuseExchange serves them from one
     // shuffle (doc_id is never null in any corpus; min/groupBy would
     // drop nulls anyway, so results are unchanged)
-    val sigs = docs.where(col("doc_id").isNotNull &&
-        size(split(col("text"), " ")) >= shingleN)
+    val tokens = {
+      import org.apache.spark.sql.GraftColumnBridge._
+      toColumn(graft.functions.GramTokenCount(toExpression(col("text"))))
+    }
+    val sigs = docs.where(col("doc_id").isNotNull && tokens >= shingleN)
       .select(col("doc_id"), mh.as("mh"))
     // band signature = md5 of its concatenated minhash values
     val bandSig = (0 until bands).map { b =>
@@ -201,13 +207,13 @@ object Dedup {
     // and surfaces its exposure through the max_df observation.
     val kept = shingleMemberBuckets(shingleRows(docs, shingleN), maxDf, maxDfObs)
     val (inter, sizes) = pairIntersections(kept, minPermille)
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "a_id").withColumnRenamed("n", "na"), "a_id")
+    val pairs = inter
       .join(sizes.withColumnRenamed("doc_id", "b_id").withColumnRenamed("n", "nb"), "b_id")
       .withColumn("jaccard_pm",
         floor(col("inter") * 1000L / (col("na") + col("nb") - col("inter"))).cast("long"))
       .where(col("jaccard_pm") >= minPermille)
       .select("a_id", "b_id", "jaccard_pm")
+    settled(pairs, "a_id")
   }
 
   /** Exact n-gram CONTAINMENT pairs: containment of A in B is
@@ -221,15 +227,16 @@ object Dedup {
     * so containment stays exact over the surviving shingle sets) and
     * the same degenerate-id contract. The pair stage keeps every pair
     * sharing a shingle: the b→a direction needs |B|, which the pass
-    * over a's partners does not see. */
+    * over a's partners does not see. The a→b direction needs only |A|,
+    * which the pass yields, so only b→a rides a join (onto the
+    * per-document sizes, by b). */
   def ngramContainmentPairs(docs: DataFrame, shingleN: Int = 3,
       minPermille: Int = 800, maxDf: Int = Int.MaxValue): DataFrame = {
     val kept = shingleMemberBuckets(shingleRows(docs, shingleN), maxDf, None)
     val (inter, sizes) = pairIntersections(kept, 0)
     // each unordered intersection row unfolds into its two ordered
     // containment directions (normalized by the SOURCE size)
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "a_id").withColumnRenamed("n", "na"), "a_id")
+    val pairs = inter
       .join(sizes.withColumnRenamed("doc_id", "b_id").withColumnRenamed("n", "nb"), "b_id")
       .select(explode(array(
         struct(col("a_id").as("src_id"), col("b_id").as("dst_id"),
@@ -240,7 +247,16 @@ object Dedup {
       .select(col("r.src_id").as("src_id"), col("r.dst_id").as("dst_id"),
         col("r.containment_pm").as("containment_pm"))
       .where(col("containment_pm") >= minPermille)
+    settled(pairs, "src_id")
   }
+
+  /** The result rows of the Jaccard/containment family exchanged once,
+    * by `key`. A sort over the result (every `Queries` entry orders it)
+    * samples its input in a job of its own; with no exchange between,
+    * that job re-ran the stage holding the partner pass and read the
+    * tail exchange again. These rows are the filtered answer, so the
+    * exchange is the cheapest place to cut the stage. */
+  private def settled(pairs: DataFrame, key: String): DataFrame = pairs.repartition(col(key))
 
   /** (doc_id, sh) rows of the Jaccard/containment family: each doc's
     * distinct `shingleN`-gram hashes. Rows with a null doc_id are
@@ -249,8 +265,16 @@ object Dedup {
     * non-null members share. The dropped rows are not yet counted. */
   private def shingleRows(docs: DataFrame, shingleN: Int): DataFrame =
     docs.where(col("doc_id").isNotNull)
-      .select(col("doc_id"),
-        explode(array_distinct(TF.shingles(col("text"), shingleN))).as("sh"))
+      .select(col("doc_id"), explode(distinctShingles(col("text"), shingleN)).as("sh"))
+
+  /** Each document's distinct `n`-gram md5 digests as `binary(16)` — the
+    * distinct elements of [[TF.shingles]], deduplicated by the
+    * expression's own hash set (`array_distinct` compares binary
+    * elements pairwise). */
+  private def distinctShingles(text: Column, n: Int): Column = {
+    import org.apache.spark.sql.GraftColumnBridge._
+    toColumn(graft.functions.ShingleKeys(toExpression(text), n, distinct = true))
+  }
 
   /** ONE hash aggregation per shingle carrying df + (bounded) member
     * list — the shared subtree of the Jaccard/containment family; see
@@ -282,18 +306,24 @@ object Dedup {
     * shingle). The rows are clustered and sorted by a, and one pass
     * over each run of equal a ([[PartnerCounts]]) concatenates the
     * tails, sorts them and run-length counts them: the count of b is
-    * |A∩B|, and the run length is |A|, so no join is needed for the
-    * pre-filter. A pair is emitted when its count reaches
-    * max(1, ceil(minPermille·|A|/1000)) — pass 0 to keep every pair
-    * sharing a shingle. At sf0.1 this shuffles 0.49M tail rows (5.2M
-    * longs) where the (a, b) unfold shuffled and hash-aggregated 4.8M
-    * pair rows to keep 6,024 — the pair hash map was larger than cache
-    * and dominated the query. Two alternatives lose: a groupBy(a)
-    * aggregate allocates more (ObjectHashAggregate falls back to sort
-    * above 128 keys per task and serializes partial buffers), and
-    * joining `sizes` onto the tails lets AQE broadcast them and drop
-    * the repartition, so the pass runs in one task — |A| is the run
-    * length instead.
+    * |A∩B|, and the run length is |A|. A pair is emitted when its
+    * count reaches max(1, ceil(minPermille·|A|/1000)) — pass 0 to keep
+    * every pair sharing a shingle — as (a_id, b_id, inter, na), na =
+    * |A| from the run, so the callers join `sizes` for |B| only. At
+    * sf0.1 this shuffles 0.49M tail rows (5.2M longs) where the (a, b)
+    * unfold shuffled and hash-aggregated 4.8M pair rows to keep 6,024
+    * — the pair hash map was larger than cache and dominated the
+    * query. A groupBy(a) aggregate loses too: it allocates more
+    * (ObjectHashAggregate falls back to sort above 128 keys per task
+    * and serializes partial buffers).
+    *
+    * The pass runs once per query. The pair rows are hinted never to
+    * be a broadcast build side (the static plan at sf0.1 broadcast
+    * them, so AQE planned around a broadcast of the pass output), and
+    * `sizes`, one row per document, is not forced to broadcast either:
+    * the join stays a runtime choice. Each caller then ends in
+    * [[settled]], so a sort above it samples an exchange, not the
+    * pass.
     *
     * Scale: a viral shingle of df D still carries D²/2 partner longs,
     * as the unfold did, but grouped by a they spread across the a
@@ -309,6 +339,7 @@ object Dedup {
     * ~10 s executor CPU on the sf0.1 jaccard/containment pair). */
   private def pairIntersections(kept: DataFrame,
       minPermille: Int): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.GraftColumnBridge.noBroadcast
     val members = kept.where(col("df") >= 1)
     val sizes = members
       .select(explode(col("ms")).as("doc_id"))
@@ -326,14 +357,14 @@ object Dedup {
       .as(Encoders.product[Tail])
       .mapPartitions(rows => new PartnerCounts(rows, minPermille))(Encoders.product[PairCount])
       .select(col("a_id").cast(idType).as("a_id"), col("b_id").cast(idType).as("b_id"),
-        col("inter"))
-    (inter, sizes)
+        col("inter"), col("na"))
+    (noBroadcast(inter), sizes)
   }
 
   /** One (shingle, member) row of the pair stage: member `a` and the
     * sorted members after it. */
   private[operators] final case class Tail(a: Long, t: Array[Long])
-  private[operators] final case class PairCount(a_id: Long, b_id: Long, inter: Long)
+  private[operators] final case class PairCount(a_id: Long, b_id: Long, inter: Long, na: Long)
 
   /** The per-partition partner pass of [[pairIntersections]] over
     * [[Tail]] rows clustered and sorted by `a`; the tails of one run
@@ -347,6 +378,7 @@ object Dedup {
     private var outB = new Array[Long](256)
     private var outC = new Array[Long](256)
     private var outA = 0L
+    private var outNa = 0L
     private var outN = 0
     private var outI = 0
 
@@ -357,7 +389,7 @@ object Dedup {
 
     def next(): PairCount = {
       if (!hasNext) throw new NoSuchElementException("no more pair counts")
-      val r = PairCount(outA, outB(outI), outC(outI))
+      val r = PairCount(outA, outB(outI), outC(outI), outNa)
       outI += 1
       r
     }
@@ -384,6 +416,7 @@ object Dedup {
       java.util.Arrays.sort(partners, 0, len)
       val need = if (minPermille <= 0) 1L else math.max(1L, (minPermille * n + 999) / 1000)
       outA = a
+      outNa = n
       outN = 0
       outI = 0
       var i = 0
@@ -866,7 +899,7 @@ object Dedup {
     * location.
     *
     * Plan (the 100 TB shape): grams are map-side
-    * ([[graft.functions.ShingleMd5s]] + posexplode) and the corpus is
+    * ([[graft.functions.ShingleKeys]] + posexplode) and the corpus is
     * scanned + shingled ONCE — a single per-gram aggregation carries
     * BOTH consumers' needs (the corpus-wide frequency AND the
     * occurrence positions), so the ≥2 filter and the covered-position
@@ -948,11 +981,10 @@ object Dedup {
     // shingleN 0 makes every shingle md5("") and flags everything
     require(shingleN >= 1, s"shingleN must be >= 1, got $shingleN")
     val evalSh = evalSet
-      .select(explode(array_distinct(TF.shingles(col("text"), shingleN))).as("sh"))
+      .select(explode(distinctShingles(col("text"), shingleN)).as("sh"))
       .distinct()
     val corpusSh = corpus
-      .select(col("doc_id"),
-        explode(array_distinct(TF.shingles(col("text"), shingleN))).as("sh"))
+      .select(col("doc_id"), explode(distinctShingles(col("text"), shingleN)).as("sh"))
     corpusSh.join(broadcast(evalSh), Seq("sh"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("contaminated_ngrams"))

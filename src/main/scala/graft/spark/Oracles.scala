@@ -43,7 +43,8 @@ object Oracles {
       | SELECT doc_id + 100000 AS doc_id, substr(text, strpos(text, ' ') + 1) AS text
       | FROM documents)""".stripMargin
 
-  /** 3-gram md5 shingles over docs_plus (twin of TextFunctions.shingles). */
+  /** 3-gram md5 shingles over docs_plus, as hex (TextFunctions.shingles
+    * keys the same digests as binary(16): a bijection). */
   private val sh3 =
     """sh3 AS (
       | SELECT doc_id, unnest(list_transform(

@@ -52,12 +52,14 @@ object PlanDump {
     dump("MinHash LSH dedup: one shuffle on (band, sig) -- no all-pairs",
       Queries.dedupMinhashLsh(spark, sf))
 
-    dump("DF-capped Jaccard: ONE shingle hash aggregation (map-side partial_count) carries " +
-      "df + sorted member list, and (round 9) ReusedExchange serves BOTH the size and " +
-      "intersection consumers from that single subtree; ordered pairs unfold directly " +
-      "from the sorted member list (posexplode + tail slice -- df*(df-1)/2 rows, no a<b " +
-      "post-filter) -- NO window over sh, no self-join (hot shingles collapse before the " +
-      "shuffle and the cap drops them from the one-row-per-shingle aggregate)",
+    dump("DF-capped Jaccard: ONE shingle hash aggregation over binary(16) md5 keys " +
+      "(map-side partial_count) carries df + sorted member list, and ReusedExchange " +
+      "serves BOTH the size and intersection consumers from that single subtree; each " +
+      "member's tail of later members is exchanged by member and counted in ONE sorted " +
+      "MapPartitions pass that also yields |A|, so only |B| joins (the pair rows are " +
+      "never a broadcast build side), and the filtered pairs are exchanged once so the " +
+      "final sort samples them, not the pass -- NO window over sh, no self-join, no " +
+      "aggregate or exchange keyed on a pair",
       Queries.dedupJaccardCapped(spark, sf))
 
     dump("IVF top-k (round 9: MAP-SIDE assignment): item->centroid assignment is an " +
@@ -72,8 +74,9 @@ object PlanDump {
       "scan run once per corpus instead of once per side",
       Queries.dedupMinhashStar(spark, sf))
 
-    dump("Containment pairs: same single shingle-aggregation subtree as Jaccard " +
-      "(partial_count), ordered directions unfold from each intersection row",
+    dump("Containment pairs: same shingle-aggregation subtree and ONE partner pass as " +
+      "Jaccard; |A| comes from the pass, so only the b->a direction's |B| rides a join, " +
+      "and both ordered directions unfold from each intersection row",
       Queries.dedupContainment(spark, sf))
 
     dump("KMV distinct sketch: bottom_k_distinct runs as a partial/final hash aggregate " +

@@ -66,6 +66,7 @@ object ScaleProbe {
           .select("a_id", "b_id")
         Dedup.componentsStar(chain, rounds = 5)
       }),
+      "dedup_containment" -> (d => Dedup.ngramContainmentPairs(d, minPermille = 800)),
       "dedup_containment_capped" ->
         (d => Dedup.ngramContainmentPairs(d, minPermille = 800, maxDf = 10)),
       "dedup_exact_substring" -> (d => Dedup.exactSubstringSpans(d, minTokens = 15)),

@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, NO_BROADCAST_HASH, ResolvedHint}
 
 /** Column ⇄ catalyst Expression bridge for graft's native expressions.
   *
@@ -35,4 +36,12 @@ object GraftColumnBridge {
     * tweak`, not `defaults + the tweak`. */
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** `df` marked so that no join plans it as a broadcast build side,
+    * statically or when AQE re-plans — Spark's internal
+    * `NO_BROADCAST_HASH` strategy hint, which `Dataset.hint` cannot
+    * name. The hint rides up through unary operators to the join. */
+  def noBroadcast(df: DataFrame): DataFrame =
+    classic.Dataset.ofRows(df.sparkSession.asInstanceOf[classic.SparkSession],
+      ResolvedHint(df.queryExecution.analyzed, HintInfo(strategy = Some(NO_BROADCAST_HASH))))
 }

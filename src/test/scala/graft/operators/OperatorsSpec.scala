@@ -46,6 +46,17 @@ class OperatorsSpec extends AnyFunSuite {
     assert(r(2L) == 0)
   }
 
+  test("shingles: one document of 30,000 distinct tokens keys its shingles in linear time") {
+    // distinct binary keys come from the expression's own hash set:
+    // array_distinct compares binary elements pairwise (5 s for 32,000)
+    val big = (0 until 30000).map(i => s"t$i").mkString(" ")
+    val t0 = System.nanoTime
+    val pairs = Dedup.ngramJaccardPairs(docs((1L, big), (2L, big)), 3, minPermille = 0)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert((System.nanoTime - t0) / 1e9 < 5.0, "a large document must not cost a scan per shingle")
+    assert(pairs.toSeq == Seq((1L, 2L, 1000L)))
+  }
+
   test("simhash32: deterministic, in range, near for near-duplicate docs") {
     val base = "the quick brown fox jumps over the lazy dog again and again today"
     val near = base.split(" ").drop(1).mkString(" ")
@@ -176,6 +187,24 @@ class OperatorsSpec extends AnyFunSuite {
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
   }
 
+  test("minhash LSH and star pairs: a null doc_id row yields no pair, the other pairs are unchanged") {
+    val base = (1 to 30).map(i => s"tok$i").mkString(" ")
+    val near = (1 to 30).filter(_ != 7).map(i => s"tok$i").mkString(" ")
+    val far = (100 to 130).map(i => s"w$i").mkString(" ")
+    val rows = Seq((Some(1L), base), (Some(2L), near), (Some(3L), far))
+    // the null row shares every band with doc 1
+    val withNull = (rows :+ ((None, base))).toDF("doc_id", "text")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.get(0), r.get(1))).toSet
+    Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      "minhashLshPairs" -> (d => Dedup.minhashLshPairs(d)),
+      "minhashLshStarPairs" -> (d => Dedup.minhashLshStarPairs(d))).foreach { case (op, f) =>
+      val got = pairs(f(withNull))
+      assert(got == pairs(f(rows.toDF("doc_id", "text"))), op)
+      assert(got == Set((1L, 2L)), op)
+    }
+  }
+
   test("ngramJaccardPairs computes exact permille jaccard") {
     // A: shingles of "a b c d e" = {abc, bcd, cde}; B: "a b c d" = {abc, bcd}
     // J = 2/3 -> 666 permille
@@ -265,6 +294,35 @@ class OperatorsSpec extends AnyFunSuite {
       assert(rows(Dedup.ngramContainmentPairs(withNull, 3, minPermille = 0, maxDf = cap)) ==
         Set((1L, 2L, 500L), (2L, 1L, 500L)), s"maxDf $cap")
     }
+  }
+
+  test("jaccard/containment: the partner pass runs once per query") {
+    // a partner pass is a stage holding the MapPartitions node; it ran
+    // twice when the pair rows were a broadcast build side AQE re-planned,
+    // or when the query's sort sampled a stage that held the pass
+    val sf = "/root/testdata/sf0.01"
+    val sc = spark.sparkContext
+    val passes = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.scope.exists(_.name == "MapPartitions")))
+          passes.incrementAndGet()
+    }
+    def passesOf(df: org.apache.spark.sql.DataFrame): Int = {
+      org.apache.spark.GraftListenerBridge.waitUntilEmpty(sc)
+      val p0 = passes.get()
+      df.collect()
+      org.apache.spark.GraftListenerBridge.waitUntilEmpty(sc)
+      passes.get() - p0
+    }
+    sc.addSparkListener(listener)
+    try {
+      val got = Seq("dedup_jaccard" -> graft.spark.Queries.dedupJaccard(spark, sf),
+          "dedup_jaccard_capped" -> graft.spark.Queries.dedupJaccardCapped(spark, sf),
+          "dedup_containment" -> graft.spark.Queries.dedupContainment(spark, sf))
+        .map { case (q, df) => q -> passesOf(df) }
+      assert(got.forall(_._2 == 1), s"partner pass stages per query: $got")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("bottomKDistinct: k smallest DISTINCT values ascending, across shuffled partials") {

@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
-import graft.functions.{CdcChunks, MinHashSigs, ShingleMd5s, TokenSimHash64}
+import graft.functions.{CdcChunks, GramTokenCount, MinHashSigs, ShingleKeys, ShingleMd5s,
+  TokenSimHash64}
 
 /** The native per-row kernels checked against independent, slow
   * reimplementations over the hex-STRING route (the production code
@@ -24,10 +25,39 @@ object NativeExprProperties extends Properties("graft.nativeexpr") {
   private val token: Gen[String] = Gen.oneOf(
     Gen.const(""),
     Gen.nonEmptyListOf(Gen.alphaNumChar).map(_.mkString.take(10)),
-    Gen.const("naïve√"), // multi-byte UTF-8
+    Gen.const("naïve√"), // 2- and 3-byte UTF-8
+    Gen.const("é"),
+    Gen.const("a\uD83D\uDE00b"), // a 4-byte character between ASCII
     Gen.const("the"))
-  private val text: Gen[String] =
-    Gen.chooseNum(0, 12).flatMap(n => Gen.listOfN(n, token)).map(_.mkString(" "))
+  // leading, trailing and doubled spaces; fewer tokens than n too
+  private val text: Gen[String] = for {
+    n <- Gen.chooseNum(0, 12)
+    toks <- Gen.listOfN(n, token)
+    pre <- Gen.oneOf("", " ", "  ")
+    post <- Gen.oneOf("", " ", "  ")
+  } yield pre + toks.mkString(" ") + post
+
+  // invalid UTF-8 spliced into a text: a lead byte before a non-
+  // continuation, a lone continuation byte, a truncated sequence, a
+  // byte that never occurs, an overlong NUL and an encoded surrogate
+  private val invalid: Seq[Array[Byte]] =
+    Seq(Seq(0xC3, 0x28), Seq(0x80), Seq(0xE2, 0x82), Seq(0xFF), Seq(0xC0, 0x80),
+      Seq(0xED, 0xA0, 0x80)).map(_.map(_.toByte).toArray)
+  private val utf8: Gen[UTF8String] = Gen.frequency(
+    2 -> text.map(UTF8String.fromString),
+    // a view into a larger array (as a row's bytes are), spaces around
+    1 -> text.map { t =>
+      val b = t.getBytes("UTF-8")
+      UTF8String.fromBytes("x y ".getBytes("UTF-8") ++ b ++ " z".getBytes("UTF-8"), 4, b.length)
+    },
+    1 -> (for {
+      t <- text
+      bad <- Gen.oneOf(invalid)
+      at <- Gen.chooseNum(0, t.getBytes("UTF-8").length)
+    } yield {
+      val b = t.getBytes("UTF-8")
+      UTF8String.fromBytes(b.take(at) ++ bad ++ b.drop(at))
+    }))
 
   private def md5hex(s: String): String = {
     val d = MessageDigest.getInstance("MD5")
@@ -56,6 +86,10 @@ object NativeExprProperties extends Properties("graft.nativeexpr") {
       .map(g => md5hex(g.mkString(" "))).toSeq
 
   private def lit(t: String) = Literal(UTF8String.fromString(t), StringType)
+  private def lit(u: UTF8String) = Literal(u, StringType)
+
+  private def unhex(h: String): Seq[Byte] =
+    h.grouped(2).map(b => Integer.parseInt(b, 16).toByte).toSeq
 
   property("TokenSimHash64 == independent hex-string reimplementation") =
     forAll(text) { t =>
@@ -63,11 +97,27 @@ object NativeExprProperties extends Properties("graft.nativeexpr") {
       (r.getLong(0), r.getLong(1)) == refSimhash64(t)
     }
 
+  // the byte walker against the String route, invalid UTF-8 included
   property("ShingleMd5s == sliding-window md5hex (incl. sub-n docs -> empty)") =
-    forAll(text, Gen.chooseNum(1, 4)) { (t, n) =>
-      val got = ShingleMd5s(lit(t), n).eval(null).asInstanceOf[ArrayData]
+    forAll(utf8, Gen.chooseNum(1, 4)) { (u, n) =>
+      val got = ShingleMd5s(lit(u), n).eval(null).asInstanceOf[ArrayData]
         .toArray[UTF8String](StringType).map(_.toString).toSeq
-      got == refShingles(t, n)
+      got == refShingles(u.toString, n)
+    }
+
+  property("ShingleKeys == unhex of the md5hex shingles (distinct: deduplicated, first seen)") =
+    forAll(utf8, Gen.chooseNum(1, 4)) { (u, n) =>
+      def keys(distinct: Boolean): Seq[Seq[Byte]] = {
+        val a = ShingleKeys(lit(u), n, distinct).eval(null).asInstanceOf[ArrayData]
+        (0 until a.numElements()).map(i => a.getBinary(i).toSeq)
+      }
+      val ref = refShingles(u.toString, n).map(unhex)
+      keys(distinct = false) == ref && keys(distinct = true) == ref.distinct
+    }
+
+  property("GramTokenCount == size(split(text, \" \"))") =
+    forAll(utf8) { u =>
+      GramTokenCount(lit(u)).eval(null) == u.toString.split(" ", -1).length
     }
 
   // slow reference: hex-string route, building chunks by the exclusive
@@ -100,9 +150,9 @@ object NativeExprProperties extends Properties("graft.nativeexpr") {
     }
 
   property("MinHashSigs == per-k min of md5hex(k:shingle); null below n tokens") =
-    forAll(text, Gen.chooseNum(1, 3), Gen.chooseNum(1, 8)) { (t, n, k) =>
-      val got = MinHashSigs(lit(t), n, k).eval(null)
-      val sh = refShingles(t, n)
+    forAll(utf8, Gen.chooseNum(1, 3), Gen.chooseNum(1, 8)) { (u, n, k) =>
+      val got = MinHashSigs(lit(u), n, k).eval(null)
+      val sh = refShingles(u.toString, n)
       if (sh.isEmpty) got == null
       else {
         val exp = (0 until k).map(i => sh.map(s => md5hex(s"$i:$s")).min)

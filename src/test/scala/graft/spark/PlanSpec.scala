@@ -212,7 +212,7 @@ class PlanSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select("doc_id", "text")
     val plan = physical(graft.operators.Dedup.exactSubstringSpans(docs, minTokens = 15))
-    val shingles = "shingle_md5s".r.findAllIn(plan).size
+    val shingles = "shingle_keys".r.findAllIn(plan).size
     assert(shingles == 1,
       s"expected ONE shingle evaluation, got $shingles:\n${plan.take(4000)}")
     val scans = "Scan parquet".r.findAllIn(plan).size
