@@ -41,6 +41,22 @@ object VectorFunctions {
     toColumn(VectorDotQ(toExpression(a), toExpression(a)))
   }
 
+  /** Id of the row of `tables(part)` nearest to `vec` by exact integer
+    * L2², ties to the smaller id (native [[NearestL2]]); null for a null
+    * vector or an empty table. */
+  def nearest(vec: Column, part: Column, tables: Seq[L2Table]): Column = {
+    import org.apache.spark.sql.GraftColumnBridge._
+    toColumn(NearestL2(toExpression(vec), toExpression(part), tables))
+  }
+
+  /** The width of each of `numSub` PQ subvectors of a `width`-wide
+    * vector (native [[PqSubDim]]); a width not divisible by `numSub`
+    * fails, naming it. */
+  def pqSubDim(width: Column, numSub: Int): Column = {
+    import org.apache.spark.sql.GraftColumnBridge._
+    toColumn(PqSubDim(toExpression(width), numSub))
+  }
+
   /** Element-wise SUM aggregate over quantized vectors (native
     * [[ArrayLongSumAgg]]): the per-dimension sums of a group's member
     * vectors as one hash aggregate with map-side combine — the Lloyd

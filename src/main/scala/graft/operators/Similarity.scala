@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.{VectorFunctions => VF}
+import graft.functions.{IvfFold, IvfScan, L2Table, VectorFunctions => VF}
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -25,6 +25,14 @@ object Similarity {
   private def prep(emb: DataFrame, idCol: String) =
     emb.select(col(idCol), VF.quantize(col("embedding")).as("qv"))
 
+  /** Each query's top `k` rows of `scored` by `score` desc, ties to the
+    * smaller item id: (query_id, item_id, `score`, rnk). */
+  private def topK(scored: DataFrame, score: String, k: Int): DataFrame =
+    scored.withColumn("rnk", row_number().over(
+        Window.partitionBy("query_id").orderBy(col(score).desc, col("item_id"))))
+      .where(col("rnk") <= k)
+      .select("query_id", "item_id", score, "rnk")
+
   /** Exact top-k by dot product for each query vector. `queries` and
     * `items` both have (vec_id, embedding). Output:
     * (query_id, item_id, dot, rank). Self-matches excluded. */
@@ -35,10 +43,7 @@ object Similarity {
     val scored = broadcast(q).crossJoin(it)
       .where(col("query_id") =!= col("item_id"))
       .withColumn("dot", VF.dotQ(col("q_qv"), col("qv")))
-    val w = Window.partitionBy("query_id").orderBy(col("dot").desc, col("item_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k)
-      .select("query_id", "item_id", "dot", "rnk")
+    topK(scored, "dot", k)
   }
 
   /** LSH-bucketed top-k: queries only score items in their sign-LSH
@@ -57,165 +62,133 @@ object Similarity {
     val scored = broadcast(q).join(it, Seq("bucket"))
       .where(col("query_id") =!= col("item_id"))
       .withColumn("dot", VF.dotQ(col("q_qv"), col("qv")))
-    val w = Window.partitionBy("query_id").orderBy(col("dot").desc, col("item_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k)
-      .select("query_id", "item_id", "dot", "rnk")
+    topK(scored, "dot", k)
   }
 
   /** IVF (inverted-file) top-k — the other standard ANN scale path
     * next to LSH: items are assigned to their nearest coarse centroid
     * (exact integer L2² over quantized vectors, ties to the smaller
-    * centroid id) forming inverted lists — ONE shuffle on the centroid
-    * id; each query probes only its `nProbe` nearest lists. Centroids
-    * here are deterministic seeds (the first `numCentroids` item
-    * vectors) so the DuckDB oracle can reproduce the exact partition —
-    * a production deployment would run k-means and persist the
-    * centroid table; everything downstream is unchanged.
+    * centroid id) forming inverted lists; each query probes only its
+    * `nProbe` nearest lists. Centroids here are deterministic seeds (the
+    * first `numCentroids` item vectors) so the DuckDB oracle can
+    * reproduce the exact partition — a production deployment would run
+    * k-means and persist the centroid table; everything downstream is
+    * unchanged.
     *
-    * At 10^12 items: assignment is a broadcast (centroids are small)
-    * + map + one shuffle; probing scores ~nProbe/numCentroids of the
-    * corpus per query instead of all of it. */
+    * The index's small side (centroids, codebooks and query vectors —
+    * metadata at any scale) is read to the driver in one job when the
+    * operator is called, and folded there into each centroid's probing
+    * queries and each query's ADC table ([[graft.functions.IvfFold]]).
+    * One broadcast of the fold serves ONE map-side item pass
+    * ([[graft.functions.IvfScan]]) that assigns each item's list, encodes
+    * it and emits a scored row only for the queries probing that list;
+    * the per-query top-k window is the only exchange. At 10^12 items the
+    * pass scores ~nProbe/numCentroids of the corpus per query.
+    *
+    * Degenerate input: an empty query set or centroid table yields no
+    * rows, and a row with a null vector is as if it were absent (no
+    * centroid, codeword, list member or query). */
   def ivfTopK(queries: DataFrame, items: DataFrame, k: Int,
-      numCentroids: Int = 8, nProbe: Int = 2): DataFrame = {
-    val cent = seedCentroids(items, numCentroids)
-    val lists = assignNearest(items, cent, "item_id", "qv") // inverted lists
-    val probes = assignProbes(queries, cent, "query_id", "q_qv", nProbe)
-    probeAndRank(probes, lists, k)
-  }
+      numCentroids: Int = 8, nProbe: Int = 2): DataFrame =
+    coarseTopK(queries, items, seedCentroids(items, numCentroids), k, nProbe)
 
   /** IVF with LEARNED centroids: seeded Lloyd k-means over the
     * quantized integer vectors, a FIXED number of iterations, fully
     * deterministic (floor-of-mean integer centroids, ties to the
     * smaller centroid id) so an external engine can replay the exact
     * iterations. Initial centroids are the deterministic seeds of
-    * [[ivfTopK]]; each iteration reassigns all items (broadcast
-    * centroids + min_by aggregation — map-side combine, no window)
-    * and recomputes centroids as the element-wise floored mean of
-    * their members. A cluster that loses all members drops out (same
-    * semantics both engines). At 10^12 items each iteration is one
-    * broadcast + map + partial-agg shuffle over (cid, dim) — the
-    * centroid table stays tiny; persist it between iterations in a
-    * real deployment instead of re-deriving the lineage. */
+    * [[ivfTopK]]; each iteration reassigns all items map-side against
+    * the previous centroids, read to the driver, and recomputes
+    * centroids as the element-wise floored mean of their members. A
+    * cluster that loses all members drops out (same semantics both
+    * engines). At 10^12 items each iteration is one map + partial-agg
+    * shuffle over the centroid id — the centroid table stays tiny. */
   def ivfTopKKmeans(queries: DataFrame, items: DataFrame, k: Int,
       numCentroids: Int = 8, nProbe: Int = 2, iterations: Int = 2): DataFrame = {
     val it = items.select(col("vec_id").as("item_id"), VF.quantize(col("embedding")).as("qv"))
-    val cent = lloydCentroids(it, seedCentroids(items, numCentroids), iterations)
-    val lists = assignNearestQ(it, cent, "item_id", "qv")
-    val probes = assignProbes(queries, cent, "query_id", "q_qv", nProbe)
-    probeAndRank(probes, lists, k)
+    coarseTopK(queries, items, lloydCentroids(it, seedCentroids(items, numCentroids), iterations),
+      k, nProbe)
+  }
+
+  private def coarseTopK(queries: DataFrame, items: DataFrame, cent: DataFrame, k: Int,
+      nProbe: Int): DataFrame = {
+    val small = collectSmall(asQueries(queries), centroidRows(cent))
+    scanAndRank(items, new IvfFold(L2Table(small(Query)), L2Table(small(Cent)), nProbe, Nil,
+      exact = true), k)
   }
 
   /** `iterations` lazy coarse Lloyd rounds from `seed` over
-    * `it(item_id, qv)`. A null vector is no member: the array sum skips
-    * it, so the divisor counts only non-null vectors. */
+    * `it(item_id, qv)`. A null vector is no member. */
   private[operators] def lloydCentroids(it: DataFrame, seed: DataFrame,
       iterations: Int): DataFrame =
-    Rounds.iterate(seed, { cent =>
-      val asg = assignNearestQ(it, cent, "item_id", "qv")
-      // element-wise floored mean per centroid: the per-dim sums ride
-      // ONE array-sum hash aggregate (native [[graft.functions
-      // .ArrayLongSumAgg]], map-side combine) instead of a posexplode
-      // + per-(cid, dim) aggregation + collect_list reassembly — one
-      // exchange per training round instead of two. floor(sum/cnt)
-      // stays double division then floor, bit-identical across engines
-      // for BIGINT sums (both use IEEE double division), and the sums
-      // array preserves dim order by construction.
-      asg
-        .groupBy("cid")
-        .agg(VF.arraySumAgg(col("qv")).as("s"), count(col("qv")).as("cnt"))
-        .select(col("cid"),
-          transform(col("s"), x => floor(x / col("cnt")).cast("long")).as("cv"))
-        .withColumn("cn", VF.normSqQ(col("cv")))
-    }, iterations, identity, None)._1
+    Rounds.iterate(seed, cent => floorMeans(assignNearestQ(it, cent, "item_id", "qv"),
+      Seq("cid"), "qv", "cv"), iterations, identity, None)._1
 
-  /** Deterministic seed centroids: the first `numCentroids` item
-    * vectors (a production deployment would persist k-means output —
-    * see [[ivfTopKKmeans]]). */
+  /** One Lloyd recompute: each group's element-wise floored mean, the
+    * per-dim sums riding ONE array-sum hash aggregate (native
+    * [[graft.functions.ArrayLongSumAgg]], map-side combine; a null
+    * vector is skipped, so the divisor counts only non-null vectors).
+    * floor(sum/cnt) stays double division then floor, bit-identical
+    * across engines for BIGINT sums (both use IEEE double division),
+    * and the sums array preserves dim order by construction. */
+  private def floorMeans(asg: DataFrame, keys: Seq[String], v: String, out: String): DataFrame =
+    asg.groupBy(keys.map(col): _*)
+      .agg(VF.arraySumAgg(col(v)).as("s"), count(col(v)).as("cnt"))
+      .select(keys.map(col) :+
+        transform(col("s"), x => floor(x / col("cnt")).cast("long")).as(out): _*)
+
+  /** Deterministic seed centroids (cid, cv): the first `numCentroids`
+    * item vectors (a production deployment would persist k-means
+    * output — see [[ivfTopKKmeans]]). */
   private[operators] def seedCentroids(items: DataFrame, numCentroids: Int): DataFrame =
     items.where(col("vec_id") < numCentroids)
       .select(col("vec_id").as("cid"), VF.quantize(col("embedding")).as("cv"))
-      .withColumn("cn", VF.normSqQ(col("cv")))
 
-  /** exact integer L2²: |v-c|² = |v|² - 2·v·c + |c|² (the |v|² term is
-    * constant per vector, kept so distances are true L2² values). */
-  private def d2Col(qvName: String): Column =
-    col("vn") - lit(2L) * VF.dotQ(col(qvName), col("cv")) + col("cn")
-
-  /** The centroid table folded to ONE broadcastable row — the shape
-    * that makes nearest-centroid assignment a map-side expression.
-    * `coalesce(1)` first: a single-partition child satisfies the
-    * global aggregation's distribution, so the fold runs inside the
-    * (tiny — centroid tables are metadata at any scale) scan stage
-    * with NO exchange of its own; element order is irrelevant to the
-    * downstream array_min. */
-  private def centArr(cent: DataFrame): DataFrame =
-    cent.coalesce(1)
-      .agg(collect_list(struct(col("cid"), col("cv"), col("cn"))).as("cents"))
-
-  /** Nearest-centroid assignment as a MAP-SIDE expression (round 9):
-    * the centroid table is folded to one array row, broadcast, and
-    * each vector computes `array_min` over per-centroid (d2, cid)
-    * structs — exact integer L2², ties to the smaller centroid id by
-    * struct ordering, identical to the retired min_by aggregation.
-    * No exchange AT ALL: the previous form generated n×C candidate
-    * rows and, although the partial min_by collapsed them map-side,
-    * still shuffled one row per vector to finalize the aggregation —
-    * a full corpus shuffle at 10^12 items for what is a pure per-row
-    * function of (vector, centroid table). Assignment output now
-    * stays in the scan's partitions. (History: the row_number-window
-    * form before THAT sorted all n×C rows through unsplittable
-    * per-vector partitions.) An EMPTY centroid table folds to an
-    * empty array whose array_min is null: no vector has a nearest
-    * centroid, so the assignment is empty (a map-side filter, no job). */
+  /** Nearest-centroid assignment as a MAP-SIDE expression: the centroid
+    * table `cent(cid, cv)` is read to the driver and each vector takes
+    * its nearest centroid ([[graft.functions.L2Table]]: exact integer
+    * L2², ties to the smaller centroid id) — no exchange, assignment
+    * stays in the scan's partitions. An EMPTY centroid table, or a null
+    * vector, assigns nothing. */
   private[operators] def assignNearestQ(v: DataFrame, cent: DataFrame,
-      idName: String, qvName: String): DataFrame =
-    v.withColumn("vn", VF.normSqQ(col(qvName)))
-      .crossJoin(broadcast(centArr(cent)))
-      .select(col(idName),
-        array_min(transform(col("cents"), c =>
-          struct((col("vn") - lit(2L) * VF.dotQ(col(qvName), c.getField("cv")) +
-            c.getField("cn")).as("d2"),
-            c.getField("cid").as("cid")))).getField("cid").as("cid"),
-        col(qvName))
+      idName: String, qvName: String): DataFrame = {
+    val t = L2Table(collectSmall(centroidRows(cent))(Cent))
+    v.select(col(idName), VF.nearest(col(qvName), lit(0), Seq(t)).as("cid"), col(qvName))
       .where(col("cid").isNotNull)
-
-  private def assignNearest(df: DataFrame, cent: DataFrame,
-      idName: String, qvName: String): DataFrame =
-    assignNearestQ(
-      df.select(col("vec_id").as(idName), VF.quantize(col("embedding")).as(qvName)),
-      cent, idName, qvName)
-
-  /** nProbe-nearest-centroid assignment for the QUERY side — window
-    * top-n is fine here: the query set is small by contract (it is
-    * broadcast into the probe join). Reads the FOLDED centroid table
-    * and explodes it back per query row (round 9), so the one
-    * [[centArr]] broadcast serves the item assignment AND the probe
-    * ranking (broadcast-stage reuse) instead of shipping the raw
-    * table a second time. */
-  private def assignProbes(queries: DataFrame, cent: DataFrame,
-      idName: String, qvName: String, nProbe: Int): DataFrame = {
-    val v = queries.select(col("vec_id").as(idName), VF.quantize(col("embedding")).as(qvName))
-      .withColumn("vn", VF.normSqQ(col(qvName)))
-    val w = Window.partitionBy(idName).orderBy(col("d2"), col("cid"))
-    v.crossJoin(broadcast(centArr(cent)))
-      .select(col(idName), col(qvName), col("vn"), explode(col("cents")).as("c"))
-      .select(col(idName), col(qvName), col("vn"),
-        col("c.cid").as("cid"), col("c.cv").as("cv"), col("c.cn").as("cn"))
-      .withColumn("d2", d2Col(qvName))
-      .withColumn("crk", row_number().over(w))
-      .where(col("crk") <= nProbe)
-      .select(col(idName), col("cid"), col(qvName))
   }
 
-  private def probeAndRank(probes: DataFrame, lists: DataFrame, k: Int): DataFrame = {
-    val scored = broadcast(probes).join(lists, Seq("cid"))
-      .where(col("query_id") =!= col("item_id"))
-      .withColumn("dot", VF.dotQ(col("q_qv"), col("qv")))
-    val w = Window.partitionBy("query_id").orderBy(col("dot").desc, col("item_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k)
-      .select("query_id", "item_id", "dot", "rnk")
+  // the parts of the index's small side: query vectors, centroids
+  // (seed or trained); a part m >= 0 is a codeword of PQ subspace m
+  private final val Query = -1
+  private final val Cent = -2
+
+  private def asQueries(queries: DataFrame): DataFrame =
+    queries.select(lit(Query), col("vec_id").cast("long"), VF.quantize(col("embedding")))
+
+  /** A centroid table `(cid, cv)` as `(part, id, vector)` rows. */
+  private def centroidRows(cent: DataFrame): DataFrame =
+    cent.select(lit(Cent), col("cid").cast("long"), col("cv"))
+
+  /** `(part, id, vector)` frames read to the driver in ONE job, grouped
+    * by part; a row with a null id or vector is dropped. */
+  private def collectSmall(parts: DataFrame*): Map[Int, Seq[(Long, Array[Long])]] =
+    parts.reduce(_ union _).collect().toSeq
+      .filter(r => !r.isNullAt(1) && !r.isNullAt(2))
+      .groupBy(_.getInt(0))
+      .map { case (p, rs) => p -> rs.map(r => r.getLong(1) -> r.getSeq[Long](2).toArray) }
+      .withDefaultValue(Nil)
+
+  /** Scores every item against `fold` in one map-side pass and keeps
+    * each query's top `k`: by `adot` when the fold has codebooks, else
+    * by the exact `dot`; a `shortlist` re-ranks the top `shortlist` by
+    * `adot` on `dot`. */
+  private def scanAndRank(items: DataFrame, fold: IvfFold, k: Int, shortlist: Int = 0): DataFrame = {
+    val it = items.select(col("vec_id").cast("long"), VF.quantize(col("embedding")))
+    val scored = it.select(IvfScan.of(it, fold))
+    if (!fold.adc) topK(scored, "dot", k)
+    else if (shortlist == 0) topK(scored, "adot", k)
+    else topK(scored.withColumn("srk", row_number().over(Window.partitionBy("query_id")
+      .orderBy(col("adot").desc, col("item_id")))).where(col("srk") <= shortlist), "dot", k)
   }
 
   /** IVF-ADC product-quantization top-k (Jégou, Douze, Schmid,
@@ -236,30 +209,20 @@ object Similarity {
     *    deployment would persist per-subspace k-means output, exactly
     *    like the coarse stage of [[ivfTopKKmeans]]);
     *  - encoding: nearest codeword per (item, subspace) by exact
-    *    integer L2², ties to the smaller code — ONE hash aggregation
-    *    with map-side combine (never a window over the n·K candidate
-    *    rows);
+    *    integer L2², ties to the smaller code;
     *  - scoring: approx_dot(q, item) = Σ_m LUT_q[m][code_m(item)]
-    *    where LUT_q[m][c] = q_sub(m)·codeword(m,c) — the LUT is
-    *    (queries × numSub × codebookSize) rows, broadcast; items in
-    *    probed lists join it by (query, subspace, code) and one hash
-    *    aggregation sums the M partial dots. No full-width vector is
-    *    touched at scan time.
+    *    where LUT_q[m][c] = q_sub(m)·codeword(m,c).
     *
-    * At 10^12 items the scan side carries only (item_id, cid, sub,
-    * code); the probed fraction is nProbe/numCentroids; and the per-row
-    * work is a broadcast-hash lookup + a long add. Ranking is by
-    * (approx_dot desc, item_id) — deterministic, replayed exactly by
-    * the DuckDB twin. */
+    * Seeds, codebooks and queries are read in one job and the LUTs are
+    * built on the driver; the item pass (see [[ivfTopK]]) encodes each
+    * probed item and sums its M table entries per probing query. A
+    * vector width not divisible by `numSub` fails, naming the width.
+    * Ranking is by (approx_dot desc, item_id) — deterministic, replayed
+    * exactly by the DuckDB twin. */
   def ivfPqTopK(queries: DataFrame, items: DataFrame, k: Int,
       numCentroids: Int = 8, nProbe: Int = 2,
-      numSub: Int = 4, codebookSize: Int = 16): DataFrame = {
-    require(numSub >= 1, s"numSub must be >= 1, got $numSub")
-    require(codebookSize >= 1, s"codebookSize must be >= 1, got $codebookSize")
-    val it = items.select(col("vec_id").as("item_id"), VF.quantize(col("embedding")).as("qv"))
-    pqScoreAndRank(queries, it, items, k, numCentroids, nProbe, numSub,
-      seedCodebooks(it, numSub, codebookSize))
-  }
+      numSub: Int = 4, codebookSize: Int = 16): DataFrame =
+    pqTopK(queries, items, k, numCentroids, nProbe, numSub, codebookSize, 0, 0)
 
   /** [[ivfPqTopK]] with LEARNED per-subspace codebooks: `iterations`
     * deterministic Lloyd rounds refine each subspace's codewords from
@@ -269,38 +232,39 @@ object Similarity {
     * so codewords adapt to the data distribution instead of echoing
     * whatever the first `codebookSize` items happened to be. A
     * codeword that loses every member drops out (both engines). The
-    * trained codebook is materialized ONCE (it feeds both the encoder
-    * and the ADC LUT — unmaterialized, the whole Lloyd lineage would
-    * execute twice); training cost at 10^12 items is `iterations`
-    * broadcast+partial-agg passes over (item, sub) — the same shape
-    * as one encode pass. */
+    * trained codebook is read to the driver ONCE, with the coarse seeds
+    * and the queries, so the scoring plan holds no training lineage;
+    * training cost at 10^12 items is `iterations` map + partial-agg
+    * passes over (item, sub). */
   def ivfPqTopKKmeans(queries: DataFrame, items: DataFrame, k: Int,
       numCentroids: Int = 8, nProbe: Int = 2,
       numSub: Int = 4, codebookSize: Int = 16, iterations: Int = 2): DataFrame = {
+    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
+    pqTopK(queries, items, k, numCentroids, nProbe, numSub, codebookSize, iterations, 0)
+  }
+
+  /** The IVF-PQ family's one body: `iterations` Lloyd rounds refine the
+    * seed codebooks (none: the seeds themselves); the codebook, the
+    * coarse seeds and the queries are read in one job; the item pass
+    * scores, and a `shortlist` re-ranks by exact dot. */
+  private def pqTopK(queries: DataFrame, items: DataFrame, k: Int, numCentroids: Int,
+      nProbe: Int, numSub: Int, codebookSize: Int, iterations: Int, shortlist: Int): DataFrame = {
     require(numSub >= 1, s"numSub must be >= 1, got $numSub")
     require(codebookSize >= 1, s"codebookSize must be >= 1, got $codebookSize")
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     val it = items.select(col("vec_id").as("item_id"), VF.quantize(col("embedding")).as("qv"))
-    val sub = it.select(col("item_id"), subVecs("qv", numSub))
-      .withColumn("svn", VF.normSqQ(col("sv")))
+    val subs = it.select(subVecs("qv", numSub))
+    def parts(cb: DataFrame) = cb.select(col("sub"), col("code").cast("long"), col("scv"))
     val (cb, _) = Rounds.iterate(seedCodebooks(it, numSub, codebookSize), { cb =>
-      // MAP-SIDE nearest-codeword assignment (round 9 — the
-      // [[assignNearestQ]] recipe): no per-(item, sub) aggregation
-      // exchange per training round
-      val asg = sub.join(broadcast(subCodebookArr(cb)), Seq("sub"))
-        .select(col("sub"), codeArgmin("sv", "svn").as("code"), col("sv"))
-      // per-(subspace, code) floored mean via ONE array-sum hash
-      // aggregate — same recipe (and rationale) as the coarse
-      // [[lloydCentroids]] round
-      asg
-        .groupBy("sub", "code")
-        .agg(VF.arraySumAgg(col("sv")).as("s"), count(col("sv")).as("cnt"))
-        .select(col("sub"), col("code"),
-          transform(col("s"), x => floor(x / col("cnt")).cast("long")).as("scv"))
-        .withColumn("scn", VF.normSqQ(col("scv")))
+      val books = collectSmall(parts(cb))
+      val asg = subs.select(col("sub"),
+        VF.nearest(col("sv"), col("sub"), (0 until numSub).map(m => L2Table(books(m))))
+          .cast("int").as("code"), col("sv"))
+      floorMeans(asg.where(col("code").isNotNull), Seq("sub", "code"), "sv", "scv")
     }, iterations, identity, None)
-    pqScoreAndRank(queries, it, items, k, numCentroids, nProbe, numSub,
-      Rounds.defaultTruncate(cb))
+    val small = collectSmall(asQueries(queries), centroidRows(seedCentroids(items, numCentroids)),
+      parts(cb))
+    scanAndRank(items, new IvfFold(L2Table(small(Query)), L2Table(small(Cent)), nProbe,
+      (0 until numSub).map(m => L2Table(small(m))), exact = shortlist > 0), k, shortlist)
   }
 
   /** Subspace splitter: subspace m covers dims [m·subDim, (m+1)·subDim);
@@ -308,118 +272,39 @@ object Similarity {
     * contract is ENFORCED per row (a violating width would silently
     * drop the trailing dims from every codeword and score otherwise). */
   private def subVecs(qvName: String, numSub: Int): Column = {
-    val width = size(col(qvName))
-    val subDim = when(pmod(width, lit(numSub)) === 0, width / numSub)
-      .otherwise(raise_error(concat(
-        lit(s"PQ: vector width not divisible by numSub=$numSub, got "),
-        width.cast("string"))))
-      .cast("int")
+    val subDim = VF.pqSubDim(size(col(qvName)), numSub)
     posexplode(array((0 until numSub).map(m =>
       slice(col(qvName), lit(m) * subDim + 1, subDim)): _*)).as(Seq("sub", "sv"))
   }
 
-  /** Seed per-subspace codebooks: codewords = subvectors of the first
-    * `codebookSize` item vectors. */
+  /** Seed per-subspace codebooks (code, sub, scv): codewords =
+    * subvectors of the first `codebookSize` item vectors. */
   private def seedCodebooks(it: DataFrame, numSub: Int, codebookSize: Int): DataFrame =
     it.where(col("item_id") < codebookSize)
       .select(col("item_id").cast("int").as("code"), subVecs("qv", numSub))
       .withColumnRenamed("sv", "scv")
-      .withColumn("scn", VF.normSqQ(col("scv")))
-
-  /** The (sub, code, scv, scn) codebook folded to one row PER
-    * SUBSPACE — the broadcastable shape that makes encoding a
-    * map-side expression. */
-  private def subCodebookArr(cb: DataFrame): DataFrame =
-    cb.coalesce(1) // exchange-free fold, as [[centArr]]
-      .groupBy("sub")
-      .agg(collect_list(struct(col("code"), col("scv"), col("scn"))).as("cbs"))
-
-  /** Nearest-codeword argmin over a folded `cbs` array for a row
-    * carrying subvector `svName` and its norm `svnName` — exact
-    * integer L2², ties to the smaller code (struct ordering),
-    * identical to the retired min_by aggregation. */
-  private def codeArgmin(svName: String, svnName: String): Column =
-    array_min(transform(col("cbs"), c =>
-      struct((col(svnName) - lit(2L) * VF.dotQ(col(svName), c.getField("scv")) +
-        c.getField("scn")).as("d2"),
-        c.getField("code").as("code")))).getField("code")
-
-  /** The shared IVF-ADC tail: coarse assignment, encode against `cb`,
-    * broadcast ADC LUT (derived from the RAW query side, not from
-    * `probes`, so the probe-ranking window subtree is instantiated
-    * once), score, rank. */
-  private def pqScoreAndRank(queries: DataFrame, it: DataFrame,
-      items: DataFrame, k: Int, numCentroids: Int, nProbe: Int,
-      numSub: Int, cb: DataFrame): DataFrame = {
-    val cent = seedCentroids(items, numCentroids)
-    val lists = assignNearestQ(it, cent, "item_id", "qv") // (item_id, cid, qv)
-
-    // encode: nearest codeword per (item, subspace) as a MAP-SIDE
-    // argmin expression over the per-subspace codeword array (round 9
-    // — the [[assignNearestQ]] recipe): no K-row fan-out, no
-    // per-(item, sub) aggregation exchange; encoding stays in the
-    // scan's partitions
-    val cbA = subCodebookArr(cb) // ONE folded broadcast serves encoder + LUT
-    val enc = lists.select(col("item_id"), col("cid"), subVecs("qv", numSub))
-      .withColumn("svn", VF.normSqQ(col("sv")))
-      .join(broadcast(cbA), Seq("sub"))
-      .select(col("item_id"), col("cid"), col("sub"),
-        codeArgmin("sv", "svn").as("code"))
-
-    val probes = assignProbes(queries, cent, "query_id", "q_qv", nProbe)
-    // ADC lookup table: q_sub(m) · codeword(m, c) per query — reads
-    // the same folded broadcast as the encoder (broadcast-stage
-    // reuse) and explodes it back per tiny query-side row
-    val lut = queries
-      .select(col("vec_id").as("query_id"), VF.quantize(col("embedding")).as("q_qv"))
-      .select(col("query_id"), subVecs("q_qv", numSub))
-      .join(broadcast(cbA), Seq("sub"))
-      .select(col("query_id"), col("sub"), col("sv"), explode(col("cbs")).as("c"))
-      .select(col("query_id"), col("sub"), col("c.code").as("code"),
-        VF.dotQ(col("sv"), col("c.scv")).as("pdot"))
-
-    val scored = enc
-      .join(broadcast(probes.select("query_id", "cid")), Seq("cid"))
-      .where(col("query_id") =!= col("item_id"))
-      .join(broadcast(lut), Seq("query_id", "sub", "code"))
-      .groupBy("query_id", "item_id")
-      .agg(sum(col("pdot")).as("adot"))
-    val w = Window.partitionBy("query_id").orderBy(col("adot").desc, col("item_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k)
-      .select("query_id", "item_id", "adot", "rnk")
-  }
 
   /** Two-stage retrieval: PQ SHORTLIST then EXACT re-rank — the
     * standard production composition (Jégou et al. 2011 §V evaluate
     * exactly this: ADC shortlist, exact distances on the survivors).
-    * Stage 1 runs [[ivfPqTopK]] with a `shortlist`-deep k (cheap,
-    * compressed codes); stage 2 fetches ONLY the shortlist rows' full
-    * vectors and re-ranks by exact integer dot. At 10^12 items the
-    * exact stage touches Q·shortlist rows, not the corpus: the
-    * shortlist broadcasts into a hash join against the item table
-    * (point lookups a real deployment serves from the primary-key
-    * store). Output ranking is exact within the shortlist —
-    * recall equals stage 1's recall@shortlist, which dominates its
-    * recall@k. */
+    * Stage 1 ranks by [[ivfPqTopK]]'s ADC score with a `shortlist`-deep
+    * k; stage 2 re-ranks the shortlist by exact integer dot. The item
+    * pass holds each probed item's full vector while it encodes it, so
+    * the exact dot rides the same scored row and both rankings share
+    * the one per-query window exchange (a deployment that stores codes
+    * only would fetch the shortlist rows from the primary-key store).
+    * The price is one full-width dot per probed (query, item) pair, not
+    * per shortlist row; next to encoding the item it is small while few
+    * queries probe each list.
+    * Output ranking is exact within the shortlist — recall equals
+    * stage 1's recall@shortlist, which dominates its recall@k. */
   def ivfPqTopKRerank(queries: DataFrame, items: DataFrame, k: Int,
       shortlist: Int, numCentroids: Int = 8, nProbe: Int = 2,
       numSub: Int = 4, codebookSize: Int = 16): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    val cands = ivfPqTopK(queries, items, shortlist,
-      numCentroids, nProbe, numSub, codebookSize).select("query_id", "item_id")
-    val q = queries.select(col("vec_id").as("query_id"),
-      VF.quantize(col("embedding")).as("q_qv"))
-    val it = items.select(col("vec_id").as("item_id"),
-      VF.quantize(col("embedding")).as("qv"))
-    val scored = broadcast(cands).join(it, Seq("item_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .withColumn("dot", VF.dotQ(col("q_qv"), col("qv")))
-    val w = Window.partitionBy("query_id").orderBy(col("dot").desc, col("item_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k)
-      .select("query_id", "item_id", "dot", "rnk")
+    pqTopK(queries, items, k, numCentroids, nProbe, numSub, codebookSize, 0, shortlist)
   }
+
 
   /** Multi-table LSH top-k: `tables` independent sign-LSH bucket
     * tables (table t hashes dims [t·lshBits, (t+1)·lshBits)); a
@@ -447,9 +332,6 @@ object Similarity {
         col("query_id_qv").as("q_qv"), col("item_id_qv").as("qv"))
       .dropDuplicates("query_id", "item_id")
     val scored = cands.withColumn("dot", VF.dotQ(col("q_qv"), col("qv")))
-    val w = Window.partitionBy("query_id").orderBy(col("dot").desc, col("item_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k)
-      .select("query_id", "item_id", "dot", "rnk")
+    topK(scored, "dot", k)
   }
 }

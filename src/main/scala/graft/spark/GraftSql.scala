@@ -82,7 +82,12 @@ object GraftSql {
     * `<prefix>topk_pq_rerank` (PQ shortlist, exact re-rank)
     * score every vector of `queriesWhere` (SQL predicate over
     * `embView` columns selecting the query side, e.g. "vec_id < 8")
-    * against the full table. */
+    * against the full table. The IVF and PQ views read the index's
+    * small side (centroids, codebooks, query vectors) once, when they
+    * are registered, and keep that snapshot, while their item scan
+    * reads `embView` when queried: after the embeddings change, such a
+    * view scores the new items against the old small side until it is
+    * registered again. */
   def registerSimilarityViews(spark: SparkSession, embView: String,
       queriesWhere: String, k: Int = 5, prefix: String = "graft_"): Unit = {
     val emb = spark.table(embView)

@@ -1324,9 +1324,9 @@ object Queries {
   }
 
   /** IVF with LEARNED centroids: 2 deterministic Lloyd iterations
-    * (integer floor-of-mean centroids, min_by assignment — no n×C
-    * window) from the same seeds; the DuckDB twin replays the exact
-    * iterations. */
+    * (integer floor-of-mean centroids, map-side nearest-centroid
+    * assignment — no n×C window) from the same seeds; the DuckDB twin
+    * replays the exact iterations. */
   def simTopkIvfKmeans(s: SparkSession, dir: String): DataFrame = {
     val emb = rd(s, dir, "embeddings")
     Similarity.ivfTopKKmeans(emb.where(col("vec_id") < 8), emb, k = 5,
@@ -1348,8 +1348,8 @@ object Queries {
 
   /** [[simTopkPq]] with LEARNED codebooks: 2 per-subspace Lloyd
     * iterations from the same seeds (integer floor-of-mean codewords,
-    * min_by assignment); the DuckDB twin replays the exact training
-    * rounds, so one drifted codeword flips the compare. */
+    * map-side nearest-codeword assignment); the DuckDB twin replays the
+    * exact training rounds, so one drifted codeword flips the compare. */
   def simTopkPqKmeans(s: SparkSession, dir: String): DataFrame = {
     val emb = rd(s, dir, "embeddings")
     Similarity.ivfPqTopKKmeans(emb.where(col("vec_id") < 8), emb, k = 5,

@@ -46,15 +46,24 @@ object ExtractStream {
   /** Start the streaming extraction: corpusDir (parquet files arriving
     * over time) → outDir (exactly-once parquet sink). `availableNow`
     * processes the current backlog then stops — the batch-equivalent
-    * trigger used by tests and catch-up runs. */
+    * trigger used by tests and catch-up runs.
+    *
+    * The parquet file sink builds its Hadoop conf from its session's
+    * conf and ignores writer options, so the batch job's
+    * [[graft.job.ExtractJob.SinkOptions]] ride a clone of `spark`'s
+    * session (its conf plus those options; `spark` is not mutated). The
+    * query is therefore listed under that clone's `streams`, not under
+    * `spark.streams`. */
   def run(spark: SparkSession, corpusDir: String, outDir: String,
       checkpointDir: String, opts: ExtractOptions = ExtractOptions(),
       maxFilesPerTrigger: Int = 64): StreamingQuery = {
-    val src = spark.readStream
+    val session = org.apache.spark.sql.GraftColumnBridge.cloneSession(spark)
+    graft.job.ExtractJob.SinkOptions.foreach { case (k, v) => session.conf.set(k, v) }
+    val src = session.readStream
       .schema(inputSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger) // admission control ≡ Semaphore(5), data-sized
       .parquet(corpusDir)
-    extract(spark, src, opts).writeStream
+    extract(session, src, opts).writeStream
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)

@@ -62,10 +62,10 @@ object PlanDump {
       "aggregate or exchange keyed on a pair",
       Queries.dedupJaccardCapped(spark, sf))
 
-    dump("IVF top-k (round 9: MAP-SIDE assignment): item->centroid assignment is an " +
-      "array_min argmin expression over the folded broadcast centroid table -- no " +
-      "per-item aggregation exchange at all (the min_by form still shuffled one " +
-      "finalize row per item), no n*C per-item window sort",
+    dump("IVF top-k (one item pass): centroids and queries are folded on the driver, " +
+      "and ONE map-side ivf_scan generator assigns each item's list and scores it " +
+      "against only the queries probing that list -- no join, no per-item aggregation, " +
+      "no n*C fan-out; the per-query top-k window is the only exchange",
       Queries.simTopkIvf(spark, sf))
 
     dump("MinHash STAR pairs (round 4; round 9: ONE shared exchange): bucket canon " +
@@ -119,11 +119,11 @@ object PlanDump {
       "per doc), then one doc-level sum; the corpus-side left join keys on doc_id",
       Queries.textDupCoverage(spark, sf))
 
-    dump("IVF-PQ ANN (round 7; round 9: MAP-SIDE encode): item->code encoding is an " +
-      "array_min argmin expression under the folded broadcast per-subspace codebooks " +
-      "-- no per-(item, sub) aggregation exchange; ADC scoring joins only probed lists " +
-      "against the broadcast lookup table and partial-sums the per-subspace dots; the " +
-      "only windows rank the tiny query side",
+    dump("IVF-PQ ANN (one item pass): seeds, codebooks and queries are read in one " +
+      "job and each query's ADC table is built on the driver; the same ivf_scan pass " +
+      "encodes each probed item and sums its table entries -- no broadcast hash " +
+      "relation, no join, no per-(item, sub) row; the per-query top-k window is the " +
+      "only exchange",
       Queries.simTopkPq(spark, sf))
 
     dump("Temperature mixture sampling (round 7): the group-count aggregation is the only " +
@@ -141,10 +141,9 @@ object PlanDump {
       "windowed funnel costs exactly what the unbounded one does",
       Queries.qEventsFunnelWindow(spark, sf))
 
-    dump("IVF-PQ with LEARNED codebooks (round 8): the Lloyd-trained codebook is a " +
-      "materialized LEAF (it feeds encoder + ADC LUT once); the scoring plan is " +
-      "byte-identical in shape to the seeded PQ -- training cost never re-executes " +
-      "per consumer",
+    dump("IVF-PQ with LEARNED codebooks (one item pass): the Lloyd-trained codebook is " +
+      "read to the driver once, with the coarse seeds and the queries, so the scoring " +
+      "plan is the seeded PQ's item pass with no training lineage in it",
       Queries.simTopkPqKmeans(spark, sf))
 
     dump("Adaptive PageRank with dangling redistribution (round 8; round 9: one-probe " +

@@ -47,6 +47,16 @@ object ScaleProbe {
 
     def runPlan(df: DataFrame): Long = df.queryExecution.executedPlan.execute().count()
 
+    // per-doc vectors derived from the id (deterministic, dim 16); a
+    // FIXED 8-query side (copy 0 only), so a PQ ratio measures the
+    // ITEM-side growth, not queries x items
+    def pqVectors(d: DataFrame): DataFrame =
+      d.select(col("doc_id").as("vec_id"),
+        transform(sequence(lit(0), lit(15)),
+          i => (pmod(col("doc_id") * (i + 3) + i * 7, lit(2000)) - 1000)
+            .cast("float") / 1000f).as("embedding"))
+    def pqQueries(d: DataFrame): DataFrame = pqVectors(d).where(col("vec_id") < 8)
+
     val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
       "dedup_exact" -> (d => Dedup.exactGroups(d)),
       "dedup_minhash_star" -> (d => Dedup.minhashLshStarPairs(d)),
@@ -99,20 +109,14 @@ object ScaleProbe {
             ((col("doc_id") * 7 + 3) % 4000000L).as("dst"))
           .where(col("src") =!= col("dst")),
         maxIterations = 3, redistributeDangling = true)._1),
-      // learned-codebook PQ over synthetic per-doc vectors derived
-      // from the id (deterministic, dim 16): training + encode + ADC
-      "sim_topk_pq_kmeans" -> (d => {
-        val emb = d.select(col("doc_id").as("vec_id"),
-          transform(sequence(lit(0), lit(15)),
-            i => (pmod(col("doc_id") * (i + 3) + i * 7, lit(2000)) - 1000)
-              .cast("float") / 1000f).as("embedding"))
-        // FIXED 8-query side (copy 0 only) so the ratio measures the
-        // ITEM-side growth, not queries x items
-        graft.operators.Similarity.ivfPqTopKKmeans(
-          emb.where(col("vec_id") < 8), emb, k = 5,
-          numCentroids = 8, nProbe = 2, numSub = 4, codebookSize = 16,
-          iterations = 2)
-      }),
+      // seeded and learned-codebook PQ over `pqVectors`: index fold +
+      // item pass, and Lloyd training + the same pass
+      "sim_topk_pq" -> (d => graft.operators.Similarity.ivfPqTopK(
+        pqQueries(d), pqVectors(d), k = 5, numCentroids = 8, nProbe = 2, numSub = 4,
+        codebookSize = 16)),
+      "sim_topk_pq_kmeans" -> (d => graft.operators.Similarity.ivfPqTopKKmeans(
+        pqQueries(d), pqVectors(d), k = 5, numCentroids = 8, nProbe = 2, numSub = 4,
+        codebookSize = 16, iterations = 2)),
       "q_events_funnel_window" -> (d => graft.operators.Funnel.funnel(
         d.select((col("doc_id") % 997).as("user_id"),
           concat(lit("s"), (col("doc_id") % 3).cast("string")).as("event_type"),

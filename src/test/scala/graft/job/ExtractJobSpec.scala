@@ -43,6 +43,51 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  // 40 docs under 4 ids, each carrying the same two text spans: a
+  // dictionary would pay off on doc_id and span text, so only the sink's
+  // writer options keep it off (unique values never keep one either way)
+  private def repeatedDocs = {
+    import spark.implicits._
+    spark.range(40).map(i => InterleavedDoc(f"rep${i % 4}%08d", Seq(
+      RawSpan("text", "the same paragraph", null, 0), RawSpan("text", "and another", null, 1)))).toDF()
+  }
+
+  /** Per column path of the parquet files under `dir`: does any chunk of
+    * any file carry a dictionary page. */
+  private def dictionaryPages(dir: String): Map[String, Boolean] = {
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+      .filter(f => f.toString.endsWith(".parquet") && !f.toString.contains("_spark_metadata")).toSeq
+    assert(files.nonEmpty, s"no parquet files under $dir")
+    files.flatMap { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toString), conf))
+      try r.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
+        .map(c => c.getPath.toDotString -> c.hasDictionaryPage)
+      finally r.close()
+    }.groupBy(_._1).map { case (p, cs) => p -> cs.exists(_._2) }
+  }
+
+  private def assertSinkDictionaries(dict: Map[String, Boolean]): Unit =
+    assert(!dict("doc_id") && !dict("spans.list.element.text") && dict("spans.list.element.kind"),
+      s"$dict")
+
+  test("sink: doc_id and span text are written without a dictionary even where they repeat; kind keeps one") {
+    val table = tmpDir("graft-sink-dict")
+    ExtractJob.run(spark, repeatedDocs, table, ExtractJob.Config(numBuckets = 4))
+    assertSinkDictionaries(dictionaryPages(TableIO.dataDir(table)))
+  }
+
+  test("streaming sink: the same writer options — no dictionary on doc_id and span text") {
+    val corpus = tmpDir("graft-sink-stream-src")
+    val out = tmpDir("graft-sink-stream-out")
+    repeatedDocs.coalesce(1).write.mode("overwrite").parquet(corpus)
+    graft.streaming.ExtractStream.run(spark, corpus, out, tmpDir("graft-sink-stream-ck"))
+      .awaitTermination()
+    assertSinkDictionaries(dictionaryPages(out))
+  }
+
   test("per-job password reaches the InternalRow fast path: encrypted corpus extracts; no password fails soft") {
     import spark.implicits._
     val texts = Seq("locked page one", "locked page two")

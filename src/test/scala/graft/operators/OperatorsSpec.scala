@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
@@ -322,6 +322,33 @@ class OperatorsSpec extends AnyFunSuite {
           "dedup_containment" -> graft.spark.Queries.dedupContainment(spark, sf))
         .map { case (q, df) => q -> passesOf(df) }
       assert(got.forall(_._2 == 1), s"partner pass stages per query: $got")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("IVF and IVF-PQ top-k: at most 7 Spark jobs per query, index fold included") {
+    // the index's small side is read once on the driver; the item scan,
+    // the per-query window and the caller's order are the rest (over the
+    // benchmark's copy of the sf0.01 embeddings)
+    val sf = "perfbench/data/sf0.01"
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf(q: (SparkSession, String) => DataFrame): Int = {
+      org.apache.spark.GraftListenerBridge.waitUntilEmpty(sc)
+      val j0 = jobs.get()
+      q(spark, sf).collect()
+      org.apache.spark.GraftListenerBridge.waitUntilEmpty(sc)
+      jobs.get() - j0
+    }
+    sc.addSparkListener(listener)
+    try {
+      val got = Seq("sim_topk_pq" -> jobsOf(graft.spark.Queries.simTopkPq),
+          "sim_topk_ivf" -> jobsOf(graft.spark.Queries.simTopkIvf))
+      info(s"Spark jobs per query: $got")
+      assert(got.forall(_._2 <= 7), s"Spark jobs per query: $got")
     } finally sc.removeSparkListener(listener)
   }
 
@@ -1199,6 +1226,54 @@ class OperatorsSpec extends AnyFunSuite {
     assert(Similarity.assignNearestQ(it, none, "item_id", "qv").count() == 0)
     assert(Similarity.assignNearestQ(it, Similarity.seedCentroids(items, 1), "item_id", "qv")
       .collect().map(_.getLong(1)).toSeq == Seq(0L, 0L, 0L))
+  }
+
+  // the IVF/PQ family's degenerate-input contracts, on 4-dim milliunit
+  // vectors; each call reads the index's small side when it is made
+  private val ivfFixture: Seq[(Long, Option[Seq[Float]])] = Seq(
+    0L -> Seq(1f, 0f, 0f, 0f), 1L -> Seq(0f, 0f, 0f, 1f), 2L -> Seq(1f, 1f, 0f, 0f),
+    3L -> Seq(0f, 0f, 1f, 1f), 4L -> Seq(1f, 0f, 1f, 0f), 5L -> Seq(0f, 1f, 0f, 1f),
+    6L -> Seq(1f, 1f, 1f, 0f)).map { case (id, v) => id -> Some(v) }
+  private def ivfFamily(q: DataFrame, it: DataFrame,
+      numCentroids: Int = 2): Seq[(String, () => DataFrame)] = Seq(
+    "ivfTopK" -> (() => Similarity.ivfTopK(q, it, 3, numCentroids, 1)),
+    "ivfTopKKmeans" -> (() => Similarity.ivfTopKKmeans(q, it, 3, numCentroids, 1, 2)),
+    "ivfPqTopK" -> (() => Similarity.ivfPqTopK(q, it, 3, numCentroids, 1, 2, 3)),
+    "ivfPqTopKKmeans" -> (() => Similarity.ivfPqTopKKmeans(q, it, 3, numCentroids, 1, 2, 3, 2)),
+    "ivfPqTopKRerank" -> (() => Similarity.ivfPqTopKRerank(q, it, 3, 5, numCentroids, 1, 2, 3)))
+
+  test("IVF/PQ family: an empty query set yields no rows") {
+    val it = ivfFixture.toDF("vec_id", "embedding")
+    for ((name, df) <- ivfFamily(it.where("false"), it)) assert(df().count() == 0, name)
+  }
+
+  test("IVF/PQ family: an empty centroid table assigns no item — no rows, no error") {
+    val it = ivfFixture.toDF("vec_id", "embedding")
+    for ((name, df) <- ivfFamily(it.where("vec_id < 2"), it, numCentroids = 0))
+      assert(df().count() == 0, name)
+  }
+
+  test("IVF/PQ family: a row with a null embedding is as if it were absent") {
+    // id 1 is a centroid and a codeword seed, id 7 a plain item; 1 and
+    // 7 are queries too
+    val kept = ivfFixture.filterNot(_._1 == 1L)
+    val it = (kept ++ Seq(1L -> None, 7L -> None)).toDF("vec_id", "embedding")
+    val without = kept.toDF("vec_id", "embedding")
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    for (((name, got), (_, want)) <- ivfFamily(it.where("vec_id in (0, 1, 3, 7)"), it)
+        .zip(ivfFamily(without.where("vec_id in (0, 3)"), without)))
+      assert(rows(got()) == rows(want()), name)
+  }
+
+  test("PQ: a vector width not divisible by numSub fails loudly, naming the width") {
+    val it = ivfFixture.map { case (id, v) => id -> v.map(_ :+ 0f) } // 5 dims, numSub 2
+      .toDF("vec_id", "embedding")
+    for ((name, df) <- ivfFamily(it.where("vec_id < 2"), it).filter(_._1.contains("Pq"))) {
+      val e = intercept[Exception](df().collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+      assert(msgs.exists(m => m != null && m.contains("numSub=2") && m.contains("got 5")),
+        s"$name: ${e.getMessage}")
+    }
   }
 
   test("pageRankAdaptive: an empty graph (no edges, or only null endpoints) has no ranks and stops after one round") {

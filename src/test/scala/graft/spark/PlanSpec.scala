@@ -256,62 +256,44 @@ class PlanSpec extends AnyFunSuite {
       s"bottom-k sketch lost its partial aggregation:\n${plan.take(4000)}")
   }
 
-  test("IVF: item→centroid assignment is a pure map-side argmin expression — no per-item aggregation exchange, no n×C window sort") {
-    val plan = physical(Queries.simTopkIvf(spark, sf))
-    // round 9: assignment is array_min over the folded broadcast
-    // centroid table — the previous min_by aggregation still shuffled
-    // one row per item to finalize; now assignment stays in the
-    // scan's partitions
-    assert(plan.contains("array_min"),
-      s"assignment lost its map-side argmin expression:\n${plan.take(4000)}")
-    assert(!plan.contains("min_by"),
-      s"assignment regressed to a per-item aggregation:\n${plan.take(4000)}")
+  /** The IVF scoring shape: the index's small side is folded on the
+    * driver, so the plan is the item scan, ONE map-side `ivf_scan`
+    * generator (list assignment, PQ encoding and scoring per item) and
+    * the per-query top-k window — the only exchange before the caller's
+    * order. No join of any kind (no n×C or n×K fan-out, no broadcast
+    * lookup), no aggregation keyed on an item. */
+  private def assertItemPassShape(plan: String): Unit = {
+    assert(plan.contains("ivf_scan"), s"scoring lost its one map-side item pass:\n${plan.take(4000)}")
+    assert(!plan.contains("Join") && !plan.contains("CartesianProduct"),
+      s"a join (fan-out or lookup) is back in the scoring plan:\n${plan.take(4000)}")
+    assert(!plan.contains("Aggregate") && !plan.contains("min_by"),
+      s"scoring regressed to a per-item aggregation:\n${plan.take(4000)}")
+    val windows = "Window\\b".r.findAllIn(plan).size
+    assert(windows == 1, s"expected the one query-side top-k window, got $windows:\n${plan.take(4000)}")
+    val shuffles = "Exchange hashpartitioning".r.findAllIn(plan).size
+    assert(shuffles == 1, s"expected one exchange (the top-k window's), got $shuffles:\n${plan.take(4000)}")
   }
 
-  test("IVF-PQ: encoding and ADC scoring are hash aggregations with broadcast lookups — windows only on the tiny query side") {
+  test("IVF: lists and scores come from one map-side item pass over the driver-folded index — one query-side window, no join, no per-item aggregation") {
+    assertItemPassShape(physical(Queries.simTopkIvf(spark, sf)))
+  }
+
+  test("IVF-PQ: encoding and ADC scoring ride the same item pass — the lookup table is in the fold, not a broadcast hash relation") {
     val plan = physical(Queries.simTopkPq(spark, sf))
-    // item→code assignment must be the map-side argmin expression
-    // (round 9) — neither a window over (item, sub) serializing the
-    // n×K candidate rows nor a per-(item, sub) aggregation exchange
-    assert(plan.contains("array_min"),
-      s"PQ encoding lost its map-side argmin expression:\n${plan.take(4000)}")
-    assert(!plan.contains("min_by"),
-      s"PQ encoding regressed to a per-item aggregation:\n${plan.take(4000)}")
-    // ADC sum per (query, item) rides a partial-aggregated hash agg
-    assert(plan.contains("partial_sum"),
-      s"ADC scoring lost its map-side partial sum:\n${plan.take(4000)}")
-    // the codebook and LUT reach the item stream as broadcasts, never
-    // a shuffled join of the corpus against them
-    assert(plan.contains("BroadcastHashJoin"),
-      s"PQ lookups are not broadcast joins:\n${plan.take(4000)}")
-    // exactly two windows: the nProbe probe ranking and the final
-    // top-k — both over the query side (small by contract); one more
-    // means the encoding regressed to a window
-    val windows = "Window\\b".r.findAllIn(plan).size
-    assert(windows == 2, s"expected 2 query-side windows, got $windows:\n${plan.take(4000)}")
+    assertItemPassShape(plan)
+    assert(!plan.contains("BroadcastExchange"),
+      s"a broadcast relation is back in the PQ scoring plan:\n${plan.take(4000)}")
+    // the subspace split happens inside the pass, never as row fan-out
+    assert(!plan.contains("posexplode"), s"subspace rows in the scoring plan:\n${plan.take(4000)}")
   }
 
-  test("IVF-PQ kmeans: trained codebook is a materialized leaf — Lloyd lineage absent from the scoring plan") {
+  test("IVF-PQ kmeans: the trained codebook is read once on the driver — Lloyd lineage absent from the scoring plan") {
     val plan = physical(Queries.simTopkPqKmeans(spark, sf))
-    // same scoring shape as the seeded PQ...
-    assert(plan.contains("array_min") && plan.contains("partial_sum") &&
-      plan.contains("BroadcastHashJoin"),
-      s"PQ-kmeans scoring shape regressed:\n${plan.take(4000)}")
-    val windows = "Window\\b".r.findAllIn(plan).size
-    assert(windows == 2, s"expected 2 query-side windows, got $windows:\n${plan.take(4000)}")
-    // ...and the trained codebook feeds encoder + LUT from ONE
-    // materialized table: the Lloyd iterations' mean-recompute
-    // aggregation (the element-wise array_long_sum_agg since round 9)
-    // must NOT re-instantiate inside the scoring plan — the only
-    // codebook aggregates allowed here are the tiny per-subspace/
-    // centroid ARRAY FOLDS over the materialized leaf — and only the
-    // encoder's + LUT's two subspace splitters remain
-    assert(!plan.contains("array_long_sum_agg"),
+    assertItemPassShape(plan)
+    // the Lloyd rounds' mean recompute (array_long_sum_agg) and their
+    // subspace split must not re-instantiate inside the scoring plan
+    assert(!plan.contains("array_long_sum_agg") && !plan.contains("posexplode"),
       s"Lloyd training lineage leaked into the scoring plan:\n${plan.take(4000)}")
-    assert(plan.contains("ExistingRDD"),
-      s"trained codebook is not a materialized leaf:\n${plan.take(4000)}")
-    val gens = "posexplode".r.findAllIn(plan).size
-    assert(gens == 2, s"expected the 2 scoring-side subspace splits, got $gens")
   }
 
   test("funnel window: the conversion-window variant keeps the agg+join shape — still no event-stream window") {
