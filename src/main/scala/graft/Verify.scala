@@ -20,8 +20,8 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      // snappy pinned: the driver's DuckDB compare cannot read Spark's
-      // Hadoop-framed LZ4 (the engine's performance codec elsewhere)
+      // snappy pinned: the oracle's reference bytes stay the same
+      // whatever performance codec the engine's sessions use
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .option("compression", "snappy")
         .parquet(s"$outDir/$name")

@@ -10,8 +10,10 @@ import org.apache.spark.sql.types._
   * bound — at most `limit` elements are ever held per group, in any
   * partial buffer, across merges, and in the result.
   *
-  * This is the memory-safety primitive of the df-capped Jaccard
-  * operator ([[graft.operators.Dedup.ngramJaccardPairs]]): the
+  * The memory-safety primitive of a df-capped member list (the SQL
+  * function `bounded_collect_longs`; the df-capped Jaccard operator,
+  * [[graft.operators.Dedup.ngramJaccardPairs]], bounds its own
+  * map-side combine the same way): the
   * built-in `collect_list` materializes a hot shingle's ENTIRE member
   * list in one aggregation row before a df filter can drop it — an
   * unbounded single-row buffer (a shingle shared by 10^9 documents is

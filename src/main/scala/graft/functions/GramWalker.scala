@@ -141,7 +141,7 @@ object GramWalker {
     }
   }
 
-  private def longAt(b: Array[Byte], at: Int): Long = {
+  private[graft] def longAt(b: Array[Byte], at: Int): Long = {
     var v = 0L
     var i = at
     while (i < at + 8) { v = (v << 8) | (b(i) & 0xffL); i += 1 }

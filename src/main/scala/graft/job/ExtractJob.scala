@@ -11,7 +11,7 @@ import graft.io.TableIO
   * (queue → worker pool → engines → JSON sink → Redis tracker,
   * SURVEY.md §3.1) as ONE Spark query per chunk:
   *
-  *   read input → resume anti-join(lineage) → [salted repartition]
+  *   read input → pending-bucket filter(lineage) → [salted repartition]
   *     → Generate(ExtractRows) → append output parquet
   *     → commit lineage manifest
   *
@@ -159,12 +159,6 @@ object ExtractJob {
       .withColumn("bucket", pmod(xxhash64($"doc_id"), lit(cfg.numBuckets)).cast("int"))
       .withColumn("salt", pmod(xxhash64($"doc_id", lit(7)), lit(cfg.saltsPerBucket)).cast("int"))
 
-    // resume anti-join against committed lineage — the only join in the
-    // job (SURVEY.md §2 P6); the committed side is metadata-small, so
-    // it is broadcast (never a shuffle of the corpus side)
-    val committedDf = committed.toSeq.toDF("bucket")
-    val pending = withKeys.join(broadcast(committedDf), Seq("bucket"), "left_anti")
-
     val chunkSize = if (cfg.chunkBuckets <= 0) pendingBuckets.size else cfg.chunkBuckets
     val chunks = pendingBuckets.grouped(chunkSize).toVector.take(cfg.maxChunks)
 
@@ -175,7 +169,9 @@ object ExtractJob {
       val acc = new BucketStatsAcc
       spark.sparkContext.register(acc, s"${cfg.jobId}-stats-$chunkIdx")
 
-      val subAll = pending.filter($"bucket".isin(chunk.map(Integer.valueOf): _*))
+      // resume (SURVEY.md §2 P6): chunks are drawn from the pending
+      // buckets only, so this filter already drops every committed row
+      val subAll = withKeys.filter($"bucket".isin(chunk.map(Integer.valueOf): _*))
 
       // giant-doc fan-out eligibility (default options only — a page
       // range of a partial doc composes only with start=1, count=all)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, ByteType, IntegerType, LongType, ShortType}
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
 
 /** Deduplication operators for web-scale training corpora, over a
@@ -22,7 +23,8 @@ import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
   *    on (band, signature) and only same-bucket candidates pair up —
   *    the standard way all-pairs similarity survives 10^12 rows;
   *  - n-gram Jaccard/containment key shingles by their 16-byte md5
-  *    digests, aggregate member lists per shingle, then count each
+  *    digests, build member lists per shingle with a map-side combine
+  *    and one sorted merge ([[ShingleMembers]]), then count each
   *    document's partners in one sorted pass grouped by document — no
   *    (a, b) pair row is shuffled or hashed, the pass yields |A| itself
   *    and only |B| rides a join onto the per-document sizes; a hot
@@ -169,8 +171,10 @@ object Dedup {
     * 1000·I ≥ m·U and U ≥ |A|, so I ≥ ceil(m·|A|/1000) is necessary
     * and the pre-filter drops no passing pair.
     *
-    * Degenerate ids (see [[shingleRows]]): rows with a null doc_id are
-    * dropped before shingling; a doc_id repeated in rows that SHARE a
+    * Degenerate ids (see [[ShingleMembers]]): rows with a null doc_id
+    * are dropped before df is counted (a null id belongs to no pair,
+    * and counted into df it could push a shingle over the cap that the
+    * non-null members share); a doc_id repeated in rows that SHARE a
     * shingle fails the query with an IllegalArgumentException naming
     * the id (its pairs would be self-pairs and permilles above 1000);
     * a doc_id repeated in rows that share no shingle is one document
@@ -184,28 +188,13 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, shingleN: Int = 3,
       minPermille: Int = 200, maxDf: Int = Int.MaxValue,
       maxDfObs: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
-    // ONE hash aggregation per shingle carries both the document
-    // frequency AND the sorted member list: map-side partial counts
-    // collapse a hot shingle's rows BEFORE the shuffle, the df cap is
-    // applied to the one-row-per-shingle agg result so capped-out hot
-    // shingles vanish entirely, and downstream sizes/intersections both
-    // read this aggregate — the scan+explode+partial-agg subtree runs
-    // once (ReuseExchange unifies the exchange under both consumers).
-    // History: (a) count().over(Window.partitionBy(sh)) forced ALL rows
-    // of a hot shingle into one unsplittable task before the cap could
-    // drop it — the 10^12-doc scale-killer; (b) groupBy(sh).count
-    // joined back onto the exploded rows fixed the skew but paid the
-    // shingle explode once per consumer (4 evaluations, measured ~4x
-    // wall).
-    // Member-list memory: the CAPPED variant collects through the
-    // buffer-bounded native aggregate — a capped-out hot shingle holds
-    // at most maxDf elements in ANY buffer before its row is dropped
-    // (a kept row's df ≤ maxDf means its bounded list is complete, so
-    // output is unchanged). The UNCAPPED variant must collect the full
-    // list by contract (exact all-pairs output) — one row per shingle,
-    // linear in df vs the d²/2 join rows the self-join form emits —
-    // and surfaces its exposure through the max_df observation.
-    val kept = shingleMemberBuckets(shingleRows(docs, shingleN), maxDf, maxDfObs)
+    // Member-list memory: the CAPPED variant's lists stop at maxDf ids
+    // in every partial row, so a capped-out hot shingle costs O(maxDf)
+    // anywhere before it is dropped. The UNCAPPED variant must build the
+    // full list by contract (exact all-pairs output) — one row per
+    // shingle, linear in df vs the d²/2 join rows the self-join form
+    // emits — and surfaces its exposure through the max_df observation.
+    val kept = shingleMemberBuckets(docs, shingleN, maxDf, maxDfObs)
     val (inter, sizes) = pairIntersections(kept, minPermille)
     val pairs = inter
       .join(sizes.withColumnRenamed("doc_id", "b_id").withColumnRenamed("n", "nb"), "b_id")
@@ -221,8 +210,8 @@ object Dedup {
     * misses (a short document quoted wholesale inside a long one
     * scores 1000 permille here but a low Jaccard, because the union is
     * dominated by the long side). One output row per ordered pair
-    * (src contained in dst) at ≥ `minPermille`; same single
-    * shingle-aggregation plan and df-cap semantics as
+    * (src contained in dst) at ≥ `minPermille`; same shingle member
+    * lists and df-cap semantics as
     * [[ngramJaccardPairs]] (the cap drops a shingle from BOTH sides,
     * so containment stays exact over the surviving shingle sets) and
     * the same degenerate-id contract. The pair stage keeps every pair
@@ -232,7 +221,7 @@ object Dedup {
     * per-document sizes, by b). */
   def ngramContainmentPairs(docs: DataFrame, shingleN: Int = 3,
       minPermille: Int = 800, maxDf: Int = Int.MaxValue): DataFrame = {
-    val kept = shingleMemberBuckets(shingleRows(docs, shingleN), maxDf, None)
+    val kept = shingleMemberBuckets(docs, shingleN, maxDf, None)
     val (inter, sizes) = pairIntersections(kept, 0)
     // each unordered intersection row unfolds into its two ordered
     // containment directions (normalized by the SOURCE size)
@@ -258,15 +247,6 @@ object Dedup {
     * exchange is the cheapest place to cut the stage. */
   private def settled(pairs: DataFrame, key: String): DataFrame = pairs.repartition(col(key))
 
-  /** (doc_id, sh) rows of the Jaccard/containment family: each doc's
-    * distinct `shingleN`-gram hashes. Rows with a null doc_id are
-    * dropped here, before df is counted: a null id belongs to no pair,
-    * and counted into df it could push a shingle over the cap that the
-    * non-null members share. The dropped rows are not yet counted. */
-  private def shingleRows(docs: DataFrame, shingleN: Int): DataFrame =
-    docs.where(col("doc_id").isNotNull)
-      .select(col("doc_id"), explode(distinctShingles(col("text"), shingleN)).as("sh"))
-
   /** Each document's distinct `n`-gram md5 digests as `binary(16)` — the
     * distinct elements of [[TF.shingles]], deduplicated by the
     * expression's own hash set (`array_distinct` compares binary
@@ -276,16 +256,25 @@ object Dedup {
     toColumn(graft.functions.ShingleKeys(toExpression(text), n, distinct = true))
   }
 
-  /** ONE hash aggregation per shingle carrying df + (bounded) member
-    * list — the shared subtree of the Jaccard/containment family; see
-    * [[ngramJaccardPairs]] for the plan rationale and history. */
-  private def shingleMemberBuckets(sh: DataFrame, maxDf: Int,
+  /** The shared subtree of the Jaccard/containment family: one row
+    * `(sh, df, ms)` per shingle of `docs(doc_id, text)` with df ≤
+    * `maxDf`, ms its sorted members in the doc_id type; see
+    * [[ShingleMembers]] for the combine, exchange and merge. The
+    * exchange by `sh` is the one shuffle of the corpus side, and
+    * ReuseExchange serves it to both consumers in [[pairIntersections]].
+    * History: (a) count().over(Window.partitionBy(sh)) forced ALL rows
+    * of a hot shingle into one unsplittable task before the cap could
+    * drop it — the 10^12-doc scale-killer; (b) groupBy(sh).count joined
+    * back onto the exploded rows paid the shingle explode once per
+    * consumer; (c) groupBy(sh) with collect_list planned an
+    * ObjectHashAggregate that fell back to sort past 128 keys a task. */
+  private def shingleMemberBuckets(docs: DataFrame, shingleN: Int, maxDf: Int,
       maxDfObs: Option[org.apache.spark.sql.Observation]): DataFrame = {
-    val collected =
-      if (maxDf == Int.MaxValue) collect_list(col("doc_id"))
-      else TF.boundedCollectLongs(col("doc_id"), maxDf)
-    val buckets0 = sh.groupBy("sh").agg(
-      count(lit(1)).as("df"), sort_array(collected).as("ms"))
+    val idType = docs.schema("doc_id").dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"doc_id must be an integral column, got ${idType.catalogString}")
+    val buckets0 = ShingleMembers(docs, shingleN, maxDf)
+      .select(col("sh"), col("df"), col("ms").cast(ArrayType(idType, containsNull = false)).as("ms"))
     // max-only metric: the buckets subtree has TWO consumers (sizes +
     // intersections), so if the physical plan executes it twice a sum/
     // count-style metric would double-count — max is re-execution-
@@ -298,7 +287,7 @@ object Dedup {
   }
 
   /** Pairwise shingle-intersection counts + per-doc surviving set
-    * sizes from the bucket aggregate.
+    * sizes from the shingle member lists.
     *
     * Intersections are counted PER DOCUMENT, never per pair: every
     * (shingle, member a) emits one row (a, t), t = the members after a
@@ -330,17 +319,13 @@ object Dedup {
     * partitions and the sort spills; one document's partner buffer
     * holds the sum of its shingles' tails. The df cap bounds D.
     *
-    * Both consumers reference df through the `df >= 1` tautology (df =
-    * count(1) of a non-empty group): column pruning then keeps
-    * [partial_count, partial_collect_list] on both sides, the exchange
-    * subtrees stay byte-identical, and ReuseExchange serves BOTH from
-    * ONE shingle scan+explode+hash+partial-agg subtree. Without it the
-    * dominant scan+md5-shingle pass executes twice (measured: ~19 s →
-    * ~10 s executor CPU on the sf0.1 jaccard/containment pair). */
-  private def pairIntersections(kept: DataFrame,
+    * Both consumers read the same shingle exchange, so ReuseExchange
+    * serves BOTH from ONE scan+shingle+combine subtree; a second copy of
+    * the dominant scan+md5-shingle pass cost ~19 s → ~10 s executor CPU
+    * on the sf0.1 jaccard/containment pair when it last ran twice. */
+  private def pairIntersections(members: DataFrame,
       minPermille: Int): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.GraftColumnBridge.noBroadcast
-    val members = kept.where(col("df") >= 1)
     val sizes = members
       .select(explode(col("ms")).as("doc_id"))
       .groupBy("doc_id").agg(count(lit(1)).as("n"))
@@ -920,7 +905,7 @@ object Dedup {
     * `maxDf` (opt-in) bounds the per-gram occurrence buffer: a hot
     * boilerplate gram (a 15-token license header across millions of
     * docs) concentrates O(df) structs in ONE aggregation-buffer key —
-    * the OOM class BoundedCollectLongs fixed for jaccard; the hash
+    * the OOM class the df cap bounds for jaccard; the hash
     * aggregate's sort-based fallback spills BETWEEN keys, not within
     * one. With `maxDf` set, a cheap count-only pre-aggregation finds
     * grams with 2 ≤ df ≤ maxDf and the positional aggregation runs

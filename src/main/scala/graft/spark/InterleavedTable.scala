@@ -47,9 +47,8 @@ object InterleavedTable {
         .coalesce(1)
         .sortWithinPartitions("doc_id")
         .write.mode("overwrite")
-        // DuckDB (the driver's oracle) cannot read Spark's
-        // Hadoop-framed LZ4 parquet — pin a codec both engines read,
-        // regardless of the session's performance codec
+        // the DuckDB oracle reads these bytes: pin a codec both
+        // engines read, regardless of the session's performance codec
         .option("compression", "snappy")
         .parquet(VerifyPath)
       written = true
@@ -70,7 +69,7 @@ object InterleavedTable {
         .coalesce(1)
         .sortWithinPartitions("doc_id")
         .write.mode("overwrite")
-        .option("compression", "snappy") // DuckDB cannot read Spark's LZ4
+        .option("compression", "snappy") // read by the DuckDB oracle, as above
         .parquet(GoldenPath)
       goldenWritten = true
     }

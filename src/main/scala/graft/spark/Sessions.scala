@@ -38,9 +38,15 @@ object Sessions {
       // uses the columnar nested reader, not parquet-mr row assembly
       .config("spark.sql.parquet.enableNestedColumnVectorizedReader", "true")
       // cheaper write path for the CPU-bound extraction sink: LZ4
-      // compresses ~3× faster than the snappy default at similar ratio
-      // (writes the DuckDB oracle reads pin snappy per-write)
-      .config("spark.sql.parquet.compression.codec", "lz4")
+      // compresses ~3× faster than the snappy default at similar ratio.
+      // lz4_raw is Parquet's own LZ4 framing: the Hadoop-framed "lz4"
+      // codec allocates a 256 KB stream buffer for every page it reads
+      // or writes (writes the DuckDB oracle reads pin snappy per-write)
+      .config("spark.sql.parquet.compression.codec", "lz4_raw")
+      // every broadcast, each stage's task binary included, allocates
+      // at least one block of this size; the 4m default is far larger
+      // than a task binary
+      .config("spark.broadcast.blockSize", "1m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost")

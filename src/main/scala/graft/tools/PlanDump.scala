@@ -1,44 +1,65 @@
 package graft.tools
 
-import org.apache.spark.sql.functions._
-import graft.core.model._
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.spark.{InterleavedTable, Queries, Sessions}
 
 /** Dump `explain(formatted)` for the plans whose shape carries the
   * 100 TB design (used to produce PLANS.md; properties are pinned as
   * tests in graft.spark.PlanSpec). */
 object PlanDump {
+  /** The parquet write plans of [[graft.job.ExtractJob.run]] in scan
+    * mode, resuming a 50-document, 16-bucket table after one committed
+    * chunk of 4 buckets: one plan per remaining chunk, in run order. */
+  def resumedJobPlans(spark: SparkSession): Seq[QueryExecution] = {
+    val input = InterleavedTable.generate(spark, 50).toDF()
+    val table = java.nio.file.Files.createTempDirectory("graft-plan-resume").toString
+    val cfg = graft.job.ExtractJob.Config(jobId = "plan", numBuckets = 16, chunkBuckets = 4)
+    graft.job.ExtractJob.run(spark, input, table, cfg.copy(maxChunks = 1))
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.executedPlan.toString.contains("Generate")) writes.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      graft.job.ExtractJob.run(spark, input, table, cfg.copy(attempt = 2))
+      org.apache.spark.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    writes.asScala.toSeq
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = Sessions.local(4, "graft-plandump")
-    import spark.implicits._
     val sf = "/root/testdata/sf0.001"
 
+    def show(title: String, qe: QueryExecution): Unit = {
+      println(s"\n## $title\n")
+      println("```")
+      println(qe.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted")).trim)
+      println("```")
+    }
     def dump(title: String, df: org.apache.spark.sql.DataFrame): Unit = {
       // execute first (round 9): with AQE, exchange/stage REUSE and the
       // runtime-chosen join strategies only appear in the FINAL adaptive
       // plan — an un-executed dump shows duplicate exchanges that never
       // actually run twice
       df.queryExecution.executedPlan.execute().count()
-      println(s"\n## $title\n")
-      println("```")
-      println(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")).trim)
-      println("```")
+      show(title, df.queryExecution)
     }
 
     println("# PLANS -- physical-plan evidence for the scale design")
     println("\nGenerated by `graft.tools.PlanDump` (sf0.001 inputs; plan SHAPE")
     println("is scale-invariant). Pinned as assertions in `PlanSpec`.")
 
-    // 1. map-only extraction (scan mode) — the job's plan: resume
-    // anti-join + the ExtractRows generator, no Exchange
-    val input = InterleavedTable.generate(spark, 50).toDF()
-      .withColumn("bucket", pmod(xxhash64(col("doc_id")), lit(64)).cast("int"))
-    val committed = broadcast((0 to 5).toDF("bucket"))
-    val pending = input.join(committed, Seq("bucket"), "left_anti")
-    dump("Extraction, scan mode: resume anti-join (broadcast) + map-only Generate(ExtractRows) -- NO Exchange",
-      pending.select(graft.job.ExtractRows.of(pending, ExtractOptions(), col("bucket"), None),
-        col("bucket")))
+    // 1. map-only extraction (scan mode) — the job's own write plan on
+    // a resumed run
+    resumedJobPlans(spark).headOption.foreach(show("Extraction, scan mode, resumed: each chunk " +
+      "filters the scan to its pending buckets + map-only Generate(ExtractRows) -- " +
+      "NO join, NO Exchange", _))
 
     dump("q3 (dim-filter -> broadcast join -> agg -> top-k): fact side never broadcast-shuffled",
       Queries.q3TopOrders(spark, sf))
@@ -52,14 +73,15 @@ object PlanDump {
     dump("MinHash LSH dedup: one shuffle on (band, sig) -- no all-pairs",
       Queries.dedupMinhashLsh(spark, sf))
 
-    dump("DF-capped Jaccard: ONE shingle hash aggregation over binary(16) md5 keys " +
-      "(map-side partial_count) carries df + sorted member list, and ReusedExchange " +
-      "serves BOTH the size and intersection consumers from that single subtree; each " +
-      "member's tail of later members is exchanged by member and counted in ONE sorted " +
-      "MapPartitions pass that also yields |A|, so only |B| joins (the pair rows are " +
-      "never a broadcast build side), and the filtered pairs are exchanged once so the " +
-      "final sort samples them, not the pass -- NO window over sh, no self-join, no " +
-      "aggregate or exchange keyed on a pair",
+    dump("DF-capped Jaccard: shingle member lists over binary(16) md5 keys come from a " +
+      "map-side shingle_combine (an open-addressing table per task, flushed as partial " +
+      "rows), ONE exchange by sh and a sorted shingle_merge pass that sums df and sorts " +
+      "the members, and ReusedExchange serves BOTH the size and intersection consumers " +
+      "from that single subtree; each member's tail of later members is exchanged by " +
+      "member and counted in ONE sorted MapPartitions pass that also yields |A|, so only " +
+      "|B| joins (the pair rows are never a broadcast build side), and the filtered pairs " +
+      "are exchanged once so the final sort samples them, not the pass -- NO window or " +
+      "object aggregate over sh, no self-join, no aggregate or exchange keyed on a pair",
       Queries.dedupJaccardCapped(spark, sf))
 
     dump("IVF top-k (one item pass): centroids and queries are folded on the driver, " +
@@ -74,7 +96,7 @@ object PlanDump {
       "scan run once per corpus instead of once per side",
       Queries.dedupMinhashStar(spark, sf))
 
-    dump("Containment pairs: same shingle-aggregation subtree and ONE partner pass as " +
+    dump("Containment pairs: same shingle combine/merge subtree and ONE partner pass as " +
       "Jaccard; |A| comes from the pass, so only the b->a direction's |B| rides a join, " +
       "and both ordered directions unfold from each intersection row",
       Queries.dedupContainment(spark, sf))

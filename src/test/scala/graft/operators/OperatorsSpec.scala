@@ -296,6 +296,49 @@ class OperatorsSpec extends AnyFunSuite {
     }
   }
 
+  test("jaccard/containment: one shingle's members over 8 partitions give the single-partition answer, capped and uncapped") {
+    // doc i = "a b c p_k q_k r_k s_i", k = i % 3: "a b c" has df 24, each
+    // class shingle df 8. Over 8 partitions every partition holds 3 of
+    // "a b c"'s members, so a cap of 20 drops it only when the cap is
+    // applied to the merged df
+    val rows = (1L to 24L).map(i => (i, s"a b c p${i % 3} q${i % 3} r${i % 3} s$i"))
+    def input(parts: Int) = spark.sparkContext.parallelize(rows, parts).toDF("doc_id", "text")
+    def answer(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    def jaccard(parts: Int, cap: Int) =
+      answer(Dedup.ngramJaccardPairs(input(parts), 3, minPermille = 0, maxDf = cap))
+    def containment(parts: Int, cap: Int) =
+      answer(Dedup.ngramContainmentPairs(input(parts), 3, minPermille = 0, maxDf = cap))
+    Seq(Int.MaxValue, 30, 20, 5).foreach { cap =>
+      assert(jaccard(8, cap) == jaccard(1, cap), s"jaccard, maxDf $cap")
+      assert(containment(8, cap) == containment(1, cap), s"containment, maxDf $cap")
+    }
+    // same class: 4 of 6 shingles shared, or 3 of 5 once "a b c" is capped out
+    assert(jaccard(8, 30).contains((1L, 4L, 666L)) && jaccard(8, 30).contains((1L, 2L, 111L)))
+    assert(jaccard(8, 20) == jaccard(8, 30).collect { case (a, b, _) if a % 3 == b % 3 => (a, b, 600L) })
+    assert(containment(8, 20).contains((1L, 4L, 750L)))
+    assert(jaccard(8, 5).isEmpty && containment(8, 5).isEmpty)
+  }
+
+  test("shingle member lists: flushing the combine at a small limit gives the unflushed lists") {
+    val rows = (1L to 40L).map(i => (i, s"a b c p${i % 5} q${i % 5} r${i % 7} s$i t"))
+    val d = spark.sparkContext.parallelize(rows, 2).toDF("doc_id", "text")
+    def lists(partials: DataFrame, cap: Int) = ShingleMembers.merged(partials, cap).collect()
+      .map(r => (r.getAs[Array[Byte]]("sh").toSeq, r.getLong(1), r.getSeq[Long](2))).toSet
+    Seq(Int.MaxValue, 6).foreach { cap =>
+      val flushed = ShingleMembers.combined(d, 3, cap, flushIds = 4)
+      val whole = ShingleMembers.combined(d, 3, cap, flushIds = Int.MaxValue)
+      assert(flushed.count() > whole.count(), s"maxDf $cap: the small limit never flushed")
+      assert(lists(flushed, cap) == lists(whole, cap), s"maxDf $cap")
+    }
+  }
+
+  test("shingle member lists: empty input yields no rows") {
+    val empty = docs()
+    assert(ShingleMembers(empty, 3, Int.MaxValue).count() == 0)
+    assert(ShingleMembers(empty, 3, 10).count() == 0)
+    assert(Dedup.ngramJaccardPairs(empty, 3, minPermille = 0).count() == 0)
+  }
+
   test("jaccard/containment: the partner pass runs once per query") {
     // a partner pass is a stage holding the MapPartitions node; it ran
     // twice when the pair rows were a broadcast build side AQE re-planned,

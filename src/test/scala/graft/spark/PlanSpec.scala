@@ -14,7 +14,7 @@ import graft.job.ExtractJob
   *  - dimension joins broadcast (no shuffled fact side);
   *  - filters and projections reach the parquet scan (PushedFilters /
   *    pruned ReadSchema);
-  *  - the resume anti-join broadcasts the committed (metadata) side.
+  *  - a resumed extraction job reads its pending buckets with no join.
   */
 class PlanSpec extends AnyFunSuite {
 
@@ -62,15 +62,17 @@ class PlanSpec extends AnyFunSuite {
     assert(broadcasts >= 3, s"expected >=3 broadcast dim joins, got $broadcasts:\n$plan")
   }
 
-  test("resume anti-join broadcasts the committed side") {
-    import spark.implicits._
-    val input = InterleavedTable.generate(spark, 50).toDF()
-      .withColumn("bucket", pmod(xxhash64(col("doc_id")), lit(64)).cast("int"))
-    val committed = broadcast((0 to 5).toDF("bucket"))
-    val pending = input.join(committed, Seq("bucket"), "left_anti")
-    val plan = physical(pending)
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
-      s"expected broadcast left-anti:\n$plan")
+  test("resumed extraction job: each chunk reads its pending buckets with no join and no Exchange") {
+    // the job's own write plans: a chunk is a filter on its pending
+    // buckets, which drops every committed row, so no anti-join against
+    // the lineage (and no broadcast of it) runs
+    val plans = graft.tools.PlanDump.resumedJobPlans(spark).map(_.executedPlan.toString)
+    assert(plans.size == 3, s"expected one write per remaining chunk, got ${plans.size}")
+    plans.foreach { plan =>
+      assert(!plan.contains("Join") && !plan.contains("Exchange"),
+        s"join or exchange in the resumed job's plan:\n$plan")
+      assert(plan.contains(" IN ("), s"pending-bucket filter missing:\n$plan")
+    }
   }
 
   test("filter + projection are pushed into the parquet scan") {
@@ -144,22 +146,28 @@ class PlanSpec extends AnyFunSuite {
       s"argmax lost its map-side partial max:\n${plan.take(4000)}")
   }
 
-  test("jaccard: shingle df is a hash aggregation (map-side partials), NOT a window over sh") {
-    val plan = physical(Queries.dedupJaccardCapped(spark, sf))
+  test("jaccard: shingle member lists come from a map-side combine below the one shingle exchange, NOT a window or an object aggregate over sh") {
     // a window over partitionBy(sh) forces ALL rows of a hot shingle
     // into one unsplittable task before the df cap can drop it — the
-    // 10^12-doc scale-killer; the agg+join form collapses hot keys
-    // map-side and leaves skew to AQE's splittable join handling
-    assert(!plan.contains("Window"), s"window-df scale-killer resurfaced:\n${plan.take(4000)}")
-    assert(plan.contains("partial_count"),
-      s"df subtree lost its map-side partial aggregation:\n${plan.take(4000)}")
+    // 10^12-doc scale-killer; collect_list over sh plans an
+    // ObjectHashAggregate that falls back to sort-based aggregation. The
+    // combine collapses a shingle's rows map-side, and the merge above
+    // the exchange is a sorted pass
+    assertShingleCombineShape("dedup_jaccard_capped", physical(Queries.dedupJaccardCapped(spark, sf)))
   }
 
-  test("containment: same scale shape as jaccard — hash-agg df subtree, no window") {
-    val plan = physical(Queries.dedupContainment(spark, sf))
-    assert(!plan.contains("Window"), s"window scale-killer in containment:\n${plan.take(4000)}")
-    assert(plan.contains("partial_count"),
-      s"df subtree lost its map-side partial aggregation:\n${plan.take(4000)}")
+  test("containment: same scale shape as jaccard — map-side shingle combine, no window, no object aggregate") {
+    assertShingleCombineShape("dedup_containment", physical(Queries.dedupContainment(spark, sf)))
+  }
+
+  private def assertShingleCombineShape(q: String, plan: String): Unit = {
+    assert(!plan.contains("Window"), s"$q: window-df scale-killer resurfaced:\n${plan.take(4000)}")
+    assert(!plan.contains("ObjectHashAggregate") && !plan.contains("SortAggregate"),
+      s"$q: object or sort aggregate in the plan:\n${plan.take(4000)}")
+    val combine = """Exchange hashpartitioning\(sh#\d+, \d+\)[^\n]*\n[^\n]*?\+- Generate shingle_combine""".r
+    assert(combine.findFirstIn(plan).isDefined,
+      s"$q: no map-side combine below the shingle exchange:\n${plan.take(4000)}")
+    assert(plan.contains("shingle_merge"), s"$q: shingle merge pass lost:\n${plan.take(4000)}")
   }
 
   test("jaccard/containment: intersections are counted per document — no aggregate or exchange keyed on a pair") {
