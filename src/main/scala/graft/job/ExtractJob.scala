@@ -2,6 +2,7 @@ package graft.job
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.util.AccumulatorV2
 import graft.core.model._
 import graft.engine.Extractor
@@ -156,8 +157,8 @@ object ExtractJob {
     // purely from doc_id, never from partition index)
     val withKeys = input
       .select((Seq("doc_id", "spans") ++ OptionColumns.filter(input.columns.contains)).map(col): _*)
-      .withColumn("bucket", pmod(xxhash64($"doc_id"), lit(cfg.numBuckets)).cast("int"))
-      .withColumn("salt", pmod(xxhash64($"doc_id", lit(7)), lit(cfg.saltsPerBucket)).cast("int"))
+      .withColumn("bucket", pmod(xxhash64($"doc_id"), lit(cfg.numBuckets)).cast(IntegerType))
+      .withColumn("salt", pmod(xxhash64($"doc_id", lit(7)), lit(cfg.saltsPerBucket)).cast(IntegerType))
 
     val chunkSize = if (cfg.chunkBuckets <= 0) pendingBuckets.size else cfg.chunkBuckets
     val chunks = pendingBuckets.grouped(chunkSize).toVector.take(cfg.maxChunks)
@@ -170,8 +171,11 @@ object ExtractJob {
       spark.sparkContext.register(acc, s"${cfg.jobId}-stats-$chunkIdx")
 
       // resume (SURVEY.md §2 P6): chunks are drawn from the pending
-      // buckets only, so this filter already drops every committed row
-      val subAll = withKeys.filter($"bucket".isin(chunk.map(Integer.valueOf): _*))
+      // buckets only, so this filter already drops every committed row.
+      // A chunk of all numBuckets buckets (a fresh table in one chunk)
+      // needs none: pmod puts every row's bucket in range
+      val subAll = if (chunk.size == cfg.numBuckets) withKeys
+        else withKeys.filter($"bucket".isin(chunk.map(Integer.valueOf): _*))
 
       // giant-doc fan-out eligibility (default options only — a page
       // range of a partial doc composes only with start=1, count=all)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, Generic
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.core.model._
 import graft.engine.Extractor
@@ -96,12 +96,12 @@ object ExtractRows {
     def opt(name: String, default: Any): Column =
       if (input.columns.contains(name)) coalesce(col(name), lit(default)) else lit(default)
     val cols = Seq(col("doc_id"), col("spans"),
-      opt("start_page", base.startPage).cast("int"),
-      opt("page_count", base.pageCount).cast("int"),
-      opt("engine", base.engine).cast("string"),
-      (if (input.columns.contains("model")) col("model") else lit(base.ocrModel.orNull)).cast("string"),
-      opt("password", base.password.orNull).cast("string"),
-      bucket.cast("int"))
+      opt("start_page", base.startPage).cast(IntegerType),
+      opt("page_count", base.pageCount).cast(IntegerType),
+      opt("engine", base.engine).cast(StringType),
+      (if (input.columns.contains("model")) col("model") else lit(base.ocrModel.orNull)).cast(StringType),
+      opt("password", base.password.orNull).cast(StringType),
+      bucket.cast(IntegerType))
     GraftColumnBridge.toColumn(ExtractRows(cols.map(GraftColumnBridge.toExpression), base, stats))
   }
 

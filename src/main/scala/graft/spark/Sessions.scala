@@ -5,8 +5,21 @@ import org.apache.spark.sql.SparkSession
 /** SparkSession factory with the engine's scale posture baked in:
   * AQE on (runtime coalesce + skew split), shuffle partitions matched
   * to cores (not the 200 default), UTC for oracle parity.
+  *
+  * Every session writes `file:` paths through [[graft.io.NioLocalFileSystem]]
+  * ([[LocalFs]]): checksummed like Hadoop's default local FileSystem, but
+  * without a forked `chmod` for each file and directory it creates.
+  * Hadoop caches FileSystems per JVM by scheme, so the first `file:`
+  * FileSystem a JVM creates is the one every later session gets from
+  * `FileSystem.get`: a JVM that built a session without this setting
+  * first keeps Hadoop's default.
   */
 object Sessions {
+  /** The local FileSystem setting, shared with sessions built elsewhere
+    * (`graft.Verify`). */
+  val LocalFs: Map[String, String] =
+    Map("spark.hadoop.fs.file.impl" -> classOf[graft.io.NioLocalFileSystem].getName)
+
   def local(cores: Int, appName: String = "graft"): SparkSession =
     build(cores, appName, fastCommitter = false)
 
@@ -50,6 +63,7 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost")
+      .config(LocalFs)
     val spark = (if (fastCommitter)
       builder.config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
     else builder).getOrCreate()

@@ -13,11 +13,18 @@ object PlanDump {
   /** The parquet write plans of [[graft.job.ExtractJob.run]] in scan
     * mode, resuming a 50-document, 16-bucket table after one committed
     * chunk of 4 buckets: one plan per remaining chunk, in run order. */
-  def resumedJobPlans(spark: SparkSession): Seq[QueryExecution] = {
+  def resumedJobPlans(spark: SparkSession): Seq[QueryExecution] = jobPlans(spark, resumed = true)
+
+  /** The one parquet write plan of [[graft.job.ExtractJob.run]] in scan
+    * mode on a fresh 50-document, 16-bucket table in one chunk. */
+  def freshJobPlans(spark: SparkSession): Seq[QueryExecution] = jobPlans(spark, resumed = false)
+
+  private def jobPlans(spark: SparkSession, resumed: Boolean): Seq[QueryExecution] = {
     val input = InterleavedTable.generate(spark, 50).toDF()
-    val table = java.nio.file.Files.createTempDirectory("graft-plan-resume").toString
-    val cfg = graft.job.ExtractJob.Config(jobId = "plan", numBuckets = 16, chunkBuckets = 4)
-    graft.job.ExtractJob.run(spark, input, table, cfg.copy(maxChunks = 1))
+    val table = java.nio.file.Files.createTempDirectory("graft-plan-job").toString
+    val cfg = graft.job.ExtractJob.Config(jobId = "plan", numBuckets = 16,
+      chunkBuckets = if (resumed) 4 else 0)
+    if (resumed) graft.job.ExtractJob.run(spark, input, table, cfg.copy(maxChunks = 1))
     val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
     val listener = new QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
@@ -26,7 +33,7 @@ object PlanDump {
     }
     spark.listenerManager.register(listener)
     try {
-      graft.job.ExtractJob.run(spark, input, table, cfg.copy(attempt = 2))
+      graft.job.ExtractJob.run(spark, input, table, if (resumed) cfg.copy(attempt = 2) else cfg)
       org.apache.spark.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     writes.asScala.toSeq
@@ -60,6 +67,9 @@ object PlanDump {
     resumedJobPlans(spark).headOption.foreach(show("Extraction, scan mode, resumed: each chunk " +
       "filters the scan to its pending buckets + map-only Generate(ExtractRows) -- " +
       "NO join, NO Exchange", _))
+    freshJobPlans(spark).headOption.foreach(show("Extraction, scan mode, fresh table in one " +
+      "chunk: every bucket is pending, so the scan feeds Generate(ExtractRows) with NO " +
+      "bucket filter -- NO join, NO Exchange", _))
 
     dump("q3 (dim-filter -> broadcast join -> agg -> top-k): fact side never broadcast-shuffled",
       Queries.q3TopOrders(spark, sf))

@@ -1,6 +1,11 @@
 package graft.io
 
-import java.nio.file.Files
+import java.net.URI
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.PosixFilePermissions
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumException, FileSystem, LocalFileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -16,7 +21,12 @@ import graft.job.ExtractJob
   */
 class TableIOSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = graft.spark.Sessions.local(4, "tableio-spec")
+  // getOrCreate would hand back a context an earlier suite started
+  // with other settings; the FileSystem test checks Sessions' own
+  lazy val spark: SparkSession = {
+    SparkSession.getDefaultSession.foreach(_.stop())
+    graft.spark.Sessions.local(4, "tableio-spec")
+  }
   override def afterAll(): Unit = spark.stop()
 
   private def tmpDir(prefix: String): String =
@@ -154,5 +164,59 @@ class TableIOSpec extends AnyFunSuite with BeforeAndAfterAll {
       val s = TableIO.readSnapshot(table, v)
       assert(s.version == v && s.parentVersion == v - 1)
     }
+  }
+
+  private def localFs(fs: FileSystem, umask: String): FileSystem = {
+    val conf = new Configuration()
+    conf.set("fs.permissions.umask-mode", umask)
+    fs.initialize(new URI("file:///"), conf)
+    fs
+  }
+  private def perms(p: String): String =
+    PosixFilePermissions.toString(Files.getPosixFilePermissions(Paths.get(p)))
+
+  test("NioLocalFileSystem sets the same permission bits as Hadoop's LocalFileSystem") {
+    Seq("022", "077", "002").foreach { umask =>
+      val seen = Seq(new LocalFileSystem, new NioLocalFileSystem).map { raw =>
+        val fs = localFs(raw, umask)
+        val root = tmpDir("graft-fsperm")
+        // create with a new parent, mkdirs, an explicit create mode, setPermission
+        val out = fs.create(new Path(s"$root/a/b/part-0"))
+        out.write(Array[Byte](1, 2, 3)); out.close()
+        fs.mkdirs(new Path(s"$root/c/d"))
+        fs.create(new Path(s"$root/e"), new FsPermission("640"), false, 4096,
+          1.toShort, 1L << 20, null).close()
+        fs.setPermission(new Path(s"$root/a/b/part-0"), new FsPermission("604"))
+        fs.setPermission(new Path(s"$root/c"), new FsPermission("750"))
+        fs.close()
+        Seq("a", "a/b", "a/b/part-0", "a/b/.part-0.crc", "c", "c/d", "e", ".e.crc")
+          .map(rel => rel -> perms(s"$root/$rel"))
+      }
+      assert(seen(1) == seen(0), s"umask $umask: NIO ${seen(1)} vs Hadoop ${seen(0)}")
+    }
+  }
+
+  test("NioLocalFileSystem writes .crc sidecars and a corrupted byte fails the read") {
+    val fs = localFs(new NioLocalFileSystem, "022")
+    val root = tmpDir("graft-fscrc")
+    val file = new Path(s"$root/data.bin")
+    val out = fs.create(file)
+    out.write(Array.tabulate[Byte](4096)(_.toByte)); out.close()
+    assert(Files.exists(Paths.get(s"$root/.data.bin.crc")), "checksum sidecar missing")
+    val raf = new java.io.RandomAccessFile(s"$root/data.bin", "rw")
+    try { raf.seek(100); raf.write(raf.read() ^ 0xff) } finally raf.close()
+    intercept[ChecksumException] {
+      val in = fs.open(file)
+      try in.readFully(new Array[Byte](4096)) finally in.close()
+    }
+    fs.close()
+  }
+
+  test("a Sessions.local session resolves file: paths to NioLocalFileSystem") {
+    // newInstance, not get: the per-JVM FileSystem cache holds whichever
+    // file: FileSystem this JVM created first
+    val fs = FileSystem.newInstance(new URI("file:///"), spark.sparkContext.hadoopConfiguration)
+    try assert(fs.getClass == classOf[NioLocalFileSystem], s"got ${fs.getClass}")
+    finally fs.close()
   }
 }

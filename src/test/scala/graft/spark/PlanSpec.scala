@@ -14,7 +14,8 @@ import graft.job.ExtractJob
   *  - dimension joins broadcast (no shuffled fact side);
   *  - filters and projections reach the parquet scan (PushedFilters /
   *    pruned ReadSchema);
-  *  - a resumed extraction job reads its pending buckets with no join.
+  *  - a resumed extraction job reads its pending buckets with no join,
+  *    and a fresh one in one chunk reads every row with no filter.
   */
 class PlanSpec extends AnyFunSuite {
 
@@ -73,6 +74,19 @@ class PlanSpec extends AnyFunSuite {
         s"join or exchange in the resumed job's plan:\n$plan")
       assert(plan.contains(" IN ("), s"pending-bucket filter missing:\n$plan")
     }
+  }
+
+  test("fresh extraction job in one chunk: no bucket filter, no join, no Exchange") {
+    // a chunk of all numBuckets buckets keeps every row (pmod lands in
+    // range), so the job plans no filter on the bucket
+    val plans = graft.tools.PlanDump.freshJobPlans(spark).map(_.executedPlan.toString)
+    assert(plans.size == 1, s"expected one write for the one chunk, got ${plans.size}")
+    val plan = plans.head
+    assert(!plan.contains("Join") && !plan.contains("Exchange"),
+      s"join or exchange in the fresh job's plan:\n$plan")
+    assert(!plan.linesIterator.exists(l => l.contains("Filter") && l.contains("pmod")),
+      s"tautological bucket filter in the fresh job's plan:\n$plan")
+    assert(plan.contains("extractrows"), s"extraction generator missing:\n$plan")
   }
 
   test("filter + projection are pushed into the parquet scan") {
