@@ -6,7 +6,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import graft.core.model._
 import graft.job.ExtractJob
-import graft.io.TableIO
+import graft.io.{Parquet, TableIO}
 import graft.spark.{Queries, Sessions}
 import graft.tools.ExtractCli
 
@@ -188,7 +188,7 @@ object Bench {
       normal.unionAll(giants).repartition(cores)
         .write.mode("overwrite").parquet(corpusDir)
     }
-    val input = spark.read.parquet(corpusDir)
+    val input = Parquet.read(spark, corpusDir)
     val outBase = if (Files.isDirectory(Paths.get("/dev/shm"))) "/dev/shm" else "/tmp"
     def run(tag: String, threshold: Long): (Double, Long, Boolean) = {
       val out = s"$outBase/graft-bench-skew-$tag"
@@ -223,7 +223,7 @@ object Bench {
     val spark = Sessions.bench(cores, s"graft-bench-extract-$cores")
     val listener = new CpuListener
     spark.sparkContext.addSparkListener(listener)
-    val input = spark.read.parquet(s"$corpusDir/interleaved_docs.parquet")
+    val input = Parquet.read(spark, s"$corpusDir/interleaved_docs.parquet")
     val outBase =
       if (Files.isDirectory(Paths.get("/dev/shm"))) "/dev/shm" else "/tmp"
 

@@ -203,7 +203,7 @@ object TableIO {
 
   /** SNAPSHOT-ISOLATION / time-travel read: exactly the data files
     * pinned by `version`, regardless of what later jobs appended —
-    * `spark.read.parquet(pinned files…)` with `basePath` so
+    * `Parquet.readUnder(dataDir, pinned files…)`, with `basePath` so
     * partition-directory columns (`bucket=N`) still materialize. A
     * reader holding a version is thus isolated from concurrent
     * appends, the Iceberg read contract the plain `dataDir` read
@@ -216,7 +216,7 @@ object TableIO {
     if (paths.isEmpty)
       spark.emptyDataFrame
     else
-      spark.read.option("basePath", dataDir(tableDir)).parquet(paths: _*)
+      Parquet.readUnder(spark, dataDir(tableDir), paths)
   }
 
   /** Append lineage rows as one immutable manifest (atomic rename). */

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.util.AccumulatorV2
 import graft.core.model._
 import graft.engine.Extractor
-import graft.io.TableIO
+import graft.io.{Parquet, TableIO}
 
 /** The flagship extraction pipeline — the reference's whole dataflow
   * (queue → worker pool → engines → JSON sink → Redis tracker,
@@ -323,7 +323,7 @@ object ExtractJob {
     * `GET /content/:id` (/root/reference/api/src/server.ts:182-207):
     * partition-pruned scan, no shuffle. */
   def readDoc(spark: SparkSession, tableDir: String, docId: String): DataFrame =
-    spark.read.parquet(TableIO.dataDir(tableDir)).where(col("doc_id") === lit(docId))
+    Parquet.read(spark, TableIO.dataDir(tableDir)).where(col("doc_id") === lit(docId))
 
   /** The reference's exact result-JSON shape for one document —
     * `serde_json::to_string_pretty(Vec<PageExtractInfo>)` as written by

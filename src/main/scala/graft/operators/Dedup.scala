@@ -293,10 +293,10 @@ object Dedup {
     * (shingle, member a) emits one row (a, t), t = the members after a
     * in the sorted list (empty for the last member and for a df = 1
     * shingle). The rows are clustered and sorted by a, and one pass
-    * over each run of equal a ([[PartnerCounts]]) concatenates the
-    * tails, sorts them and run-length counts them: the count of b is
-    * |A∩B|, and the run length is |A|. A pair is emitted when its
-    * count reaches max(1, ceil(minPermille·|A|/1000)) — pass 0 to keep
+    * over each run of equal a ([[PartnerCounts]]) counts the partners
+    * in its tails: the count of b is |A∩B|, and the run length is |A|.
+    * A pair is emitted when its count reaches
+    * max(1, ceil(minPermille·|A|/1000)) — pass 0 to keep
     * every pair sharing a shingle — as (a_id, b_id, inter, na), na =
     * |A| from the run, so the callers join `sizes` for |B| only. At
     * sf0.1 this shuffles 0.49M tail rows (5.2M longs) where the (a, b)
@@ -316,8 +316,8 @@ object Dedup {
     *
     * Scale: a viral shingle of df D still carries D²/2 partner longs,
     * as the unfold did, but grouped by a they spread across the a
-    * partitions and the sort spills; one document's partner buffer
-    * holds the sum of its shingles' tails. The df cap bounds D.
+    * partitions and the sort spills; one document's partner table
+    * holds its distinct partners. The df cap bounds D.
     *
     * Both consumers read the same shingle exchange, so ReuseExchange
     * serves BOTH from ONE scan+shingle+combine subtree; a second copy of
@@ -348,18 +348,28 @@ object Dedup {
 
   /** One (shingle, member) row of the pair stage: member `a` and the
     * sorted members after it. */
-  private[operators] final case class Tail(a: Long, t: Array[Long])
-  private[operators] final case class PairCount(a_id: Long, b_id: Long, inter: Long, na: Long)
+  private[graft] final case class Tail(a: Long, t: Array[Long])
+  private[graft] final case class PairCount(a_id: Long, b_id: Long, inter: Long, na: Long)
 
   /** The per-partition partner pass of [[pairIntersections]] over
-    * [[Tail]] rows clustered and sorted by `a`; the tails of one run
-    * share one reused buffer. A tail that starts with `a` itself means
-    * `a` appeared twice in one shingle's member list — a duplicate
-    * doc_id — and fails the task. */
-  private final class PartnerCounts(rows: Iterator[Tail], minPermille: Int)
+    * [[Tail]] rows clustered and sorted by `a`. Each run of equal `a`
+    * counts its partners in one open-addressing long → int table, reused
+    * by every run: a partner costs one probe where a sort of the
+    * concatenated tails cost a log factor, and a run needs room for its
+    * distinct partners, not for every repeat. Only the pairs that reach
+    * the threshold are sorted, so a run's pairs come out by ascending `b`.
+    * A tail that starts with `a` itself means `a` appeared twice in one
+    * shingle's member list — a duplicate doc_id — and fails the task. */
+  private[graft] final class PartnerCounts(rows: Iterator[Tail], minPermille: Int)
       extends Iterator[PairCount] {
     private var pending: Tail = if (rows.hasNext) rows.next() else null
-    private var partners = new Array[Long](1024)
+    // the table: a slot is empty while its count is 0; `used` lists the
+    // occupied slots, so a run clears only what it filled
+    private var bits = 10
+    private var keys = new Array[Long](1 << bits)
+    private var counts = new Array[Int](1 << bits)
+    private var used = new Array[Int](1 << (bits - 1))
+    private var filled = 0
     private var outB = new Array[Long](256)
     private var outC = new Array[Long](256)
     private var outA = 0L
@@ -379,47 +389,73 @@ object Dedup {
       r
     }
 
+    // Fibonacci hashing: the high bits of the product spread dense ids
+    private def home(b: Long): Int = ((b * 0x9E3779B97F4A7C15L) >>> (64 - bits)).toInt
+
+    private def slot(b: Long): Int = {
+      val mask = keys.length - 1
+      var i = home(b)
+      while (counts(i) != 0 && keys(i) != b) i = (i + 1) & mask
+      i
+    }
+
+    /** Adds `c` to `b`'s count, growing the table past half full. */
+    private def add(b: Long, c: Int): Unit = {
+      if (2 * (filled + 1) > keys.length) grow()
+      val i = slot(b)
+      if (counts(i) == 0) { keys(i) = b; used(filled) = i; filled += 1 }
+      counts(i) += c
+    }
+
+    private def grow(): Unit = {
+      val (oldKeys, oldCounts, oldUsed, n) = (keys, counts, used, filled)
+      bits += 1
+      keys = new Array[Long](1 << bits)
+      counts = new Array[Int](1 << bits)
+      used = new Array[Int](1 << (bits - 1))
+      filled = 0
+      var j = 0
+      while (j < n) { val s = oldUsed(j); add(oldKeys(s), oldCounts(s)); j += 1 }
+    }
+
     private def countRun(): Unit = {
       val a = pending.a
       var n = 0L
-      var len = 0
       while (pending != null && pending.a == a) {
         val t = pending.t
         if (t.length > 0 && t(0) == a)
           throw new IllegalArgumentException(
             s"doc_id $a occurs more than once in one shingle's member list: " +
               "duplicate doc_id rows sharing a shingle have no pairwise answer")
-        if (len + t.length > partners.length)
-          partners = java.util.Arrays.copyOf(partners,
-            math.min(math.max(len.toLong + t.length, 2L * partners.length),
-              Int.MaxValue - 8L).toInt)
-        System.arraycopy(t, 0, partners, len, t.length)
-        len += t.length
+        var k = 0
+        while (k < t.length) { add(t(k), 1); k += 1 }
         n += 1
         pending = if (rows.hasNext) rows.next() else null
       }
-      java.util.Arrays.sort(partners, 0, len)
       val need = if (minPermille <= 0) 1L else math.max(1L, (minPermille * n + 999) / 1000)
       outA = a
       outNa = n
       outN = 0
       outI = 0
-      var i = 0
-      while (i < len) {
-        val b = partners(i)
-        var j = i + 1
-        while (j < len && partners(j) == b) j += 1
-        if (j - i >= need) {
+      var j = 0
+      while (j < filled) {
+        val s = used(j)
+        if (counts(s) >= need) {
           if (outN == outB.length) {
             outB = java.util.Arrays.copyOf(outB, 2 * outN)
             outC = java.util.Arrays.copyOf(outC, 2 * outN)
           }
-          outB(outN) = b
-          outC(outN) = j - i
+          outB(outN) = keys(s)
           outN += 1
         }
-        i = j
+        j += 1
       }
+      java.util.Arrays.sort(outB, 0, outN)
+      var i = 0
+      while (i < outN) { outC(i) = counts(slot(outB(i))); i += 1 }
+      j = 0
+      while (j < filled) { counts(used(j)) = 0; j += 1 }
+      filled = 0
     }
   }
 

@@ -57,7 +57,7 @@ object InterleavedTable {
   }
 
   def readVerifyCorpus(spark: SparkSession): DataFrame =
-    spark.read.parquet(ensureVerifyCorpus(spark))
+    graft.io.Parquet.read(spark, ensureVerifyCorpus(spark))
 
   @volatile private var goldenWritten = false
 

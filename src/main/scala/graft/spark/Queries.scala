@@ -18,7 +18,7 @@ import graft.operators.{Dedup, Multimodal, Similarity}
 object Queries {
 
   private def rd(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    graft.io.Parquet.read(s, s"$dir/$name.parquet")
 
   /** Money doubles → exact integer cents/permille (HALF_UP both engines). */
   private def cents(c: Column): Column = round(c * 100).cast("long")
@@ -1689,7 +1689,7 @@ object Queries {
     graft.streaming.ExtractStream
       .run(s, s"$base/corpus", s"$base/out", s"$base/ck")
       .awaitTermination()
-    val got = s.read.parquet(s"$base/out").as[ExtractedDoc]
+    val got = graft.io.Parquet.read(s, s"$base/out").as[ExtractedDoc]
     val exp = InterleavedTable.goldens(s, n)
     got.toDF("doc_id", "spans").as("g")
       .join(exp.toDF("doc_id", "spans").as("e"), Seq("doc_id"), "full_outer")

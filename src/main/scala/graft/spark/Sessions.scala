@@ -6,19 +6,29 @@ import org.apache.spark.sql.SparkSession
   * AQE on (runtime coalesce + skew split), shuffle partitions matched
   * to cores (not the 200 default), UTC for oracle parity.
   *
-  * Every session writes `file:` paths through [[graft.io.NioLocalFileSystem]]
-  * ([[LocalFs]]): checksummed like Hadoop's default local FileSystem, but
-  * without a forked `chmod` for each file and directory it creates.
-  * Hadoop caches FileSystems per JVM by scheme, so the first `file:`
-  * FileSystem a JVM creates is the one every later session gets from
-  * `FileSystem.get`: a JVM that built a session without this setting
-  * first keeps Hadoop's default.
+  * [[Shared]] holds the settings every session of the JVM must agree on,
+  * because the first session fixes them for the whole JVM:
+  *
+  *  - `file:` paths go through [[graft.io.NioLocalFileSystem]] (and
+  *    `FileContext` through [[graft.io.NioLocalFs]]): checksummed like
+  *    Hadoop's default local file system, but without a forked `chmod`
+  *    for each file and directory it creates. Hadoop caches FileSystems
+  *    per JVM by scheme, so the first `file:` FileSystem a JVM creates is
+  *    the one every later session gets from `FileSystem.get`.
+  *  - the codegen cache holds 2,048 classes. Spark sizes it once per JVM,
+  *    from the session that compiles first. One session compiles about
+  *    1,130 classes for the 102 declared queries (sf0.1, local[4]), and
+  *    more than 100 for the four benchmark queries alone: the default of
+  *    100 evicted them, so every pass of a long-lived session compiled
+  *    the whole surface again. Executor-side classes are still compiled once per
+  *    SparkContext, whose executor loads them in its own class loader.
   */
 object Sessions {
-  /** The local FileSystem setting, shared with sessions built elsewhere
-    * (`graft.Verify`). */
-  val LocalFs: Map[String, String] =
-    Map("spark.hadoop.fs.file.impl" -> classOf[graft.io.NioLocalFileSystem].getName)
+  /** Settings shared with sessions built elsewhere (`graft.Verify`). */
+  val Shared: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[graft.io.NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.io.NioLocalFs].getName,
+    "spark.sql.codegen.cache.maxEntries" -> "2048")
 
   def local(cores: Int, appName: String = "graft"): SparkSession =
     build(cores, appName, fastCommitter = false)
@@ -63,7 +73,7 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost")
-      .config(LocalFs)
+      .config(Shared)
     val spark = (if (fastCommitter)
       builder.config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
     else builder).getOrCreate()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.core.model._
 import graft.fixtures.InterleavedGen
+import graft.io.Parquet
 import graft.job.ExtractJob
 import graft.spark.Sessions
 
@@ -44,7 +45,7 @@ object ExtractCli {
         val chunk = rest.headOption.map(_.toInt).getOrElse(0)
         val buckets = rest.drop(1).headOption.map(_.toInt).getOrElse(64)
         val mode = rest.drop(2).headOption.getOrElse("scan")
-        val input = spark.read.parquet(s"$corpus/interleaved_docs.parquet")
+        val input = Parquet.read(spark, s"$corpus/interleaved_docs.parquet")
         val t0 = System.nanoTime()
         val stats = ExtractJob.run(spark, input, table,
           ExtractJob.Config(numBuckets = buckets, chunkBuckets = chunk, mode = mode))
@@ -70,10 +71,10 @@ object ExtractCli {
         import spark.implicits._
         // batch writer adds a bucket column; the streaming sink doesn't —
         // compare on the common (doc_id, spans) contract
-        val got = spark.read.parquet(graft.io.TableIO.dataDir(table))
+        val got = Parquet.read(spark, graft.io.TableIO.dataDir(table))
           .select("doc_id", "spans").as[ExtractedDoc]
           .map(r => (r.doc_id, r.spans.map(s => (s.kind, s.text, s.media_ref, s.order)).sortBy(_._4)))
-        val exp = spark.read.parquet(s"$corpus/expected_docs.parquet").as[ExtractedDoc]
+        val exp = Parquet.read(spark, s"$corpus/expected_docs.parquet").as[ExtractedDoc]
           .map(d => (d.doc_id, d.spans.map(s => (s.kind, s.text, s.media_ref, s.order)).sortBy(_._4)))
         val joined = got.toDF("doc_id", "got").join(exp.toDF("doc_id", "exp"), Seq("doc_id"), "full_outer")
         val agg = joined.agg(
@@ -101,7 +102,7 @@ object ExtractCli {
         graft.streaming.ExtractStream
           .run(spark, s"$corpus/interleaved_docs.parquet", s"$table/data", ck)
           .awaitTermination()
-        val docs = spark.read.parquet(s"$table/data").count()
+        val docs = Parquet.read(spark, s"$table/data").count()
         val sec = (System.nanoTime() - t0) / 1e9
         println(f"""{"docs":$docs,"sec":$sec%.2f,"checkpoint":"$ck"}""")
         spark.stop()

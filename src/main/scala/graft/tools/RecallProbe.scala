@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Similarity}
+import graft.io.Parquet
 import graft.spark.Sessions
 
 /** Retrieval-QUALITY probe for the approximate operators — the
@@ -64,7 +65,7 @@ object RecallProbe {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = Sessions.local(cpus, "graft-recallprobe")
 
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = Parquet.read(spark, s"$sfDir/embeddings.parquet")
       .select("vec_id", "embedding")
     val queries = emb.where(col("vec_id") < 64)
     val nQueries = queries.count()
@@ -89,7 +90,7 @@ object RecallProbe {
         iterations = 2))
     val annRecall = ann.map { case (n, df) => n -> recallAtK(truth, df) }
 
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Parquet.read(spark, s"$sfDir/documents.parquet")
       .select("doc_id", "text")
     // exact ground truth: uncapped all-pairs Jaccard at 0.8 — viable
     // at probe scale precisely because this corpus fits; the sketch

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
+import graft.io.Parquet
 import graft.spark.Sessions
 
 /** Scale-trend probe: run the shuffle-once dedup operators on 1× and
@@ -26,7 +27,7 @@ object ScaleProbe {
       .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = Sessions.local(cpus, "graft-scaleprobe")
 
-    val base = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
+    val base = Parquet.read(spark, s"$sfDir/documents.parquet").select("doc_id", "text")
     // per-copy vowel substitution rewrites almost every token, so
     // cross-copy shingle/sketch overlap is NEGLIGIBLE (only 3-grams of
     // all-vowel-free tokens survive the translation; copy 0 keeps the

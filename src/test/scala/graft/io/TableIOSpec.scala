@@ -3,8 +3,10 @@ package graft.io
 import java.net.URI
 import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.PosixFilePermissions
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumException, FileSystem, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumException, CreateFlag, FileContext, FileSystem, LocalFileSystem,
+  Options, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -218,5 +220,35 @@ class TableIOSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fs = FileSystem.newInstance(new URI("file:///"), spark.sparkContext.hadoopConfiguration)
     try assert(fs.getClass == classOf[NioLocalFileSystem], s"got ${fs.getClass}")
     finally fs.close()
+  }
+
+  test("a Sessions.local FileContext resolves file: paths to NioLocalFs, with Hadoop's mode bits") {
+    val sessionConf = spark.sparkContext.hadoopConfiguration
+    val root = new URI("file:///")
+    assert(FileContext.getFileContext(root, sessionConf).getDefaultFileSystem.getClass ==
+      classOf[NioLocalFs])
+    Seq("022", "077", "002").foreach { umask =>
+      // Hadoop's default LocalFs, then the session's
+      val seen = Seq(new Configuration(), new Configuration(sessionConf)).map { conf =>
+        conf.set("fs.permissions.umask-mode", umask)
+        val fc = FileContext.getFileContext(root, conf)
+        val dir = tmpDir("graft-fcperm")
+        // as the streaming checkpoint log: mkdir with parents, a temp
+        // file renamed over its final name, and an explicit create mode
+        fc.mkdir(new Path(s"$dir/a/b"), FsPermission.getDirDefault, true)
+        val out = fc.create(new Path(s"$dir/a/b/.0.tmp"),
+          java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE))
+        out.write(Array[Byte](1, 2, 3)); out.close()
+        fc.rename(new Path(s"$dir/a/b/.0.tmp"), new Path(s"$dir/a/b/0"), Options.Rename.OVERWRITE)
+        fc.create(new Path(s"$dir/e"), java.util.EnumSet.of(CreateFlag.CREATE),
+          Options.CreateOpts.perms(new FsPermission("640"))).close()
+        fc.setPermission(new Path(s"$dir/a"), new FsPermission("750"))
+        val names = Files.walk(Paths.get(dir)).iterator.asScala.map(Paths.get(dir).relativize(_).toString)
+          .filter(_.nonEmpty).toSeq.sorted
+        names.map(rel => rel -> perms(s"$dir/$rel"))
+      }
+      assert(seen(0).map(_._1).contains("a/b/.0.crc"), s"no checksum sidecar: ${seen(0)}")
+      assert(seen(1) == seen(0), s"umask $umask: NIO ${seen(1)} vs Hadoop ${seen(0)}")
+    }
   }
 }

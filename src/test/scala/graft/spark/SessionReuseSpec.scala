@@ -1,0 +1,53 @@
+package graft.spark
+
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.GraftListenerBridge
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.scalatest.funsuite.AnyFunSuite
+
+/** What a long-lived session reuses across queries: the table schemas,
+  * read without a Spark job, and the compiled code, kept by a codegen
+  * cache that holds the query surface. The cache is sized once per JVM,
+  * by the session that compiles first, so these hold whatever suite runs
+  * first only because the build starts the test JVM at the size
+  * `Sessions.Shared` sets (SparkConf reads `spark.*` system properties). */
+class SessionReuseSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = Sessions.local(4, "graft-session-reuse-spec")
+  private val sf = "/root/testdata/sf0.001"
+  // the benchmark's four operator queries
+  private val ops = Seq("dedup_minhash_star", "dedup_jaccard", "graph_pagerank_adaptive", "sim_topk_pq")
+
+  test("the test JVM starts every session at the codegen cache size of Sessions.Shared") {
+    val key = "spark.sql.codegen.cache.maxEntries"
+    assert(sys.props.get(key) == Sessions.Shared.get(key))
+  }
+
+  test("reading a table through Queries runs no Spark job before the query's action") {
+    val jobs = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val df = Queries.all("dedup_jaccard")(spark, sf)
+      GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
+      assert(jobs.get == 0, "jobs before the action")
+      assert(df.count() > 0)
+      GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
+      assert(jobs.get > 0)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a second pass of the benchmark queries compiles no class") {
+    def pass(): Unit = ops.foreach { q =>
+      Queries.all(q)(spark, sf).queryExecution.executedPlan.execute().count()
+    }
+    pass()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    pass()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled == 0)
+  }
+}
