@@ -154,8 +154,10 @@ object Bench {
     * multi-ten-thousand-page PDFs), same job, fan-out OFF vs ON
     * (Config.giantBytesThreshold). OFF: each giant doc is one
     * unsplittable row — a second-plus task that pins job wall time.
-    * ON: the doc explodes into page-range chunks extracted in parallel
-    * and reassembled with one shuffle of extracted text. Chunk size is
+    * ON: the doc explodes into page-range rows that the extraction
+    * generator reads like any other row (the payload decoded from the
+    * row's bytes, no String copy per chunk), extracted in parallel and
+    * reassembled with one shuffle of extracted text. Chunk size is
     * pages/8: every chunk re-pays the b64 decode + xref walk of the
     * WHOLE doc (inline payload — production chunks would carry an
     * object-store ref), so small chunks multiply that fixed cost;

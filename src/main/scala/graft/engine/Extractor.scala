@@ -97,8 +97,9 @@ object Extractor {
 
   private val docs = ThreadLocal.withInitial(() => new Doc)
 
-  /** [[extractInto]] over typed values (tests, tools, the giant-doc
-    * chunks): Strings in and out, converted at this boundary. */
+  /** [[extractInto]] over typed values (tests, `graft.tools`, the
+    * perfbench engine layer): Strings in and out, converted at this
+    * boundary. No job path calls it. */
   def extractDoc(in: InterleavedDoc, opts: ExtractOptions): DocResult = {
     val d = docs.get
     d.start(UTF8String.fromString(in.doc_id))

@@ -119,15 +119,6 @@ object TextFunctions {
     toColumn(ArrayMinAgg(toExpression(arr)).toAggregateExpression())
   }
 
-  /** Buffer-BOUNDED collect_list over bigint (native
-    * [[BoundedCollectLongs]]): at most `limit` elements held per group
-    * in any buffer. Pair with an exact `count` and drop groups over
-    * the bound — a truncated list is a memory bound, never an answer. */
-  def boundedCollectLongs(c: Column, limit: Int): Column = {
-    import org.apache.spark.sql.GraftColumnBridge._
-    toColumn(BoundedCollectLongs(toExpression(c), limit).toAggregateExpression())
-  }
-
   /** k minimum DISTINCT bigints, ascending (native
     * [[BottomKDistinctLongs]]) — the KMV cardinality sketch over a
     * hash column: O(k) memory per group in every buffer, map-side

@@ -1,11 +1,11 @@
 package graft.job
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Generator, GeneratorOuter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{BinaryType, IntegerType}
 import org.apache.spark.util.AccumulatorV2
 import graft.core.model._
-import graft.engine.Extractor
 import graft.io.{Parquet, TableIO}
 
 /** The flagship extraction pipeline — the reference's whole dataflow
@@ -69,8 +69,9 @@ object ExtractJob {
         * row — AQE cannot split a row. When > 0, single-span pdf_bytes
         * docs of at least this many payload bytes are probed for page
         * count (xref walk only — content streams stay undecoded),
-        * exploded into `giantChunkPages`-page chunk rows, extracted as
-        * independent page ranges in parallel, and reassembled with one
+        * exploded into `giantChunkPages`-page chunk rows (`start_page` /
+        * `page_count` columns) that the one extraction generator,
+        * [[ExtractRows]], extracts in parallel, and reassembled with one
         * shuffle of the EXTRACTED text (never the raw bytes twice).
         * Off (0) by default: it duplicates the payload across chunk
         * tasks, which only pays off for multi-thousand-page tails —
@@ -105,8 +106,6 @@ object ExtractJob {
 
   /** Extracted row carrying its bucket for partitioned append. */
   final case class OutRow(doc_id: String, spans: Seq[Span], bucket: Int)
-  /** A giant document's input row (the typed fan-out path). */
-  final case class InRow(doc_id: String, spans: Seq[RawSpan], bucket: Int)
 
   /** Per-document option columns (the reference's NewFileProcessQueue
     * carries options PER FILE, worker.rs:4-11). If the input table has
@@ -130,15 +129,13 @@ object ExtractJob {
   val SinkOptions: Map[String, String] = Seq("doc_id", "spans.list.element.text")
     .map(c => s"parquet.enable.dictionary#$c" -> "false").toMap
 
-  /** One page-range chunk of a giant document (startPage < 0 marks an
-    * unparseable/empty doc recorded fail-soft). */
-  final case class ChunkRow(doc_id: String, b64: String, startPage: Int,
-      pageLen: Int, bucket: Int)
-
-  /** Extraction result of one giant-doc chunk: `ok=false` on ANY chunk
-    * fails the whole doc at reassembly (fail-soft contract — a doc is
-    * never silently emitted with missing page ranges). */
-  final case class ChunkOut(doc_id: String, bucket: Int, ok: Boolean, spans: Seq[Span])
+  /** A giant's page count from its base64 payload: the xref and page
+    * tree only, content streams stay undecoded; 0 when it does not parse.
+    * Lazy: a job with the fan-out off never builds it. */
+  private lazy val pageCount = udf { (b64: Array[Byte]) =>
+    try graft.pdf.PdfDocument.load(java.util.Base64.getDecoder.decode(b64)).pageCount
+    catch { case scala.util.control.NonFatal(_) => 0 }
+  }
 
   /** Input must have columns (doc_id string, spans array<struct<kind,
     * text, media_ref, offset>>). Returns run statistics. */
@@ -201,68 +198,51 @@ object ExtractJob {
       val normalOut = repartitioned.select(
         ExtractRows.of(repartitioned, cfg.opts, $"bucket", Some(acc)), $"bucket")
 
+      // giant docs: one row per page range (`start_page` / `page_count`),
+      // extracted by the same generator with the source's page numbers
+      // (no start-page parity shift). The chunks' own stats count page
+      // ranges, not documents: only their unmapped codes are kept
+      val chunkAcc = new BucketStatsAcc
       val extracted: DataFrame = if (!fanOut) normalOut else {
-        val chunkPages = cfg.giantChunkPages
-        // probe: xref/page-tree walk only (content streams undecoded)
-        val giantChunks = subAll.filter(isGiant).as[InRow].flatMap { row =>
-          val raw = row.spans.head
-          try {
-            val bytes = java.util.Base64.getDecoder.decode(raw.text)
-            val total = graft.pdf.PdfDocument.load(bytes,
-              cfg.opts.password.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-                .getOrElse(Array.emptyByteArray)).pageCount
-            if (total <= 0) Seq(ChunkRow(row.doc_id, raw.text, -1, 0, row.bucket))
-            else (1 to total by chunkPages).map(s =>
-              ChunkRow(row.doc_id, raw.text, s, math.min(chunkPages, total - s + 1), row.bucket))
-          } catch {
-            case scala.util.control.NonFatal(_) =>
-              Seq(ChunkRow(row.doc_id, raw.text, -1, 0, row.bucket))
-          }
-        }
-        // spread chunk rows over tasks (this duplicates the payload —
-        // the price of splitting one row's work; see Config scaladoc).
-        // docCount/bytesIn are counted once per doc on the first chunk;
-        // spanCount/failedDocs are settled at reassembly, where doc-level
-        // success (ALL chunks ok) is known.
-        val giantChunkOut = giantChunks
+        spark.sparkContext.register(chunkAcc, s"${cfg.jobId}-chunk-stats-$chunkIdx")
+        val payload = element_at($"spans", 1)
+        // a doc the probe finds no pages in, or cannot parse, is one
+        // whole-document chunk (start 1, all pages): it succeeds or
+        // fails exactly as direct extraction does
+        val ranges = subAll.filter(isGiant)
+          .withColumn("pages", pageCount(payload.getField("text").cast(BinaryType)))
+          .select($"doc_id", $"spans", $"bucket",
+            (octet_length(payload.getField("text")) + octet_length(payload.getField("media_ref")))
+              .as("bytes"),
+            explode(sequence(lit(1), greatest($"pages", lit(1)), lit(cfg.giantChunkPages)))
+              .as("start_page"),
+            when($"pages" > 0, lit(cfg.giantChunkPages)).otherwise(lit(0)).as("page_count"))
+          // spread chunk rows over tasks (this duplicates the payload —
+          // the price of splitting one row's work; see Config scaladoc)
           .repartition(spark.sparkContext.defaultParallelism)
-          .mapPartitions { it =>
-            it.map { c =>
-              val first = c.startPage <= 1 // probe-failure marker (-1) included
-              acc.add(c.bucket -> BucketStats(
-                docCount = if (first) 1 else 0,
-                bytesIn = if (first) c.b64.length.toLong else 0L))
-              if (c.startPage < 0) ChunkOut(c.doc_id, c.bucket, ok = false, Nil)
-              else {
-                val res = Extractor.extractDoc(
-                  InterleavedDoc(c.doc_id, Seq(RawSpan("pdf_bytes", c.b64, "", 0))),
-                  ExtractOptions(startPage = c.startPage, pageCount = c.pageLen,
-                    parityStartOffByOne = false, password = cfg.opts.password))
-                if (res.unmappedCodes > 0)
-                  acc.add(c.bucket -> BucketStats(unmappedCodes = res.unmappedCodes))
-                ChunkOut(c.doc_id, c.bucket, ok = res.doc.isDefined,
-                  res.doc.map(_.spans.map(sp => sp.copy(order = sp.order + c.startPage - 1)))
-                    .getOrElse(Nil))
-              }
-            }
-          }
-        // reassemble: ONE shuffle of the extracted text, grouped per doc.
-        // A failed chunk ANYWHERE fails the doc (fail-soft: counted, no
-        // partial output) — a doc is never emitted with missing pages.
-        val giantOut = giantChunkOut
-          .groupByKey(c => (c.doc_id, c.bucket))
-          .flatMapGroups { (key: (String, Int), it: Iterator[ChunkOut]) =>
-            val chunks = it.toVector
-            if (chunks.exists(!_.ok)) {
-              acc.add(key._2 -> BucketStats(failedDocs = 1))
-              Iterator.empty
-            } else {
-              val spans = chunks.flatMap(_.spans).sortBy(_.order)
-              acc.add(key._2 -> BucketStats(spanCount = spans.length.toLong))
-              Iterator.single(OutRow(key._1, spans, key._2))
-            }
-          }
-        normalOut.unionAll(giantOut.toDF())
+        // outer: a failed chunk keeps its row with null spans, so a doc
+        // whose every chunk failed still reaches reassembly
+        val rows = GraftColumnBridge.toExpression(ExtractRows.of(ranges,
+          cfg.opts.copy(parityStartOffByOne = false), $"bucket", Some(chunkAcc)))
+        val parts = ranges.select(
+          GraftColumnBridge.toColumn(GeneratorOuter(rows.asInstanceOf[Generator])),
+          $"doc_id".as("id"), $"bucket", $"bytes", $"start_page")
+        // a giant's lineage, counted once per document in this action
+        val settle = udf { (bucket: Int, bytes: Long, spans: Int) =>
+          acc.add(bucket -> BucketStats(docCount = 1, spanCount = math.max(spans, 0),
+            bytesIn = bytes, failedDocs = if (spans < 0) 1 else 0))
+          spans >= 0
+        }.asNondeterministic()
+        // reassemble: ONE shuffle of the extracted text; spans ordered by
+        // chunk and renumbered 0..n-1. A failed chunk anywhere fails the
+        // doc (the flatten of a null chunk is null): counted, never
+        // written with missing pages
+        val giantOut = parts.groupBy($"id", $"bucket", $"bytes")
+          .agg(flatten(transform(sort_array(collect_list(struct($"start_page", $"spans"))),
+            _.getField("spans"))).as("spans"))
+          .filter(settle($"bucket", $"bytes", coalesce(size($"spans"), lit(-1))))
+          .select($"id", transform($"spans", (s, i) => s.withField("order", i)), $"bucket")
+        normalOut.unionAll(giantOut)
       }
 
       // ONE action: the write. Metrics ride the accumulator.
@@ -279,14 +259,15 @@ object ExtractJob {
       // race a save/restore pair. (The scan-mode normal path has no
       // exchange, so nothing to scope when fan-out is off.)
       val writeDf = if (!fanOut) extracted else {
-        val child = org.apache.spark.sql.GraftColumnBridge.cloneSession(spark)
+        val child = GraftColumnBridge.cloneSession(spark)
         child.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        org.apache.spark.sql.GraftColumnBridge.withSession(extracted, child)
+        GraftColumnBridge.withSession(extracted, child)
       }
       val writer = writeDf.write.mode("append").options(SinkOptions)
       (if (cfg.mode == "bucketed") writer.partitionBy("bucket") else writer)
         .parquet(TableIO.dataDir(tableDir))
 
+      chunkAcc.value.foreach { case (b, s) => acc.add(b -> BucketStats(unmappedCodes = s.unmappedCodes)) }
       val stats = acc.value
       val now = System.currentTimeMillis()
       val rows = chunk.map { b =>

@@ -1106,16 +1106,26 @@ object Dedup {
     * [[graft.functions.VectorFunctions.lshBitsFor]]: fixed bits make
     * per-bucket work O(n²/2^bits) — quadratic again at 10^12 rows. */
   def embeddingNearDupPairs(emb: DataFrame, tPct: Int = 80,
-      lshBits: Int = 4, tables: Int = 1): DataFrame = {
+      lshBits: Int = 4, tables: Int = 1): DataFrame =
+    embeddingNearDupPairsQ(
+      emb.select(col("vec_id"),
+        posexplode(array((0 until tables).map(t =>
+          VF.signBucket(col("embedding"), lshBits, offset = t * lshBits)): _*))
+          .as(Seq("tbl", "bucket")),
+        VF.quantize(col("embedding")).as("qv")),
+      tPct, tables)
+
+  /** [[embeddingNearDupPairs]] over an already-prepared
+    * `(vec_id, tbl, bucket, qv)` frame of `tables` bucket tables — the
+    * composition point for callers that derive buckets/quantization
+    * differently (as [[embeddingNearDupStarPairsQ]] is for the star
+    * pattern). */
+  def embeddingNearDupPairsQ(prepared: DataFrame, tPct: Int, tables: Int = 1): DataFrame = {
     // one quantize/signBucket evaluation per corpus, not per join
     // side: explicit shared (tbl, bucket) exchange (simhashPairs
     // recipe; the isNotNull filter keeps the two subtrees canonically
     // equal under the join's inferred constraints)
-    val q = emb.select(col("vec_id"),
-      posexplode(array((0 until tables).map(t =>
-        VF.signBucket(col("embedding"), lshBits, offset = t * lshBits)): _*))
-        .as(Seq("tbl", "bucket")),
-      VF.quantize(col("embedding")).as("qv"))
+    val q = prepared
       .withColumn("nsq", VF.normSqQ(col("qv")))
       .where(col("vec_id").isNotNull && col("bucket").isNotNull)
       .repartition(col("tbl"), col("bucket"))

@@ -3,7 +3,7 @@ package graft.spark
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{ArrayMinAgg, BottomKDistinctLongs, BoundedCollectLongs, CdcChunks, MinHashSigs, RollingFp, ShingleMd5s, TokenSimHash64, VectorDotQ}
+import graft.functions.{ArrayMinAgg, BottomKDistinctLongs, CdcChunks, MinHashSigs, RollingFp, ShingleMd5s, TokenSimHash64, VectorDotQ}
 
 /** SparkSessionExtensions installer for graft's native expressions —
   * the supported library integration point: set
@@ -85,12 +85,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("array_min_agg"),
       new ExpressionInfo(classOf[ArrayMinAgg].getName, "array_min_agg"),
       (exprs: Seq[Expression]) => ArrayMinAgg(arg("array_min_agg", exprs, 0, "the array column"))))
-    ext.injectFunction((
-      FunctionIdentifier("bounded_collect_longs"),
-      new ExpressionInfo(classOf[BoundedCollectLongs].getName, "bounded_collect_longs"),
-      (exprs: Seq[Expression]) => BoundedCollectLongs(
-        arg("bounded_collect_longs", exprs, 0, "the bigint column"),
-        intLit("bounded_collect_longs", exprs, 1, "the buffer limit"))))
     ext.injectFunction((
       FunctionIdentifier("bottom_k_distinct"),
       new ExpressionInfo(classOf[BottomKDistinctLongs].getName, "bottom_k_distinct"),

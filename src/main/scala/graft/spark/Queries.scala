@@ -1018,42 +1018,30 @@ object Queries {
     Dedup.simhash64Pairs(docsPlus(s, dir), maxHamming = 3)
       .orderBy("a_id", "b_id")
 
-  /** Embedding near-dup pairs: embeddings ∪ perturbed copies
-    * (vec_id+100000, first component zeroed), sign-LSH bucketed,
-    * exact integer cosine ≥ 0.80 test. */
-  def dedupEmbedding(s: SparkSession, dir: String): DataFrame = {
-    val base = rd(s, dir, "embeddings").select(col("vec_id"),
-      VF.signBucket(col("embedding"), 4).as("bucket"),
-      VF.quantize(col("embedding")).as("qv"))
-    val mut = base.select((col("vec_id") + 100000).as("vec_id"), col("bucket"),
-      transform(col("qv"), (x, i) => when(i === 0, lit(0L)).otherwise(x)).as("qv"))
-    // one quantize/signBucket evaluation per corpus, not per join side:
-    // the explicit bucket exchange is shared by both sides of the
-    // self-join (the simhashPairs recipe; isNotNull states the
-    // constraints the join would infer one-sidedly — ids/buckets are
-    // never null, results unchanged)
-    val all = base.unionAll(mut).withColumn("nsq", VF.normSqQ(col("qv")))
-      .where(col("vec_id").isNotNull && col("bucket").isNotNull)
-      .repartition(col("bucket"))
-    all.as("l").join(all.as("r"),
-        col("l.bucket") === col("r.bucket") && col("l.vec_id") < col("r.vec_id"))
-      .withColumn("dot", VF.dotQ(col("l.qv"), col("r.qv")))
-      .where(VF.cosineGePct(col("dot"), col("l.nsq"), col("r.nsq"), 80))
-      .select(col("l.vec_id").as("a_id"), col("r.vec_id").as("b_id"), col("dot"))
+  /** Embedding near-dup pairs over the perturbed-copy testbed
+    * ([[embeddingTestbed]]): sign-LSH bucketed, exact integer cosine
+    * ≥ 0.80 test. */
+  def dedupEmbedding(s: SparkSession, dir: String): DataFrame =
+    Dedup.embeddingNearDupPairsQ(embeddingTestbed(s, dir).withColumn("tbl", lit(0)), tPct = 80)
       .orderBy("a_id", "b_id")
-  }
 
   /** Linear-output embedding near-dup: same testbed as
     * [[dedupEmbedding]], star pattern — each vector verified only
     * against its bucket's canonical member (canon side broadcasts). */
-  def dedupEmbeddingStar(s: SparkSession, dir: String): DataFrame = {
+  def dedupEmbeddingStar(s: SparkSession, dir: String): DataFrame =
+    Dedup.embeddingNearDupStarPairsQ(embeddingTestbed(s, dir), tPct = 80)
+      .orderBy("a_id", "b_id")
+
+  /** The embeddings ∪ perturbed copies (vec_id+100000, first component
+    * zeroed, the original's sign-LSH bucket) as `(vec_id, bucket, qv)`,
+    * which both embedding near-dup queries pair. */
+  private def embeddingTestbed(s: SparkSession, dir: String): DataFrame = {
     val base = rd(s, dir, "embeddings").select(col("vec_id"),
       VF.signBucket(col("embedding"), 4).as("bucket"),
       VF.quantize(col("embedding")).as("qv"))
     val mut = base.select((col("vec_id") + 100000).as("vec_id"), col("bucket"),
       transform(col("qv"), (x, i) => when(i === 0, lit(0L)).otherwise(x)).as("qv"))
-    Dedup.embeddingNearDupStarPairsQ(base.unionAll(mut), tPct = 80)
-      .orderBy("a_id", "b_id")
+    base.unionAll(mut)
   }
 
   /** END-TO-END cleaning pipeline over the near-duplicate testbed —

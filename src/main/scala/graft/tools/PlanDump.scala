@@ -1,9 +1,10 @@
 package graft.tools
 
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
+import graft.core.model.{InterleavedDoc, RawSpan}
 import graft.spark.{InterleavedTable, Queries, Sessions}
 
 /** Dump `explain(formatted)` for the plans whose shape carries the
@@ -13,17 +14,33 @@ object PlanDump {
   /** The parquet write plans of [[graft.job.ExtractJob.run]] in scan
     * mode, resuming a 50-document, 16-bucket table after one committed
     * chunk of 4 buckets: one plan per remaining chunk, in run order. */
-  def resumedJobPlans(spark: SparkSession): Seq[QueryExecution] = jobPlans(spark, resumed = true)
+  def resumedJobPlans(spark: SparkSession): Seq[QueryExecution] =
+    jobPlans(spark, InterleavedTable.generate(spark, 50).toDF(), resumed = true)
 
   /** The one parquet write plan of [[graft.job.ExtractJob.run]] in scan
     * mode on a fresh 50-document, 16-bucket table in one chunk. */
-  def freshJobPlans(spark: SparkSession): Seq[QueryExecution] = jobPlans(spark, resumed = false)
+  def freshJobPlans(spark: SparkSession): Seq[QueryExecution] =
+    jobPlans(spark, InterleavedTable.generate(spark, 50).toDF(), resumed = false)
 
-  private def jobPlans(spark: SparkSession, resumed: Boolean): Seq[QueryExecution] = {
-    val input = InterleavedTable.generate(spark, 50).toDF()
+  /** The one parquet write plan of [[graft.job.ExtractJob.run]] with
+    * the giant-document fan-out on, fresh 16-bucket table in one chunk:
+    * a parquet copy of 50 documents plus one 80-page PDF over the
+    * threshold, extracted as two 64-page ranges. */
+  def fanOutJobPlans(spark: SparkSession): Seq[QueryExecution] = {
+    import spark.implicits._
+    val giant = graft.pdf.PdfBuilder.simple((1 to 80).map(p => graft.pdf.PdfBuilder.tjLine(s"page $p")))
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-fanout").toString
+    InterleavedTable.generate(spark, 50).union(Seq(InterleavedDoc("giant", Seq(RawSpan("pdf_bytes",
+      java.util.Base64.getEncoder.encodeToString(giant), "", 0)))).toDS())
+      .write.mode("overwrite").parquet(dir)
+    jobPlans(spark, spark.read.parquet(dir), resumed = false, giantBytesThreshold = 4000L)
+  }
+
+  private def jobPlans(spark: SparkSession, input: DataFrame, resumed: Boolean,
+      giantBytesThreshold: Long = 0L): Seq[QueryExecution] = {
     val table = java.nio.file.Files.createTempDirectory("graft-plan-job").toString
     val cfg = graft.job.ExtractJob.Config(jobId = "plan", numBuckets = 16,
-      chunkBuckets = if (resumed) 4 else 0)
+      chunkBuckets = if (resumed) 4 else 0, giantBytesThreshold = giantBytesThreshold)
     if (resumed) graft.job.ExtractJob.run(spark, input, table, cfg.copy(maxChunks = 1))
     val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
     val listener = new QueryExecutionListener {
@@ -70,6 +87,11 @@ object PlanDump {
     freshJobPlans(spark).headOption.foreach(show("Extraction, scan mode, fresh table in one " +
       "chunk: every bucket is pending, so the scan feeds Generate(ExtractRows) with NO " +
       "bucket filter -- NO join, NO Exchange", _))
+    fanOutJobPlans(spark).headOption.foreach(show("Extraction, giant fan-out on: a giant's " +
+      "page count becomes a column and explode(sequence) makes one row per page range, " +
+      "which the SAME Generate(ExtractRows) (outer: a failed range keeps a null row) " +
+      "extracts after one round-robin Exchange; ONE hash Exchange on (doc, bucket, bytes) " +
+      "reassembles the extracted ranges -- no typed object round trip", _))
 
     dump("q3 (dim-filter -> broadcast join -> agg -> top-k): fact side never broadcast-shuffled",
       Queries.q3TopOrders(spark, sf))

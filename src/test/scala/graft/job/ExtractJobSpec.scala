@@ -145,8 +145,16 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     val corruptGiant = InterleavedDoc("doc_bad",
       Seq(RawSpan("pdf_bytes", InterleavedGen.b64(
         Array.fill[Byte](5000)('x'.toByte)), "", 0)))
+    // a giant with no pages (padded past the threshold) is an empty
+    // document, as direct extraction writes it; a giant whose pages
+    // carry unmapped font codes sums them over its chunks
+    val zeroPage = InterleavedDoc("doc_zero", Seq(RawSpan("pdf_bytes", InterleavedGen.b64(
+      graft.pdf.PdfBuilder.simple(Seq(), fontExtra = s"/Pad (${"p" * 2000})")), "", 0)))
+    val unmapped = InterleavedDoc("doc_unmapped", Seq(RawSpan("pdf_bytes", InterleavedGen.b64(
+      graft.pdf.PdfBuilder.simple((1 to 100).map(p => graft.pdf.PdfBuilder.tjLine(s"p$p" + "\u00FF")))),
+      "", 0)))
     val normals = (0L until 20L).map(i => InterleavedGen.docWithGolden(i)._1)
-    val input = spark.createDataset(normals :+ huge :+ corruptGiant).toDF()
+    val input = spark.createDataset(normals :+ huge :+ corruptGiant :+ zeroPage :+ unmapped).toDF()
 
     val direct = tmpDir("graft-direct"); val fanned = tmpDir("graft-fanout")
     val s1 = ExtractJob.run(spark, input, direct, ExtractJob.Config(numBuckets = 8))
@@ -158,6 +166,14 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     val hugeSpans = readSpans(fanned)("doc_huge")
     assert(hugeSpans.map(_.text) == hugeTexts)
     assert(hugeSpans.map(_.order) == (0 until 500))
+    assert(readSpans(fanned).get("doc_zero").contains(Seq()))
+    // per-bucket lineage: docs and bytes once per doc, spans of whole
+    // docs only, failures once per doc, unmapped codes summed
+    def lineage(t: String) = TableIO.readLineage(spark, t)
+      .select("bucket", "doc_count", "span_count", "bytes_in", "failed_docs", "unmapped_codes")
+      .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Int]).toSeq
+    assert(lineage(direct) == lineage(fanned))
+    assert(lineage(fanned).map(_.last.asInstanceOf[Long]).sum == 100L)
   }
 
   test("kill after k chunks + resume ≡ single run (resume invariance)") {

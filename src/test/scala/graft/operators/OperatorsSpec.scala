@@ -215,23 +215,6 @@ class OperatorsSpec extends AnyFunSuite {
     assert(pairs(0).getAs[Long]("jaccard_pm") == 666L)
   }
 
-  test("boundedCollectLongs: every buffer capped at the limit; COMPLETE list below it (shuffled merge path)") {
-    val df = spark.range(1000).select((col("id") % 7).as("k"), col("id").as("v"))
-      .repartition(8) // force multi-partial merge
-    val rows = df.groupBy("k").agg(
-      count(lit(1)).as("n"),
-      size(TF.boundedCollectLongs(col("v"), 10)).as("capped_n"),
-      sort_array(TF.boundedCollectLongs(col("v"), 200)).as("full")).collect()
-    rows.foreach { r =>
-      assert(r.getInt(2) == 10, "over-the-bound group must truncate at limit")
-      // under the bound (each group has ~143 elements < 200) the list is
-      // complete and, sorted, deterministic
-      val full = r.getSeq[Long](3)
-      assert(full.size == r.getLong(1))
-      assert(full == full.sorted)
-    }
-  }
-
   test("capped jaccard (bounded buffers) matches the unbounded-collect reference output") {
     val d = docs(
       (1L, "a b c d e f"), (2L, "a b c d x y"), (3L, "a b c q r s"),
@@ -550,17 +533,14 @@ class OperatorsSpec extends AnyFunSuite {
         .head().getSeq[String](0).toList == List("b", "a"))
       // the round-4 aggregates are SQL-registered through the same extensions
       assert(s2.sql(
-        "SELECT size(bounded_collect_longs(CAST(x AS BIGINT), 2)) FROM VALUES (3), (1), (2) t(x)")
-        .head().getInt(0) == 2)
-      assert(s2.sql(
         "SELECT bottom_k_distinct(CAST(x AS BIGINT), 2) FROM VALUES (5), (1), (5), (3) t(x)")
         .head().getSeq[Long](0).toList == List(1L, 3L))
       // malformed parameterized calls fail with a CLEAR message at
       // resolution time, not a raw internal IndexOutOfBounds/NPE
       val missing = intercept[Exception] {
-        s2.sql("SELECT bounded_collect_longs(CAST(x AS BIGINT)) FROM VALUES (1) t(x)").collect()
+        s2.sql("SELECT bottom_k_distinct(CAST(x AS BIGINT)) FROM VALUES (1) t(x)").collect()
       }
-      assert(missing.getMessage.contains("buffer limit"), missing.getMessage)
+      assert(missing.getMessage.contains("k (argument 2) is missing"), missing.getMessage)
       val nonLit = intercept[Exception] {
         s2.sql("SELECT bottom_k_distinct(CAST(x AS BIGINT), x) FROM VALUES (1) t(x)").collect()
       }

@@ -15,7 +15,8 @@ import graft.job.ExtractJob
   *  - filters and projections reach the parquet scan (PushedFilters /
   *    pruned ReadSchema);
   *  - a resumed extraction job reads its pending buckets with no join,
-  *    and a fresh one in one chunk reads every row with no filter.
+  *    and a fresh one in one chunk reads every row with no filter;
+  *  - the giant fan-out extracts page ranges with the same generator.
   */
 class PlanSpec extends AnyFunSuite {
 
@@ -87,6 +88,22 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.linesIterator.exists(l => l.contains("Filter") && l.contains("pmod")),
       s"tautological bucket filter in the fresh job's plan:\n$plan")
     assert(plan.contains("extractrows"), s"extraction generator missing:\n$plan")
+  }
+
+  test("giant fan-out: page ranges go through the ExtractRows Generate, with no typed object step") {
+    // the fan-out's write plan over a parquet scan: the giants' page
+    // ranges are extracted by the same generator as every other row
+    // (an outer Generate), and reassembled by one (doc, bucket, bytes) exchange
+    val plans = graft.tools.PlanDump.fanOutJobPlans(spark).map(_.executedPlan.toString)
+    assert(plans.size == 1, s"expected one write for the one chunk, got ${plans.size}")
+    val plan = plans.head
+    assert(!plan.contains("DeserializeToObject") && !plan.contains("MapPartitions"),
+      s"typed object step in the fan-out plan:\n$plan")
+    assert("""Generate extractrows\(doc_id#\d+, spans#\d+, 1, 0,""".r.findFirstIn(plan).isDefined,
+      s"normal-document ExtractRows generator missing:\n$plan")
+    assert("""Generate extractrows\([^\n]*start_page#\d+, page_count#\d+[^\n]*, true, \[""".r
+      .findFirstIn(plan).isDefined, s"page-range ExtractRows generator (outer) missing:\n$plan")
+    assert(plan.contains("Generate explode"), s"page-range explode missing:\n$plan")
   }
 
   test("filter + projection are pushed into the parquet scan") {
