@@ -162,16 +162,23 @@ object Bench {
     * WHOLE doc (inline payload — production chunks would carry an
     * object-store ref), so small chunks multiply that fixed cost;
     * ~8 chunks per doc keeps refactor overhead well under the
-    * straggler win. */
+    * straggler win.
+    *
+    * The corpus holds fewer giants than cores (one per 4 cores), one per
+    * scan file: `cores` files, file p holding the p-th slice of the
+    * normal docs and, for p < giants, giant p. So OFF, the task that
+    * reads a giant runs all of it; ON, each giant's 8 page ranges spread
+    * over every core, and `max_task_on_ms` shows the split. */
   private def measureSkew(cores: Int): SkewResult = {
-    val nNormal = 4000; val nGiant = 4; val giantPages = 24000; val linesPerPage = 600
+    val nNormal = 4000; val nGiant = math.max(1, cores / 4)
+    val giantPages = 24000; val linesPerPage = 600
     val spark = Sessions.bench(cores, "graft-bench-skew")
     import spark.implicits._
     val corpusDir = s"/root/repo/target/graft-bench/skew-corpus-$nGiant-$giantPages-$linesPerPage"
-    if (!Files.exists(Paths.get(s"$corpusDir/_SUCCESS"))) {
-      val normal = spark.range(nNormal)
-        .map(i => graft.fixtures.InterleavedGen.docWithGolden(i)._1).toDF()
-      val giants = spark.range(nGiant).map { g =>
+    // one scan file per core: the layout depends on the core count too
+    val layoutDir = s"$corpusDir-on-$cores"
+    if (!Files.exists(Paths.get(s"$layoutDir/_SUCCESS"))) {
+      def giant(g: Long): InterleavedDoc = {
         // OP-DENSE pages (600 positioned one-glyph lines each): the
         // content-stream interpreter work per page far outweighs both
         // the stored bytes (streams deflate heavily) and the extracted
@@ -186,11 +193,15 @@ object Bench {
         val pdf = graft.pdf.PdfBuilder.simple(pages, flate = true)
         InterleavedDoc(f"giant$g%08d", Seq(RawSpan("pdf_bytes",
           java.util.Base64.getEncoder.encodeToString(pdf), "", 0)))
-      }.toDF()
-      normal.unionAll(giants).repartition(cores)
-        .write.mode("overwrite").parquet(corpusDir)
+      }
+      // one element per range partition: task p writes file p
+      spark.range(0, cores, 1, cores).flatMap { p =>
+        (p * nNormal / cores until (p + 1) * nNormal / cores).iterator
+          .map(i => graft.fixtures.InterleavedGen.docWithGolden(i)._1) ++
+          (if (p < nGiant) Iterator(giant(p)) else Iterator.empty)
+      }.write.mode("overwrite").parquet(layoutDir)
     }
-    val input = Parquet.read(spark, corpusDir)
+    val input = Parquet.read(spark, layoutDir)
     val outBase = if (Files.isDirectory(Paths.get("/dev/shm"))) "/dev/shm" else "/tmp"
     def run(tag: String, threshold: Long): (Double, Long, Boolean) = {
       val out = s"$outBase/graft-bench-skew-$tag"

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, IntegerType}
 import org.apache.spark.util.AccumulatorV2
 import graft.core.model._
-import graft.io.{Parquet, TableIO}
+import graft.io.{Parquet, SinkParquetFormat, TableIO}
 
 /** The flagship extraction pipeline — the reference's whole dataflow
   * (queue → worker pool → engines → JSON sink → Redis tracker,
@@ -125,7 +125,15 @@ object ExtractJob {
     * (`doc_id`, span text). The attempt costs CPU and allocation, and
     * on a real window's pages it ends in a fallback to PLAIN anyway.
     * Where spans repeat (boilerplate) the compressed PLAIN pages came
-    * out no larger than the dictionary ones on the fixtures measured. */
+    * out no larger than the dictionary ones on the fixtures measured.
+    *
+    * Both sinks write through [[graft.io.SinkParquetFormat]], which
+    * drops from each write task's Hadoop conf only the entries Hadoop
+    * loaded unchanged from its bundled `*-default.xml` files (a task
+    * reads those keys as the equal compiled defaults). These options are
+    * set on the write, never loaded from a default file, so they always
+    * reach the task. The format cannot trim the second copy of the conf
+    * that Spark's write stats tracker ships; it stays whole. */
   val SinkOptions: Map[String, String] = Seq("doc_id", "spans.list.element.text")
     .map(c => s"parquet.enable.dictionary#$c" -> "false").toMap
 
@@ -211,7 +219,11 @@ object ExtractJob {
         // fails exactly as direct extraction does
         val ranges = subAll.filter(isGiant)
           .withColumn("pages", pageCount(payload.getField("text").cast(BinaryType)))
-          .select($"doc_id", $"spans", $"bucket",
+          // names the input row before the explode: two rows that share a
+          // doc_id (even their payload) reassemble as two documents, as
+          // direct extraction writes them
+          .withColumn("row", monotonically_increasing_id())
+          .select($"row", $"doc_id", $"spans", $"bucket",
             (octet_length(payload.getField("text")) + octet_length(payload.getField("media_ref")))
               .as("bytes"),
             explode(sequence(lit(1), greatest($"pages", lit(1)), lit(cfg.giantChunkPages)))
@@ -226,7 +238,7 @@ object ExtractJob {
           cfg.opts.copy(parityStartOffByOne = false), $"bucket", Some(chunkAcc)))
         val parts = ranges.select(
           GraftColumnBridge.toColumn(GeneratorOuter(rows.asInstanceOf[Generator])),
-          $"doc_id".as("id"), $"bucket", $"bytes", $"start_page")
+          $"row", $"doc_id".as("id"), $"bucket", $"bytes", $"start_page")
         // a giant's lineage, counted once per document in this action
         val settle = udf { (bucket: Int, bytes: Long, spans: Int) =>
           acc.add(bucket -> BucketStats(docCount = 1, spanCount = math.max(spans, 0),
@@ -237,7 +249,7 @@ object ExtractJob {
         // chunk and renumbered 0..n-1. A failed chunk anywhere fails the
         // doc (the flatten of a null chunk is null): counted, never
         // written with missing pages
-        val giantOut = parts.groupBy($"id", $"bucket", $"bytes")
+        val giantOut = parts.groupBy($"row", $"id", $"bucket", $"bytes")
           .agg(flatten(transform(sort_array(collect_list(struct($"start_page", $"spans"))),
             _.getField("spans"))).as("spans"))
           .filter(settle($"bucket", $"bytes", coalesce(size($"spans"), lit(-1))))
@@ -263,9 +275,10 @@ object ExtractJob {
         child.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
         GraftColumnBridge.withSession(extracted, child)
       }
-      val writer = writeDf.write.mode("append").options(SinkOptions)
+      val writer = writeDf.write.format(classOf[SinkParquetFormat].getName)
+        .mode("append").options(SinkOptions)
       (if (cfg.mode == "bucketed") writer.partitionBy("bucket") else writer)
-        .parquet(TableIO.dataDir(tableDir))
+        .save(TableIO.dataDir(tableDir))
 
       chunkAcc.value.foreach { case (b, s) => acc.add(b -> BucketStats(unmappedCodes = s.unmappedCodes)) }
       val stats = acc.value

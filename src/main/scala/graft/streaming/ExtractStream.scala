@@ -48,8 +48,15 @@ object ExtractStream {
     * processes the current backlog then stops — the batch-equivalent
     * trigger used by tests and catch-up runs.
     *
-    * The parquet file sink builds its Hadoop conf from its session's
-    * conf and ignores writer options, so the batch job's
+    * The sink writes through the batch job's format,
+    * [[graft.io.SinkParquetFormat]], so each micro-batch's write tasks
+    * get the same trimmed Hadoop conf and the files are those a
+    * `format("parquet")` sink writes, with the same `_spark_metadata`
+    * log. The trim drops only entries loaded unchanged from Hadoop's
+    * bundled defaults, which a task reads back as the equal compiled
+    * defaults; the second copy Spark's write stats tracker ships is not
+    * reached and stays whole. The file sink builds its Hadoop conf from its session's conf
+    * and ignores writer options, so the batch job's
     * [[graft.job.ExtractJob.SinkOptions]] ride a clone of `spark`'s
     * session (its conf plus those options; `spark` is not mutated). The
     * query is therefore listed under that clone's `streams`, not under
@@ -64,7 +71,7 @@ object ExtractStream {
       .option("maxFilesPerTrigger", maxFilesPerTrigger) // admission control ≡ Semaphore(5), data-sized
       .parquet(corpusDir)
     extract(session, src, opts).writeStream
-      .format("parquet")
+      .format(classOf[graft.io.SinkParquetFormat].getName)
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append)

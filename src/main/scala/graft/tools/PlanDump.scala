@@ -90,8 +90,9 @@ object PlanDump {
     fanOutJobPlans(spark).headOption.foreach(show("Extraction, giant fan-out on: a giant's " +
       "page count becomes a column and explode(sequence) makes one row per page range, " +
       "which the SAME Generate(ExtractRows) (outer: a failed range keeps a null row) " +
-      "extracts after one round-robin Exchange; ONE hash Exchange on (doc, bucket, bytes) " +
-      "reassembles the extracted ranges -- no typed object round trip", _))
+      "extracts after one round-robin Exchange; ONE hash Exchange on (row, doc, bucket, bytes), " +
+      "row an id of the input row taken before the explode, reassembles the extracted " +
+      "ranges -- no typed object round trip", _))
 
     dump("q3 (dim-filter -> broadcast join -> agg -> top-k): fact side never broadcast-shuffled",
       Queries.q3TopOrders(spark, sf))

@@ -153,15 +153,24 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     val unmapped = InterleavedDoc("doc_unmapped", Seq(RawSpan("pdf_bytes", InterleavedGen.b64(
       graft.pdf.PdfBuilder.simple((1 to 100).map(p => graft.pdf.PdfBuilder.tjLine(s"p$p" + "\u00FF")))),
       "", 0)))
+    // two input rows with one doc_id and one payload are two documents
+    val twin = InterleavedDoc("doc_twin", Seq(RawSpan("pdf_bytes", InterleavedGen.b64(
+      graft.pdf.PdfBuilder.simple((1 to 100).map(p => graft.pdf.PdfBuilder.tjLine(s"twin $p")))),
+      "", 0)))
     val normals = (0L until 20L).map(i => InterleavedGen.docWithGolden(i)._1)
-    val input = spark.createDataset(normals :+ huge :+ corruptGiant :+ zeroPage :+ unmapped).toDF()
+    val input = spark.createDataset(
+      normals :+ huge :+ corruptGiant :+ zeroPage :+ unmapped :+ twin :+ twin).toDF()
 
     val direct = tmpDir("graft-direct"); val fanned = tmpDir("graft-fanout")
     val s1 = ExtractJob.run(spark, input, direct, ExtractJob.Config(numBuckets = 8))
     val s2 = ExtractJob.run(spark, input, fanned, ExtractJob.Config(numBuckets = 8,
       giantBytesThreshold = 2000, giantChunkPages = 32))
     assert(readSpans(direct) == readSpans(fanned))
-    assert(s1.docs == s2.docs && s1.spans == s2.spans)
+    def rows(t: String) = spark.read.parquet(TableIO.dataDir(t)).as[ExtractJob.OutRow]
+      .collect().map(r => (r.doc_id, r.spans.sortBy(_.order))).toSeq.sortBy(_.toString)
+    assert(rows(direct) == rows(fanned))
+    assert(rows(fanned).count(_._1 == "doc_twin") == 2)
+    assert(s1 == s2)
     assert(s2.failedDocs == 1) // the corrupt giant, fail-soft
     val hugeSpans = readSpans(fanned)("doc_huge")
     assert(hugeSpans.map(_.text) == hugeTexts)
