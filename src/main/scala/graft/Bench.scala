@@ -1,13 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import graft.core.model._
 import graft.job.ExtractJob
 import graft.io.{Parquet, TableIO}
-import graft.spark.{Queries, Sessions}
+import graft.spark.{Queries, Sessions, TaskMeter}
 import graft.tools.ExtractCli
 
 /** Round benchmark (driver-run): the headline metric is extraction
@@ -18,10 +16,8 @@ import graft.tools.ExtractCli
   *
   * The graded N→4N pair is local[2] → local[8] (cores 2 vs 8); the
   * 8→32 pair is ALSO reported but brackets this single VM's memory-
-  * bandwidth ceiling (a plain-threads probe, graft.tools.ProfCli,
-  * shows the same ceiling without Spark), so its wall-clock efficiency
-  * is a host property, not a property of the (shuffle-free, map-only)
-  * job.
+  * bandwidth ceiling, so its wall-clock efficiency is a host property,
+  * not a property of the (shuffle-free, map-only) job.
   *
   * This host is SHARED and noisy: round-1 recorded local[32] at 19.5k
   * docs/s in one window and 61-121k in others. The harness therefore
@@ -39,16 +35,6 @@ import graft.tools.ExtractCli
   *     `anomaly` if still inverted.
   */
 object Bench {
-
-  /** Executor CPU/run time across all tasks (ns/ms), via listener. */
-  private final class CpuListener extends SparkListener {
-    val cpuNs = new AtomicLong(0L)
-    val runMs = new AtomicLong(0L)
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) { cpuNs.addAndGet(m.executorCpuTime); runMs.addAndGet(m.executorRunTime) }
-    }
-  }
 
   final case class Rep(wallDps: Double, cpuDps: Double, stealPct: Double, clean: Boolean)
   final case class Level(reps: Vector[Rep]) {
@@ -136,16 +122,6 @@ object Bench {
     * 32-thread query's wall shows far above this gate. */
   private val AmbientGatePct = 10.0
 
-  /** Max single-task wall time (ms) via listener — the straggler metric
-    * for the giant-doc fan-out experiment. */
-  private final class MaxTaskListener extends SparkListener {
-    val maxMs = new AtomicLong(0L)
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) maxMs.getAndUpdate(cur => math.max(cur, m.executorRunTime))
-    }
-  }
-
   final case class SkewResult(giantDocs: Int, giantPages: Int, normalDocs: Int,
       wallOffSec: Double, wallOnSec: Double, maxTaskOffMs: Long, maxTaskOnMs: Long,
       drained: Boolean)
@@ -206,20 +182,18 @@ object Bench {
     def run(tag: String, threshold: Long): (Double, Long, Boolean) = {
       val out = s"$outBase/graft-bench-skew-$tag"
       TableIO.deleteRecursively(out)
-      val lst = new MaxTaskListener
-      spark.sparkContext.addSparkListener(lst)
-      System.gc()
-      val t0 = System.nanoTime()
-      ExtractJob.run(spark, input, out, ExtractJob.Config(jobId = s"skew-$tag",
-        giantBytesThreshold = threshold, giantChunkPages = giantPages / 8))
-      val wall = (System.nanoTime() - t0) / 1e9
-      // listener events are async: the straggler's TaskEnd (by
-      // definition the last event) may still be queued — drain first;
-      // an un-drained bus is flagged so max_task can't silently lie
-      val drained = org.apache.spark.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(lst)
+      // the meter drains the bus before it reads: the straggler's TaskEnd
+      // is by definition the last event; an un-drained bus is flagged so
+      // max_task can't silently lie
+      val (wall, c) = TaskMeter.around(spark.sparkContext) {
+        System.gc()
+        val t0 = System.nanoTime()
+        ExtractJob.run(spark, input, out, ExtractJob.Config(jobId = s"skew-$tag",
+          giantBytesThreshold = threshold, giantChunkPages = giantPages / 8))
+        (System.nanoTime() - t0) / 1e9
+      }
       TableIO.deleteRecursively(out)
-      (wall, lst.maxMs.get(), drained)
+      (wall, c.maxTaskMs, c.drained)
     }
     // warmup runs BOTH code paths (fan-out ON covers the normal path
     // for the 4000 normal docs AND the chunk/reassembly path), discarded
@@ -234,8 +208,6 @@ object Bench {
   private def measureLevel(cores: Int, corpusDir: String,
       targetReps: Int, maxAttempts: Int): Level = {
     val spark = Sessions.bench(cores, s"graft-bench-extract-$cores")
-    val listener = new CpuListener
-    spark.sparkContext.addSparkListener(listener)
     val input = Parquet.read(spark, s"$corpusDir/interleaved_docs.parquet")
     val outBase =
       if (Files.isDirectory(Paths.get("/dev/shm"))) "/dev/shm" else "/tmp"
@@ -243,27 +215,28 @@ object Bench {
     def once(tag: String): Rep = {
       val out = s"$outBase/graft-bench-out-$tag"
       TableIO.deleteRecursively(out)
-      // settle the heap so a full GC from the previous run doesn't land
-      // inside this timed region
-      System.gc()
-      val steal0 = cpuStat()
-      val cpu0 = listener.cpuNs.get()
-      val t0 = System.nanoTime()
-      val st = ExtractJob.run(spark, input, out, ExtractJob.Config(jobId = s"bench-$tag"))
-      val wallSec = (System.nanoTime() - t0) / 1e9
-      val steal1 = cpuStat()
-      // drain the async listener bus so the last tasks' metrics land;
-      // an un-drained bus means the CPU number may be short — treat the
-      // rep as dirty (same retry path as a steal-contaminated window)
-      val drained = org.apache.spark.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
-      val cpuSec = (listener.cpuNs.get() - cpu0) / 1e9
+      // the meter drains the async listener bus so the last tasks'
+      // metrics land; an un-drained bus means the CPU number may be
+      // short — the rep is dirty (same retry path as a steal-contaminated
+      // window)
+      val ((st, wallSec, steal0, steal1), c) = TaskMeter.around(spark.sparkContext) {
+        // settle the heap so a full GC from the previous run doesn't land
+        // inside this timed region
+        System.gc()
+        val steal0 = cpuStat()
+        val t0 = System.nanoTime()
+        val st = ExtractJob.run(spark, input, out, ExtractJob.Config(jobId = s"bench-$tag"))
+        val wallSec = (System.nanoTime() - t0) / 1e9
+        (st, wallSec, steal0, cpuStat())
+      }
+      val cpuSec = c.cpuNs / 1e9
       TableIO.deleteRecursively(out)
       val stealPct =
         if (steal1._1 > steal0._1)
           100.0 * (steal1._2 - steal0._2) / (steal1._1 - steal0._1)
         else 0.0
       Rep(st.docs / wallSec, st.docs / math.max(cpuSec, 1e-9), stealPct,
-        clean = stealPct <= StealGatePct && drained)
+        clean = stealPct <= StealGatePct && c.drained)
     }
 
     once(s"warm-$cores") // JIT/page-cache warmup, discarded
@@ -405,34 +378,29 @@ object Bench {
     //   2. an AMBIENT-CPU probe — system-wide busy jiffies minus this
     //      JVM's own CPU time, as %% of machine capacity (same-VM
     //      contention: someone else burning our cores),
-    //   3. task-metric CPU seconds (listener, bus drained) — recorded
-    //      per run so wall/CPU utilization is auditable across windows,
+    //   3. task-metric CPU seconds, jobs, shuffle bytes and the slowest
+    //      task (TaskMeter, bus drained) — recorded per run so wall/CPU
+    //      utilization is auditable across windows,
     // plus a cross-run COHERENCE band: the clean runs' walls must
     // agree within CoherenceBand (the extract sections' round-5 fix,
     // one section further). Best-of-clean is reported; a query with no
     // clean coherent run after retries lands in `queries_dirty`.
-    final case class QRun(sec: Double, cpuSec: Double, stealPct: Double,
+    final case class QRun(sec: Double, counts: TaskMeter.Counts, stealPct: Double,
         ambientPct: Double, clean: Boolean)
-    final case class QTime(sec: Double, cpuSec: Double, stealPct: Double,
-        ambientPct: Double, clean: Boolean, coherent: Boolean, runs: Int)
-    val qListener = new CpuListener
-    spark.sparkContext.addSparkListener(qListener)
+    final case class QTime(best: QRun, clean: Boolean, coherent: Boolean, runs: Int)
     def timeQuery(name: String): QTime = {
       val fn = Queries.all(name)
       runFullPlan(fn(spark, sfDir)) // warmup (codegen + JIT)
       def timed(): QRun = {
-        val s0 = cpuStat()
-        val busy0 = cpuBusy()
-        val proc0 = processCpuNs()
-        val cpu0 = qListener.cpuNs.get()
-        val t0 = System.nanoTime()
-        runFullPlan(fn(spark, sfDir))
-        val sec = (System.nanoTime() - t0) / 1e9
-        val s1 = cpuStat()
-        val busy1 = cpuBusy()
-        val proc1 = processCpuNs()
-        val drained = org.apache.spark.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
-        val cpuSec = (qListener.cpuNs.get() - cpu0) / 1e9
+        val ((sec, s0, busy0, proc0, s1, busy1, proc1), c) = TaskMeter.around(spark.sparkContext) {
+          val s0 = cpuStat()
+          val busy0 = cpuBusy()
+          val proc0 = processCpuNs()
+          val t0 = System.nanoTime()
+          runFullPlan(fn(spark, sfDir))
+          val sec = (System.nanoTime() - t0) / 1e9
+          (sec, s0, busy0, proc0, cpuStat(), cpuBusy(), processCpuNs())
+        }
         val steal =
           if (s1._1 > s0._1) 100.0 * (s1._2 - s0._2) / (s1._1 - s0._1) else 0.0
         val ambient =
@@ -442,8 +410,8 @@ object Bench {
             val oursJiffies = (proc1 - proc0) / 1e9 * 100.0
             math.max(0.0, 100.0 * ((busy1 - busy0) - oursJiffies) / (s1._1 - s0._1))
           } else 0.0
-        QRun(sec, cpuSec, steal, ambient,
-          clean = steal <= StealGatePct && ambient <= AmbientGatePct && drained)
+        QRun(sec, c, steal, ambient,
+          clean = steal <= StealGatePct && ambient <= AmbientGatePct && c.drained)
       }
       def coherent(rs: Seq[QRun]): Boolean = {
         // ratio band ALONE condemns sub-second walls on pure JIT/GC
@@ -463,10 +431,8 @@ object Bench {
         runs :+= timed()
       val clean = runs.filter(_.clean)
       val kept = if (clean.nonEmpty) clean else runs
-      val best = kept.minBy(_.sec)
       val coh = coherent(runs)
-      QTime(best.sec, best.cpuSec, best.stealPct, best.ambientPct,
-        clean.nonEmpty && coh, coh, runs.length)
+      QTime(kept.minBy(_.sec), clean.nonEmpty && coh, coh, runs.length)
     }
     // first sweep, then CALM RE-MEASUREMENT passes: a query stamped
     // dirty mid-sweep (an ambient burst that has since passed) gets
@@ -497,12 +463,14 @@ object Bench {
       f"""{"wall_dps":${r.wallDps}%.1f,"cpu_dps":${r.cpuDps}%.1f,""" +
         f""""steal_pct":${r.stealPct}%.2f,"clean":${r.clean}}""").mkString("[", ",", "]")
 
-    val qs = qTimes.map { case (k, q) => f""""$k":${q.sec}%.3f""" }.mkString("{", ",", "}")
+    val qs = qTimes.map { case (k, q) => f""""$k":${q.best.sec}%.3f""" }.mkString("{", ",", "}")
     val qsDirty = qTimes.filter(!_._2.clean).map(q => s""""${q._1}"""").mkString("[", ",", "]")
-    val qMeta = qTimes.map { case (k, q) =>
-      f""""$k":{"sec":${q.sec}%.3f,"cpu_sec":${q.cpuSec}%.3f,""" +
-        f""""steal_pct":${q.stealPct}%.2f,"ambient_pct":${q.ambientPct}%.2f,""" +
-        f""""clean":${q.clean},"coherent":${q.coherent},"runs":${q.runs}}"""
+    val qMeta = qTimes.map { case (k, QTime(b, clean, coherent, runs)) =>
+      val c = b.counts
+      f""""$k":{"sec":${b.sec}%.3f,"cpu_sec":${c.cpuNs / 1e9}%.3f,"jobs":${c.jobs},""" +
+        f""""shuffle_bytes":${c.shuffleReadBytes + c.shuffleWriteBytes},"max_task_ms":${c.maxTaskMs},""" +
+        f""""steal_pct":${b.stealPct}%.2f,"ambient_pct":${b.ambientPct}%.2f,""" +
+        f""""clean":$clean,"coherent":$coherent,"runs":$runs}"""
     }.mkString("{", ",", "}")
     // one COMPACT stdout line (the driver captures a bounded output
     // tail — round 3's committed artifact was truncated mid-line and
@@ -528,7 +496,8 @@ object Bench {
         f""""wall_on_sec":${skew.wallOnSec}%.2f,"max_task_off_ms":${skew.maxTaskOffMs},""" +
         f""""max_task_on_ms":${skew.maxTaskOnMs},"listener_drained":${skew.drained}},""" +
         f""""queries_dirty":$qsDirty,""" +
-        f""""host_steal_pct":$stealPct%.2f,"steal_gate_pct":$StealGatePct,"ambient_gate_pct":$AmbientGatePct"""
+        f""""host_steal_pct":$stealPct%.2f,"steal_gate_pct":$StealGatePct,"ambient_gate_pct":$AmbientGatePct,""" +
+        f""""host_cores":${Runtime.getRuntime.availableProcessors}"""
     // cwd-relative (sbt runs from the repo root); overridable so a
     // foreign checkout cannot lose a completed run at the write step.
     // VERSIONED: a completed record is never overwritten — if the

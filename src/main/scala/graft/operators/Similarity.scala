@@ -87,7 +87,10 @@ object Similarity {
     *
     * Degenerate input: an empty query set or centroid table yields no
     * rows, and a row with a null vector is as if it were absent (no
-    * centroid, codeword, list member or query). */
+    * centroid, codeword, list member or query). A query id given to two
+    * query rows fails when the operator is called, naming the id: the
+    * per-query window would merge their top-k. The same holds for every
+    * IVF and IVF-PQ operator below. */
   def ivfTopK(queries: DataFrame, items: DataFrame, k: Int,
       numCentroids: Int = 8, nProbe: Int = 2): DataFrame =
     coarseTopK(queries, items, seedCentroids(items, numCentroids), k, nProbe)
@@ -113,7 +116,7 @@ object Similarity {
   private def coarseTopK(queries: DataFrame, items: DataFrame, cent: DataFrame, k: Int,
       nProbe: Int): DataFrame = {
     val small = collectSmall(asQueries(queries), centroidRows(cent))
-    scanAndRank(items, new IvfFold(L2Table(small(Query)), L2Table(small(Cent)), nProbe, Nil,
+    scanAndRank(items, new IvfFold(queryTable(small), L2Table(small(Cent)), nProbe, Nil,
       exact = true), k)
   }
 
@@ -177,6 +180,14 @@ object Similarity {
       .groupBy(_.getInt(0))
       .map { case (p, rs) => p -> rs.map(r => r.getLong(1) -> r.getSeq[Long](2).toArray) }
       .withDefaultValue(Nil)
+
+  /** The query vectors of `small`; an id given twice fails, naming it. */
+  private def queryTable(small: Map[Int, Seq[(Long, Array[Long])]]): L2Table = {
+    val ids = small(Query).map(_._1)
+    val dups = ids.diff(ids.distinct).distinct.sorted
+    require(dups.isEmpty, s"duplicate query id ${dups.mkString(", ")}: each query row needs its own id")
+    L2Table(small(Query))
+  }
 
   /** Scores every item against `fold` in one map-side pass and keeps
     * each query's top `k`: by `adot` when the fold has codebooks, else
@@ -263,7 +274,7 @@ object Similarity {
     }, iterations, identity, None)
     val small = collectSmall(asQueries(queries), centroidRows(seedCentroids(items, numCentroids)),
       parts(cb))
-    scanAndRank(items, new IvfFold(L2Table(small(Query)), L2Table(small(Cent)), nProbe,
+    scanAndRank(items, new IvfFold(queryTable(small), L2Table(small(Cent)), nProbe,
       (0 until numSub).map(m => L2Table(small(m))), exact = shortlist > 0), k, shortlist)
   }
 

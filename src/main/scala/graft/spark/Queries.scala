@@ -151,14 +151,19 @@ object Queries {
     * same formula — a wrong run-table entry or mode bug flips the
     * count. The reference errors "Unsupported filter" on this entire
     * image class (mod.rs:163-165). */
-  def pdfzImagesFax(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    s.range(20).repartition(4).flatMap { id =>
-      val w = 8 + (id % 5).toInt
-      val h = 6 + (id % 3).toInt
-      val pdf = graft.pdf.PdfBuilder.withCcittImagePattern(w, h,
+  def pdfzImagesFax(s: SparkSession, dir: String): DataFrame =
+    blackPixels(s, 20, "fax") { id =>
+      graft.pdf.PdfBuilder.withCcittImagePattern(8 + (id % 5).toInt, 6 + (id % 3).toInt,
         (x, y) => (x + 2 * y + id) % 4 != 0)
-      graft.pdf.PdfImages.documentImages(f"fax$id%04d", pdf).map { im =>
+    }
+
+  /** One `(id, media_ref, width, height, black_px)` row per image of each
+    * of `n` built documents (`<prefix><id>` for id 0 until n), its black
+    * pixels counted in the decoded PNG, ordered by id. */
+  private def blackPixels(s: SparkSession, n: Long, prefix: String)(pdf: Long => Array[Byte]): DataFrame = {
+    import s.implicits._
+    s.range(n).repartition(4).flatMap { id =>
+      graft.pdf.PdfImages.documentImages(f"$prefix$id%04d", pdf(id)).map { im =>
         val (pw, ph, rgba) = graft.pdf.PdfImages.decodePng(im.bytes).get
         val black = (0 until pw * ph).count(i => (rgba(i * 4) & 0xff) == 0)
         (id, im.name, im.width, im.height, black.toLong)
@@ -178,23 +183,12 @@ object Queries {
     * dims and black-pixel counts analytically from the same pattern
     * formula. The reference errors "Unsupported filter" on this whole
     * class (mod.rs:163-165). */
-  def pdfzImagesJbig2(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    s.range(20).repartition(4).flatMap { id =>
-      val w = 10 + (id % 6).toInt
-      val h = 7 + (id % 4).toInt
-      val pdf = graft.pdf.PdfBuilder.withJbig2ImagePattern(w, h,
+  def pdfzImagesJbig2(s: SparkSession, dir: String): DataFrame =
+    blackPixels(s, 20, "jb") { id =>
+      graft.pdf.PdfBuilder.withJbig2ImagePattern(10 + (id % 6).toInt, 7 + (id % 4).toInt,
         (x, y) => (2 * x + y + id) % 5 == 0,
         mmr = id % 2 == 0, template = ((id / 2) % 4).toInt, tpgdon = id % 4 == 1)
-      graft.pdf.PdfImages.documentImages(f"jb$id%04d", pdf).map { im =>
-        val (pw, ph, rgba) = graft.pdf.PdfImages.decodePng(im.bytes).get
-        val black = (0 until pw * ph).count(i => (rgba(i * 4) & 0xff) == 0)
-        (id, im.name, im.width, im.height, black.toLong)
-      }
     }
-    .toDF("id", "media_ref", "width", "height", "black_px")
-    .orderBy("id")
-  }
 
   /** JBIG2 SCANNED-TEXT decode, oracle-pinned: 12 deterministic pages
     * through the symbol-dictionary + text-region path (T.88 §6.5/§6.4
@@ -204,20 +198,8 @@ object Queries {
     * instance layout are closed-form ([[graft.pdf.PdfBuilder
     * .withJbig2TextPattern]]), so the DuckDB twin recomputes the
     * black-pixel counts analytically. */
-  def pdfzImagesJbig2Text(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    s.range(12).repartition(4).flatMap { id =>
-      val nInst = 8 + (id % 3).toInt
-      val pdf = graft.pdf.PdfBuilder.withJbig2TextPattern(id, nInst)
-      graft.pdf.PdfImages.documentImages(f"tx$id%04d", pdf).map { im =>
-        val (pw, ph, rgba) = graft.pdf.PdfImages.decodePng(im.bytes).get
-        val black = (0 until pw * ph).count(i => (rgba(i * 4) & 0xff) == 0)
-        (id, im.name, im.width, im.height, black.toLong)
-      }
-    }
-    .toDF("id", "media_ref", "width", "height", "black_px")
-    .orderBy("id")
-  }
+  def pdfzImagesJbig2Text(s: SparkSession, dir: String): DataFrame =
+    blackPixels(s, 12, "tx")(id => graft.pdf.PdfBuilder.withJbig2TextPattern(id, 8 + (id % 3).toInt))
 
   /** JBIG2 scanned-text in HUFFMAN form (SDHUFF/SBHUFF = 1): the same
     * closed-form glyph pattern as [[pdfzImagesJbig2Text]], coded
@@ -227,21 +209,11 @@ object Queries {
     * alternate uncompressed (even ids) and MMR (odd ids — the
     * JDK-cross-validated T.6 path). Page bits — and so the analytic
     * black counts — are identical to the arithmetic twin. */
-  def pdfzImagesJbig2Huff(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    s.range(12).repartition(4).flatMap { id =>
-      val nInst = 8 + (id % 3).toInt
-      val pdf = graft.pdf.PdfBuilder.withJbig2TextPattern(id, nInst,
+  def pdfzImagesJbig2Huff(s: SparkSession, dir: String): DataFrame =
+    blackPixels(s, 12, "hx") { id =>
+      graft.pdf.PdfBuilder.withJbig2TextPattern(id, 8 + (id % 3).toInt,
         huffman = true, huffMmr = id % 2 == 1)
-      graft.pdf.PdfImages.documentImages(f"hx$id%04d", pdf).map { im =>
-        val (pw, ph, rgba) = graft.pdf.PdfImages.decodePng(im.bytes).get
-        val black = (0 until pw * ph).count(i => (rgba(i * 4) & 0xff) == 0)
-        (id, im.name, im.width, im.height, black.toLong)
-      }
     }
-    .toDF("id", "media_ref", "width", "height", "black_px")
-    .orderBy("id")
-  }
 
   /** ANNEX-D SIMPLE-FONT ENCODINGS, oracle-pinned: deterministic
     * one-page documents cycling StandardEncoding (implicit base),
@@ -1053,12 +1025,7 @@ object Queries {
     * DuckDB twin replays the whole composition. */
   def pipelineCleanCorpus(s: SparkSession, dir: String): DataFrame = {
     val quality = docsPlus(s, dir).where(TF.qualityBucket(col("text")) >= 2)
-    // checkpointRounds: identical labels, but the star-pair generation
-    // materializes once instead of re-deriving per BSP round (measured
-    // 3.24 → 2.05 s on the components query alone at sf0.1)
-    val comp = Dedup.components(
-      Dedup.minhashLshStarPairs(quality, shingleN = 3, numHashes = 8, bands = 4),
-      iterations = 3, checkpointRounds = true)
+    val comp = starComponents(quality)
     quality.join(comp, Seq("doc_id"), "left")
       .where(coalesce(col("component"), col("doc_id")) === col("doc_id"))
       .select(col("doc_id"))
@@ -1079,12 +1046,7 @@ object Queries {
     * all three stages from the shared CTE chains. */
   def pipelineCurate(s: SparkSession, dir: String): DataFrame = {
     val docs = docsPlus(s, dir)
-    val labels = Dedup.components(
-      Dedup.minhashLshStarPairs(docs, shingleN = 3, numHashes = 8, bands = 4),
-      iterations = 3, checkpointRounds = true)
-    val best = Dedup.keepBestPerCluster(docs, labels,
-      TF.qualityBucket(col("text")).cast("long") * 100000L +
-        size(split(col("text"), " ")))
+    val best = Dedup.keepBestPerCluster(docs, starComponents(docs), keepBestScore)
     val kept = docs
       .join(best.select(col("keep_id").as("doc_id"), col("cluster"),
         col("best_score")), Seq("doc_id"))
@@ -1128,10 +1090,16 @@ object Queries {
     * keep-min union pass of the dedup pipeline (3 BSP min-propagation
     * rounds, deterministic; the DuckDB twin replays the same rounds). */
   def dedupComponents(s: SparkSession, dir: String): DataFrame =
-    Dedup.components(
-        Dedup.minhashLshStarPairs(docsPlus(s, dir), shingleN = 3, numHashes = 8, bands = 4),
-        iterations = 3, checkpointRounds = true) // identical labels, edges derived once
-      .orderBy("doc_id")
+    starComponents(docsPlus(s, dir)).orderBy("doc_id")
+
+  /** Three min-propagation rounds over the MinHash-LSH star pairs of
+    * `docs`: the clusters the components, keep-best and pipeline queries
+    * share. checkpointRounds: identical labels, but the star-pair
+    * generation materializes once instead of re-deriving per BSP round
+    * (measured 3.24 → 2.05 s on the components query alone at sf0.1). */
+  private def starComponents(docs: DataFrame): DataFrame =
+    Dedup.components(Dedup.minhashLshStarPairs(docs, shingleN = 3, numHashes = 8, bands = 4),
+      iterations = 3, checkpointRounds = true)
 
   /** Connected components via ALTERNATING LARGE-STAR/SMALL-STAR rounds
     * over the same MinHash-LSH star edges as [[dedupComponents]] — the
@@ -1198,14 +1166,12 @@ object Queries {
     * ([[Dedup.keepBestPerCluster]]). */
   def dedupKeepBest(s: SparkSession, dir: String): DataFrame = {
     val docs = docsPlus(s, dir)
-    val labels = Dedup.components(
-      Dedup.minhashLshStarPairs(docs, shingleN = 3, numHashes = 8, bands = 4),
-      iterations = 3, checkpointRounds = true)
-    Dedup.keepBestPerCluster(docs, labels,
-      TF.qualityBucket(col("text")).cast("long") * 100000L +
-        size(split(col("text"), " ")))
-      .orderBy("cluster")
+    Dedup.keepBestPerCluster(docs, starComponents(docs), keepBestScore).orderBy("cluster")
   }
+
+  /** The keep-best score: quality bucket (×100000), then token count. */
+  private[graft] def keepBestScore: Column =
+    TF.qualityBucket(col("text")).cast("long") * 100000L + size(split(col("text"), " "))
 
   /** Per-doc duplicated-token coverage from the exact-substring spans
     * — interval-union length of each doc's maximal duplicated runs,
@@ -1227,12 +1193,13 @@ object Queries {
     * equi-join; the DuckDB twin replays the identical 5-round
     * schedule. */
   def dedupComponentsStarChain(s: SparkSession, dir: String): DataFrame =
-    Dedup.componentsStar(docChains(s, dir), rounds = 5).orderBy("doc_id")
+    Dedup.componentsStar(docChains(rd(s, dir, "documents")), rounds = 5).orderBy("doc_id")
 
   /** The diameter-31 chain graph both chain queries label: an edge
-    * (i, i+1) for every present doc_id pair inside each 32-id block. */
-  private def docChains(s: SparkSession, dir: String): DataFrame = {
-    val ids = rd(s, dir, "documents").select(col("doc_id"))
+    * (i, i+1) for every present doc_id pair inside each 32-id block of
+    * `docs`. */
+  private[graft] def docChains(docs: DataFrame): DataFrame = {
+    val ids = docs.select(col("doc_id"))
     val cand = ids.where(col("doc_id") % 32 =!= 31)
       .select(col("doc_id").as("a_id"), (col("doc_id") + 1).as("b_id"))
     cand.join(ids.select(col("doc_id").as("b_id")), Seq("b_id"), "left_semi")
@@ -1253,7 +1220,7 @@ object Queries {
     * round-over-round fixpoint with the same count + set-difference
     * probes, so `rounds_used` itself is oracle-checked, not asserted. */
   def dedupComponentsStarAdaptive(s: SparkSession, dir: String): DataFrame = {
-    val (labels, rounds) = Dedup.componentsStarAdaptive(docChains(s, dir), maxRounds = 8)
+    val (labels, rounds) = Dedup.componentsStarAdaptive(docChains(rd(s, dir, "documents")), maxRounds = 8)
     labels.withColumn("rounds_used", lit(rounds)).orderBy("doc_id")
   }
 

@@ -2,16 +2,16 @@ package graft.tools
 
 import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import graft.spark.{Queries, Sessions}
+import graft.spark.{Queries, Sessions, TaskMeter}
 
 /** Optimization-round probe: runs the query list twice in one session
-  * and reports, per query and pass, wall seconds, Spark JOB count, stage
-  * count, task count, executor CPU seconds and the classes codegen compiled (driver and executor side);
-  * each pass ends in a total row with the JVM's metaspace in use. The
+  * and reports, per query and pass, wall seconds, what [[TaskMeter]]
+  * counts (Spark jobs, stages, tasks, executor CPU seconds, shuffle read
+  * and write bytes, spill bytes, the slowest and the median task) and the
+  * classes codegen compiled (driver and executor side); each pass ends
+  * in a total row with the JVM's metaspace in use. The
   * first pass pays each query's compiles, the second shows what the
   * session kept: a codegen cache smaller than the surface compiles it
   * again. Optionally dumps the last pass's `explain(formatted)` to
@@ -26,26 +26,19 @@ import graft.spark.{Queries, Sessions}
 object OptProbe {
   private val Passes = 2
 
-  private final class CountListener extends SparkListener {
-    val jobs = new AtomicLong(0); val stages = new AtomicLong(0)
-    val tasks = new AtomicLong(0); val cpuNs = new AtomicLong(0)
-    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-      stages.incrementAndGet()
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      tasks.incrementAndGet()
-      val m = e.taskMetrics
-      if (m != null) cpuNs.addAndGet(m.executorCpuTime)
-    }
-  }
+  private def json(c: TaskMeter.Counts, nanos: Long, compiles: Long): String =
+    f""""wall_s":${nanos / 1e9}%.3f,"jobs":${c.jobs},"stages":${c.stages},""" +
+      f""""tasks":${c.tasks},"cpu_s":${c.cpuNs / 1e9}%.3f,"compiles":$compiles,""" +
+      f""""shuffle_read_bytes":${c.shuffleReadBytes},"shuffle_write_bytes":${c.shuffleWriteBytes},""" +
+      f""""spill_bytes":${c.spillBytes},"max_task_ms":${c.maxTaskMs},""" +
+      f""""median_task_ms":${c.medianTaskMs}%.1f,"drained":${c.drained}"""
 
-  /** Counters at one instant; `-` gives the work between two. */
-  private final case class Counts(jobs: Long, stages: Long, tasks: Long, cpuNs: Long,
-      compiles: Long, nanos: Long) {
-    def -(o: Counts): Counts = Counts(jobs - o.jobs, stages - o.stages, tasks - o.tasks,
-      cpuNs - o.cpuNs, compiles - o.compiles, nanos - o.nanos)
-    def json: String = f""""wall_s":${nanos / 1e9}%.3f,"jobs":$jobs,"stages":$stages,""" +
-      f""""tasks":$tasks,"cpu_s":${cpuNs / 1e9}%.3f,"compiles":$compiles"""
+  /** `body` under a [[TaskMeter]], with its wall time and compile count. */
+  private def metered[A](sc: org.apache.spark.SparkContext)(body: => A): (A, String) = {
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val t0 = System.nanoTime()
+    val (a, c) = TaskMeter.around(sc)(body)
+    (a, json(c, System.nanoTime() - t0, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0))
   }
 
   private def metaspaceMb: Double =
@@ -61,23 +54,16 @@ object OptProbe {
       else (None, args.toSeq)
     val names = if (rest.isEmpty) Queries.all.keys.toSeq.sorted else rest
     val spark = Sessions.local(cpus, "graft-optprobe")
-    val lst = new CountListener
-    spark.sparkContext.addSparkListener(lst)
-    def now(): Counts = {
-      val t = System.nanoTime()
-      org.apache.spark.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
-      Counts(lst.jobs.get(), lst.stages.get(), lst.tasks.get(), lst.cpuNs.get(),
-        CodegenMetrics.METRIC_COMPILATION_TIME.getCount, t)
-    }
+    val sc = spark.sparkContext
     println(s"""{"sf_dir":"$sfDir","cores":$cpus,"host_cores":""" +
       s"""${Runtime.getRuntime.availableProcessors},"queries":${names.size},"passes":$Passes}""")
     (1 to Passes).foreach { pass =>
-      val p0 = now()
-      names.foreach { name =>
-        val q0 = now()
-        val df = Queries.all(name)(spark, sfDir)
-        val rows = df.queryExecution.executedPlan.execute().count()
-        println(s"""{"pass":$pass,"query":"$name",${(now() - q0).json},"rows":$rows}""")
+      val (_, total) = metered(sc)(names.foreach { name =>
+        val ((df, rows), counts) = metered(sc) {
+          val df = Queries.all(name)(spark, sfDir)
+          (df, df.queryExecution.executedPlan.execute().count())
+        }
+        println(s"""{"pass":$pass,"query":"$name",$counts,"rows":$rows}""")
         if (pass == Passes) planTag.foreach { tag =>
           val dir = Paths.get("plans/r09")
           Files.createDirectories(dir)
@@ -85,9 +71,8 @@ object OptProbe {
             org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
           Files.write(dir.resolve(s"${name}_$tag.txt"), txt.getBytes("UTF-8"))
         }
-      }
-      println(f"""{"pass":$pass,"query":"(total)",${(now() - p0).json},""" +
-        f""""metaspace_mb":$metaspaceMb%.1f}""")
+      })
+      println(f"""{"pass":$pass,"query":"(total)",$total,"metaspace_mb":$metaspaceMb%.1f}""")
     }
     spark.stop()
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 import graft.io.Parquet
-import graft.spark.Sessions
+import graft.spark.{Queries, Sessions}
 
 /** Scale-trend probe: run the shuffle-once dedup operators on 1× and
   * 4× the documents table (copies made distinct by a per-copy prefix
@@ -69,22 +69,14 @@ object ScaleProbe {
       // HIGH-DIAMETER probe (chains of ≤32 consecutive ids, 5 rounds
       // BIND — the workload componentsStar's O(log n) claim is for);
       // copies offset by 1M so each copy carries its own chains
-      "dedup_components_star_chain" -> (d => {
-        val ids = d.select(col("doc_id"))
-        val cand = ids.where(col("doc_id") % 32 =!= 31)
-          .select(col("doc_id").as("a_id"), (col("doc_id") + 1).as("b_id"))
-        val chain = cand.join(ids.select(col("doc_id").as("b_id")), Seq("b_id"), "left_semi")
-          .select("a_id", "b_id")
-        Dedup.componentsStar(chain, rounds = 5)
-      }),
+      "dedup_components_star_chain" -> (d => Dedup.componentsStar(Queries.docChains(d), rounds = 5)),
       "dedup_containment" -> (d => Dedup.ngramContainmentPairs(d, minPermille = 800)),
       "dedup_containment_capped" ->
         (d => Dedup.ngramContainmentPairs(d, minPermille = 800, maxDf = 10)),
       "dedup_exact_substring" -> (d => Dedup.exactSubstringSpans(d, minTokens = 15)),
       "dedup_keep_best" -> (d => Dedup.keepBestPerCluster(d,
         Dedup.components(Dedup.minhashLshStarPairs(d), checkpointRounds = true),
-        graft.functions.TextFunctions.qualityBucket(col("text")).cast("long") * 100000L +
-          size(split(col("text"), " ")))),
+        Queries.keepBestScore)),
       "text_dup_coverage" -> (d => Dedup.dupSpanCoverage(d, minTokens = 15)),
       // skewed 70/10/10/10 synthetic mixture: the probe measures the
       // tiny group-count agg + broadcast-filtered scan staying linear

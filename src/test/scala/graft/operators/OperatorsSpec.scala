@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
+import graft.spark.TaskMeter
 
 class OperatorsSpec extends AnyFunSuite {
 
@@ -356,26 +357,12 @@ class OperatorsSpec extends AnyFunSuite {
     // the per-query window and the caller's order are the rest (over the
     // benchmark's copy of the sf0.01 embeddings)
     val sf = "perfbench/data/sf0.01"
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def jobsOf(q: (SparkSession, String) => DataFrame): Int = {
-      org.apache.spark.GraftListenerBridge.waitUntilEmpty(sc)
-      val j0 = jobs.get()
-      q(spark, sf).collect()
-      org.apache.spark.GraftListenerBridge.waitUntilEmpty(sc)
-      jobs.get() - j0
-    }
-    sc.addSparkListener(listener)
-    try {
-      val got = Seq("sim_topk_pq" -> jobsOf(graft.spark.Queries.simTopkPq),
-          "sim_topk_ivf" -> jobsOf(graft.spark.Queries.simTopkIvf))
-      info(s"Spark jobs per query: $got")
-      assert(got.forall(_._2 <= 7), s"Spark jobs per query: $got")
-    } finally sc.removeSparkListener(listener)
+    def jobsOf(q: (SparkSession, String) => DataFrame): Long =
+      TaskMeter.around(spark.sparkContext)(q(spark, sf).collect())._2.jobs
+    val got = Seq("sim_topk_pq" -> jobsOf(graft.spark.Queries.simTopkPq),
+        "sim_topk_ivf" -> jobsOf(graft.spark.Queries.simTopkIvf))
+    info(s"Spark jobs per query: $got")
+    assert(got.forall(_._2 <= 7), s"Spark jobs per query: $got")
   }
 
   test("bottomKDistinct: k smallest DISTINCT values ascending, across shuffled partials") {
@@ -1288,6 +1275,18 @@ class OperatorsSpec extends AnyFunSuite {
       assert(rows(got()) == rows(want()), name)
   }
 
+  test("IVF/PQ family: a query id given twice fails loudly, naming the id") {
+    // two entries for id 3 would share one per-query window: one merged
+    // top-k, or a top-k holding the same item twice
+    val it = ivfFixture.toDF("vec_id", "embedding")
+    val q = it.where("vec_id in (0, 3, 4)")
+      .select(when($"vec_id" === 4, 3L).otherwise($"vec_id").as("vec_id"), $"embedding")
+    for ((name, df) <- ivfFamily(q, it)) {
+      val e = intercept[IllegalArgumentException](df())
+      assert(e.getMessage.contains("duplicate query id 3"), s"$name: ${e.getMessage}")
+    }
+  }
+
   test("PQ: a vector width not divisible by numSub fails loudly, naming the width") {
     val it = ivfFixture.map { case (id, v) => id -> v.map(_ :+ 0f) } // 5 dims, numSub 2
       .toDF("vec_id", "embedding")
@@ -1319,27 +1318,14 @@ class OperatorsSpec extends AnyFunSuite {
       .toDF("src", "dst")
     assert(Graphs.pageRankAdaptive(edges, maxIterations = 40,
       redistributeDangling = true)._2 > 4, "the budget graph must not converge by round 4")
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def jobsAt(rounds: Int): Int = {
-      org.apache.spark.GraftListenerBridge.waitUntilEmpty(sc)
-      val j0 = jobs.get()
+    def jobsAt(rounds: Int): Long = TaskMeter.around(spark.sparkContext) {
       val (ranks, used) = Graphs.pageRankAdaptive(edges, maxIterations = rounds,
         redistributeDangling = true)
       assert(used == rounds)
       ranks.collect()
-      org.apache.spark.GraftListenerBridge.waitUntilEmpty(sc)
-      jobs.get() - j0
-    }
-    sc.addSparkListener(listener)
-    try {
-      val (j2, j4) = (jobsAt(2), jobsAt(4))
-      assert((j4 - j2) / 2.0 <= 3.0, s"jobs per round: maxIterations 2 -> $j2, 4 -> $j4")
-    } finally sc.removeSparkListener(listener)
+    }._2.jobs
+    val (j2, j4) = (jobsAt(2), jobsAt(4))
+    assert((j4 - j2) / 2.0 <= 3.0, s"jobs per round: maxIterations 2 -> $j2, 4 -> $j4")
   }
 
   test("Rounds.Observed: metrics ride the truncating action; a truncate that runs no action fails loudly") {

@@ -1,9 +1,6 @@
 package graft.spark
 
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.GraftListenerBridge
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,19 +23,10 @@ class SessionReuseSpec extends AnyFunSuite {
   }
 
   test("reading a table through Queries runs no Spark job before the query's action") {
-    val jobs = new AtomicLong
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val df = Queries.all("dedup_jaccard")(spark, sf)
-      GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
-      assert(jobs.get == 0, "jobs before the action")
-      assert(df.count() > 0)
-      GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
-      assert(jobs.get > 0)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (df, before) = TaskMeter.around(spark.sparkContext)(Queries.all("dedup_jaccard")(spark, sf))
+    assert(before.jobs == 0, "jobs before the action")
+    val (n, action) = TaskMeter.around(spark.sparkContext)(df.count())
+    assert(n > 0 && action.jobs > 0)
   }
 
   test("a second pass of the benchmark queries compiles no class") {
