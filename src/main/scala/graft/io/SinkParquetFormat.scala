@@ -31,11 +31,18 @@ import org.apache.spark.sql.types.StructType
   * each dropped key the local write path reads, that the compiled default
   * equals the bundled value.
   *
+  * The write's stats tracker ships a second copy of the conf, built from
+  * the write command's own and out of any format hook's reach: the
+  * planner strategy [[org.apache.spark.sql.execution.datasources.GraftWriteBridge]],
+  * which every session of [[graft.spark.Sessions]] installs, plans a
+  * write through this format as a command whose tracker wraps a copy
+  * trimmed by the same [[SinkParquetFormat.trim]].
+  *
   * What it cannot reach: the session's `sparkContext.hadoopConfiguration`
   * is left whole (Hadoop loads the defaults back into it whenever a default
   * resource is registered, and every driver-side lookup reads it), and
-  * `BasicWriteJobStatsTracker` ships a second full copy, built from the
-  * write command's conf, which no format hook reaches.
+  * Spark's streaming file sink builds its tracker from a conf of its own,
+  * so each stream write task still receives one full copy.
   */
 final class SinkParquetFormat extends ParquetFileFormat {
   override def prepareWrite(sparkSession: SparkSession, job: Job,
@@ -52,8 +59,9 @@ object SinkParquetFormat {
     * `*-default.xml` that holds the same raw value: `clear`, then one `set`
     * per kept entry, with its value and last recorded source. `unset` is
     * not used, because it follows deprecated aliases and could drop a key
-    * that is kept. */
-  private def trim(conf: Configuration): Unit = {
+    * that is kept. The rule for both confs a sink write ships: the write
+    * job's and its stats tracker's. */
+  def trim(conf: Configuration): Unit = {
     val kept = conf.iterator.asScala.toSeq.flatMap { e =>
       val (k, v) = (e.getKey, e.getValue)
       val sources = Option(conf.getPropertySources(k)).getOrElse(Array.empty[String])

@@ -132,8 +132,11 @@ object ExtractJob {
     * loaded unchanged from its bundled `*-default.xml` files (a task
     * reads those keys as the equal compiled defaults). These options are
     * set on the write, never loaded from a default file, so they always
-    * reach the task. The format cannot trim the second copy of the conf
-    * that Spark's write stats tracker ships; it stays whole. */
+    * reach the task. The batch job's write also ships its stats tracker's
+    * copy of the conf trimmed by the same rule (the planner strategy
+    * `GraftWriteBridge`, installed by [[graft.spark.Sessions]]); the
+    * stream's file sink builds its tracker itself, so that copy stays
+    * whole. */
   val SinkOptions: Map[String, String] = Seq("doc_id", "spans.list.element.text")
     .map(c => s"parquet.enable.dictionary#$c" -> "false").toMap
 
@@ -202,9 +205,10 @@ object ExtractJob {
 
       // one map-only Generate (ExtractRows): catalyst rows in and out,
       // the options carried in the plan, stats into this chunk's
-      // accumulator inside the write's own action
+      // accumulator inside the write's own action. It emits the bucket
+      // itself, so no Project copies each output row again
       val normalOut = repartitioned.select(
-        ExtractRows.of(repartitioned, cfg.opts, $"bucket", Some(acc)), $"bucket")
+        ExtractRows.of(repartitioned, cfg.opts, $"bucket", Some(acc), withBucket = true))
 
       // giant docs: one row per page range (`start_page` / `page_count`),
       // extracted by the same generator with the source's page numbers

@@ -14,8 +14,10 @@ import graft.engine.Extractor
 /** The extraction row loop, shared by the batch job
   * ([[ExtractJob.run]]) and the stream ([[graft.streaming.ExtractStream.extract]]):
   * one Catalyst generator from an input row — `doc_id`, `spans`, the
-  * option columns, the bucket — to 0 or 1 `(doc_id, spans)` rows. It
-  * plans in batch and streaming queries alike, as a map-only
+  * option columns, the bucket — to 0 or 1 `(doc_id, spans)` rows, or
+  * `(doc_id, spans, bucket)` rows under `withBucket`, so that the batch
+  * job's `Generate` feeds its write with no `Project` copying each row
+  * again. It plans in batch and streaming queries alike, as a map-only
   * `Generate` with no object (de)serialization around it.
   *
   * It reads the scan's catalyst row and writes catalyst rows: the
@@ -29,17 +31,26 @@ import graft.engine.Extractor
   * soft: it counts as one failed document of its bucket and emits
   * nothing. Per-bucket [[BucketStats]] go to `stats` when given.
   * `base` supplies what no column carries: the start-page parity pin.
+  * Where every option child is foldable (the input has no option column)
+  * the options are resolved once per task, not per row.
   */
 final case class ExtractRows(children: Seq[Expression], base: ExtractOptions,
-    stats: Option[ExtractJob.BucketStatsAcc]) extends Generator with CodegenFallback {
+    stats: Option[ExtractJob.BucketStatsAcc], withBucket: Boolean = false)
+    extends Generator with CodegenFallback {
   import ExtractRows._
 
-  override def elementSchema: StructType = ExtractRows.outSchema
+  // the bucket column is written nullable, as the projected column it
+  // replaces was: the table's parquet schema stays the same
+  override def elementSchema: StructType =
+    if (withBucket) outSchema.add("bucket", IntegerType) else outSchema
   // plans print the inputs, not the accumulator's running value
   override def flatArguments: Iterator[Any] = children.iterator
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): ExtractRows =
     copy(children = c)
   @transient private lazy val args = children.toArray
+  /** The options of every row, when no row can change them. */
+  @transient private lazy val fixedOptions =
+    if (args.slice(2, 7).forall(_.foldable)) options(null) else null
 
   override def eval(row: InternalRow): IterableOnce[InternalRow] = {
     val docId = args(0).eval(row).asInstanceOf[UTF8String]
@@ -64,11 +75,16 @@ final case class ExtractRows(children: Seq[Expression], base: ExtractOptions,
       }
       i += 1
     }
-    val ok = whole && Extractor.extractInto(d, options(row)) == null
+    val ok = whole &&
+      Extractor.extractInto(d, if (fixedOptions != null) fixedOptions else options(row)) == null
+    val bucket = intOf(args(7).eval(row))
     if (stats.isDefined)
-      stats.get.add(intOf(args(7).eval(row)) -> BucketStats(docCount = 1, spanCount = if (ok) d.size else 0,
+      stats.get.add(bucket -> BucketStats(docCount = 1, spanCount = if (ok) d.size else 0,
         bytesIn = bytesIn, failedDocs = if (ok) 0 else 1, unmappedCodes = if (whole) d.unmapped else 0))
-    val out = if (ok) Some(outRow(d)) else None
+    val out =
+      if (!ok) None
+      else if (withBucket) Some(new GenericInternalRow(Array[Any](d.id, spansOf(d), bucket)))
+      else Some(new GenericInternalRow(Array[Any](d.id, spansOf(d))))
     d.release()
     out
   }
@@ -90,9 +106,10 @@ object ExtractRows {
 
   /** The extraction generator over `input`'s `doc_id`, `spans` and
     * whichever [[ExtractJob.OptionColumns]] it has, falling back to
-    * `base`; `bucket` keys the stats. The one place both faces build it. */
+    * `base`; `bucket` keys the stats, and is emitted as a third column
+    * under `withBucket`. The one place both faces build it. */
   def of(input: DataFrame, base: ExtractOptions, bucket: Column,
-      stats: Option[ExtractJob.BucketStatsAcc]): Column = {
+      stats: Option[ExtractJob.BucketStatsAcc], withBucket: Boolean = false): Column = {
     def opt(name: String, default: Any): Column =
       if (input.columns.contains(name)) coalesce(col(name), lit(default)) else lit(default)
     val cols = Seq(col("doc_id"), col("spans"),
@@ -102,7 +119,8 @@ object ExtractRows {
       (if (input.columns.contains("model")) col("model") else lit(base.ocrModel.orNull)).cast(StringType),
       opt("password", base.password.orNull).cast(StringType),
       bucket.cast(IntegerType))
-    GraftColumnBridge.toColumn(ExtractRows(cols.map(GraftColumnBridge.toExpression), base, stats))
+    GraftColumnBridge.toColumn(
+      ExtractRows(cols.map(GraftColumnBridge.toExpression), base, stats, withBucket))
   }
 
   private val Kinds = Array("text", "media", "html", "pdf_bytes")
@@ -115,11 +133,9 @@ object ExtractRows {
 
   private def intOf(v: Any): Int = v match { case i: Integer => i.intValue; case _ => 0 }
 
-  private def outRow(d: Extractor.Doc): InternalRow = {
-    val spans = Array.tabulate[Any](d.size)(i => new GenericInternalRow(Array[Any](
-      KindsUtf8(if (d.kind(i) == "text") 0 else 1), d.text(i), d.ref(i), i, d.page(i))))
-    new GenericInternalRow(Array[Any](d.id, new GenericArrayData(spans)))
-  }
+  private def spansOf(d: Extractor.Doc): ArrayData =
+    new GenericArrayData(Array.tabulate[Any](d.size)(i => new GenericInternalRow(Array[Any](
+      KindsUtf8(if (d.kind(i) == "text") 0 else 1), d.text(i), d.ref(i), i, d.page(i)))))
 
   private val docs = ThreadLocal.withInitial(() => new Extractor.Doc)
 }

@@ -1,6 +1,7 @@
 package graft.spark
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.GraftWriteBridge
 
 /** SparkSession factory with the engine's scale posture baked in:
   * AQE on (runtime coalesce + skew split), shuffle partitions matched
@@ -22,6 +23,10 @@ import org.apache.spark.sql.SparkSession
   *    100 evicted them, so every pass of a long-lived session compiled
   *    the whole surface again. Executor-side classes are still compiled once per
   *    SparkContext, whose executor loads them in its own class loader.
+  *
+  * Every session it returns plans its [[graft.io.SinkParquetFormat]]
+  * writes through [[GraftWriteBridge]], so their stats trackers ship the
+  * trimmed Hadoop conf too; sessions cloned from it inherit the strategy.
   */
 object Sessions {
   /** Settings shared with sessions built elsewhere (`graft.Verify`). */
@@ -77,6 +82,7 @@ object Sessions {
     val spark = (if (fastCommitter)
       builder.config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
     else builder).getOrCreate()
+    GraftWriteBridge.install(spark)
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

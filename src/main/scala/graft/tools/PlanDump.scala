@@ -86,7 +86,10 @@ object PlanDump {
       "NO join, NO Exchange", _))
     freshJobPlans(spark).headOption.foreach(show("Extraction, scan mode, fresh table in one " +
       "chunk: every bucket is pending, so the scan feeds Generate(ExtractRows) with NO " +
-      "bucket filter -- NO join, NO Exchange", _))
+      "bucket filter, and the generator emits the bucket itself, so its rows go to the write " +
+      "with NO Project copying them; the sink's write command is planned as " +
+      "TrimmedStatsInsert, whose stats tracker ships the trimmed Hadoop conf -- NO join, " +
+      "NO Exchange", _))
     fanOutJobPlans(spark).headOption.foreach(show("Extraction, giant fan-out on: a giant's " +
       "page count becomes a column and explode(sequence) makes one row per page range, " +
       "which the SAME Generate(ExtractRows) (outer: a failed range keeps a null row) " +

@@ -11,21 +11,28 @@ import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptContext}
 import org.apache.hadoop.mapreduce.lib.output.{FileOutputCommitter, FileOutputFormat}
 import org.apache.spark.sql.{DataFrame, SparkSession, classic}
-import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.{BasicWriteJobStatsTracker, GraftWriteBridge,
+  InsertIntoHadoopFsRelationCommand, OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.{GraftParquetBridge, ParquetFileFormat}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
 import org.scalatest.funsuite.AnyFunSuite
 import graft.fixtures.InterleavedGen
 import graft.job.ExtractJob
 import graft.streaming.ExtractStream
+import graft.tools.PlanDump
 
-/** [[SinkParquetFormat]]: the write conf it ships keeps exactly the
-  * entries not loaded unchanged from Hadoop's bundled defaults; every
-  * dropped default the local write path reads is also Hadoop's compiled
-  * default; and the tables it writes, batch and stream, read back as a
-  * `.parquet(...)`-written twin does. */
+/** [[SinkParquetFormat]]: the write conf it ships, and the one its write
+  * stats tracker ships, keep exactly the entries not loaded unchanged from
+  * Hadoop's bundled defaults; every dropped default the local write path
+  * reads is also Hadoop's compiled default; and the tables it writes,
+  * batch and stream, read back as a `.parquet(...)`-written twin does. */
 class SinkParquetFormatSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = graft.spark.Sessions.local(4, "sink-format-spec")
@@ -41,6 +48,13 @@ class SinkParquetFormatSpec extends AnyFunSuite {
 
   private def entries(c: Configuration): Map[String, String] =
     c.iterator.asScala.map(e => e.getKey -> e.getValue).toMap
+
+  /** The entries of `c` not loaded unchanged from a bundled default file. */
+  private def nonDefault(c: Configuration): Map[String, String] =
+    entries(c).filterNot { case (k, v) =>
+      Option(c.getPropertySources(k)).exists(_.forall(bundledNames.contains)) &&
+        bundled.getRaw(k) == v
+    }
 
   /** A write job's conf after `format.prepareWrite`, built as Spark's
     * `FileFormatWriter` builds it. */
@@ -58,12 +72,8 @@ class SinkParquetFormatSpec extends AnyFunSuite {
   test("the shipped write conf keeps exactly the entries not loaded unchanged from a bundled default") {
     val input = writeConf(new ParquetFileFormat)
     val shipped = writeConf(new SinkParquetFormat)
-    val nonDefault = entries(input).filterNot { case (k, v) =>
-      Option(input.getPropertySources(k)).exists(_.forall(bundledNames.contains)) &&
-        bundled.getRaw(k) == v
-    }
     // same keys, same values: nothing dropped through an alias, nothing added
-    assert(entries(shipped) == nonDefault)
+    assert(entries(shipped) == nonDefault(input))
     assert(input.size > 1000 && shipped.size <= 64, s"${input.size} → ${shipped.size}")
     val bytes = new ByteArrayOutputStream
     shipped.write(new DataOutputStream(bytes))
@@ -138,6 +148,67 @@ class SinkParquetFormatSpec extends AnyFunSuite {
     // (entries, serialized bytes) of the conf each task deserialized
     seen.foreach { case (n, bytes) => assert(n <= 64 && bytes <= 10 * 1024, s"$n entries, $bytes bytes") }
     assert(spark.read.parquet(out).count() == 8)
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** The write command `qe` planned, the conf its stats tracker ships to
+    * every task, and the conf the command builds that tracker from
+    * (`InsertIntoHadoopFsRelationCommand.run`: the session's Hadoop conf
+    * with the write's options). */
+  private def trackerConf(qe: QueryExecution)
+      : (InsertIntoHadoopFsRelationCommand, Configuration, Configuration) = {
+    val cmd = Plans.find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).get
+      .asInstanceOf[DataWritingCommandExec].cmd.asInstanceOf[InsertIntoHadoopFsRelationCommand]
+    val input = qe.sparkSession.sessionState.newHadoopConfWithOptions(cmd.options)
+    val tracker = cmd.basicWriteJobStatsTracker(input)
+    val field = classOf[BasicWriteJobStatsTracker].getDeclaredField("serializableHadoopConf")
+    field.setAccessible(true)
+    (cmd, field.get(tracker).asInstanceOf[SerializableConfiguration].value, input)
+  }
+
+  /** The tracker conf of a sink write holds exactly what the trim rule keeps. */
+  private def assertTrimmedTracker(qe: QueryExecution): Unit = {
+    val (cmd, shipped, input) = trackerConf(qe)
+    assert(cmd.isInstanceOf[GraftWriteBridge.TrimmedStatsInsert], cmd.getClass)
+    // the tracker trims a copy: the command's own conf, which the write
+    // job copies, is left whole
+    assert(input.size > 1000 && shipped.size <= 64, s"${input.size} → ${shipped.size}")
+    assert(entries(shipped) == nonDefault(input))
+  }
+
+  test("a sink write's stats tracker ships only the entries the trim rule keeps") {
+    val writes = PlanDump.freshJobPlans(spark)
+    assert(writes.size == 1)
+    assertTrimmedTracker(writes.head)
+  }
+
+  test("a plain .parquet(...) write keeps its whole stats tracker conf") {
+    import spark.implicits._
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = writes.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Seq(("a", "b")).toDF("doc_id", "text").write.mode("overwrite")
+        .parquet(Files.createTempDirectory("graft-plain-tracker").toString)
+      org.apache.spark.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.size == 1)
+    val (cmd, shipped, input) = trackerConf(writes.peek)
+    assert(!cmd.isInstanceOf[GraftWriteBridge.TrimmedStatsInsert])
+    assert(input.size > 1000 && entries(shipped) == entries(input))
+  }
+
+  test("a sink write from a cloned session (the giant fan-out's) still ships the trimmed tracker conf") {
+    // the fan-out writes from a cloneSession child that turns off AQE
+    // partition coalescing; the clone inherits the planner strategy
+    val writes = PlanDump.fanOutJobPlans(spark)
+    assert(writes.size == 1)
+    assert(writes.head.sparkSession ne spark)
+    assertTrimmedTracker(writes.head)
   }
 
   /** `root` and the files and directories under it by kind, with their

@@ -1,6 +1,8 @@
 package graft.spark
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.execution.datasources.WriteFilesExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.model._
@@ -16,6 +18,8 @@ import graft.job.ExtractJob
   *    pruned ReadSchema);
   *  - a resumed extraction job reads its pending buckets with no join,
   *    and a fresh one in one chunk reads every row with no filter;
+  *  - the extraction generator's rows go to the write with no `Project`
+  *    copying them;
   *  - the giant fan-out extracts page ranges with the same generator.
   */
 class PlanSpec extends AnyFunSuite {
@@ -88,6 +92,17 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.linesIterator.exists(l => l.contains("Filter") && l.contains("pmod")),
       s"tautological bucket filter in the fresh job's plan:\n$plan")
     assert(plan.contains("extractrows"), s"extraction generator missing:\n$plan")
+  }
+
+  test("fresh extraction job: the ExtractRows Generate feeds the write, no Project copies its rows") {
+    // the generator emits (doc_id, spans, bucket) itself, so nothing
+    // between it and the write re-projects each extracted row
+    val plan = graft.tools.PlanDump.freshJobPlans(spark).head.executedPlan
+    val write = plan.collectFirst { case w: WriteFilesExec => w }
+    assert(write.exists(_.child.isInstanceOf[GenerateExec]), s"Generate does not feed the write:\n$plan")
+    val generate = write.get.child.asInstanceOf[GenerateExec]
+    assert(generate.requiredChildOutput.isEmpty, s"child columns carried past the Generate:\n$plan")
+    assert(generate.output.map(_.name) == Seq("doc_id", "spans", "bucket"))
   }
 
   test("giant fan-out: page ranges go through the ExtractRows Generate, with no typed object step") {
